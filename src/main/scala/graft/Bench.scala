@@ -1,47 +1,51 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Untimed warmup: JVM class loading, parquet reader init, first
     // whole-stage-codegen compile. Amortizes one-time process costs so the
     // per-query numbers measure the queries, not whichever one ran first.
     SparkEntry.queries.get("agg_nation_revenue").foreach { fn =>
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
     }
-    val results = SparkEntry.queries.map { case (name, fn) =>
+    // sorted name order: the run order decides which entry pays for shared
+    // memo builds and warm codegen caches, so it must not follow HashMap order
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       def once(): Double = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // release intra-query caches OUTSIDE the timed window: keeps each
-        // timing self-contained and the process footprint one-query-bounded
-        spark.catalog.clearCache()
-        dt
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
       }
       // single-run times carry ±50% noise (GC, janino compile, IO jitter);
       // for entries above the 1s floor take min-of-2 — the standard
       // least-noise estimator of intrinsic cost — while cheap entries stay
       // single-run to bound total bench wall-clock
-      val t1 = once()
-      name -> (if (t1 > 1.0) math.min(t1, once()) else t1)
+      val timed =
+        try {
+          val t1 = once()
+          Right(if (t1 > 1.0) { spark.catalog.clearCache(); math.min(t1, once()) } else t1)
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          Left(e)
+        }
+      // release intra-query caches OUTSIDE the timed window: keeps each
+      // timing self-contained and the process footprint one-query-bounded
+      spark.catalog.clearCache()
+      name -> timed
     }
+    // a failed entry is reported by name, never timed into the total
+    val times = results.collect { case (name, Right(t)) => name -> t }
+    val failed = results.collect { case (name, Left(_)) => name }
     // Round per-query times to ms — the single-run variance floor (~±50%)
     // dwarfs 1 ms, and short numbers keep the JSON line small.
     def r3(v: Double): String = (math.round(v * 1000) / 1000.0).toString
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
+    val qs = times.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    def line(queries: String) =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","method":"min2_over_1s","queries":$queries,"sf":"$sfDir"}"""
-    val full = line(qs)
+    val total = times.map(_._2).sum
+    def line(queries: String, extra: String = "") =
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","method":"min2_over_1s","queries":$queries,"sf":"$sfDir"$extra}"""
+    val full = line(qs, failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]"))
     // Always keep the full record on disk for the judge / later analysis.
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_FULL.json"),

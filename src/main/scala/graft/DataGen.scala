@@ -106,14 +106,7 @@ object DataGen {
     val out = args.lift(1).getOrElse(
       s"${sys.props("java.io.tmpdir")}/graft_sf1${if (skew) "skew" else ""}")
     val n = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     generate(spark, src, out, n, skew)
     println(s"[datagen] wrote ${n}x${if (skew) " SKEWED" else ""} slice of $src to $out")
     spark.stop()

@@ -7,13 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.expressions.{DotProduct, NGrams, PolyHash}
 
 /** Session-extension entry point: makes the library's codegen'd expressions
-  * available to pure-SQL users at session build time —
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   ...
-  * }}}
+  * available to pure-SQL users at session build time, through the
+  * `spark.sql.extensions=graft.GraftExtensions` config that [[GraftSession]]
+  * sets on every session of the project.
   *
   * (Per-session registration without the config is
   * `graft.functions.VectorOps.registerSql(spark)` /

@@ -1,48 +1,41 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc stage profiler for optimization work — not part of the driver
-  * contract. Usage: runMain graft.Probe */
+  * contract. Usage: `SPARK_GRAFT_<MODE>=<value> runMain graft.Probe` with
+  * one of the modes below set (the first set, in this order, runs); with
+  * none set it lists them and exits with status 2. */
 object Probe {
+  private val Modes = Seq("SPARK_GRAFT_AMPLIFY", "SPARK_GRAFT_RECALL", "SPARK_GRAFT_TIME",
+    "SPARK_GRAFT_EXPLAIN_FMT", "SPARK_GRAFT_EXPLAIN_Q")
+
   def main(args: Array[String]): Unit = {
+    if (!Modes.exists(sys.env.contains)) {
+      System.err.println(s"[probe] set one of: ${Modes.mkString(", ")}")
+      sys.exit(2)
+    }
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default local[8] (the historical probe config); set SPARK_GRAFT_CPUS=32
-    // to adjudicate at the driver bench's config
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // optional runtime confs for probing conf-gated levers at a scale-
-    // appropriate setting (e.g. SPARK_GRAFT_CONF="graft.dedup.lshBucketCap=850")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").map(_.trim)
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
-      })
+    val spark = GraftSession()
     def time(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f
       println(f"[probe] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
     }
+    // a catalog-name mode's value: comma-separated SparkEntry names
+    def entries(mode: String) =
+      sys.env(mode).split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { name =>
+        name -> SparkEntry.queries.getOrElse(name,
+          sys.error(s"unknown catalog entry: $name"))
+      }
     // warmup
     time("warmup agg")(operators.Aggregates.nationRevenue(spark, dir).count())
     if (sys.env.contains("SPARK_GRAFT_AMPLIFY")) {
       // Empirical scaling probe: amplify documents/embeddings N× with
       // lightly-perturbed copies (salt token / shifted dim), write to a
       // tmp dir shaped like a testdata sf dir, and time the candidate-
-      // generation pipelines at 1× and N×. The perturbation leaves copies
-      // NEAR-DUPS of each other (jaccard/cosine stay above threshold), so
-      // this is deliberately the ADVERSARIAL case: every doc gains an
-      // N-copy near-dup cluster and the legitimate pair OUTPUT grows
-      // ~N²·|docs|. Measured at N=16 on sf0.01: outputs grow 2500×+
-      // (25→66k minhash pairs, 4k→935k hamming pairs) while wall-clock
-      // grows only 2.6–9.6× — the bucketed equi-join candidate stage
-      // absorbs pathological duplicate clusters; a hidden all-pairs would
-      // have blown up on |corpus|² regardless of cluster structure.
+      // generation pipelines at 1× and N×. The copies stay NEAR-DUPS of
+      // each other, so this is deliberately the adversarial case: the true
+      // pair output grows ~N²·|docs| while a bucketed candidate stage stays
+      // bounded. Per-pipeline measurements are in BASELINE.md.
       import org.apache.spark.sql.functions._
       val n = sys.env("SPARK_GRAFT_AMPLIFY").toInt
       // scratch dir keyed by source dir too (not just N), and copy offset
@@ -78,74 +71,20 @@ object Probe {
         "centroids" -> (p => operators.Similarity.labelCentroids(spark, p).count()),
         "heavy hitters" -> (p => operators.TextAnalysis.heavyHitters(spark, p).count()),
         "bigram pairs" -> (p => operators.TextAnalysis.bigramPairs(spark, p).count()),
-        // round-3 additions, measured at N=8 on sf0.01 (local[8]):
-        // contamination 0.25→0.39 s, knn quantized 0.46→0.57 s,
-        // normalize dedup 0.31→0.33 s — 8× adversarially-duplicated corpus,
-        // ≤1.6× wall-clock: candidate generation stays bounded
         "contamination" -> (p => operators.TextAnalysis.contamination(spark, p).count()),
         "knn quantized" -> (p => operators.Similarity.knnQuantized(spark, p).count()),
         "normalize dedup" -> (p => operators.TextAnalysis.normalizeDedup(spark, p).count()),
-        // round-3 batch 2, measured at N=8 on sf0.01 (local[8]):
-        // knn lsh multiprobe 0.41→0.56 s, repetition 0.22→0.32 s (8×
-        // corpus, ≤1.5× wall — linear pipelines); cc clusters 0.62→4.79 s
-        // with output 47→4000 rows: every doc gains an 8-member near-dup
-        // cluster, so the verified-pair INPUT itself grows ~N²·|docs| —
-        // 7.7× wall for 85× output is the closure scaling with its edge
-        // set, not a hidden all-pairs
         "knn lsh multiprobe" -> (p => operators.Similarity.knnLshMultiprobe(spark, p).count()),
         "cc clusters" -> (p => operators.Dedup.dedupClusters(spark, p).count()),
         "repetition" -> (p => operators.TextAnalysis.repetitionSignals(spark, p).count()),
-        // round-3 batch 3, measured at N=8 on sf0.01 (local[8]): all flat
-        // (cross source 0.20→0.21 s, token packing 0.18→0.18 s, hhi
-        // 0.13→0.14 s). Amplified copies share their lead window with the
-        // original (salt is appended), so cross-source fingerprint sets
-        // grow toward |sources| — the adversarial pair-expansion case
-        // stays bounded by |sources|² regardless of corpus size
         "cross source" -> (p => operators.TextAnalysis.crossSourceDupes(spark, p).count()),
         "token packing" -> (p => operators.TextAnalysis.tokenPacking(spark, p).count()),
         "mixture hhi" -> (p => operators.TextAnalysis.concentration(spark, p).count()),
-        // round-4 additions, measured at N=8 on sf0.01 (local[8]):
-        // end to end 0.36→0.52 s (composed 4-stage manifest pipeline —
-        // flat, dedup collapses the copies map-side); containment
-        // 1.6→55.7 s with output 512→312,704 pairs: every doc gains an
-        // 8-copy cluster so the TRUE containment pair set itself grows
-        // ~N²·|docs| — proportionate to the jaccard twin on the same run
-        // (44.7 s for the 156k one-direction pairs; containment emits
-        // both directions), i.e. the Σdf² index bound holding, not a
-        // hidden all-pairs
         "containment" -> (p => operators.Dedup.containmentPairs(spark, p).count()),
-        // r9: the prefix-filtered production entry under the same
-        // adversarial amplification. Measured at N=8 on sf0.01 (local[8]):
-        // unfiltered 0.64→1.41 s, prefix 0.74→2.22 s, both at the same
-        // 50→31,200 TRUE pair output — amplification is the filter's
-        // WORST case (every doc genuinely near-dups its copies, so
-        // prefixes must collide and the recount join does full work), and
-        // even there the overhead is ~1.6×, while on naturally-duplicated
-        // corpora the same filter cuts candidate volume to 1.9%
-        // (DedupConsistencySpec) and took the entry from 21.4 s to ~3 s
-        // at sf0.1
         "containment prefix" -> (p => operators.Dedup.containmentPairsPrefix(spark, p).count()),
         "end to end" -> (p => operators.TextAnalysis.endToEnd(spark, p).count()),
-        // round-6 additions: the span family. Amplified copies append a
-        // salt token, so every 8-gram window that doesn't touch the tail
-        // is VERBATIM-shared across all N copies — the worst case for
-        // span dedup: nearly every window of every doc becomes shared.
-        // Measured at N=8 on sf0.01 (local[8]): span ngrams 0.31→0.62 s,
-        // span removal 0.18→0.19 s while contaminated OUTPUT grows 85×
-        // (47→4000 docs) — the linear digest/window pipelines absorb the
-        // pathological duplicate load; no stage is pair-quadratic.
         "span ngrams" -> (p => operators.Dedup.spanNgrams(spark, p).count()),
         "span removal" -> (p => operators.Dedup.spanRemoval(spark, p).count()),
-        // r7 session 2: SemDeDup under amplification. Amplified embedding
-        // copies differ by +0.01·copy on dim 0, so every vector gains an
-        // N-copy near-dup cluster INSIDE its assigned cell — the candidate
-        // join's Σ|cluster|² bound is exercised at N× occupancy (~N²-denser
-        // within-cell pair volume, the paper's own O(n²/k) with k fixed
-        // while n grows N×). Measured at N=8 on sf0.01 (local[8]):
-        // 1.21→1.60 s — a 64×-denser candidate volume costs 1.3× wall at
-        // this sf (assignment + fixed costs dominate; the quadratic term
-        // lives inside bounded cells). A production deployment also scales
-        // k∝n to hold occupancy flat (the sim_knn_ivfpq_tuned sizing rule).
         "semdedup" -> (p => operators.Similarity.semDedup(spark, p).count())
       ).foreach { case (name, f) =>
         f(dir) // untimed: compile this pipeline's codegen once
@@ -196,84 +135,42 @@ object Probe {
       println(f"[recall] ivfpq SCALED n=$n cells=$cells nprobe=$np refineT=$rt " +
         f"recall@3=${recalls.sum / recalls.size}%.3f wall=$secs%6.2f s")
     } else if (sys.env.contains("SPARK_GRAFT_TIME")) {
-      // generic per-entry timing: comma-separated catalog names, each run
-      // cold (plan+codegen+execute) then warm (codegen cache hot) — the
-      // same min-of-2-style evidence Bench uses, but targeted, so an
-      // optimization can be measured without a full catalog sweep
-      sys.env("SPARK_GRAFT_TIME").split(",").map(_.trim).filter(_.nonEmpty)
-        .foreach { name =>
-          val fn = SparkEntry.queries.getOrElse(name,
-            sys.error(s"unknown catalog entry: $name"))
-          time(s"$name cold")(fn(spark, dir).count())
-          spark.catalog.clearCache()
-          time(s"$name warm")(fn(spark, dir).count())
-          spark.catalog.clearCache()
-        }
+      // generic per-entry timing: each entry run cold (plan+codegen+execute)
+      // then warm (codegen cache hot) — the same min-of-2-style evidence
+      // Bench uses, but targeted, so an optimization can be measured
+      // without a full catalog sweep
+      entries("SPARK_GRAFT_TIME").foreach { case (name, fn) =>
+        time(s"$name cold")(fn(spark, dir).count())
+        spark.catalog.clearCache()
+        time(s"$name warm")(fn(spark, dir).count())
+        spark.catalog.clearCache()
+      }
     } else if (sys.env.contains("SPARK_GRAFT_EXPLAIN_FMT")) {
       // `.explain("formatted")` dump for the optimization-round plan
-      // artifacts (plans/r13/<query>_{before,after}.txt): comma-separated
-      // catalog names; prints each entry's formatted physical plan between
-      // BEGIN/END markers so a shell loop can split them into files.
-      // Pre-execution (initial AQE plan) — the same thing explain() shows
-      // a user, and stable across runs, unlike the post-AQE executed plan.
-      sys.env("SPARK_GRAFT_EXPLAIN_FMT").split(",").map(_.trim).filter(_.nonEmpty)
-        .foreach { name =>
-          val df = SparkEntry.queries.getOrElse(name,
-            sys.error(s"unknown catalog entry: $name"))(spark, dir)
-          println(s"===== BEGIN $name =====")
-          println(df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-          println(s"===== END $name =====")
-          spark.catalog.clearCache()
-        }
-    } else if (sys.env.contains("SPARK_GRAFT_EXPLAIN_Q")) {
-      // generic POST-EXECUTION plan audit: comma-separated catalog names;
-      // runs the query first so the printed plan is the final AQE-decided
-      // physical plan (join strategies actually chosen at runtime), which
-      // is what matters when adjudicating broadcast-vs-SMJ drift
-      sys.env("SPARK_GRAFT_EXPLAIN_Q").split(",").map(_.trim).filter(_.nonEmpty)
-        .foreach { name =>
-          val df = SparkEntry.queries.getOrElse(name,
-            sys.error(s"unknown catalog entry: $name"))(spark, dir)
-          df.count()
-          println(s"===== $name (executed, post-AQE) =====")
-          println(df.queryExecution.executedPlan.toString)
-          spark.catalog.clearCache()
-        }
-    } else if (sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
-      // plan audit of the round-2 rewrites + round-3 additions
-      Seq(
-        "win_ntile_tiers" -> operators.Windows.ntileTiers(spark, dir),
-        "join_inner_revenue" -> operators.Joins.innerRevenue(spark, dir),
-        "dedup_embedding_lsh" -> operators.Dedup.embeddingLsh(spark, dir),
-        "pipe_corpus_clean" -> operators.TextAnalysis.corpusClean(spark, dir),
-        "graph_triangles" -> operators.Graph.triangleCounts(spark, dir),
-        "sim_knn_lsh_multiprobe" -> operators.Similarity.knnLshMultiprobe(spark, dir),
-        "text_repetition" -> operators.TextAnalysis.repetitionSignals(spark, dir),
-        "etl_table_checksum" -> operators.Etl.tableChecksum(spark, dir),
-        "sql_recursive_cte" -> operators.Sql.queries("sql_recursive_cte")(spark, dir)
-      ).foreach { case (n, df) =>
-        println(s"===== $n =====")
+      // artifacts (plans/r13/<query>_{before,after}.txt): prints each
+      // entry's formatted physical plan between BEGIN/END markers so a
+      // shell loop can split them into files. Pre-execution (initial AQE
+      // plan) — the same thing explain() shows a user, and stable across
+      // runs, unlike the post-AQE executed plan.
+      entries("SPARK_GRAFT_EXPLAIN_FMT").foreach { case (name, fn) =>
+        val df = fn(spark, dir)
+        println(s"===== BEGIN $name =====")
         println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+        println(s"===== END $name =====")
+        spark.catalog.clearCache()
       }
     } else {
-      // each heavy entry twice: run 1 = plan+codegen+execute, run 2 ≈ pure
-      // execution (codegen cache warm) — the gap is the compile floor
-      Seq[(String, () => Long)](
-        "span ngrams" -> (() => operators.Dedup.spanNgrams(spark, dir).count()),
-        "span removal" -> (() => operators.Dedup.spanRemoval(spark, dir).count()),
-        "minhash" -> (() => operators.Dedup.minhashLsh(spark, dir).count()),
-        "ngram" -> (() => operators.Dedup.ngramJaccard(spark, dir).count()),
-        "embedding lsh" -> (() => operators.Dedup.embeddingLsh(spark, dir).count()),
-        "knn ivf" -> (() => operators.Similarity.knnIvf(spark, dir).count()),
-        "fingerprint" -> (() => operators.TextAnalysis.fingerprint(spark, dir).count()),
-        "tfidf" -> (() => operators.TextAnalysis.tfidfTopTerms(spark, dir).count()),
-        "corpus clean" -> (() => operators.TextAnalysis.corpusClean(spark, dir).count()),
-        "salted wc" -> (() => operators.TextAnalysis.saltedWordCount(spark, dir).count()),
-        "sessionization" -> (() => operators.Events.sessionization(spark, dir).count())
-      ).foreach { case (n, f) =>
-        time(s"$n cold")(f()); time(s"$n warm")(f())
+      // SPARK_GRAFT_EXPLAIN_Q, the POST-EXECUTION plan audit: runs the
+      // query first so the printed plan is the final AQE-decided physical
+      // plan (join strategies actually chosen at runtime), which is what
+      // matters when adjudicating broadcast-vs-SMJ drift
+      entries("SPARK_GRAFT_EXPLAIN_Q").foreach { case (name, fn) =>
+        val df = fn(spark, dir)
+        df.count()
+        println(s"===== $name (executed, post-AQE) =====")
+        println(df.queryExecution.executedPlan.toString)
+        spark.catalog.clearCache()
       }
     }
     spark.stop()

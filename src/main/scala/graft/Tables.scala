@@ -14,32 +14,21 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Spread a scan across the cluster when the file layout under-splits it.
+  /** Spread a scan across every core.
     *
     * The harness parquet files are single-row-group, so a scan yields ONE
     * task no matter how many cores exist — and every narrow pipeline above
     * it (shingling, hashing, regex) inherits that single thread. The
-    * repartition is CONF-GATED, not inferred: `graft.fanOutSmallScans`
-    * defaults to true for the harness layout; a deployment whose files
-    * already split into ≥cores partitions sets it to false and pays no
-    * shuffle (inspecting the scan to decide automatically would force
-    * physical planning on every load — the round-1 `df.rdd` mistake).
+    * repartition is unconditional: inspecting the scan's split count to
+    * decide would force physical planning on every load (the round-1
+    * `df.rdd` mistake).
     *
     * Applied ONLY to tables whose downstream per-row work is expensive
     * (documents: regex/shingling/digests; embeddings: vector folds). For
     * plain relational scans the shuffle costs more than the single-threaded
     * scan saves — measured, not guessed. */
-  private def fanOut(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    // conf-gated rather than inspecting df.rdd.getNumPartitions: touching
-    // .rdd forces physical planning on every load. The harness layout is
-    // known single-row-group (TESTDATA.md) so the default is on; a real
-    // deployment with many-row-group files sets graft.fanOutSmallScans=false
-    // and the scan's natural split count stands.
-    if (spark.conf.get("graft.fanOutSmallScans", "true").toBoolean)
-      df.repartition(spark.sparkContext.defaultParallelism)
-    else df
-  }
+  private def fanOut(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Scratch location/name for operators that materialize to disk or the
     * catalog (csv/json/orc roundtrips, bucketed tables): one shared

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -697,14 +697,8 @@ object Dedup {
     * Sharper bands trade threshold-pair recall for bounded cost — the
     * same S-curve move the minhash entry documents; near-dup pairs
     * (cos ≥ 0.9) agree on almost every hyperplane and keep colliding. */
-  def embeddingLsh(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.conf.get("graft.dedup.lshBucketCap", "0")
-    val v = try raw.toLong catch {
-      case e: NumberFormatException => throw new IllegalArgumentException(
-        s"graft.dedup.lshBucketCap must be a long (got '$raw')", e)
-    }
-    embeddingLshWith(spark, dir, if (v > 0) Some(v) else None)
-  }
+  def embeddingLsh(spark: SparkSession, dir: String): DataFrame =
+    embeddingLshWith(spark, dir)
 
   /** The `dedup_embedding_lsh_capped` twin — the bucket-cap SIZING RULE
     * implemented, not a fixed literal (r12: a literal tuned at sf0.01
@@ -715,14 +709,11 @@ object Dedup {
     * At every harness SF this drops the over-occupied tail and keeps the
     * body (sf0.001/sf0.01: cap 20 vs max 29; sf0.1: cap 81 vs max 83),
     * and on the skewed sf1 slice it drops exactly the planted
-    * 900-member cluster. The absolute conf knob
-    * (`graft.dedup.lshBucketCap`) remains for deployments that size the
-    * cap themselves. */
+    * 900-member cluster. */
   def embeddingLshCapped(spark: SparkSession, dir: String): DataFrame =
-    embeddingLshWith(spark, dir, None, occupancyCap = true)
+    embeddingLshWith(spark, dir, occupancyCap = true)
 
   private[graft] def embeddingLshWith(spark: SparkSession, dir: String,
-                                      cap: Option[Long],
                                       occupancyCap: Boolean = false,
                                       forceLevel: Option[Int] = None): DataFrame = {
     val e = Tables.embeddings(spark, dir)
@@ -774,9 +765,8 @@ object Dedup {
     // bucket is by definition non-discriminative), becomes a plain
     // `size(vs) <= cap` filter — the former agg + broadcast-anti-join
     // machinery (and before that, two SortMergeJoins) dissolves. One
-    // groupBy exchange replaces the self-join's two shuffled sides; conf
-    // `graft.dedup.lshBucketCap` defaults off so the uncapped oracle is
-    // untouched.
+    // groupBy exchange replaces the self-join's two shuffled sides; only
+    // the capped twin applies it, so the uncapped oracle is untouched.
     val key = Seq("band_idx", "band_val", "ext1", "ext2", "ext3")
     val buckets = bandsAll.groupBy(key.map(col): _*)
       .agg(sort_array(collect_list(col("vec_id"))).as("vs"))
@@ -795,10 +785,7 @@ object Dedup {
           .select(expr("c13 DIV den").as("bcap"))
         buckets.crossJoin(broadcast(capRel))
           .filter(size(col("vs")).cast("long") <= col("bcap"))
-      } else cap match {
-        case Some(cmax) => buckets.filter(size(col("vs")).cast("long") <= cmax)
-        case None => buckets
-      }
+      } else buckets
     val cand = Recommend.arrayPairs(kept.select(col("vs")), "vs",
         "vec_a", "vec_b")
       .distinct()

@@ -17,10 +17,9 @@ import graft.Tables
   * the shared basket key (orderkey / custkey) — cost Σ|basket|², the
   * standard co-occurrence bound — never an all-pairs item join. Item
   * marginals are a hash-agg; the candidate relation joins them twice by
-  * item key. Top-k is TakeOrderedAndProject. At 100 TB the added knob is
-  * the hot-key cap — IMPLEMENTED as conf-gated code (see [[capBaskets]]:
-  * `graft.rec.hotKeyCap`, pair generation only, default off) with
-  * fixed-cap `*_capped` catalog twins so the lever itself is oracled.
+  * item key. Top-k is TakeOrderedAndProject. At 100 TB the added guard is
+  * the hot-key cap (see [[capBaskets]], pair generation only), carried by
+  * the `*_capped` catalog twins so the lever itself is oracled.
   *
   * Determinism: supports are exact longs; confidence/lift are exact
   * integer micro/ppm units via DIV (all operands positive, so Spark's
@@ -123,13 +122,11 @@ object Recommend {
     * incidence (key-count sized); the semi-join shuffles on the same key
     * the pair join uses, so AQE coalesces them into one exchange chain.
     *
-    * Conf-gated: `graft.rec.hotKeyCap` (0 = off, the default — every
-    * uncapped oracle stays hash-identical); the `*_capped` catalog twins
-    * pin fixed literal caps so the lever itself is DuckDB-oracled. */
-  /** How a hot-key cap is sized. [[AbsCap]] is the production conf knob
-    * (`graft.rec.hotKeyCap`, an absolute group-size ceiling chosen by the
-    * deployment); [[MeanCap]] is the in-plan SIZING RULE of the oracled
-    * `*_capped` twins — cap = (num/den)× the MEAN group size of the
+    * The plain entries run uncapped ([[NoCap]]); the `*_capped` catalog
+    * twins apply the sizing rules below, so the lever is DuckDB-oracled. */
+  /** How a hot-key cap is sized: [[NoCap]], or [[MeanCap]], the in-plan
+    * SIZING RULE of the oracled `*_capped` twins — cap = (num/den)× the
+    * MEAN group size of the
     * incidence, computed as exact integer arithmetic (num·|rows| DIV
     * den·|keys|, a 1-row broadcast), so the twin stays meaningful at
     * every SF instead of depending on an SF-tuned literal (r12's
@@ -140,7 +137,6 @@ object Recommend {
     * biting under skew — exactly when it must. */
   private[graft] sealed trait KeyCap
   private[graft] case object NoCap extends KeyCap
-  private[graft] final case class AbsCap(max: Long) extends KeyCap
   private[graft] final case class MeanCap(num: Int, den: Int) extends KeyCap
 
   /** Apply a [[KeyCap]] to a GROUPED incidence (one row per key, elements
@@ -154,7 +150,6 @@ object Recommend {
   private def capBaskets(grouped: DataFrame, arr: String, cap: KeyCap): DataFrame =
     cap match {
       case NoCap => grouped
-      case AbsCap(b) => grouped.filter(size(col(arr)).cast("long") <= b)
       case MeanCap(num, den) =>
         val capRel = grouped.agg((sum(size(col(arr))) * num).as("cnum"),
             (count(lit(1)) * den).as("cden"))
@@ -163,15 +158,6 @@ object Recommend {
           .filter(size(col(arr)).cast("long") <= col("kcap"))
           .drop("kcap")
     }
-
-  private def confCap(spark: SparkSession): KeyCap = {
-    val raw = spark.conf.get("graft.rec.hotKeyCap", "0")
-    val v = try raw.toLong catch {
-      case e: NumberFormatException => throw new IllegalArgumentException(
-        s"graft.rec.hotKeyCap must be a long (got '$raw')", e)
-    }
-    if (v > 0) AbsCap(v) else NoCap
-  }
 
   /** Sizing rules of the oracled `*_capped` twins, as (num, den) mean
     * multipliers. Chosen from the measured incidence shape so the rule
@@ -194,7 +180,7 @@ object Recommend {
     * one undirected candidate; both rule directions are emitted from it),
     * top-20 rules by lift with full tie-break. */
   def assocRules(spark: SparkSession, dir: String): DataFrame =
-    assocRulesWith(spark, dir, confCap(spark))
+    assocRulesWith(spark, dir, NoCap)
 
   /** The `rec_assoc_rules_capped` twin: order baskets larger than the
     * [[OrderBasketRule]] sizing cap (2× mean basket size, in-plan) leave
@@ -236,7 +222,7 @@ object Recommend {
     * matrix (a customer "rates" a part by having ever ordered it):
     * cos(a,b) = |Ua ∩ Ub| / √(|Ua|·|Ub|). Top-25 part pairs. */
   def itemCosine(spark: SparkSession, dir: String): DataFrame =
-    itemCosineWith(spark, dir, confCap(spark))
+    itemCosineWith(spark, dir, NoCap)
 
   /** The `rec_item_cosine_capped` twin: customers with more distinct
     * parts than the [[CustBasketRule]] sizing cap (1.5× mean basket
@@ -375,10 +361,10 @@ object Recommend {
     * the agg emitting the k(k+1)/2 + k normal-equation moments and the
     * update being a closed-form k×k RIDGE solve (ALS-WR's λI, λ = 0.1,
     * which also kills the det=0 singularity of single-item entities).
-    * The rank is conf-gated (`graft.rec.mfRank`, default 2 so the
-    * catalog entry's oracle hash is unchanged; 2–4 supported — beyond
-    * that an unrolled Cramer chain stops being the right solver and a
-    * blocked in-core solve à la MLlib takes over). At 100 TB nothing new
+    * The catalog entry runs k = 2 (so its oracle hash is unchanged;
+    * [[mfRank3]] is the oracled k = 3 twin); [[mfRankKWith]] supports
+    * 2–4 — beyond that an unrolled Cramer chain stops being the right
+    * solver and a blocked in-core solve à la MLlib takes over. At 100 TB nothing new
     * shuffles: factors are k doubles per entity, moments combine
     * map-side, and k² stays a per-row constant — this is exactly how
     * Spark MLlib's ALS shards, minus its blocked in-core solver.
@@ -397,17 +383,7 @@ object Recommend {
     * arithmetic, no RNG. Serving is the rank-1 contract:
     * |budget|·|parts| grid, anti-join observed, top-5 per customer. */
   def mfRankK(spark: SparkSession, dir: String): DataFrame =
-    mfRankKWith(spark, dir, confMfRank(spark))
-
-  private def confMfRank(spark: SparkSession): Int = {
-    val raw = spark.conf.get("graft.rec.mfRank", "2")
-    val k = try raw.toInt catch {
-      case e: NumberFormatException => throw new IllegalArgumentException(
-        s"graft.rec.mfRank must be an int in [2,4] (got '$raw')", e)
-    }
-    require(k >= 2 && k <= 4, s"graft.rec.mfRank must be in [2,4] (got $k)")
-    k
-  }
+    mfRankKWith(spark, dir, 2)
 
   /** det by first-row cofactor expansion with a FIXED term order — the
     * shared solve chain of the Spark plan and the spec's imperative
@@ -448,6 +424,7 @@ object Recommend {
   }
 
   private[graft] def mfRankKWith(spark: SparkSession, dir: String, k: Int): DataFrame = {
+    require(k >= 2 && k <= 4, s"mfRankKWith supports rank 2 to 4 (got $k)")
     import org.apache.spark.sql.types.DecimalType
     val d6 = DecimalType(18, 6)
     val lam = lit(0.1)
@@ -592,7 +569,7 @@ object Recommend {
     * Scale stance: user-pair candidates come ONLY from the shared-part
     * equi-join — cost Σ|part audience|², the transpose of the
     * co-occurrence bound; the production guard at 100 TB is the hot-item
-    * cap, implemented conf-gated in [[capBaskets]] and oracled by the
+    * cap, implemented in [[capBaskets]] and oracled by the
     * `rec_user_cf_capped` twin ([[PartAudienceRule]]). Neighbor
     * lists are rank-limited windows over the bounded budget set; the
     * vote expansion is |budget|·10 neighbors joined by custkey.
@@ -601,7 +578,7 @@ object Recommend {
     * the ONE shared formula-string rule for the sqrt), so vote sums are
     * exact long arithmetic; ranking ties break (score, n_voters, part). */
   def userCf(spark: SparkSession, dir: String): DataFrame =
-    userCfWith(spark, dir, confCap(spark))
+    userCfWith(spark, dir, NoCap)
 
   /** The `rec_user_cf_capped` twin: parts with audience larger than the
     * [[PartAudienceRule]] sizing cap (1.4× mean audience, in-plan) leave

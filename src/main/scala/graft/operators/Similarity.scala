@@ -1042,7 +1042,6 @@ object Similarity {
       .select(col("vec_id"), col("vn"))
     val maxId = all.agg(max(col("vec_id"))).head().getLong(0)
     val cut = maxId - maxId / 5
-    val base = all.filter(col("vec_id") < cut)
     val fresh = all.filter(col("vec_id") >= cut).cache() // encoded + probed
     val centroids = spark.read.parquet(s"$idx/centroids")
     val codebook = spark.read.parquet(s"$idx/codebook")

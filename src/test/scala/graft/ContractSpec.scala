@@ -5,7 +5,9 @@ package graft
   *  - every query runs at sf0.001 and yields rows with distinct column names
   *    (the driver sorts columns by name before hashing — duplicates would
   *    silently corrupt the compare);
-  *  - the flagship entry() returns rows > 0 (the driver's smoke check).
+  *  - the flagship entry() returns rows > 0 (the smoke check on entry());
+  *  - the shared session is the GraftSession configuration Verify and
+  *    Bench run: UTC, with the GraftExtensions ladder injected.
   */
 class ContractSpec extends SparkSpec {
 
@@ -16,6 +18,16 @@ class ContractSpec extends SparkSpec {
 
   test("flagship entry() returns rows > 0") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("the suite session runs in UTC and resolves graft_dot via the extensions") {
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    // a fresh session carries no per-session function registrations, so
+    // graft_dot can only resolve through the context's injected extensions
+    val d = spark.newSession()
+      .sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
+      .head().getDouble(0)
+    assert(d == 11.0)
   }
 
   test("every query runs at sf0.001 with unique column names") {

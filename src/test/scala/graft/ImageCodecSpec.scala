@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators._
 
 /** Cross-codec and cross-parse pins for the round-10 image legs —

@@ -12,9 +12,6 @@ import graft.operators._
   * entry's documented lattice (exact for the integer kernels). */
 class IndependentRecomputeSpec4 extends SparkSpec {
 
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** The shared experiment substrate: per exposed user (variant,
     * post-exposure purchase cents with NO 24 h cap) — the exact input of
     * ttest/qte/mann-whitney/ks. */

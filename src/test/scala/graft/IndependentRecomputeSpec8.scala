@@ -134,7 +134,7 @@ class IndependentRecomputeSpec8 extends SparkSpec {
       val terms = pairSims.map { s =>
         // mirror the entry's left-assoc chains exactly
         var sr = s; for (_ <- 2 to r) sr *= s
-        var q = 1.0 - sr
+        val q = 1.0 - sr
         var qb = q; for (_ <- 2 to bnd) qb *= q
         1.0 - qb
       }

@@ -98,7 +98,6 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("index health reads healthy on a fresh build and flags a skewed one") {
-    import spark.implicits._
     val (idx, _, _) = Similarity.ensureIvfPqIndex(spark, sf0001)
     val cells = spark.read.parquet(s"$idx/cells")
     val centroids = spark.read.parquet(s"$idx/centroids")

@@ -355,7 +355,7 @@ class PlanSpec extends SparkSpec {
       s"chunking should not aggregate or join:\n$p")
     // the only required-distribution exchange is the output ORDER BY's range
     // partitioning; the chunk computation itself is embarrassingly parallel
-    // (the round-robin fan-out exchange is the conf-gated small-scan helper,
+    // (the round-robin fan-out exchange is the Tables.fanOut scan helper,
     // tagged REPARTITION_BY_NUM, and AQE hides exec nodes pre-execution —
     // so the pin reads the formatted plan text)
     assert("ENSURE_REQUIREMENTS".r.findAllIn(p).size == 1,

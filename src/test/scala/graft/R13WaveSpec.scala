@@ -6,7 +6,7 @@ import graft.operators._
 
 /** Round-13 pins: the rank-parameterized matrix factorization (r12
   * verdict item #4 — `mfRankK` generalized from the hand-written 2×2
-  * Cramer solve to a conf-gated k ∈ [2,4] with a generic fixed-order
+  * Cramer solve to any k ∈ [2,4] with a generic fixed-order
   * cofactor-expansion chain).
   *
   *  - the k=3 path gets a FULL imperative recompute at sf0.001: exact
@@ -15,9 +15,8 @@ import graft.operators._
   *    production `detC`/`detD` helpers), round6 lattice re-entry —
   *    so the generalization is witnessed by a second implementation,
   *    not just by "k=2 didn't change";
-  *  - the conf gate is pinned both ways: `graft.rec.mfRank=3`
-  *    reproduces `mfRankKWith(_, _, 3)` and the default conf
-  *    reproduces the oracled k=2 entry byte-for-byte;
+  *  - `rec_mf_rankk` is pinned to `mfRankKWith(_, _, 2)` byte-for-byte,
+  *    and the rank is shown to change the readout;
   *  - k=2 bit-stability under the generic chain is pinned by
   *    R12WaveSpec's existing rank-2 recompute (its hand-written solve
   *    uses the OLD operand order — passing proves the commutative-swap
@@ -93,20 +92,13 @@ class R13WaveSpec extends SparkSpec {
     assert(got.toSeq == expected)
   }
 
-  test("graft.rec.mfRank conf gate selects the rank and defaults to the oracled k=2") {
+  test("rec_mf_rankk runs rank 2, rank changes the readout, k outside 2..4 fails") {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
     val k2 = rows(Recommend.mfRankKWith(spark, sf0001, 2))
     val k3 = rows(Recommend.mfRankKWith(spark, sf0001, 3))
-    assert(k2 != k3, "rank must change the readout, else the knob is vacuous")
-    spark.conf.set("graft.rec.mfRank", "3")
-    try assert(rows(Recommend.queries("rec_mf_rankk")(spark, sf0001)) == k3)
-    finally spark.conf.unset("graft.rec.mfRank")
+    assert(k2 != k3, "rank must change the readout, else the parameter is vacuous")
     assert(rows(Recommend.queries("rec_mf_rankk")(spark, sf0001)) == k2)
-    // malformed / out-of-range values fail loudly, naming the key
-    spark.conf.set("graft.rec.mfRank", "8")
-    try intercept[IllegalArgumentException] {
-      Recommend.queries("rec_mf_rankk")(spark, sf0001)
-    } finally spark.conf.unset("graft.rec.mfRank")
+    intercept[IllegalArgumentException](Recommend.mfRankKWith(spark, sf0001, 8))
   }
 
   test("rank-4 path solves and serves (shape + determinism smoke)") {
@@ -129,7 +121,7 @@ class R13WaveSpec extends SparkSpec {
     // widening the key can only REFINE buckets: level-2 pairs are a
     // subset of level-1 pairs on the same corpus (the AND-construction
     // property the sizing rule relies on), and both levels find pairs
-    def pairs(l: Int) = Dedup.embeddingLshWith(spark, sf0001, None,
+    def pairs(l: Int) = Dedup.embeddingLshWith(spark, sf0001,
         forceLevel = Some(l))
       .select(col("vec_a"), col("vec_b")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -139,7 +131,7 @@ class R13WaveSpec extends SparkSpec {
     // at sf0.001 the derived level is 1: the entry output is the forced
     // level-1 output byte-for-byte (the harness-SF hash-stability claim)
     val entry = Dedup.queries("dedup_embedding_lsh")(spark, sf0001).collect().toSeq
-    val forced = Dedup.embeddingLshWith(spark, sf0001, None,
+    val forced = Dedup.embeddingLshWith(spark, sf0001,
       forceLevel = Some(1)).collect().toSeq
     assert(entry == forced)
   }

@@ -4,25 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared ScalaTest base: one local SparkSession per suite, configured like
-  * the driver's Verify/Bench sessions (UTC, low shuffle partitions). */
+/** Shared ScalaTest base: the suites share one process-wide session built
+  * by [[GraftSession]], the same configuration Verify and Bench run. It is
+  * pinned at 4 cores and 4 shuffle partitions whatever `SPARK_GRAFT_CPUS`
+  * says, because the plan goldens and PartitionInvarianceSpec's co-prime
+  * 3/17 partition counts are designed against that baseline. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   protected val sf0001 = "/root/testdata/sf0.001"
 
-  protected lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // the realistic library-user setup: every test session carries the
-    // full extension ladder via the config path. Session extensions are
-    // read from the SparkContext conf, so this must be on the FIRST
-    // builder that creates the context — suites run in parallel and any
-    // of them may win that race (ExtensionsSpec asserts the config path
-    // end to end and was order-dependent before this was hoisted here).
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .getOrCreate()
+  protected lazy val spark: SparkSession = GraftSession(cores = 4)
 
   override protected def afterAll(): Unit = {
     // SparkSession is process-shared across suites (getOrCreate); do not stop
