@@ -13,13 +13,14 @@ import graft.Tables
   * over the customer–part incidence matrix (the classic neighborhood CF
   * of Sarwar et al., WWW'01, re-expressed relationally).
   *
-  * Scale stance (both entries): candidates come ONLY from an equi-join on
-  * the shared basket key (orderkey / custkey) — cost Σ|basket|², the
-  * standard co-occurrence bound — never an all-pairs item join. Item
-  * marginals are a hash-agg; the candidate relation joins them twice by
-  * item key. Top-k is TakeOrderedAndProject. At 100 TB the added guard is
-  * the hot-key cap (see [[capBaskets]], pair generation only), carried by
-  * the `*_capped` catalog twins so the lever itself is oracled.
+  * Scale stance (both entries): candidates come ONLY from an in-row
+  * generator over each grouped basket (orderkey / custkey) — cost
+  * Σ|basket|², the standard co-occurrence bound — never an all-pairs item
+  * join. Each undirected pair is counted by ONE hash-agg and joins the
+  * item marginals once per side; rules emit both directions in-row from
+  * that counted row. Top-k is TakeOrderedAndProject. At 100 TB the added
+  * guard is the hot-key cap (see [[capBaskets]], pair generation only),
+  * carried by the `*_capped` catalog twins so the lever itself is oracled.
   *
   * Determinism: supports are exact longs; confidence/lift are exact
   * integer micro/ppm units via DIV (all operands positive, so Spark's
@@ -176,8 +177,9 @@ object Recommend {
     rows * rule.num / (rule.den.toLong * keys)
 
   /** Association rules a→b with support/confidence/lift over order
-    * baskets. Pair candidates from the orderkey equi-join (a < b keeps
-    * one undirected candidate; both rule directions are emitted from it),
+    * baskets. Pair candidates from the in-row [[arrayPairs]] generator
+    * over each order basket (a < b keeps one undirected candidate; it is
+    * counted once and both rule directions are emitted from its row),
     * top-20 rules by lift with full tie-break. */
   def assocRules(spark: SparkSession, dir: String): DataFrame =
     assocRulesWith(spark, dir, NoCap)
@@ -193,7 +195,8 @@ object Recommend {
     // r13: grouped-basket memo — n_baskets is a count of the memo rows,
     // marginals explode it in-row (same distinct (o,p) multiset as the old
     // flat incidence), and pair generation is the [[arrayPairs]] generator:
-    // no cache, no self-join, no shuffle before the (pa,pb) aggregation.
+    // no cache, no self-join; the only shuffle ahead of the (pa,pb)
+    // aggregation's own exchange is arrayPairs' round-robin spread.
     val bo = opBaskets(spark, dir)
     val nBaskets = bo.agg(count(lit(1)).as("n_baskets"))
     val marg = bo.select(explode(col("ps")).as("p"))
@@ -202,11 +205,18 @@ object Recommend {
     val pairs = arrayPairs(src, "ps", "pa", "pb")
       .groupBy(col("pa"), col("pb"))
       .agg(count(lit(1)).as("n_ab"))
-    // both rule directions from each undirected pair
-    val rules = pairs.select(col("pa").as("antecedent"), col("pb").as("consequent"), col("n_ab"))
-      .unionByName(pairs.select(col("pb").as("antecedent"), col("pa").as("consequent"), col("n_ab")))
-      .join(marg.select(col("p").as("antecedent"), col("n_item").as("n_ante")), "antecedent")
-      .join(marg.select(col("p").as("consequent"), col("n_item").as("n_cons")), "consequent")
+      .join(marg.select(col("p").as("pa"), col("n_item").as("n_a")), "pa")
+      .join(marg.select(col("p").as("pb"), col("n_item").as("n_b")), "pb")
+    // both rule directions in-row from each counted undirected pair: a
+    // union of two direction projections would re-run the final (pa, pb)
+    // aggregate per branch (exchange reuse saves only the map side)
+    def rule(ante: String, cons: String, nAnte: String, nCons: String): Column =
+      struct(col(ante).as("antecedent"), col(cons).as("consequent"),
+        col(nAnte).as("n_ante"), col(nCons).as("n_cons"))
+    val rules = pairs
+      .select(explode(array(rule("pa", "pb", "n_a", "n_b"), rule("pb", "pa", "n_b", "n_a")))
+        .as("r"), col("n_ab"))
+      .select(col("r.*"), col("n_ab"))
       .crossJoin(broadcast(nBaskets))
     rules
       .withColumn("conf_ppm", expr("n_ab * 1000000 DIV n_ante"))

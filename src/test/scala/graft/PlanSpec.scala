@@ -124,6 +124,41 @@ class PlanSpec extends SparkSpec {
       s"more exchanges than the repartition + pair agg:\n$p")
   }
 
+  test("assoc rules count each part pair once: no union, no final aggregate over a reused exchange") {
+    // Exchange reuse saves only the map side of a relation consumed twice;
+    // the final (pa, pb) aggregate above it re-runs per consumer. Both rule
+    // directions are emitted in-row from one counted pair, so the FINAL
+    // AQE plan (query stages included) must show neither the union of the
+    // two directions nor a final aggregate reading a reused shuffle.
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+      AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    object Stages extends AdaptiveSparkPlanHelper
+    def input(p: SparkPlan): SparkPlan = p match {
+      case i: InputAdapter => input(i.child)
+      case r: AQEShuffleReadExec => input(r.child)
+      case s: QueryStageExec => input(s.plan)
+      case other => other
+    }
+    Seq("rec_assoc_rules", "rec_assoc_rules_capped").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sf0001)
+      df.collect() // materialize so AQE finalizes its query stages
+      val root = df.queryExecution.executedPlan
+      val finals = Stages.collect(root) {
+        case h: HashAggregateExec if h.aggregateExpressions.exists(_.mode == Final) => h
+      }
+      assert(finals.nonEmpty, s"$name: no final aggregate found in:\n$root")
+      assert(Stages.collect(root) { case u: UnionExec => u }.isEmpty,
+        s"$name plans a union of the rule directions:\n$root")
+      val rerun = finals.filter(h => input(h.child).isInstanceOf[ReusedExchangeExec])
+      assert(rerun.isEmpty,
+        s"$name re-runs a final aggregate over a reused exchange:\n$root")
+    }
+  }
+
   test("no accidental cartesian products anywhere in the catalog") {
     // the all-pairs similarity shapes are *documented* nested-loop joins
     // (brute-force scoring); everything else must be hash/broadcast/sort-merge

@@ -13,15 +13,18 @@ set -euo pipefail
 # capped twin IS probed; "capped stays flat" is the gate.
 #
 # Usage:  tools/skewbench.sh r13
+# SPARK_GRAFT_CPUS sets local[N] for every sbt run here (default 32, the
+# core count the r11-r13 records were made at).
 # Never run concurrently with another sbt command.
 cd "$(dirname "$0")/.."
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
 TAG=${1:?round tag (e.g. r13)}
 SKEW=${SPARK_GRAFT_SKEW_DIR:-/tmp/graft_sf1skew}
 if [ ! -d "$SKEW/lineitem.parquet" ]; then
-  SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.DataGen /root/testdata/sf0.1 $SKEW 10 skew"
+  sbt -batch "runMain graft.DataGen /root/testdata/sf0.1 $SKEW 10 skew"
 fi
 ENTRIES="rec_item_cosine_capped,rec_assoc_rules,rec_assoc_rules_capped,rec_user_cf,rec_user_cf_capped,dedup_embedding_lsh,dedup_embedding_lsh_capped,text_word_count,text_word_count_salted"
-SPARK_GRAFT_SF_DIR="$SKEW" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_TIME="$ENTRIES" \
+SPARK_GRAFT_SF_DIR="$SKEW" SPARK_GRAFT_TIME="$ENTRIES" \
   sbt -batch 'runMain graft.Probe' | tee "/tmp/skewprobe_$TAG.log" \
   | grep '\[probe\]' > "SKEW_$TAG.txt"
 echo "--- skewed-sf1 probe ($SKEW) vs plain-sf1 (BENCH_SF1_$TAG.json) ---"
