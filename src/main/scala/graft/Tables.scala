@@ -41,33 +41,31 @@ object Tables {
   def scratchPath(tag: String, dir: String): String =
     s"${sys.props("java.io.tmpdir")}/${scratchName(tag, dir)}"
 
-  /** Scratch-parquet memo for small DERIVED projections shared by an
-    * operator family (the graph-family pattern, commit `5e646c8`,
-    * generalized per the r10 verdict items #2/#3): build once per
-    * (dataset, EVERY input table's length+mtime, derivation version),
-    * read parquet thereafter. This is exactly what a production pipeline
-    * does with its shared substrates — materialize the incidence/
-    * posting-list table, run every algorithm off it — and at 100 TB it
-    * is the difference between one extraction shuffle per DAG and one
-    * per metric. Only exact types (long/string/decimal) may flow
-    * through: they round-trip parquet bit-for-bit, so every consumer
-    * stays hash-identical to the inline derivation. HDFS/S3-safe
-    * (Hadoop FileSystem, never java.io.File).
+  /** The scratch-memo protocol — the one way a derived relation is
+    * persisted for later phases (the graph, rec, dedup and Lloyd
+    * substrates, the trained IVF-PQ index, the source-format fixtures).
+    * Build once, read the published directory thereafter.
     *
-    * Key contract (r11 ADVICE item #1): `srcTables` must list EVERY
+    * Key: `${scratchPath(tag, dir)}_${len}_${mtime}_$version`, with one
+    * `len_mtime` pair per entry of `srcTables` in order, read through the
+    * Hadoop FileSystem (HDFS/S3-safe; `java.io.File` would stamp 0_0 off
+    * the local FS and retrain every call). `srcTables` must list EVERY
     * table the build reads — a memo keyed on a strict subset silently
     * serves stale data when an unlisted input changes. `version` encodes
     * the derivation's code constants (df caps, prefix thresholds,
-    * tokenization rules); bump it whenever the build's semantics change.
+    * tokenization rules, training constants); bump it whenever the
+    * build's semantics change.
     *
-    * Publish contract (r11 ADVICE item #2): the build lands in a unique
-    * temp dir and is RENAMED into place (atomic on local FS/HDFS), so a
-    * concurrent reader never scans a half-written directory and two
+    * Publish: `write` fills a unique temp directory, a `_SUCCESS` marker
+    * lands at its root once `write` returns (kept if the writer already
+    * made one), and the directory is RENAMED into place (atomic on local
+    * FS/HDFS). A reader sees the whole build or nothing — a build that
+    * throws leaves no trace and the next call rebuilds — and two
     * concurrent writers converge on one complete copy instead of
-    * interleaving overwrites. */
-  def scratchRelation(spark: SparkSession, dir: String, tag: String,
-                      srcTables: Seq[String], version: String)
-                     (build: => DataFrame): DataFrame = {
+    * interleaving overwrites. Returns the published path. */
+  def scratchDir(spark: SparkSession, dir: String, tag: String,
+                 srcTables: Seq[String], version: String)
+                (write: String => Unit): String = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val sig = srcTables.map { t =>
       val src = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
@@ -81,7 +79,10 @@ object Tables {
     if (!fs.exists(marker)) {
       val tmp = new org.apache.hadoop.fs.Path(
         s"${path}__tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      build.write.mode("overwrite").parquet(tmp.toString)
+      try write(tmp.toString)
+      catch { case e: Throwable => fs.delete(tmp, true); throw e }
+      val tmpMarker = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
+      if (!fs.exists(tmpMarker)) fs.create(tmpMarker, false).close()
       if (fs.exists(marker)) {
         fs.delete(tmp, true) // a concurrent writer published first — keep theirs
       } else {
@@ -106,13 +107,24 @@ object Tables {
         }
       }
     }
-    spark.read.parquet(path)
+    path
   }
 
-  /** Single-source convenience overload (version "v1"). */
+  /** [[scratchDir]] for one parquet relation — for small DERIVED
+    * projections shared by an operator family: build once, read parquet
+    * thereafter. This is what a production pipeline does with its shared
+    * substrates — materialize the incidence/posting-list table, run every
+    * algorithm off it — and at 100 TB it is the difference between one
+    * extraction shuffle per DAG and one per metric. Only exact types
+    * (long/string/decimal) may flow through: they round-trip parquet
+    * bit-for-bit, so every consumer stays hash-identical to the inline
+    * derivation. */
   def scratchRelation(spark: SparkSession, dir: String, tag: String,
-                      srcTable: String)(build: => DataFrame): DataFrame =
-    scratchRelation(spark, dir, tag, Seq(srcTable), "v1")(build)
+                      srcTables: Seq[String], version: String)
+                     (build: => DataFrame): DataFrame =
+    spark.read.parquet(scratchDir(spark, dir, tag, srcTables, version) { p =>
+      build.write.mode("overwrite").parquet(p)
+    })
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")

@@ -51,9 +51,8 @@ object Dedup {
       |FROM documents""".stripMargin
 
   /** The df-annotated rare inverted index ex(doc_id, g, df) — every
-    * posting of a shingle with df ≤ MaxShingleDf — scratch-persisted once
-    * per (dataset, documents mtime) via the graph-family memo pattern
-    * (r10 verdict item #3): `dedup_ngram_jaccard`, `dedup_ngram_prefix`,
+    * posting of a shingle with df ≤ MaxShingleDf — a `Tables.scratchRelation`
+    * memo over documents (r10 verdict item #3): `dedup_ngram_jaccard`, `dedup_ngram_prefix`,
     * `dedup_containment`, and `dedup_lsh_curve` all start from this exact
     * relation and before the memo each rebuilt shingles + the df hash-agg
     * per call. Longs and strings round-trip parquet exactly, so every

@@ -30,37 +30,29 @@ object Graph {
 
   private val Iters = 3
 
-  /** Scratch-parquet memo for the shared edge PROJECTIONS — the
-    * `lloydFitCached` pattern applied to graph substrates (r9 verdict,
-    * next-round item #4): every graph entry starts from one of three tiny
-    * derived relations (the distinct supplier–part incidence, its
-    * quantity-50 slice, or the co-supply pair list), and before this memo
-    * each entry re-ran the lineitem scan + distinct (+ the pair self-join)
-    * to rebuild them. Persisting the projection once per (dataset, mtime)
-    * is exactly what a production graph pipeline does — materialize the
-    * edge table, then run every algorithm off it — and at 100 TB it is the
-    * difference between one edge-extraction shuffle per DAG and one per
-    * metric. Longs round-trip parquet exactly, so every consumer is
-    * hash-identical to the inline derivation. HDFS/S3-safe probes (the
-    * lloydFitCached rule: Hadoop FileSystem, never java.io.File). */
-  private def scratchRelation(spark: SparkSession, dir: String, tag: String,
-                              version: String = "v1")
-                             (build: => DataFrame): DataFrame =
-    Tables.scratchRelation(spark, dir, tag, Seq("lineitem"), version)(build)
+  // Shared edge PROJECTIONS, each a `Tables.scratchRelation` memo over
+  // lineitem: every graph entry starts from one of three tiny derived
+  // relations (the distinct supplier–part incidence, its quantity-50
+  // slice, or the co-supply pair list), so the lineitem scan + distinct
+  // (+ the pair self-join) runs once per dataset instead of once per
+  // metric — materialize the edge table, then run every algorithm off it.
+  // Longs round-trip parquet exactly, so every consumer is hash-identical
+  // to the inline derivation.
 
   /** The distinct (s, p) supplier–part incidence — the base relation of
     * pagerank/ppr/hits/degree/BFS/SSSP, persisted once per dataset. */
   private def spAll(spark: SparkSession, dir: String): DataFrame =
-    scratchRelation(spark, dir, "graph_sp_all") {
+    Tables.scratchRelation(spark, dir, "graph_sp_all", Seq("lineitem"), "v1") {
       Tables.lineitem(spark, dir)
         .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
         .distinct()
     }
 
   /** The quantity-50 sparsified (p, s) slice — kcore's and the co-supply
-    * projection's base, persisted once per dataset. */
+    * projection's base, persisted once per dataset (version "q50" names
+    * the q>49 sparsifier, a derivation constant). */
   private def sp50(spark: SparkSession, dir: String): DataFrame =
-    scratchRelation(spark, dir, "graph_sp50", "q50") { // the q>49 sparsifier is a derivation constant
+    Tables.scratchRelation(spark, dir, "graph_sp50", Seq("lineitem"), "q50") {
       Tables.lineitem(spark, dir)
         .filter(col("l_quantity") > 49)
         .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
@@ -255,9 +247,9 @@ object Graph {
     * (`graph_label_prop`, `graph_modularity`) and the link-prediction
     * pair (`graph_common_neighbors`, `graph_adamic_adar`) plus
     * `graph_assortativity`. The pair self-join runs ONCE per dataset and
-    * the resulting edge list is scratch-persisted (see scratchRelation). */
+    * the resulting edge list is scratch-persisted (`Tables.scratchRelation`). */
   private def cosupplyPairs(spark: SparkSession, dir: String): DataFrame =
-    scratchRelation(spark, dir, "graph_cosupply", "q50") {
+    Tables.scratchRelation(spark, dir, "graph_cosupply", Seq("lineitem"), "q50") {
       val ps = sp50(spark, dir)
       ps.as("a").join(ps.as("b"),
           col("a.p") === col("b.p") && col("a.s") < col("b.s"))

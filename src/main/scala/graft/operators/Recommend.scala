@@ -32,15 +32,14 @@ import graft.Tables
   * repo-wide overflow rule. */
 object Recommend {
 
-  /** The shared substrates of the family, scratch-persisted once
-    * per (dataset, every input table's len+mtime) — the graph-family memo pattern
-    * (commit `5e646c8`) applied per the r10 verdict item #2: before this,
-    * every entry re-ran the lineitem scan (+ the orders join) + distinct/
-    * hash-agg to rebuild its incidence per call. All columns are exact
-    * longs, so parquet round-trips bit-for-bit and every consumer is
-    * hash-identical to the inline derivation. At 100 TB this IS the
-    * production shape: materialize the interaction table once, serve
-    * every model build off it. */
+  /** The shared substrates of the family, each a `Tables.scratchRelation`
+    * memo (r10 verdict item #2): before this, every entry re-ran the
+    * lineitem scan (+ the orders join) + distinct/hash-agg to rebuild its
+    * incidence per call. All columns are exact longs, so parquet
+    * round-trips bit-for-bit and every consumer is hash-identical to the
+    * inline derivation. At 100 TB this IS the production shape:
+    * materialize the interaction table once, serve every model build off
+    * it. */
 
   /** Distinct order baskets GROUPED by order key: (o, ps = sorted distinct
     * part array) — assocRules + nextPart. r13 optimization (guide §8/§2.4):
@@ -52,7 +51,7 @@ object Recommend {
     * the arrays reproduces the old flat relation exactly (same distinct
     * (o,p) multiset), so every consumer stays hash-identical. */
   private[operators] def opBaskets(spark: SparkSession, dir: String): DataFrame =
-    Tables.scratchRelation(spark, dir, "rec_op_bo", "lineitem") {
+    Tables.scratchRelation(spark, dir, "rec_op_bo", Seq("lineitem"), "v1") {
       Tables.lineitem(spark, dir)
         .groupBy(col("l_orderkey").as("o"))
         .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
@@ -325,42 +324,15 @@ object Recommend {
     * identical, so rank only moves the constant factor.
     *
     * Determinism: ratings are exact longs; every update is
-    * round6(double(Σ r·w) / double(Σ w²)) — exact decimal sums, ONE IEEE
-    * division on identical operands in both engines, re-entering the
-    * decimal lattice (the lrStep/Lloyd rule); scores are
-    * round6(double(u)·double(v)); ranking ties break on part id. The
-    * candidate set is |budget|·|parts| — bounded by the fixed serving
-    * budget, the knnBrute contract. */
-  def mfRank1(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val d6 = DecimalType(18, 6)
-    val obs = cprRatings(spark, dir)
-      .cache() // 4 half-steps + the serving anti-join read it
-    def updU(v: DataFrame): DataFrame = obs.join(v, "p")
-      .groupBy(col("c"))
-      .agg(round(sum(col("r") * col("v")).cast("double") /
-        sum(col("v") * col("v")).cast("double"), 6).cast(d6).as("u"))
-    def updV(u: DataFrame): DataFrame = obs.join(u, "c")
-      .groupBy(col("p"))
-      .agg(round(sum(col("r") * col("u")).cast("double") /
-        sum(col("u") * col("u")).cast("double"), 6).cast(d6).as("v"))
-    val v0 = obs.select(col("p")).distinct()
-      .withColumn("v", lit(BigDecimal(1).setScale(6)).cast(d6))
-    val u1 = updU(v0)
-    val v1 = updV(u1)
-    val u2 = updU(v1).cache() // candidate expansion + (transitively) v2
-    val v2 = updV(u2)
-    val cand = v2.crossJoin(broadcast(u2.filter(col("c") < 20)))
-      .select(col("c"), col("p"),
-        round(col("u").cast("double") * col("v").cast("double"), 6).as("score"))
-    val unobs = cand.join(obs, Seq("c", "p"), "left_anti")
-    unobs.withColumn("rn", row_number().over(
-        Window.partitionBy(col("c")).orderBy(col("score").desc, col("p"))).cast("long"))
-      .filter(col("rn") <= 5)
-      .select(col("c").as("custkey"), col("p").as("partkey"),
-        col("score"), col("rn"))
-      .orderBy(col("custkey"), col("rn"))
-  }
+    * round6(double(Σ r·w) / (double(Σ w²) + 0.0)) — [[mfRankKWith]]'s
+    * 1×1 Cramer chain with λ = 0 (adding +0.0 to a nonnegative double is
+    * the identity): exact decimal sums, ONE IEEE division on identical
+    * operands in both engines, re-entering the decimal lattice (the
+    * lrStep/Lloyd rule); scores are round6(double(u)·double(v)); ranking
+    * ties break on part id. The candidate set is |budget|·|parts| —
+    * bounded by the fixed serving budget, the knnBrute contract. */
+  def mfRank1(spark: SparkSession, dir: String): DataFrame =
+    mfRankKWith(spark, dir, 1, 0.0)
 
   /** Rank-k matrix factorization by ALS, entirely in-plan — the
     * generalization `rec_mf_rank1`'s comment promised ("each half-step is
@@ -372,9 +344,10 @@ object Recommend {
     * update being a closed-form k×k RIDGE solve (ALS-WR's λI, λ = 0.1,
     * which also kills the det=0 singularity of single-item entities).
     * The catalog entry runs k = 2 (so its oracle hash is unchanged;
-    * [[mfRank3]] is the oracled k = 3 twin); [[mfRankKWith]] supports
-    * 2–4 — beyond that an unrolled Cramer chain stops being the right
-    * solver and a blocked in-core solve à la MLlib takes over. At 100 TB nothing new
+    * [[mfRank3]] is the oracled k = 3 twin, [[mfRank1]] the unregularised
+    * k = 1 one); [[mfRankKWith]] supports 1–4 — beyond that an unrolled
+    * Cramer chain stops being the right solver and a blocked in-core
+    * solve à la MLlib takes over. At 100 TB nothing new
     * shuffles: factors are k doubles per entity, moments combine
     * map-side, and k² stays a per-row constant — this is exactly how
     * Spark MLlib's ALS shards, minus its blocked in-core solver.
@@ -393,7 +366,7 @@ object Recommend {
     * arithmetic, no RNG. Serving is the rank-1 contract:
     * |budget|·|parts| grid, anti-join observed, top-5 per customer. */
   def mfRankK(spark: SparkSession, dir: String): DataFrame =
-    mfRankKWith(spark, dir, 2)
+    mfRankKWith(spark, dir, 2, 0.1)
 
   /** det by first-row cofactor expansion with a FIXED term order — the
     * shared solve chain of the Spark plan and the spec's imperative
@@ -433,11 +406,13 @@ object Recommend {
     }
   }
 
-  private[graft] def mfRankKWith(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    require(k >= 2 && k <= 4, s"mfRankKWith supports rank 2 to 4 (got $k)")
+  /** Rank-k ALS with ridge `lambda` (the λ of (FᵀF + λI) x = Fᵀr). */
+  private[graft] def mfRankKWith(spark: SparkSession, dir: String, k: Int,
+                                 lambda: Double): DataFrame = {
+    require(k >= 1 && k <= 4, s"mfRankKWith supports rank 1 to 4 (got $k)")
     import org.apache.spark.sql.types.DecimalType
     val d6 = DecimalType(18, 6)
-    val lam = lit(0.1)
+    val lam = lit(lambda)
     val obs = cprRatings(spark, dir)
       .cache() // 4 half-steps + the serving anti-join read it
     def d(c: Column): Column = c.cast("double")
@@ -505,7 +480,7 @@ object Recommend {
     * chain; shuffles are identical to rank-2 — the "rank only moves the
     * constant factor" claim, now hash-gated. */
   def mfRank3(spark: SparkSession, dir: String): DataFrame =
-    mfRankKWith(spark, dir, 3)
+    mfRankKWith(spark, dir, 3, 0.1)
 
   /** Slope One prediction (Lemire & Maclachlan, SDM'05) — the
     * DEVIATION-based member of the family: for each co-rated item pair

@@ -208,32 +208,18 @@ object Sources {
       .filter(col("o_year") === 1997) // prunes to one directory
       .withColumn("o_year", col("o_year").cast("long"))
 
-  /** The year-partitioned orders scratch table itself (written once per
-    * (scratch, sf dir), `_SUCCESS`+mtime gated), UNfiltered — also the
-    * fixture for the dynamic-partition-pruning pin in RuntimeFilterSpec. */
-  private[graft] def partitionedOrdersTable(spark: SparkSession, dir: String): DataFrame = {
-    val out = Tables.scratchPath("partby_year", dir)
-    // write once per (scratch, sf dir): catalog-wide plan sweeps construct
-    // every entry repeatedly, and the layout write is eager at construction
-    // time — the _SUCCESS marker gates re-writes (same reason
-    // join_bucketed_revenue guards on tableExists); testdata is immutable,
-    // so an existing complete write is always current
-    val outPath = new org.apache.hadoop.fs.Path(out)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(outPath, "_SUCCESS")
-    val src = new org.apache.hadoop.fs.Path(s"$dir/orders.parquet")
-    // stale-proof gate: rewrite when the marker is missing OR the source
-    // table is newer than the last successful write (testdata regeneration
-    // must not keep serving an old layout)
-    val fresh = fs.exists(marker) &&
-      fs.getFileStatus(marker).getModificationTime >
-        fs.getFileStatus(src).getModificationTime
-    if (!fresh)
-      Tables.orders(spark, dir)
-        .withColumn("o_year", year(col("o_orderdate")))
-        .write.mode("overwrite").partitionBy("o_year").parquet(out)
-    spark.read.parquet(out)
-  }
+  /** The year-partitioned orders scratch table itself (a
+    * `Tables.scratchDir` memo over orders), UNfiltered — also the fixture
+    * for the dynamic-partition-pruning pin in RuntimeFilterSpec. Catalog-
+    * wide plan sweeps construct every entry repeatedly and the layout
+    * write is eager at construction time, so it runs once per key. */
+  private[graft] def partitionedOrdersTable(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(
+      Tables.scratchDir(spark, dir, "partby_year", Seq("orders"), "v1") { out =>
+        Tables.orders(spark, dir)
+          .withColumn("o_year", year(col("o_orderdate")))
+          .write.mode("overwrite").partitionBy("o_year").parquet(out)
+      })
 
   /** Schema evolution across parquet batches — the 100 TB reality that a
     * table's files were written over years by different pipeline versions:
@@ -260,34 +246,23 @@ object Sources {
         count(when(col("o_channel") === "web", 1)).as("n_web"))
       .orderBy(col("o_year"))
 
-  /** The two-epoch scratch table behind `src_schema_evolution` (written
-    * once per (scratch, sf dir), root-marker + mtime gated like
-    * `partitionedOrdersTable`). */
+  /** The two-epoch scratch table behind `src_schema_evolution` (a
+    * `Tables.scratchDir` memo over orders: both epochs publish together
+    * or not at all). */
   private[graft] def evolvedOrdersTable(spark: SparkSession, dir: String): DataFrame = {
-    val out = Tables.scratchPath("schema_evo", dir)
-    val outPath = new org.apache.hadoop.fs.Path(out)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(outPath, "_GRAFT_EVO_DONE")
-    val src = new org.apache.hadoop.fs.Path(s"$dir/orders.parquet")
-    val fresh = fs.exists(marker) &&
-      fs.getFileStatus(marker).getModificationTime >
-        fs.getFileStatus(src).getModificationTime
-    if (!fresh) {
+    val out = Tables.scratchDir(spark, dir, "schema_evo", Seq("orders"), "v1") { tmp =>
       val o = Tables.orders(spark, dir)
         .withColumn("o_year", year(col("o_orderdate")))
       o.filter(col("o_year") < 1995)
         .select(col("o_orderkey"), col("o_orderpriority"),
           col("o_totalprice"), col("o_year"))
-        .write.mode("overwrite").parquet(s"$out/epoch1")
+        .write.mode("overwrite").parquet(s"$tmp/epoch1")
       o.filter(col("o_year") >= 1995)
         .select(col("o_orderkey"), col("o_orderpriority"),
           col("o_totalprice"), col("o_year"),
           when(col("o_orderkey") % 3 === 0, lit("web"))
             .otherwise(lit("store")).as("o_channel"))
-        .write.mode("overwrite").parquet(s"$out/epoch2")
-      // root marker only after BOTH epochs landed: a crash between the
-      // writes leaves no marker, so the next construction rewrites cleanly
-      fs.create(marker, true).close()
+        .write.mode("overwrite").parquet(s"$tmp/epoch2")
     }
     spark.read.option("mergeSchema", "true")
       .parquet(s"$out/epoch1", s"$out/epoch2")
@@ -322,21 +297,12 @@ object Sources {
 
   /** Executor-side fixture writer behind `src_binary_files`: each task
     * writes its partition's documents as individual .bin files through the
-    * Hadoop FS API — no driver collect; the driver only places the marker
-    * after every partition committed (crash ⇒ no marker ⇒ clean rewrite).
-    * Same once-per-(scratch, sf) mtime gate as `partitionedOrdersTable`. */
-  private def binaryFilesFixture(spark: SparkSession, dir: String): String = {
-    val out = Tables.scratchPath("binfiles", dir)
-    val outPath = new org.apache.hadoop.fs.Path(out)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(outPath, "_GRAFT_BIN_DONE")
-    val src = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fresh = fs.exists(marker) &&
-      fs.getFileStatus(marker).getModificationTime >
-        fs.getFileStatus(src).getModificationTime
-    val filesDir = s"$out/files"
-    if (!fresh) {
-      fs.delete(outPath, true)
+    * Hadoop FS API, nothing is collected. A `Tables.scratchDir` memo over
+    * documents: the file set publishes only after every partition
+    * committed. Returns the directory holding the .bin files. */
+  private def binaryFilesFixture(spark: SparkSession, dir: String): String =
+    Tables.scratchDir(spark, dir, "binfiles", Seq("documents"), "v1") { out =>
+      val filesDir = s"$out/files"
       // ship the REAL hadoop conf to the tasks (fs.defaultFS, credentials —
       // a bare `new Configuration()` would resolve the executor's local FS
       // on a real cluster and scatter the files across nodes)
@@ -356,10 +322,7 @@ object Sources {
             os.close()
           }
         }
-      fs.create(marker, true).close()
-    }
-    filesDir
-  }
+    } + "/files"
 
   /** U2: seeded stratified sample by order status; per-stratum achieved
     * counts. Sampling is partition-order-sensitive → no SQL oracle; the

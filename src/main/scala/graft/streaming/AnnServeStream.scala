@@ -62,10 +62,7 @@ object AnnServeStream {
     val codebook = spark.read.parquet(s"$idx/codebook").cache()
     val cells = spark.read.parquet(s"$idx/cells").cache()
     val codes = spark.read.parquet(s"$idx/codes").cache()
-    val corpus = Similarity.vectors(spark, dir)
-      .withColumn("vn", transform(col("v"), x => x / col("nrm")))
-      .select(col("vec_id"), col("vn"))
-      .cache()
+    val corpus = Similarity.unitVectors(spark, dir).cache()
     queries.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>

@@ -467,9 +467,9 @@ class PlanSpec extends SparkSpec {
     // size — either codebook/centroid LocalRelations (k rows) or a relation
     // filtered to the fixed query budget; a hint on the encoded corpus or
     // candidate set would be the round-2 scale-killer reborn
-    // the r10 build-once index memo persists the k-row centroid/codebook
-    // relations to scratch parquet (path tag "ivfpq_idx"); those artifacts
-    // are cells/PqK-sized — constant in the corpus by construction — so a
+    // the IVF-PQ index memo (`Similarity.ivfPqIndex`) persists the k-row
+    // centroid/codebook relations to scratch parquet; those artifacts are
+    // cells/PqK-sized — constant in the corpus by construction — so a
     // hint on them is as bounded as the LocalRelation it replaced
     // identified by their exact schemas — the corpus-sized index relations
     // (cells/codes) carry vec_id and never qualify

@@ -7,7 +7,8 @@ import graft.operators._
 /** Round-13 pins: the rank-parameterized matrix factorization (r12
   * verdict item #4 — `mfRankK` generalized from the hand-written 2×2
   * Cramer solve to any k ∈ [2,4] with a generic fixed-order
-  * cofactor-expansion chain).
+  * cofactor-expansion chain; since widened to k = 1, `rec_mf_rank1`,
+  * at ridge λ = 0).
   *
   *  - the k=3 path gets a FULL imperative recompute at sf0.001: exact
   *    BigDecimal normal-equation moments, a HAND-WRITTEN 3×3 Cramer
@@ -15,7 +16,7 @@ import graft.operators._
   *    production `detC`/`detD` helpers), round6 lattice re-entry —
   *    so the generalization is witnessed by a second implementation,
   *    not just by "k=2 didn't change";
-  *  - `rec_mf_rankk` is pinned to `mfRankKWith(_, _, 2)` byte-for-byte,
+  *  - `rec_mf_rankk` is pinned to `mfRankKWith(_, _, 2, 0.1)` byte-for-byte,
   *    and the rank is shown to change the readout;
   *  - k=2 bit-stability under the generic chain is pinned by
   *    R12WaveSpec's existing rank-2 recompute (its hand-written solve
@@ -86,24 +87,25 @@ class R13WaveSpec extends SparkSpec {
         .sortBy { case (p, s) => (-s, p) }.take(5).zipWithIndex
         .map { case ((p, s), i) => (c, p, s, (i + 1).toLong) }
     }
-    // through the catalog entry (rec_mf_rank3 IS mfRankKWith(_, _, 3))
+    // through the catalog entry (rec_mf_rank3 IS mfRankKWith(_, _, 3, 0.1))
     val got = Recommend.queries("rec_mf_rank3")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(got.toSeq == expected)
   }
 
-  test("rec_mf_rankk runs rank 2, rank changes the readout, k outside 2..4 fails") {
+  test("rec_mf_rankk runs rank 2, rank changes the readout, k outside 1..4 fails") {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val k2 = rows(Recommend.mfRankKWith(spark, sf0001, 2))
-    val k3 = rows(Recommend.mfRankKWith(spark, sf0001, 3))
+    val k2 = rows(Recommend.mfRankKWith(spark, sf0001, 2, 0.1))
+    val k3 = rows(Recommend.mfRankKWith(spark, sf0001, 3, 0.1))
     assert(k2 != k3, "rank must change the readout, else the parameter is vacuous")
     assert(rows(Recommend.queries("rec_mf_rankk")(spark, sf0001)) == k2)
-    intercept[IllegalArgumentException](Recommend.mfRankKWith(spark, sf0001, 8))
+    intercept[IllegalArgumentException](Recommend.mfRankKWith(spark, sf0001, 8, 0.1))
+    intercept[IllegalArgumentException](Recommend.mfRankKWith(spark, sf0001, 0, 0.0))
   }
 
   test("rank-4 path solves and serves (shape + determinism smoke)") {
-    val k4a = Recommend.mfRankKWith(spark, sf0001, 4).collect().toSeq
-    val k4b = Recommend.mfRankKWith(spark, sf0001, 4).collect().toSeq
+    val k4a = Recommend.mfRankKWith(spark, sf0001, 4, 0.1).collect().toSeq
+    val k4b = Recommend.mfRankKWith(spark, sf0001, 4, 0.1).collect().toSeq
     assert(k4a == k4b && k4a.nonEmpty)
     assert(k4a.forall(r => r.getLong(3) >= 1 && r.getLong(3) <= 5))
   }
