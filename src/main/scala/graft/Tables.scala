@@ -133,6 +133,15 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame      = table(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "lineitem")
+
+  /** Footer-probe results per path — the physical encoding of a parquet
+    * file cannot change without the path changing in any sane layout
+    * (testdata regeneration restarts the process), and the events loader
+    * runs once per catalog entry, so caching saves a listing + footer
+    * read per call without staleness risk. */
+  private val tsTypeCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Option[org.apache.spark.sql.types.DataType]]()
+
   /** `events.ts` ingestion is PROBED, never assumed: the harness has shipped
     * this column as both TIMESTAMP(NANOS) (which Spark 4's reader rejects
     * outright — PARQUET_TYPE_ILLEGAL) and TIMESTAMP(MICROS) (which decodes
@@ -144,14 +153,6 @@ object Tables {
     *     DuckDB applies when it reads nanos, so oracle comparisons agree.
     * Hard-coding either branch silently corrupts the other encoding's
     * timeline by 1000× — the probe is the contract. */
-  /** Footer-probe results per path — the physical encoding of a parquet
-    * file cannot change without the path changing in any sane layout
-    * (testdata regeneration restarts the process), and the events loader
-    * runs once per catalog entry, so caching saves a listing + footer
-    * read per call without staleness risk. */
-  private val tsTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[org.apache.spark.sql.types.DataType]]()
-
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     val path = s"$dir/events.parquet"

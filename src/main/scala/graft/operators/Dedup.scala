@@ -910,29 +910,21 @@ object Dedup {
   /** Near-dup CLUSTERS from verified pairs — the step real dedup pipelines
     * run after pair generation: pairs only say "a~b"; keeping one doc per
     * GROUP needs the transitive closure (a~b, b~c ⇒ {a,b,c} is one
-    * cluster, survivor = min doc_id). Computed by [[ccContract]].
+    * cluster, survivor = min doc_id). Computed by [[ccContract]], which
+    * runs its contraction rounds EAGERLY at construction (like a
+    * model.fit): the returned lineage is checkpoint-rooted.
     *
     * Oracle: DuckDB WITH RECURSIVE reachability over the same verified
     * pairs — a second, independent formulation of the transitive closure,
     * valid for any CC algorithm. */
-  /** The iterative fit runs EAGERLY at construction (like a model.fit), so
-    * the result is memoized per (session, dir): catalog-wide plan sweeps
-    * construct every entry repeatedly and must not re-run the loop. The
-    * memo holds the converged LINEAGE (checkpoint-rooted, a fixed number
-    * of join/agg rounds), so it stays valid even after a clearCache() —
-    * recomputation replays the rounds without the driver loop. */
-  private val ccMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
-    ccMemo.getOrElseUpdate((spark, dir), {
-      val pairs = minhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
-      val (labels, _) = ccContract(pairs)
-      val sizes = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_docs"))
-      labels.join(sizes, "cluster_id")
-        .select(col("doc_id"), col("cluster_id"), col("n_docs"))
-        .orderBy(col("doc_id"))
-    })
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
+    val pairs = minhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
+    val (labels, _) = ccContract(pairs)
+    val sizes = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_docs"))
+    labels.join(sizes, "cluster_id")
+      .select(col("doc_id"), col("cluster_id"), col("n_docs"))
+      .orderBy(col("doc_id"))
+  }
 
   /** INCREMENTAL connected components — the daily-batch shape: when a new
     * slice of near-dup pairs lands, a 100 TB pipeline cannot re-cluster
@@ -946,30 +938,26 @@ object Dedup {
     * the entry is gated by the SAME topology-independent full-closure
     * oracle as dedup_cc_clusters, which is precisely the "incremental ≡
     * full recompute" claim. Batch split is deterministic (pair-hash 1-in-5
-    * "today"). Memoized like dedupClusters (eager iterative fit). */
-  def dedupIncremental(spark: SparkSession, dir: String): DataFrame =
-    ccIncMemo.getOrElseUpdate((spark, dir), {
-      val pairs = minhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
-      val isNew = pmod(xxhash64(col("doc_a"), col("doc_b")), lit(5)) === 0
-      val (oldLabels, _) = ccContract(pairs.filter(!isNew))
-      val stars = oldLabels
-        .select(col("doc_id").as("doc_a"), col("cluster_id").as("doc_b"))
-      val (labels, _) = ccContract(stars.unionByName(pairs.filter(isNew)))
-      val sizes = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_docs"))
-      labels.join(sizes, "cluster_id")
-        .select(col("doc_id"), col("cluster_id"), col("n_docs"))
-        .orderBy(col("doc_id"))
-    })
-
-  private val ccIncMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * "today"). Both contractions run eagerly, as in dedupClusters. */
+  def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
+    val pairs = minhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
+    val isNew = pmod(xxhash64(col("doc_a"), col("doc_b")), lit(5)) === 0
+    val (oldLabels, _) = ccContract(pairs.filter(!isNew))
+    val stars = oldLabels
+      .select(col("doc_id").as("doc_a"), col("cluster_id").as("doc_b"))
+    val (labels, _) = ccContract(stars.unionByName(pairs.filter(isNew)))
+    val sizes = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_docs"))
+    labels.join(sizes, "cluster_id")
+      .select(col("doc_id"), col("cluster_id"), col("n_docs"))
+      .orderBy(col("doc_id"))
+  }
 
   /** The dedup pipeline's ENDING: the survivor report a corpus job
     * actually emits. The contraction converges to stars centered at the
     * minimum doc_id per component, so the cluster label IS the survivor; per
     * cluster the report carries the survivor, the sorted member roster,
     * and how many near-dup docs get dropped. Pure aggregation over the
-    * memoized cluster labels — no new iteration.
+    * cluster labels — no new contraction of its own.
     *
     * MEMORY CONTRACT: the members roster is a collect_list, so per-group
     * state is O(cluster size) on one executor. Near-dup clusters are
@@ -994,7 +982,7 @@ object Dedup {
     * score, preferred source) are what production pipelines actually
     * ship, and the argmax must be DETERMINISTIC under ties or two runs
     * of the same pipeline keep different documents. One equi-join of the
-    * memoized cluster labels against the documents table (both sides
+    * cluster labels against the documents table (both sides
     * partitioned on doc_id) and one per-cluster window — clusters are
     * small by construction, so the window partitions are tiny. */
   def bestSurvivor(spark: SparkSession, dir: String): DataFrame = {

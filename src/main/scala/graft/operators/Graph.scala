@@ -382,19 +382,13 @@ object Graph {
     dist.select(col("node"), col("d").as("dist")).orderBy(col("node"))
   }
 
-  /** Eager iterative fit → memoized per (session, dir), like Dedup.ccMemo:
-    * catalog-wide sweeps construct every entry repeatedly and must not
-    * re-run the loop. */
-  private val bfsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def khopDistance(spark: SparkSession, dir: String): DataFrame =
-    bfsMemo.getOrElseUpdate((spark, dir), {
-      val seeds = Tables.lineitem(spark, dir)
-        .filter(col("l_suppkey") <= 5)
-        .select((col("l_suppkey") * 2).as("node")).distinct()
-      bfsDistances(edges(spark, dir), seeds, MaxHops)
-    })
+  /** Eager iterative fit: the BFS rounds run at construction. */
+  def khopDistance(spark: SparkSession, dir: String): DataFrame = {
+    val seeds = Tables.lineitem(spark, dir)
+      .filter(col("l_suppkey") <= 5)
+      .select((col("l_suppkey") * 2).as("node")).distinct()
+    bfsDistances(edges(spark, dir), seeds, MaxHops)
+  }
 
   /** Common-neighbors link prediction over the sparsified co-supply graph
     * (same quantity-50 slice as triangleCounts): top-20 NON-adjacent
@@ -688,22 +682,18 @@ object Graph {
     dist.select(col("node"), col("cost").as("cost_cents")).orderBy(col("node"))
   }
 
-  private val ssspMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def ssspWeighted(spark: SparkSession, dir: String): DataFrame =
-    ssspMemo.getOrElseUpdate((spark, dir), {
-      val li = Tables.lineitem(spark, dir)
-      val e0 = li.filter(col("l_quantity") >= 48)
-        .groupBy(col("l_suppkey").as("s"), col("l_partkey").as("p"))
-        .agg((min(col("l_extendedprice")).cast("decimal(12,2)") * 100)
-          .cast("long").as("w"))
-      val edgeRel = e0.select((col("s") * 2).as("src"), (col("p") * 2 + 1).as("dst"), col("w"))
-        .unionByName(e0.select((col("p") * 2 + 1).as("src"), (col("s") * 2).as("dst"), col("w")))
-      val seeds = li.filter(col("l_suppkey") <= 5)
-        .select((col("l_suppkey") * 2).as("node")).distinct()
-      ssspDistances(edgeRel, seeds, SsspRounds)
-    })
+  def ssspWeighted(spark: SparkSession, dir: String): DataFrame = {
+    val li = Tables.lineitem(spark, dir)
+    val e0 = li.filter(col("l_quantity") >= 48)
+      .groupBy(col("l_suppkey").as("s"), col("l_partkey").as("p"))
+      .agg((min(col("l_extendedprice")).cast("decimal(12,2)") * 100)
+        .cast("long").as("w"))
+    val edgeRel = e0.select((col("s") * 2).as("src"), (col("p") * 2 + 1).as("dst"), col("w"))
+      .unionByName(e0.select((col("p") * 2 + 1).as("src"), (col("s") * 2).as("dst"), col("w")))
+    val seeds = li.filter(col("l_suppkey") <= 5)
+      .select((col("l_suppkey") * 2).as("node")).distinct()
+    ssspDistances(edgeRel, seeds, SsspRounds)
+  }
 
   /** k-core decomposition (k=2) of the sparsified quantity-50 co-supply
     * slice: iteratively peel nodes of degree < k until the fixed point —
@@ -721,9 +711,6 @@ object Graph {
     * point. Output: each surviving node with its in-core degree. */
   private val KCoreK = 2
   private val KCoreRounds = 8
-
-  private val kcoreMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   /** The peel core over an arbitrary directed-both-ways (src, dst) edge
     * relation — split from the catalog entry so GraphSpec can drive it on
@@ -761,7 +748,7 @@ object Graph {
     * part — the one graph in the harness with real triangles; the kcore
     * bipartite graph has none by construction). Same fixpoint discipline
     * as `kcoreSurvivors`: per-round eager localCheckpoint, convergence
-    * REQUIREd inside the round budget, memoized per (session, dir).
+    * REQUIREd inside the round budget.
     *
     * Support counting is the standard adjacency equi-join (edge ⋈ und ⋈
     * und on the shared wedge node, grouped per edge) — Σ deg(u)·deg(v)
@@ -770,9 +757,6 @@ object Graph {
     * keys. Output: the surviving edges with their in-truss support. */
   private val TrussMinSup = 2 // k = 4 ⇒ every surviving edge in ≥ 2 triangles
   private val TrussRounds = 8
-
-  private val trussMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   /** Per-edge triangle support over an undirected (u < v) edge relation. */
   private def edgeSupports(e: DataFrame): DataFrame = {
@@ -806,21 +790,18 @@ object Graph {
     edgeSupports(e).orderBy(col("u"), col("v"))
   }
 
+  // quantity is integral ≤ 50, so the shared > 49 slice IS the = 50
+  // slice the oracle filters on — one persisted pair list serves both
   def ktruss(spark: SparkSession, dir: String): DataFrame =
-    trussMemo.getOrElseUpdate((spark, dir), {
-      // quantity is integral ≤ 50, so the shared > 49 slice IS the = 50
-      // slice the oracle filters on — one persisted pair list serves both
-      trussSurvivors(cosupplyPairs(spark, dir), TrussMinSup, TrussRounds)
-    })
+    trussSurvivors(cosupplyPairs(spark, dir), TrussMinSup, TrussRounds)
 
-  def kcore(spark: SparkSession, dir: String): DataFrame =
-    kcoreMemo.getOrElseUpdate((spark, dir), {
-      val e0 = sp50(spark, dir)
-        .select((col("s") * 2).as("a"), (col("p") * 2 + 1).as("b"))
-      val ed0 = e0.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(e0.select(col("b").as("src"), col("a").as("dst")))
-      kcoreSurvivors(ed0, KCoreK, KCoreRounds)
-    })
+  def kcore(spark: SparkSession, dir: String): DataFrame = {
+    val e0 = sp50(spark, dir)
+      .select((col("s") * 2).as("a"), (col("p") * 2 + 1).as("b"))
+    val ed0 = e0.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(e0.select(col("b").as("src"), col("a").as("dst")))
+    kcoreSurvivors(ed0, KCoreK, KCoreRounds)
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "graph_sssp_weighted" -> (ssspWeighted _),

@@ -56,8 +56,8 @@ class CcContractSpec extends SparkSpec {
   }
 
   test("contraction agrees with the recursive-closure shape on the real corpus") {
-    // dedupClusters (memoized, oracled) and a fresh ccContract over the same
-    // pairs must agree exactly — pins the memo path to the algorithm
+    // dedupClusters (the oracled entry) and a bare ccContract over the same
+    // pairs must agree exactly — pins the entry's wrapping to the algorithm
     val pairs = Dedup.minhashLsh(spark, sf0001).select(col("doc_a"), col("doc_b"))
     val (labels, rounds) = Dedup.ccContract(pairs)
     assert(rounds >= 1)

@@ -4,7 +4,9 @@ package graft
   *  - every oracleSql key has a queries entry;
   *  - every query runs at sf0.001 and yields rows with distinct column names
   *    (the driver sorts columns by name before hashing — duplicates would
-  *    silently corrupt the compare);
+  *    silently corrupt the compare), read from the shared [[CatalogSweep]],
+  *    whose codegen-fallback-off session also fails a stage janino cannot
+  *    compile;
   *  - the flagship entry() returns rows > 0 (the smoke check on entry());
   *  - the shared session is the GraftSession configuration Verify and
   *    Bench run: UTC, with the GraftExtensions ladder injected.
@@ -33,14 +35,11 @@ class ContractSpec extends SparkSpec {
   test("every query runs at sf0.001 with unique column names") {
     // (zero rows is legal for near-dup thresholds at tiny SF; the driver's
     // rows>0 smoke applies only to entry())
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try {
-        val df = fn(spark, sf0001)
-        val cols = df.columns.toSeq
-        val dups = cols.groupBy(identity).collect { case (c, g) if g.size > 1 => c }
-        df.count()
-        if (dups.nonEmpty) Some(s"$name: duplicate columns $dups") else None
-      } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+    val failures = CatalogSweep.entries.flatMap { e =>
+      val dups = e.built.toSeq.flatMap(_.columns)
+        .groupBy(identity).collect { case (c, g) if g.size > 1 => c }
+      e.error.map(err => s"${e.name}: ${err.getMessage}")
+        .orElse(if (dups.nonEmpty) Some(s"${e.name}: duplicate columns $dups") else None)
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }

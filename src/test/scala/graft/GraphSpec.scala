@@ -1,5 +1,9 @@
 package graft
 
+import java.io.File
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Graph
@@ -182,6 +186,42 @@ class GraphSpec extends SparkSpec {
       if (dn > 0)
         assert(adj(n).exists(m => d.get(m).contains(dn - 1)),
           s"node $n at depth $dn has no neighbor at depth ${dn - 1}")
+    }
+  }
+
+  test("k-hop distances follow a rewrite of lineitem within one session") {
+    // a private copy of lineitem, so the spec can rewrite it in place
+    val dir = Files.createTempDirectory("graph_stale_input")
+    val li = dir.resolve("lineitem.parquet")
+    Files.copy(Paths.get(s"$sf0001/lineitem.parquet"), li)
+    def rm(f: File): Unit = {
+      Option(f.listFiles()).toSeq.flatten.foreach(rm)
+      f.delete()
+    }
+    def dist(s: SparkSession): Seq[(Long, Long)] =
+      Graph.khopDistance(s, dir.toString).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    try {
+      val before = dist(spark)
+      // drop supplier 1 — one of the BFS seeds — and publish the smaller
+      // file under the same name
+      val out = dir.resolve("rewrite").toString
+      spark.read.parquet(li.toString).filter(col("l_suppkey") =!= 1)
+        .coalesce(1).write.parquet(out)
+      val part = new File(out).listFiles().filter(_.getName.endsWith(".parquet")).head
+      Files.copy(part.toPath, li, StandardCopyOption.REPLACE_EXISTING)
+      val after = dist(spark)
+      assert(after == dist(spark.newSession()),
+        "the session served distances computed from the old lineitem")
+      assert(after.nonEmpty && after != before,
+        "dropping a seed supplier should change, not empty, the distances")
+    } finally {
+      rm(dir.toFile)
+      // every scratch memo built over the private copy, whatever its tag
+      val copyKey = Tables.scratchName("", dir.toString).stripPrefix("graft_")
+      Option(new File(sys.props("java.io.tmpdir")).listFiles()).toSeq.flatten
+        .filter(f => f.getName.startsWith("graft_") && f.getName.contains(copyKey))
+        .foreach(rm)
     }
   }
 }

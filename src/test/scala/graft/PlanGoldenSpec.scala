@@ -3,9 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
-
 import scala.jdk.CollectionConverters._
 
 /** Round-over-round physical-plan STABILITY pin: every catalog entry's
@@ -21,9 +18,10 @@ import scala.jdk.CollectionConverters._
   * no expressions, subqueries included — so it survives run-to-run noise
   * (exchange/codegen numbering, alias ids) but not shape changes
   * (an extra Exchange, a lost TakeOrderedAndProject, a window where none
-  * was). Entries whose physical shape is legitimately session-dependent
-  * (iterative pipelines that memoize checkpointed results per session)
-  * are excluded by the UNSTABLE list with per-name reasons.
+  * was). Entries whose physical shape legitimately depends on what ran
+  * before them in the JVM (trained models, memoized fits) are excluded by
+  * the UNSTABLE list with per-name reasons. The plans come from the
+  * shared [[CatalogSweep]].
   *
   * On an intentional plan change: re-run with
   * `GRAFT_PLANS_REGEN=true sbt "testOnly graft.PlanGoldenSpec"`
@@ -36,20 +34,6 @@ class PlanGoldenSpec extends SparkSpec {
   /** Entries excluded from the pin, each with the reason it cannot be
     * fingerprint-stable across suite orderings in one JVM. */
   private val Unstable: Map[String, String] = Map(
-    // iterative fixpoint pipelines memoize their (eager-checkpointed)
-    // result per session: the plan is the full lineage on first build in
-    // a JVM but a checkpoint-RDD scan when another suite ran them first
-    "dedup_cc_clusters" -> "memoized checkpoint",
-    "dedup_cc_incremental" -> "memoized checkpoint",
-    "dedup_cc_survivors" -> "memoized checkpoint",
-    "dedup_best_survivor" -> "memoized checkpoint",
-    "graph_khop_distance" -> "memoized checkpoint",
-    "graph_sssp_weighted" -> "memoized checkpoint",
-    "graph_kcore" -> "memoized checkpoint",
-    "graph_ktruss" -> "memoized checkpoint",
-    "graph_pagerank" -> "memoized checkpoint",
-    "typed_longest_streak" -> "memoized checkpoint",
-    "scd2_status_history" -> "memoized checkpoint",
     // trained-model entries: the fit runs at plan-build time; assignment
     // cardinalities (and with them join-side estimates) may shift with
     // KMeans seeds/corpus regeneration
@@ -70,25 +54,22 @@ class PlanGoldenSpec extends SparkSpec {
     "sim_davies_bouldin" -> "memoized Lloyd fit (train vs scratch-parquet scan)"
   )
 
-  private def fingerprint(df: DataFrame): String = {
-    val s = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+  private def fingerprint(s: String): String = {
     val op = """(?m)^\(\d+\) ([A-Za-z][A-Za-z0-9 ]*)""".r
     op.findAllMatchIn(s).map(_.group(1).trim).toSeq
       .groupBy(identity).toSeq.sortBy(_._1)
       .map { case (k, v) => s"$k=${v.size}" }.mkString(",")
   }
 
-  private def current(): Seq[(String, String)] = {
+  private def current(): Seq[(String, String)] =
     // a MATERIALIZED cache entry prints its executed AQE query stages
-    // (ShuffleQueryStage, ColumnarToRow, …) inside InMemoryTableScan,
-    // so the same plan fingerprints differently after another suite ran
-    // the entry; clearing first pins the unmaterialized shape for every
-    // suite ordering (suites run sequentially in the forked test JVM)
-    spark.catalog.clearCache()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => Unstable.contains(name) }
-      .map { case (name, fn) => name -> fingerprint(fn(spark, sf0001)) }
-  }
+    // (ShuffleQueryStage, ColumnarToRow, …) inside InMemoryTableScan, so
+    // the same plan would fingerprint differently after an earlier entry
+    // ran; the sweep clears the cache before each build and takes the
+    // explain string before execution, pinning the unmaterialized shape
+    CatalogSweep.entries.filterNot(e => Unstable.contains(e.name)).map { e =>
+      e.name -> fingerprint(e.built.getOrElse(throw e.error.get).explain)
+    }
 
   test("per-entry physical-plan operator multisets match the committed golden file") {
     val now = current()

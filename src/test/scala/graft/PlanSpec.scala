@@ -43,20 +43,16 @@ class PlanSpec extends SparkSpec {
     // output (O(|groups|) rows), never on a raw scan — the round-1 ntile
     // entry violated this and was rewritten as percentile-cutoff + join
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
-    // CacheManager substitution hides lineage: once another suite builds an
-    // entry that cache()s a fragment (theilsen's hourly agg), an identical
-    // subtree in a LATER-checked entry optimizes to InMemoryRelation — no
-    // Aggregate node visible below the window. Clear registrations so the
-    // probe always sees the unsubstituted shape (PlanGoldenSpec:77 ditto) —
-    // cleared PER ENTRY because building an entry re-registers its cache()s,
-    // which would re-hide lineage for entries later in the sort order.
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      spark.catalog.clearCache()
-      val lp = try Some(fn(spark, sf0001).queryExecution.optimizedPlan)
-               catch { case _: Throwable => None }
-      lp.toSeq.flatMap(_.collect {
+    // CacheManager substitution hides lineage: once an entry cache()s a
+    // fragment (theilsen's hourly agg), an identical subtree in a later
+    // entry optimizes to InMemoryRelation — no Aggregate node visible below
+    // the window. CatalogSweep clears the cache before building each entry,
+    // so its optimized plans show the unsubstituted shape. Entries that
+    // failed to build are skipped (ContractSpec reports them).
+    val offenders = CatalogSweep.entries.flatMap { e =>
+      e.built.toSeq.flatMap(_.plan.collect {
         case w: LWindow if w.partitionSpec.isEmpty &&
-            w.child.collectFirst { case _: Aggregate => () }.isEmpty => name
+            w.child.collectFirst { case _: Aggregate => () }.isEmpty => e.name
       })
     }.distinct
     assert(offenders.isEmpty, s"unpartitioned window over raw input: $offenders")
@@ -339,8 +335,10 @@ class PlanSpec extends SparkSpec {
         // |budget|² broadcast non-equi user-pair frame + 1-row metric
         // broadcasts (A4) over the serving-budget-bounded list relation
         "rec_coverage_diversity")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val p = try plan(fn(spark, sf0001)) catch { case _: Throwable => "" }
+    // entries that failed to build are skipped (ContractSpec reports them)
+    val offenders = CatalogSweep.entries.flatMap { e =>
+      val name = e.name
+      val p = e.built.fold("")(_.explain)
       if (p.contains("CartesianProduct")) Some(name)
       else if (p.contains("BroadcastNestedLoopJoin") &&
                !allowedNestedLoop.contains(name) &&

@@ -10,12 +10,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * says, because the plan goldens and PartitionInvarianceSpec's co-prime
   * 3/17 partition counts are designed against that baseline. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  protected val sf0001 = "/root/testdata/sf0.001"
+  protected val sf0001: String = SparkSpec.Sf0001
 
-  protected lazy val spark: SparkSession = GraftSession(cores = 4)
+  protected lazy val spark: SparkSession = SparkSpec.session
 
   override protected def afterAll(): Unit = {
     // SparkSession is process-shared across suites (getOrCreate); do not stop
     super.afterAll()
   }
+}
+
+object SparkSpec {
+  val Sf0001 = "/root/testdata/sf0.001"
+
+  def session: SparkSession = GraftSession(cores = 4)
 }
