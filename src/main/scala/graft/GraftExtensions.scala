@@ -9,19 +9,14 @@ import graft.expressions.{DotProduct, NGrams, PolyHash}
 /** Session-extension entry point: makes the library's codegen'd expressions
   * available to pure-SQL users at session build time, through the
   * `spark.sql.extensions=graft.GraftExtensions` config that [[GraftSession]]
-  * sets on every session of the project.
-  *
-  * (Per-session registration without the config is
-  * `graft.functions.VectorOps.registerSql(spark)` /
-  * `graft.plans.FoldGraftExpressions.register(spark)` /
-  * `graft.plans.AsOfJoinPlan.register(spark)` — none of which a
-  * config-path session needs to call.) EVERY extension tier is injected
-  * here: the codegen'd scalar functions, the n-gram Generator, the
-  * native TypedImperativeAggregate (`graft_topk_keys`), an optimizer
-  * `Rule[LogicalPlan]` that constant-folds graft expressions over
-  * literal inputs (SURVEY.md §4: the rule exists because custom
-  * expressions are not foldable by default, which blocks literal
-  * pushdown), and the as-of join planner strategy.
+  * sets on every session of the project. Nothing registers these at
+  * runtime; EVERY extension tier is injected here: the codegen'd scalar
+  * functions, the n-gram Generator, the native TypedImperativeAggregate
+  * (`graft_topk_keys`), an optimizer `Rule[LogicalPlan]` that
+  * constant-folds graft expressions over literal inputs (SURVEY.md §4:
+  * the rule exists because custom expressions are not foldable by
+  * default, which blocks literal pushdown), and the as-of join planner
+  * strategy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -45,8 +40,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction((
       FunctionIdentifier("graft_topk_keys"),
       new ExpressionInfo(classOf[graft.expressions.TopKKeysAgg].getName, "graft_topk_keys"),
-      // the ONE shared builder (numeric coercion included) — see its doc
-      // for why every registration path must use it
+      // the coercing builder (numeric coercion included) — see its doc
       (exprs: Seq[Expression]) => graft.expressions.TopKKeysAgg.build(exprs)))
     // rule tier: constant-fold literal-input graft expressions so they
     // compute once at optimization time and comparisons against them

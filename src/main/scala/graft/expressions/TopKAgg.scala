@@ -160,12 +160,8 @@ object TopKKeysAgg {
   import org.apache.spark.sql.catalyst.expressions.Cast
   import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, NumericType}
 
-  /** THE registration builder — used by every path that puts
-    * `graft_topk_keys` in a function registry (GraftExtensions injection,
-    * the per-session registration in Aggregates, test registries). One
-    * definition, because registries clobber: whichever registration runs
-    * last wins for the whole shared session, so a single raw builder
-    * anywhere would silently strip coercion from all of them.
+  /** The builder GraftExtensions injects for `graft_topk_keys`, the one
+    * place the function is registered.
     *
     * Builtin aggregates get implicit numeric coercion from the analyzer;
     * a raw TypedImperativeAggregate does not, so the builder inserts the

@@ -27,13 +27,6 @@ object VectorOps {
     ColumnBridge.column(DotProduct(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Expose graft_dot to SQL text: after this,
-    * `spark.sql("SELECT graft_dot(a, b) ...")` plans the same codegen'd
-    * expression the Column API uses. */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit =
-    ColumnBridge.registerFunction(spark, "graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)))
-
   /** L2 norm (IEEE sqrt is correctly rounded → engine-identical). */
   def norm(v: Column): Column = sqrt(dot(v, v))
 

@@ -353,29 +353,21 @@ object Aggregates {
   }
 
   /** Native-Catalyst twin of `agg_topk_aggregator`: the same bounded-state
-    * top-3, but as a TypedImperativeAggregate registered in the session
-    * functionRegistry and invoked from SQL TEXT — the engine-native
+    * top-3, but as a TypedImperativeAggregate injected by GraftExtensions
+    * and invoked from SQL TEXT — the engine-native
     * aggregate tier (ObjectHashAggregateExec, binary-serialized O(k)
     * partials; see graft.expressions.TopKKeysAgg). Proves the ladder's
     * aggregate rung end to end: FunctionRegistry resolution → analyzer
     * wraps the AggregateFunction → partial/merge across shuffles → LATERAL
     * VIEW posexplode back to oracle-comparable rows. */
-  def topkNative(spark: SparkSession, dir: String): DataFrame = {
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, "graft_topk_keys",
-      // the shared coercing builder: this registration CLOBBERS the
-      // extensions-injected one for the whole session, so it must be the
-      // same builder (TopKKeysAgg.build doc)
-      graft.expressions.TopKKeysAgg.build)
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    spark.sql(
+  def topkNative(spark: SparkSession, dir: String): DataFrame =
+    Sql.run(spark, Seq("orders" -> (s => Tables.orders(s, dir))),
       """SELECT o_orderpriority, CAST(pos AS BIGINT) AS pos, o_orderkey
         |FROM (SELECT o_orderpriority,
         |        graft_topk_keys(o_totalprice, o_orderkey, 3) AS ks
         |      FROM orders GROUP BY o_orderpriority)
         |LATERAL VIEW posexplode(ks) t AS pos, o_orderkey
         |ORDER BY o_orderpriority, pos""".stripMargin)
-  }
 
   /** collect_list / collect_set surface: per-region nation rosters.
     * Serialized as sorted joined strings — deterministic (collect order is

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.Tables
 
@@ -11,7 +12,10 @@ import graft.Tables
   * These entries exercise the parser→analyzer path end to end: temp-view
   * resolution, chained CTEs, HAVING, window functions over aggregates,
   * NULLIF guards — the same LogicalPlan IR the DataFrame entries produce
-  * (SURVEY.md §3.2), so both surfaces ship.
+  * (SURVEY.md §3.2), so both surfaces ship. The views, session variables
+  * and temporary functions the text needs live in a private clone of the
+  * caller's session ([[run]]), so an entry leaves the caller's catalog as
+  * it found it.
   *
   * The SQL strings double as the oracle (modulo Spark↔DuckDB dialect: both
   * accept this ANSI subset verbatim).
@@ -77,41 +81,45 @@ object Sql {
     * performs. Plan-wise the parameterized text compiles to the identical
     * Catalyst plan as the literal query (params are literals after bind),
     * so pushdown/codegen are unaffected. */
-  private def executeImmediate(spark: SparkSession, dir: String): DataFrame = {
-    Tables.table(spark, dir, "orders").createOrReplaceTempView("orders")
-    spark.sql("DECLARE OR REPLACE VARIABLE graft_stmt STRING")
-    spark.sql(
-      """SET VAR graft_stmt =
-        |  'SELECT o_orderstatus, COUNT(*) AS n_orders,
-        |     CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |   FROM orders WHERE o_totalprice BETWEEN ? AND ?
-        |   GROUP BY o_orderstatus ORDER BY o_orderstatus'""".stripMargin)
-    spark.sql("EXECUTE IMMEDIATE graft_stmt USING 50000.0, 150000.0")
+  private val executeImmediate = Seq(
+    "DECLARE OR REPLACE VARIABLE graft_stmt STRING",
+    """SET VAR graft_stmt =
+      |  'SELECT o_orderstatus, COUNT(*) AS n_orders,
+      |     CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+      |   FROM orders WHERE o_totalprice BETWEEN ? AND ?
+      |   GROUP BY o_orderstatus ORDER BY o_orderstatus'""".stripMargin,
+    "EXECUTE IMMEDIATE graft_stmt USING 50000.0, 150000.0")
+
+  /** Runs SQL text on a private clone of `spark` (same context and conf, no
+    * temp views): registers each view there, loaded through the clone, runs
+    * `statements` in order and returns the last one's DataFrame. Whatever
+    * the text declares stays in the clone. */
+  private[graft] def run(spark: SparkSession, views: Seq[(String, SparkSession => DataFrame)],
+                         statements: String*): DataFrame = {
+    val s = ColumnBridge.cloneSession(spark)
+    views.foreach { case (name, load) => load(s).createTempView(name) }
+    statements.map(s.sql).last
   }
 
-  private def run(spark: SparkSession, dir: String, sql: String,
-                  tables: Seq[String]): DataFrame = {
-    tables.foreach(t => Tables.table(spark, dir, t).createOrReplaceTempView(t))
-    spark.sql(sql)
-  }
+  /** `run` over catalog tables, each registered under its own name. */
+  private def runOn(tables: String*)(statements: String*): (SparkSession, String) => DataFrame =
+    (spark, dir) => run(spark, tables.map(t => t -> ((s: SparkSession) => Tables.table(s, dir, t))),
+      statements: _*)
 
   /** Custom-expression-from-SQL-text: the codegen'd `graft_dot` Expression
-    * called by a plain SQL string (functionRegistry path — the same
-    * builder GraftExtensions injects at session build). Self-dot of every
+    * called by a plain SQL string, resolved through the function
+    * GraftExtensions injects at session build. Self-dot of every
     * 20th embedding; the fold is left-to-right, so DuckDB's sequential
     * list_reduce reproduces the doubles bit-for-bit. Proves SQL-text
     * users get the whole extension surface, not just the Column API. */
-  private def graftDotSql(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorOps.registerSql(spark)
-    Tables.embeddings(spark, dir).createOrReplaceTempView("embeddings")
-    spark.sql(
+  private def graftDotSql(spark: SparkSession, dir: String): DataFrame =
+    run(spark, Seq("embeddings" -> (s => Tables.embeddings(s, dir))),
       """SELECT vec_id,
         |  graft_dot(CAST(embedding AS ARRAY<DOUBLE>),
         |            CAST(embedding AS ARRAY<DOUBLE>)) AS self_dot
         |FROM embeddings
         |WHERE vec_id % 20 = 0
         |ORDER BY vec_id""".stripMargin)
-  }
 
   /** LATERAL correlated subquery (Spark 3.2+/ANSI) — top-2 orders PER
     * customer written the way an analyst writes it: an ordered, limited
@@ -191,20 +199,16 @@ object Sql {
     * collect would not). Threshold is the exact percentile ROUNDed to 4
     * decimals on 2-decimal inputs — the `agg_percentiles` portability
     * rule — and the oracle inlines it as a scalar subquery. */
-  private def sessionVariable(spark: SparkSession, dir: String): DataFrame = {
-    Tables.table(spark, dir, "orders").createOrReplaceTempView("orders")
-    spark.sql("DECLARE OR REPLACE VARIABLE graft_qcut DOUBLE")
-    spark.sql(
-      "SET VAR graft_qcut = (SELECT ROUND(percentile(o_totalprice, 0.9), 4) FROM orders)")
-    spark.sql(
-      """SELECT o_orderpriority,
-        |  COUNT(*) AS n_top,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_top
-        |FROM orders
-        |WHERE o_totalprice > graft_qcut
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin)
-  }
+  private val sessionVariable = Seq(
+    "DECLARE OR REPLACE VARIABLE graft_qcut DOUBLE",
+    "SET VAR graft_qcut = (SELECT ROUND(percentile(o_totalprice, 0.9), 4) FROM orders)",
+    """SELECT o_orderpriority,
+      |  COUNT(*) AS n_top,
+      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_top
+      |FROM orders
+      |WHERE o_totalprice > graft_qcut
+      |GROUP BY o_orderpriority
+      |ORDER BY o_orderpriority""".stripMargin)
 
   /** Spark 4 SQL-language UDF (SPARK-44076): `CREATE FUNCTION … RETURN
     * <expr>` — the ONE user-defined-function form the catalog's no-UDF
@@ -213,22 +217,18 @@ object Sql {
     * down, and codegens exactly like the hand-written expression (the
     * opaque-blob problem §2.12 bans never arises). The oracle runs the
     * body textually inlined — which is literally what the engine does. */
-  private def sqlUdfScalar(spark: SparkSession, dir: String): DataFrame = {
-    Tables.table(spark, dir, "orders").createOrReplaceTempView("orders")
-    spark.sql(
-      """CREATE OR REPLACE TEMPORARY FUNCTION graft_price_band(p DOUBLE)
-        |RETURNS STRING
-        |RETURN CASE WHEN p < 50000 THEN 'low'
-        |            WHEN p < 150000 THEN 'mid'
-        |            ELSE 'high' END""".stripMargin)
-    spark.sql(
-      """SELECT graft_price_band(o_totalprice) AS band,
-        |  COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        |FROM orders
-        |GROUP BY graft_price_band(o_totalprice)
-        |ORDER BY band""".stripMargin)
-  }
+  private val sqlUdfScalar = Seq(
+    """CREATE OR REPLACE TEMPORARY FUNCTION graft_price_band(p DOUBLE)
+      |RETURNS STRING
+      |RETURN CASE WHEN p < 50000 THEN 'low'
+      |            WHEN p < 150000 THEN 'mid'
+      |            ELSE 'high' END""".stripMargin,
+    """SELECT graft_price_band(o_totalprice) AS band,
+      |  COUNT(*) AS n_orders,
+      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
+      |FROM orders
+      |GROUP BY graft_price_band(o_totalprice)
+      |ORDER BY band""".stripMargin)
 
   /** GROUP BY ALL / ORDER BY ALL (Spark 3.4+ / DuckDB-originated sugar) —
     * the analyzer infers the grouping set from the non-aggregate select
@@ -245,23 +245,16 @@ object Sql {
       |ORDER BY ALL""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_groupby_all" ->
-      ((s, dir) => run(s, dir, groupByAllSql, Seq("lineitem"))),
-    "sql_udf_scalar" -> (sqlUdfScalar _),
-    "sql_session_variable" -> (sessionVariable _),
-    "sql_execute_immediate" -> (executeImmediate _),
-    "sql_recursive_cte" ->
-      ((s, dir) => run(s, dir, recursiveSql, Seq("customer"))),
-    "sql_subquery_forms" ->
-      ((s, dir) => run(s, dir, subqSql, Seq("orders", "customer"))),
-    "sql_lateral_topk" ->
-      ((s, dir) => run(s, dir, lateralSql, Seq("orders", "customer"))),
-    "sql_cte_rank_topk" ->
-      ((s, dir) => run(s, dir, rankSql, Seq("orders", "customer"))),
-    "sql_rate_nullif" ->
-      ((s, dir) => run(s, dir, rateSql, Seq("orders"))),
-    "sql_pivot_stmt" ->
-      ((s, dir) => run(s, dir, pivotSql, Seq("documents"))),
+    "sql_groupby_all" -> runOn("lineitem")(groupByAllSql),
+    "sql_udf_scalar" -> runOn("orders")(sqlUdfScalar: _*),
+    "sql_session_variable" -> runOn("orders")(sessionVariable: _*),
+    "sql_execute_immediate" -> runOn("orders")(executeImmediate: _*),
+    "sql_recursive_cte" -> runOn("customer")(recursiveSql),
+    "sql_subquery_forms" -> runOn("orders", "customer")(subqSql),
+    "sql_lateral_topk" -> runOn("orders", "customer")(lateralSql),
+    "sql_cte_rank_topk" -> runOn("orders", "customer")(rankSql),
+    "sql_rate_nullif" -> runOn("orders")(rateSql),
+    "sql_pivot_stmt" -> runOn("documents")(pivotSql),
     "sql_graft_dot" -> (graftDotSql _)
   )
 

@@ -1530,18 +1530,13 @@ object TextAnalysis {
     * bigrams built relationally in DuckDB. GenerateExec streams the
     * windows straight into the hash-agg; no per-doc array is ever
     * materialized. */
-  def ngramGenerator(spark: SparkSession, dir: String): DataFrame = {
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, "graft_ngrams",
-      exprs => graft.expressions.NGrams(exprs(0), exprs(1)))
-    Tables.documents(spark, dir).createOrReplaceTempView("documents")
-    spark.sql(
+  def ngramGenerator(spark: SparkSession, dir: String): DataFrame =
+    Sql.run(spark, Seq("documents" -> (s => Tables.documents(s, dir))),
       """SELECT ngram, COUNT(*) AS n
         |FROM documents LATERAL VIEW graft_ngrams(text, 2) t AS ngram
         |GROUP BY ngram
         |ORDER BY n DESC, ngram
         |LIMIT 20""".stripMargin)
-  }
 
   /** Gopher-style repetition quality signals (Rae et al. 2021 §A1.1:
     * "repetitious documents are low quality"): per document, the

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -174,10 +174,10 @@ object AsOfJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
 
 object AsOfJoinPlan {
 
-  /** Install the strategy (idempotent) and build `left LEFT AS-OF JOIN
-    * right ON key, ts` as a DataFrame. Key and ts columns must be non-null
-    * and BIGINT-normalizable: BIGINT passes through; narrower integrals are
-    * widened; TIMESTAMP becomes epoch micros and DATE epoch days (order-
+  /** Build `left LEFT AS-OF JOIN right ON key, ts` as a DataFrame; the
+    * session plans it through the strategy GraftExtensions injects. Key
+    * and ts columns must be non-null and BIGINT-normalizable: BIGINT
+    * passes through; narrower integrals are widened; TIMESTAMP becomes epoch micros and DATE epoch days (order-
     * preserving, so as-of semantics are unchanged). Output columns keep
     * their original types — normalization touches only the internal join
     * expressions. Mixed ts types across sides are the caller's contract
@@ -192,8 +192,6 @@ object AsOfJoinPlan {
     // micros for timestamp inputs, days for dates, raw for BIGINT. A match
     // farther than `tolerance` from the left ts emits the null row instead.
     tolerance.foreach(t => require(t >= 0, s"as-of tolerance must be >= 0, got $t"))
-    val spark = left.sparkSession
-    register(spark)
     val plan = AsOfJoin(
       ColumnBridge.logicalPlan(left), ColumnBridge.logicalPlan(right),
       toBigint(left, leftKey, "left key"),
@@ -201,7 +199,7 @@ object AsOfJoinPlan {
       toBigint(right, rightKey, "right key"),
       toBigint(right, rightTs, "right ts"),
       forward, tolerance)
-    val out = ColumnBridge.ofRows(spark, plan)
+    val out = ColumnBridge.ofRows(left.sparkSession, plan)
     // type contract, checked once the analyzer has resolved the expressions
     out.queryExecution.analyzed.collectFirst { case a: AsOfJoin => a }.foreach { a =>
       Seq("left key" -> a.leftKey, "left ts" -> a.leftTs,
@@ -246,9 +244,4 @@ object AsOfJoinPlan {
           s"got ${other.simpleString}")
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
 }

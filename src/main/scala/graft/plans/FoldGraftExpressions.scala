@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -20,13 +19,10 @@ import graft.expressions.{DotProduct, PolyHash}
   * This rule evaluates such calls once at optimization time — exactly the
   * value row-level eval would produce, so it can never change results.
   *
-  * Registration:
-  *  - config sessions: `spark.sql.extensions=graft.GraftExtensions`
-  *    (injectOptimizerRule — runs inside the operator-optimization batch,
-  *    i.e. BEFORE filter pushdown, which is what makes pushdown win);
-  *  - existing sessions: `FoldGraftExpressions.register(spark)`
-  *    (experimental.extraOptimizations, same pattern as AsOfJoinPlan's
-  *    strategy registration).
+  * Registration: `spark.sql.extensions=graft.GraftExtensions`
+  * (injectOptimizerRule), the one path; the rule runs inside the
+  * operator-optimization batch, i.e. BEFORE filter pushdown, which is what
+  * makes pushdown win.
   */
 object FoldGraftExpressions extends Rule[LogicalPlan] {
 
@@ -36,18 +32,4 @@ object FoldGraftExpressions extends Rule[LogicalPlan] {
     case d: DotProduct if d.left.foldable && d.right.foldable =>
       Literal.create(d.eval(null), d.dataType)
   }
-
-  /** Idempotent per-session registration without the extensions config.
-    *
-    * Guarantee caveat: `experimental.extraOptimizations` runs in the
-    * 'User Provided Optimizers' batch AFTER the operator-optimization
-    * fixed point, so on this path the literal IS folded but the resulting
-    * comparison is NOT re-pushed into the scan. Only the config path
-    * (`spark.sql.extensions=graft.GraftExtensions`, injectOptimizerRule)
-    * runs early enough for the scaladoc's pushdown win; ExtensionsSpec
-    * covers that session shape, PlanSpec covers folding here. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(FoldGraftExpressions))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ FoldGraftExpressions
 }

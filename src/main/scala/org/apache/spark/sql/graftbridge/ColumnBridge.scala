@@ -17,14 +17,16 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Register an expression builder as a session-scoped SQL function, so
-    * `spark.sql("... name(args) ...")` resolves to the custom Expression
-    * (the guide's functionRegistry path; `sessionState` is private[sql]). */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
+  /** A session that shares `spark`'s context and starts from a copy of its
+    * conf and functions but from no temp views (`cloneSession` is
+    * private[sql]). Views, variables and temporary functions created in it
+    * stay its own. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+    val catalog = s.sessionState.catalog
+    catalog.listLocalTempViews("*").foreach(v => catalog.dropTempView(v.table))
+    s
+  }
 
   /** Wrap a custom LogicalPlan as a DataFrame (`Dataset.ofRows` is
     * private[sql]) — needed to hand plans containing custom nodes (e.g.

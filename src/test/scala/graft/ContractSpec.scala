@@ -6,7 +6,9 @@ package graft
   *    (the driver sorts columns by name before hashing — duplicates would
   *    silently corrupt the compare), read from the shared [[CatalogSweep]],
   *    whose codegen-fallback-off session also fails a stage janino cannot
-  *    compile;
+  *    compile, and whose digest evaluates every output column;
+  *  - no entry leaves a temp view, a temporary function or a session
+  *    variable in the session it is given (the sweep's leftovers);
   *  - the flagship entry() returns rows > 0 (the smoke check on entry());
   *  - the shared session is the GraftSession configuration Verify and
   *    Bench run: UTC, with the GraftExtensions ladder injected.
@@ -42,5 +44,11 @@ class ContractSpec extends SparkSpec {
         .orElse(if (dups.nonEmpty) Some(s"${e.name}: duplicate columns $dups") else None)
     }
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("no entry leaves temp views, temporary functions or session variables behind") {
+    val dirty = CatalogSweep.entries.filter(_.leftovers.nonEmpty)
+      .map(e => s"${e.name}: ${e.leftovers.mkString(", ")}")
+    assert(dirty.isEmpty, s"${dirty.size} entries left session state:\n${dirty.mkString("\n")}")
   }
 }

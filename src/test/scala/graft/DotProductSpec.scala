@@ -64,7 +64,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("SQL registration: spark.sql('graft_dot(...)') == Column API") {
-    VectorOps.registerSql(spark)
     Tables.embeddings(spark, sf0001)
       .selectExpr("vec_id", "cast(embedding as array<double>) as v")
       .createOrReplaceTempView("emb_dot_test")

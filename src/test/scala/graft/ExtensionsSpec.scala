@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** GraftExtensions wiring (pure, no session): injection applies cleanly and
   * the injected builders construct working expressions. (Runtime SQL
-  * resolution of graft_dot is covered end-to-end in DotProductSpec via the
-  * functionRegistry path — same builder.) */
+  * resolution of graft_dot through the injected function is covered
+  * end-to-end in DotProductSpec.) */
 class ExtensionsSpec extends AnyFunSuite {
 
   test("injects all functions into a fresh SparkSessionExtensions") {
@@ -40,11 +40,11 @@ class ExtensionsSpec extends AnyFunSuite {
 class ExtensionsConfigPathSpec extends SparkSpec {
 
   test("config-path session: folded custom-expression comparison pushes into the scan") {
-    // The extraOptimizations fallback only guarantees folding (it runs after
-    // the pushdown fixed point — see FoldGraftExpressions.register scaladoc);
-    // THIS is the path the scaladoc's pushdown claim rests on, so it gets the
-    // assertion: a session built with the extensions config must fold
-    // PolyHash(literal) AND push the resulting comparison into the parquet scan.
+    // The injected rule runs inside the operator-optimization batch, before
+    // filter pushdown; FoldGraftExpressions' pushdown claim rests on that, so
+    // it gets the assertion: a session built with the extensions config must
+    // fold PolyHash(literal) AND push the resulting comparison into the
+    // parquet scan.
     import org.apache.spark.sql.functions.{col, lit}
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val hashCol = ColumnBridge.column(PolyHash(ColumnBridge.expression(lit("spark"))))
@@ -63,8 +63,7 @@ class ExtensionsConfigPathSpec extends SparkSpec {
   }
 
   test("config-path session: the native aggregate resolves by name from SQL") {
-    // no registerFunction call anywhere — injection via the extensions
-    // config is the only registration in play
+    // injection via the extensions config is the only registration there is
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .createOrReplaceTempView("docs_ext")
     val ks = spark.sql(

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Catalog-wide cluster-size independence: every deterministic entry must
   * return the exact same multiset of rows no matter how the engine
@@ -12,17 +11,16 @@ import org.apache.spark.sql.functions._
   *
   * Method: run each entry twice on isolated `newSession()` clones — same
   * SparkContext, separate SQLConf and temp-view catalogs, so the sweep
-  * cannot leak config into suites running in parallel (the same shared-
-  * session clobbering class the graft_topk_keys builder fix closed) — at
+  * cannot leak config into other suites — at
   * deliberately co-prime shuffle-partition counts (3 vs 17, both != the
   * suite default 4) — the second run additionally with broadcast joins
   * and AQE disabled, so one compare certifies partition-count,
   * join-strategy, AND adaptive-replan independence — and compare an
-  * order-invariant multiset digest computed in-plan (no driver-side row
-  * materialization):
-  *   count, sum(xxhash64(cols) mod p1), sum(xxhash64(cols) mod p2).
-  * Residues are < 2^31 so the sums stay far from Long overflow under
-  * ANSI mode at any realistic row count.
+  * order-invariant multiset digest ([[CatalogSweep.digest]]). The context's
+  * cache is cleared before every run: the CacheManager is shared by the
+  * `newSession()` clones and matches plans without looking at their conf,
+  * so a fragment an entry cache()d at 3 partitions would otherwise be
+  * served to the 17-partition run and hide its subtree from the compare.
   *
   * Exclusions = exactly the catalog's no-oracle set (derived, so it can
   * never drift): the seeded-sample / trained-quantizer / approx entries
@@ -31,21 +29,6 @@ import org.apache.spark.sql.functions._
   * (SamplingSpec rate bounds, SimilaritySpec recall floors).
   */
 class PartitionInvarianceSpec extends SparkSpec {
-
-  private val mod1 = 1000000007L // both prime, keep each term < 2^31
-  private val mod2 = 998244353L
-
-  private def digest(df: DataFrame): Seq[Any] = {
-    // columns sorted by name, values stringified — the driver's compare
-    // canonicalization, so this digest certifies the same surface the
-    // oracle gate hashes
-    val h = xxhash64(df.columns.sorted.map(c => col(c).cast("string")).toSeq: _*)
-    df.select(
-        count(lit(1)),
-        sum(pmod(h, lit(mod1))),
-        sum(pmod(h, lit(mod2))))
-      .head().toSeq
-  }
 
   private def runAt(partitions: Int, name: String, hostile: Boolean = false)(
       fn: (SparkSession, String) => DataFrame): Seq[Any] = {
@@ -60,7 +43,8 @@ class PartitionInvarianceSpec extends SparkSpec {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       s.conf.set("spark.sql.adaptive.enabled", "false")
     }
-    digest(fn(s, sf0001))
+    s.catalog.clearCache()
+    CatalogSweep.digest(fn(s, sf0001))
   }
 
   test("every oracled entry is invariant to the shuffle partition count") {
@@ -78,9 +62,8 @@ class PartitionInvarianceSpec extends SparkSpec {
       } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
-    // entries cache() intermediates and the CacheManager is shared across
-    // the newSession() isolates — drop the sweep's residue so later
-    // suites (PlanSpec's shape pins especially) see fresh plans
+    // drop the last run's cache()d fragments so later suites (PlanSpec's
+    // shape pins especially) see fresh plans
     spark.catalog.clearCache()
   }
 }

@@ -510,11 +510,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("FoldGraftExpressions folds literal-input custom expressions at optimization time") {
-    // the shared test session now carries the extensions config, which
-    // injects this same rule — so exercising it through
-    // extraOptimizations would be tautological. Instead: (a) apply the
-    // RULE directly to an analyzed plan (mechanism, no session wiring),
-    // (b) pin that register() wires the fallback path up.
+    // the shared test session carries the extensions config, which
+    // injects this same rule, so the test applies the RULE directly to an
+    // analyzed plan (mechanism, no session wiring); ExtensionsSpec pins
+    // the injected path's pushdown.
     import org.apache.spark.sql.functions.{col, lit}
     import org.apache.spark.sql.graftbridge.ColumnBridge
     import graft.expressions.PolyHash
@@ -535,13 +534,6 @@ class PlanSpec extends SparkSpec {
       org.apache.spark.unsafe.types.UTF8String.fromString("spark"))
     assert(folded.toString.contains(expected.toString),
       s"folded literal $expected missing from plan:\n$folded")
-    // the fallback registration path: register() must append the rule
-    val prev = spark.experimental.extraOptimizations
-    try {
-      FoldGraftExpressions.register(spark)
-      assert(spark.experimental.extraOptimizations.contains(FoldGraftExpressions),
-        "register() did not add the rule to extraOptimizations")
-    } finally spark.experimental.extraOptimizations = prev
   }
 
   test("whole-stage codegen covers the dot-product pair loop") {

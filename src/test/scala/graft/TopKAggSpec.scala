@@ -95,10 +95,6 @@ class TopKAggEngineSpec extends SparkSpec {
 
   test("update skips null values and keys") {
     import spark.implicits._
-    // shared coercing builder — registries clobber session-wide, so every
-    // registration path must install the same builder (TopKKeysAgg.build)
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, "graft_topk_keys", TopKKeysAgg.build)
     Seq[(java.lang.Double, java.lang.Long)]((1.0, 1L), (null, 2L), (3.0, null), (2.0, 4L))
       .toDF("v", "k").createOrReplaceTempView("tk_nulls")
     val out = spark.sql(
@@ -109,8 +105,6 @@ class TopKAggEngineSpec extends SparkSpec {
 
   test("DECIMAL value and INT key coerce through the registered builder") {
     import spark.implicits._
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, "graft_topk_keys", TopKKeysAgg.build)
     // DECIMAL(10,2) value + INT key — the shapes a SQL user actually has
     // (money columns, surrogate int keys). Builtin aggregates get this
     // coercion from the analyzer; the builder must supply it for the raw
