@@ -30,35 +30,36 @@ object Probe {
     time("warmup agg")(operators.Aggregates.nationRevenue(spark, dir).count())
     if (sys.env.contains("SPARK_GRAFT_AMPLIFY")) {
       // Empirical scaling probe: amplify documents/embeddings N× with
-      // lightly-perturbed copies (salt token / shifted dim), write to a
-      // tmp dir shaped like a testdata sf dir, and time the candidate-
-      // generation pipelines at 1× and N×. The copies stay NEAR-DUPS of
-      // each other, so this is deliberately the adversarial case: the true
-      // pair output grows ~N²·|docs| while a bucketed candidate stage stays
-      // bounded. Per-pipeline measurements are in BASELINE.md.
+      // lightly-perturbed copies (salt token / shifted dim) into one
+      // `Tables.scratchDir` memo shaped like a testdata sf dir, and time the
+      // candidate-generation pipelines at 1× and N×. The copies stay
+      // NEAR-DUPS of each other, so this is deliberately the adversarial
+      // case: the true pair output grows ~N²·|docs| while a bucketed
+      // candidate stage stays bounded. Measurements are in BASELINE.md.
       import org.apache.spark.sql.functions._
       val n = sys.env("SPARK_GRAFT_AMPLIFY").toInt
-      // scratch dir keyed by source dir too (not just N), and copy offset
-      // wide enough (2^40) that amplified ids can't collide with real ids
-      // at any plausible sf — a collision would corrupt the measurement
-      val amp = Tables.scratchPath(s"amplified_$n", dir)
+      // copy offset wide enough (2^40) that amplified ids can't collide with
+      // real ids at any plausible sf — a collision would corrupt the measurement
       val CopyOffset = 1L << 40
-      val d = Tables.documents(spark, dir)
-      d.crossJoin(spark.range(n).select(col("id").as("copy")))
-        .select(
-          (col("doc_id") + col("copy") * CopyOffset).as("doc_id"),
-          concat(col("text"), lit(" salt"), col("copy")).as("text"),
-          col("lang"), col("source"))
-        .write.mode("overwrite").parquet(s"$amp/documents.parquet")
-      val e = Tables.embeddings(spark, dir)
-      e.crossJoin(spark.range(n).select(col("id").as("copy")))
-        .select(
-          (col("vec_id") + col("copy") * CopyOffset).as("vec_id"),
-          col("label"),
-          transform(col("embedding"),
-            (x, i) => x + when(i === 0, col("copy").cast("float") * 0.01f)
-              .otherwise(lit(0.0f))).as("embedding"))
-        .write.mode("overwrite").parquet(s"$amp/embeddings.parquet")
+      val amp = Tables.scratchDir(spark, dir, s"amplified_$n", Seq("documents", "embeddings"),
+          "v1") { out =>
+        Tables.documents(spark, dir)
+          .crossJoin(spark.range(n).select(col("id").as("copy")))
+          .select(
+            (col("doc_id") + col("copy") * CopyOffset).as("doc_id"),
+            concat(col("text"), lit(" salt"), col("copy")).as("text"),
+            col("lang"), col("source"))
+          .write.parquet(s"$out/documents.parquet")
+        Tables.embeddings(spark, dir)
+          .crossJoin(spark.range(n).select(col("id").as("copy")))
+          .select(
+            (col("vec_id") + col("copy") * CopyOffset).as("vec_id"),
+            col("label"),
+            transform(col("embedding"),
+              (x, i) => x + when(i === 0, col("copy").cast("float") * 0.01f)
+                .otherwise(lit(0.0f))).as("embedding"))
+          .write.parquet(s"$out/embeddings.parquet")
+      }
       Seq[(String, String => Long)](
         "minhash" -> (p => operators.Dedup.minhashLsh(spark, p).count()),
         "ngram" -> (p => operators.Dedup.ngramJaccard(spark, p).count()),

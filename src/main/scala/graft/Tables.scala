@@ -9,6 +9,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the vectorized reader + pushdown/pruning come for free. Each loader is a
   * plain scan — callers compose filters/projections so Catalyst can push them
   * into the scan (SURVEY.md §4).
+  *
+  * [[scratchDir]] is the only way an entry writes: every relation, source-
+  * format fixture, bucketed table file set or index generation an entry
+  * persists is a keyed memo published through it, never a fixed path
+  * rewritten in place, and no loader keeps anything between calls.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -30,21 +35,20 @@ object Tables {
   private def fanOut(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-  /** Scratch location/name for operators that materialize to disk or the
-    * catalog (csv/json/orc roundtrips, bucketed tables): one shared
-    * sanitization scheme, keyed by tag + source dir so different sfs never
-    * collide. */
-  def scratchName(tag: String, dir: String): String =
+  /** The name prefix of a [[scratchDir]] memo: one sanitization scheme,
+    * keyed by tag + source dir so different sfs never collide. */
+  private[graft] def scratchName(tag: String, dir: String): String =
     s"graft_${tag}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
 
   /** Same, as an absolute tmp path. */
-  def scratchPath(tag: String, dir: String): String =
+  private[graft] def scratchPath(tag: String, dir: String): String =
     s"${sys.props("java.io.tmpdir")}/${scratchName(tag, dir)}"
 
-  /** The scratch-memo protocol — the one way a derived relation is
-    * persisted for later phases (the graph, rec, dedup and Lloyd
-    * substrates, the trained IVF-PQ index, the source-format fixtures).
-    * Build once, read the published directory thereafter.
+  /** The scratch-memo protocol — the one way anything is persisted for
+    * later phases (the graph, rec, dedup and Lloyd substrates, the trained
+    * IVF-PQ index and its compacted generation, the source-format
+    * round-trips, the bucketed join's table files). Build once, read the
+    * published directory thereafter.
     *
     * Key: `${scratchPath(tag, dir)}_${len}_${mtime}_$version`, with one
     * `len_mtime` pair per entry of `srcTables` in order, read through the
@@ -134,61 +138,41 @@ object Tables {
   def orders(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "lineitem")
 
-  /** Footer-probe results per path — the physical encoding of a parquet
-    * file cannot change without the path changing in any sane layout
-    * (testdata regeneration restarts the process), and the events loader
-    * runs once per catalog entry, so caching saves a listing + footer
-    * read per call without staleness risk. */
-  private val tsTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[org.apache.spark.sql.types.DataType]]()
-
   /** `events.ts` ingestion is PROBED, never assumed: the harness has shipped
     * this column as both TIMESTAMP(NANOS) (which Spark 4's reader rejects
     * outright — PARQUET_TYPE_ILLEGAL) and TIMESTAMP(MICROS) (which decodes
-    * natively) across testdata regenerations. We read the footer schema once
-    * per (dir) and branch:
-    *   - ts infers as TimestampType/TimestampNTZ → plain scan, native decode.
+    * natively) across testdata regenerations. Every call scans the file
+    * once, inspects that scan's `ts` type and branches:
+    *   - ts infers as TimestampType/TimestampNTZ → that scan, native decode.
     *   - schema inference throws (nanos) or ts infers as INT64 raw nanos →
     *     explicit BIGINT schema + truncate to micros, the same truncation
     *     DuckDB applies when it reads nanos, so oracle comparisons agree.
     * Hard-coding either branch silently corrupts the other encoding's
-    * timeline by 1000× — the probe is the contract. */
+    * timeline by 1000× — the probe is the contract, and nothing of it is
+    * kept between calls, so a rewrite of the file is seen by the next one. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     val path = s"$dir/events.parquet"
-    // Cache ONLY successful probes: a thrown probe is ambiguous between
-    // "genuine nanos footer" (the reader rejects it every time — re-failing
-    // is cheap) and a transient I/O error (file momentarily absent during
-    // regeneration). Pinning the failure would lock the raw-INT64 branch for
-    // the process lifetime and silently divide a later-appearing MICROS file
-    // by 1000 — the exact corruption the probe exists to prevent.
-    val tsType: Option[org.apache.spark.sql.types.DataType] = {
-      val cached = tsTypeCache.get(path)
-      if (cached ne null) cached
-      else
-        try {
-          val probed = spark.read.parquet(path).schema.fields.find(_.name == "ts").map(_.dataType)
-          tsTypeCache.put(path, probed)
-          probed
-        } catch { case scala.util.control.NonFatal(_) => None } // nanos: not cached, re-probed next call
-    }
-    tsType match {
-      case Some(TimestampType) =>
-        spark.read.parquet(path)
-      case Some(TimestampNTZType) =>
+    val scanned =
+      try {
+        val df = spark.read.parquet(path)
+        df.schema.fields.find(_.name == "ts").map(f => df -> f.dataType)
+      } catch { case scala.util.control.NonFatal(_) => None } // nanos footer
+    scanned match {
+      case Some((df, TimestampType)) => df
+      case Some((df, TimestampNTZType)) =>
         // pyarrow writes isAdjustedToUTC=false → Spark infers NTZ. Normalize
         // to TimestampType: the whole events family (unix_micros, windows,
         // watermarks) and the driver's oracle comparison were proven against
         // TimestampType, and under the UTC session timezone the cast is
         // value-preserving (same micros).
-        spark.read.parquet(path)
-          .withColumn("ts", org.apache.spark.sql.functions.col("ts").cast(TimestampType))
-      case Some(LongType) | None =>
+        df.withColumn("ts", org.apache.spark.sql.functions.col("ts").cast(TimestampType))
+      case Some((_, LongType)) | None =>
         spark.read
           .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
           .parquet(path)
           .withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      case Some(other) =>
+      case Some((_, other)) =>
         throw new IllegalStateException(
           s"events.ts has unsupported parquet-decoded type $other at $path; " +
             "expected TIMESTAMP(MICROS/NANOS) or raw INT64 nanos")

@@ -105,49 +105,47 @@ object Joins {
       .orderBy(col("band"))
   }
 
-  /** Drop `name` AND its managed location: the in-memory catalog forgets
-    * tables between JVMs while the warehouse directory persists, and
-    * saveAsTable refuses to create a table over an orphaned location. */
-  private def freshTable(spark: SparkSession, name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+  /** `table` bucketed and sorted on `key` into 8 buckets: a
+    * `Tables.scratchDir` memo over `table`, written by `saveAsTable` under
+    * a dropped temporary external name (so the files carry bucket ids),
+    * and read as a catalog table named after the memo path, so a
+    * rewritten input gets a new table. The column list is explicit:
+    * without it `CREATE TABLE … CLUSTERED BY … LOCATION` fails with
+    * SPECIFY_BUCKETING_IS_NOT_ALLOWED. */
+  private def bucketedTable(spark: SparkSession, dir: String, table: String,
+                            key: String): DataFrame = {
+    val src = Tables.table(spark, dir, table)
+    val path = Tables.scratchDir(spark, dir, s"${table}_b8", Seq(table), "v1") { tmp =>
+      val tmpName = new org.apache.hadoop.fs.Path(tmp).getName
+      try src.write.bucketBy(8, key).sortBy(key).option("path", tmp).saveAsTable(tmpName)
+      finally spark.sql(s"DROP TABLE IF EXISTS `$tmpName`")
+    }
+    val name = new org.apache.hadoop.fs.Path(path).getName
+    spark.sql(s"CREATE TABLE IF NOT EXISTS `$name` (${src.schema.toDDL}) USING parquet " +
+      s"CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS LOCATION '$path'")
+    // a memo deleted and rebuilt under the same key has new file names:
+    // forget this session's listing of the old ones
+    spark.catalog.refreshTable(s"`$name`")
+    spark.table(s"`$name`")
   }
 
   /** Bucketed co-located join — the data-layout lever as a USER-FACING
     * operator, not just a spec: both sides are written bucketed+sorted on
-    * the join key (`bucketBy(8).sortBy`), so the join reads pre-shuffled,
-    * pre-sorted buckets and plans a sort-merge join with NO exchange on
-    * either side (BucketingSpec pins the plan property; this entry pins
-    * result equivalence via the plain-join oracle). At 100 TB: the fact
-    * shuffle is paid once at write time, then every keyed join is free. */
-  def bucketedRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val ordersTable = Tables.scratchName("orders_b", dir)
-    val custTable = Tables.scratchName("cust_b", dir)
-    // write-once per JVM (the catalog is shared by every session of the
-    // context): a table already created for this source dir is taken as
-    // current, and catalog-wide plan sweeps construct every entry
-    // repeatedly, which must not re-run two bucketed writes each time
-    if (!spark.catalog.tableExists(ordersTable)) {
-      freshTable(spark, ordersTable)
-      Tables.orders(spark, dir).write.mode("overwrite")
-        .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable(ordersTable)
-    }
-    if (!spark.catalog.tableExists(custTable)) {
-      freshTable(spark, custTable)
-      Tables.customer(spark, dir).write.mode("overwrite")
-        .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable(custTable)
-    }
-    spark.table(ordersTable)
-      .join(spark.table(custTable), col("o_custkey") === col("c_custkey"))
+    * the join key (`bucketBy(8).sortBy`, [[bucketedTable]]), so the join
+    * reads pre-shuffled, pre-sorted buckets and plans a sort-merge join
+    * with NO exchange on either side (BucketingSpec pins the plan
+    * property; this entry pins result equivalence via the plain-join
+    * oracle). At 100 TB: the fact shuffle is paid once at write time, then
+    * every keyed join is free. */
+  def bucketedRevenue(spark: SparkSession, dir: String): DataFrame =
+    bucketedTable(spark, dir, "orders", "o_custkey")
+      .join(bucketedTable(spark, dir, "customer", "c_custkey"),
+        col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(
         count(lit(1)).as("n_orders"),
         dsum(col("o_totalprice")).as("total_value"))
       .orderBy(col("c_mktsegment"))
-  }
 
   /** Full-outer join: per-nation rich-customer counts vs supplier balances —
     * filters make each side miss some nations, so both null-padded sides are

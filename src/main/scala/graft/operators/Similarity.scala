@@ -655,6 +655,8 @@ object Similarity {
   private[graft] val PqSub = 4
   private[graft] val PqK = 16
   private[graft] val RefineT = 10
+  /** [[ivfPqIndex]]'s memo version: the PQ geometry and the sample cap. */
+  private val IvfPqVersion = s"pq${PqM}x${PqSub}k${PqK}_cap$TrainCap"
 
   /** IVF-PQ with RESIDUAL encoding — the composition both building blocks
     * document as the billion-scale rung (FAISS IVFPQ): the coarse
@@ -726,8 +728,7 @@ object Similarity {
     * names the PQ geometry and the training-sample cap; bump it with the
     * literal KMeans seeds or iteration counts below. */
   private[graft] def ivfPqIndex(spark: SparkSession, dir: String, cells: Int): String =
-    Tables.scratchDir(spark, dir, s"ivfpq_idx_c$cells", Seq("embeddings"),
-        s"pq${PqM}x${PqSub}k${PqK}_cap$TrainCap") { out =>
+    Tables.scratchDir(spark, dir, s"ivfpq_idx_c$cells", Seq("embeddings"), IvfPqVersion) { out =>
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       import spark.implicits._
@@ -1002,16 +1003,15 @@ object Similarity {
     *    so dead ids never become candidates — codes and full vectors stay
     *    untouched on disk. O(|deletes|) to apply, zero index rewrites;
     *    the cost is one hash anti-join per serve, forever.
-    *  - COMPACTION (amortized rewrite): when a cell's tombstone share
-    *    crosses the threshold (1/5 here), its rows are rewritten without
-    *    the dead entries and its tombstones retired; cells below the
-    *    threshold keep their rows and stay masked by the residual
-    *    tombstone set. The rewrite touches ONLY qualifying cells —
+    *  - COMPACTION (amortized rewrite, [[compactedIndex]]): when a cell's
+    *    tombstone share crosses the threshold (1/5 here), its rows are
+    *    rewritten without the dead entries and its tombstones retired;
+    *    cells below the threshold keep their rows and stay masked by the
+    *    residual tombstone set. The rewrite touches ONLY qualifying cells —
     *    O(Σ|hot cell|), not O(index) — which is exactly how LSM-style
     *    index maintenance amortizes at 100 TB. The compacted generation
-    *    is persisted as plain parquet next to the index (scratch-path
-    *    keyed by the corpus fingerprint, AppendSpec-style isolation) and
-    *    SERVED FROM DISK, not from the in-memory lineage.
+    *    is a `Tables.scratchDir` memo next to the index and is SERVED
+    *    FROM DISK, not from the in-memory lineage.
     *
     * The entry deletes every 5th vector, plants probe queries that are
     * exact copies of three DELETED vectors (q_id = vec_id + 2^41), and
@@ -1023,14 +1023,12 @@ object Similarity {
     * SURVIVOR (recall-gated like the other trained entries). NOT
     * oracle-able (trained quantizers): rows-only driver check. */
   def indexDeleteCompact(spark: SparkSession, dir: String): DataFrame = {
-    val (idx, nprobe, refineT) = ensureIvfPqIndex(spark, dir)
+    val (cells, nprobe, refineT) = scaledIvfPqParams(Tables.embeddings(spark, dir).count())
+    val idx = ivfPqIndex(spark, dir, cells)
     val all = unitVectors(spark, dir)
     val centroids = spark.read.parquet(s"$idx/centroids")
     val codebook = spark.read.parquet(s"$idx/codebook")
-    val cells0 = spark.read.parquet(s"$idx/cells")
-    val codes0 = spark.read.parquet(s"$idx/codes")
-    // the delete feed: every 5th vector (stand-in for dedup losers / RTBF)
-    val tombs = all.filter(col("vec_id") % 5 === 2).select(col("vec_id"))
+    val tombs = deleteFeed(all)
     val survivors = all.join(tombs, Seq("vec_id"), "left_anti")
     // probes are copies of DELETED vectors: pre-delete their twin wins at
     // rank 1 with cos ≈ 1, so "the dead id must not appear" is the
@@ -1038,34 +1036,10 @@ object Similarity {
     val q = all.join(tombs, Seq("vec_id")).orderBy(col("vec_id")).limit(3)
       .select((col("vec_id") + lit(1L << 41)).as("q_id"), col("vn").as("qv"))
       .cache() // read by both serving phases
-    val maskedCells = cells0.join(tombs, Seq("vec_id"), "left_anti")
+    val maskedCells = spark.read.parquet(s"$idx/cells").join(tombs, Seq("vec_id"), "left_anti")
     val phase1 = serveIvfPqQueries(q, survivors, centroids, codebook,
-      maskedCells, codes0, nprobe, refineT)
-    // compaction: cells at ≥ 1/5 dead are rewritten dead-row-free and
-    // their tombstones retired; the rest keep rows + residual tombstones
-    val cellStats = cells0
-      .join(tombs.withColumn("dead", lit(1L)), Seq("vec_id"), "left")
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("n"),
-        sum(coalesce(col("dead"), lit(0L))).as("n_dead"))
-    val hot = cellStats.filter(col("n_dead") * 5 >= col("n"))
-      .select(col("cell"), lit(true).as("hot"))
-    val tagged = cells0.join(broadcast(hot), Seq("cell"), "left")
-      .join(tombs.withColumn("dead", lit(1L)), Seq("vec_id"), "left")
-      .cache() // read by all three gen1 writes — uncached, each write
-               // would re-run the cells0 joins (3 passes instead of 1)
-    val gen1 = s"${idx}_gen1"
-    tagged.filter(!(col("hot").isNotNull && col("dead").isNotNull))
-      .select(col("vec_id"), col("cell"))
-      .write.mode("overwrite").parquet(s"$gen1/cells")
-    // codes of compacted-away rows go too (vec_id equi-join on hot∩dead)
-    codes0.join(tagged.filter(col("hot").isNotNull && col("dead").isNotNull)
-        .select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$gen1/codes")
-    tagged.filter(col("hot").isNull && col("dead").isNotNull)
-      .select(col("vec_id"))
-      .write.mode("overwrite").parquet(s"$gen1/tombstones")
-    tagged.unpersist()
+      maskedCells, spark.read.parquet(s"$idx/codes"), nprobe, refineT)
+    val gen1 = compactedIndex(spark, dir, cells)
     val cells1 = spark.read.parquet(s"$gen1/cells")
       .join(spark.read.parquet(s"$gen1/tombstones"), Seq("vec_id"), "left_anti")
     val phase2 = serveIvfPqQueries(q, survivors, centroids, codebook,
@@ -1075,6 +1049,44 @@ object Similarity {
       .select(col("phase"), col("q_id"), col("vec_id"), col("cos"), col("rn"))
       .orderBy(col("phase"), col("q_id"), col("rn"))
   }
+
+  /** Every 5th vector: the delete feed (stand-in for dedup losers / RTBF). */
+  private def deleteFeed(all: DataFrame): DataFrame =
+    all.filter(col("vec_id") % 5 === 2).select(col("vec_id"))
+
+  /** The COMPACTION of [[indexDeleteCompact]] on the `cells`-cell index:
+    * `cells`, `codes` and the residual `tombstones`, a `Tables.scratchDir`
+    * memo over embeddings returned as its path. Its version names the
+    * index version and the 1/5 rule; bump it with either. */
+  private[graft] def compactedIndex(spark: SparkSession, dir: String, cells: Int): String =
+    Tables.scratchDir(spark, dir, s"ivfpq_gen1_c$cells", Seq("embeddings"),
+        s"${IvfPqVersion}_del5_hot5") { out =>
+      val idx = ivfPqIndex(spark, dir, cells)
+      val cells0 = spark.read.parquet(s"$idx/cells")
+      val dead = deleteFeed(unitVectors(spark, dir)).withColumn("dead", lit(1L))
+      val hot = cells0.join(dead, Seq("vec_id"), "left")
+        .groupBy(col("cell"))
+        .agg(count(lit(1)).as("n"),
+          sum(coalesce(col("dead"), lit(0L))).as("n_dead"))
+        .filter(col("n_dead") * 5 >= col("n"))
+        .select(col("cell"), lit(true).as("hot"))
+      val tagged = cells0.join(broadcast(hot), Seq("cell"), "left")
+        .join(dead, Seq("vec_id"), "left")
+        .cache() // read by all three writes — uncached, each write
+                 // would re-run the cells0 joins (3 passes instead of 1)
+      tagged.filter(!(col("hot").isNotNull && col("dead").isNotNull))
+        .select(col("vec_id"), col("cell"))
+        .write.parquet(s"$out/cells")
+      // codes of compacted-away rows go too (vec_id equi-join on hot∩dead)
+      spark.read.parquet(s"$idx/codes")
+        .join(tagged.filter(col("hot").isNotNull && col("dead").isNotNull)
+          .select(col("vec_id")), Seq("vec_id"), "left_anti")
+        .write.parquet(s"$out/codes")
+      tagged.filter(col("hot").isNull && col("dead").isNotNull)
+        .select(col("vec_id"))
+        .write.parquet(s"$out/tombstones")
+      tagged.unpersist()
+    }
 
   /** Health metrics of an IVF index's cell assignment — the kernel of
     * [[indexHealth]], factored over the two relations so the spec can

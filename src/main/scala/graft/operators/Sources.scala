@@ -15,14 +15,17 @@ import graft.functions.Det._
   *   fragility) as a parquet→csv→aggregate roundtrip, oracled against the
   *   same aggregate on the original parquet table — proving the CSV path
   *   is lossless for every column type it carries.
+  * - The round-trips (text, CSV, JSON, XML, corrupt JSON, ORC) each write
+  *   their serialized file set as a `Tables.scratchDir` memo keyed on the
+  *   table they serialize, and read it back outside the memo: one write
+  *   per input version, published whole, never a fixed path rewritten
+  *   under a concurrent reader.
   * - Stratified sample (U2, `stat.sampleBy`) and random split (U3,
   *   `randomSplit`): seeded but partition-order-sensitive → rows-only
   *   driver check + rate assertions in SamplingSpec (SURVEY.md §7.6).
   * - Summary stats (A5, `df.summary`): quantile profile of a money column.
   */
 object Sources {
-
-  private def csvDir(dir: String): String = Tables.scratchPath("csv", dir)
 
   /** Raw line-corpus roundtrip via the `text` source — the rawest LLM
     * ingest format (one record per line, no schema, no quoting layer):
@@ -36,13 +39,13 @@ object Sources {
     * would escape embedded newlines before the write, exactly the
     * contract this entry's serialization step documents. */
   def textRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = Tables.scratchPath("textlines", dir)
-    Tables.documents(spark, dir)
-      .select(concat_ws("\t",
-        col("doc_id").cast("string"), col("lang"), col("text")).as("value"))
-      .write.mode("overwrite").text(out)
-    val lines = spark.read.text(out)
-    lines
+    val out = Tables.scratchDir(spark, dir, "textlines", Seq("documents"), "v1") { tmp =>
+      Tables.documents(spark, dir)
+        .select(concat_ws("\t",
+          col("doc_id").cast("string"), col("lang"), col("text")).as("value"))
+        .write.text(tmp)
+    }
+    spark.read.text(out)
       .select(split(col("value"), "\t", 3).as("f"))
       .select(col("f").getItem(0).cast("long").as("doc_id"),
         col("f").getItem(1).as("lang"),
@@ -60,10 +63,8 @@ object Sources {
     * parquet table, so any roundtrip loss would hash-mismatch. */
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables.supplier(spark, dir)
-    val out = csvDir(dir)
-    src.write.mode("overwrite")
-      .options(Map("header" -> "true", "quote" -> "\"", "escape" -> "\""))
-      .csv(out)
+    val out = Tables.scratchDir(spark, dir, "csv", Seq("supplier"), "v1")(
+      src.write.options(Map("header" -> "true", "quote" -> "\"", "escape" -> "\"")).csv(_))
     spark.read
       .options(Map(
         "header" -> "true", "multiLine" -> "true",
@@ -85,8 +86,7 @@ object Sources {
     * original parquet, so any serialization loss hash-mismatches. */
   def jsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables.nation(spark, dir)
-    val out = Tables.scratchPath("json", dir)
-    src.write.mode("overwrite").json(out)
+    val out = Tables.scratchDir(spark, dir, "json", Seq("nation"), "v1")(src.write.json(_))
     spark.read
       .schema(src.schema) // explicit, never inferred
       .json(out)
@@ -108,9 +108,8 @@ object Sources {
     * comments actually gets exercised by the writer/reader pair. */
   def xmlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables.customer(spark, dir)
-    val out = Tables.scratchPath("xml", dir)
-    src.write.mode("overwrite").format("xml")
-      .option("rowTag", "customer").save(out)
+    val out = Tables.scratchDir(spark, dir, "xml", Seq("customer"), "v1")(
+      src.write.format("xml").option("rowTag", "customer").save(_))
     spark.read.format("xml")
       .option("rowTag", "customer")
       .schema(src.schema) // explicit, never inferred
@@ -135,17 +134,18 @@ object Sources {
     * the oracle derives the same split from the corruption rule. */
   def jsonCorrupt(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructType}
-    val out = Tables.scratchPath("json_corrupt", dir)
-    val lines = Tables.nation(spark, dir)
-      .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-      .select(
-        // every 3rd record: drop the closing brace region — broken JSON
-        when(col("n_nationkey") % 3 === 0,
-          concat(lit("{\"n_nationkey\": "), col("n_nationkey"),
-            lit(", \"n_name\": \""), col("n_name"))) // truncated mid-string
-          .otherwise(to_json(struct(col("n_nationkey"), col("n_name"),
-            col("n_regionkey")))).as("value"))
-    lines.coalesce(1).write.mode("overwrite").text(out)
+    val out = Tables.scratchDir(spark, dir, "json_corrupt", Seq("nation"), "v1") { tmp =>
+      Tables.nation(spark, dir)
+        .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
+        .select(
+          // every 3rd record: drop the closing brace region — broken JSON
+          when(col("n_nationkey") % 3 === 0,
+            concat(lit("{\"n_nationkey\": "), col("n_nationkey"),
+              lit(", \"n_name\": \""), col("n_name"))) // truncated mid-string
+            .otherwise(to_json(struct(col("n_nationkey"), col("n_name"),
+              col("n_regionkey")))).as("value"))
+        .coalesce(1).write.text(tmp)
+    }
     val schema = new StructType()
       .add("n_nationkey", LongType).add("n_name", StringType)
       .add("n_regionkey", LongType).add("_corrupt_record", StringType)
@@ -166,9 +166,8 @@ object Sources {
     * needed), so the roundtrip also proves the second columnar format
     * preserves types bit-for-bit against the parquet-side oracle. */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val src = Tables.region(spark, dir)
-    val out = Tables.scratchPath("orc", dir)
-    src.write.mode("overwrite").orc(out)
+    val out = Tables.scratchDir(spark, dir, "orc", Seq("region"), "v1")(
+      Tables.region(spark, dir).write.orc(_))
     spark.read.orc(out)
       .groupBy(lit(1).as("probe"))
       .agg(

@@ -26,12 +26,14 @@ import org.apache.spark.sql.graftbridge.SessionStateProbe
   *  6. keeps the error of whichever step failed. An entry that failed
   *     before step 4 has no [[Built]];
   *  7. keeps the kinds of session state the entry left behind: temp views,
-  *     temporary functions a fresh session lacks, session variables. */
+  *     temporary functions a fresh session lacks, session variables;
+  *  8. keeps the wall seconds of steps 2–3 (build) and of step 5 (digest),
+  *     so a slow run can be traced to the entries that own the time. */
 object CatalogSweep {
 
   final case class Built(plan: LogicalPlan, explain: String, columns: Seq[String])
   final case class Entry(name: String, built: Option[Built], error: Option[Throwable],
-                         leftovers: Seq[String])
+                         leftovers: Seq[String], buildSeconds: Double, digestSeconds: Double)
 
   private val mod1 = 1000000007L // both prime, keep each term < 2^31
   private val mod2 = 998244353L
@@ -52,25 +54,33 @@ object CatalogSweep {
   private def attempt[A](a: => A): Either[Throwable, A] =
     try Right(a) catch { case e: Throwable => Left(e) }
 
+  /** `a` and the wall seconds it took. */
+  def timed[A](a: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val r = a
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
   lazy val entries: Seq[Entry] = {
     val freshFunctions = SessionStateProbe.tempFunctions(SparkSpec.session.newSession())
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val spark = SparkSpec.session.newSession()
       spark.conf.set("spark.sql.codegen.fallback", "false")
       spark.catalog.clearCache()
-      val built = attempt {
+      val (built, buildSeconds) = timed(attempt {
         val df = fn(spark, SparkSpec.Sf0001)
         val qe = df.queryExecution
         df -> Built(qe.optimizedPlan, qe.explainString(ExplainMode.fromString("formatted")),
           df.columns.toSeq)
-      }
-      val ran = built.flatMap { case (df, _) => attempt(digest(df)) }
+      })
+      val (ran, digestSeconds) = timed(built.flatMap { case (df, _) => attempt(digest(df)) })
       val leftovers =
         SessionStateProbe.tempViews(spark).map(v => s"temp view $v") ++
           (SessionStateProbe.tempFunctions(spark) -- freshFunctions).toSeq.sorted
             .map(f => s"temporary function $f") ++
           (if (SessionStateProbe.hasVariables(spark)) Seq("session variables") else Nil)
-      Entry(name, built.toOption.map(_._2), ran.left.toOption, leftovers)
+      Entry(name, built.toOption.map(_._2), ran.left.toOption, leftovers,
+        buildSeconds, digestSeconds)
     }
   }
 }

@@ -6,7 +6,8 @@ package graft
   *    (the driver sorts columns by name before hashing — duplicates would
   *    silently corrupt the compare), read from the shared [[CatalogSweep]],
   *    whose codegen-fallback-off session also fails a stage janino cannot
-  *    compile, and whose digest evaluates every output column;
+  *    compile, and whose digest evaluates every output column; the 15
+  *    entries with the most build + digest seconds are reported;
   *  - no entry leaves a temp view, a temporary function or a session
   *    variable in the session it is given (the sweep's leftovers);
   *  - the flagship entry() returns rows > 0 (the smoke check on entry());
@@ -37,6 +38,8 @@ class ContractSpec extends SparkSpec {
   test("every query runs at sf0.001 with unique column names") {
     // (zero rows is legal for near-dup thresholds at tiny SF; the driver's
     // rows>0 smoke applies only to entry())
+    CatalogSweep.entries.sortBy(e => -(e.buildSeconds + e.digestSeconds)).take(15)
+      .foreach(e => info(f"${e.name}: build ${e.buildSeconds}%.2f s, digest ${e.digestSeconds}%.2f s"))
     val failures = CatalogSweep.entries.flatMap { e =>
       val dups = e.built.toSeq.flatMap(_.columns)
         .groupBy(identity).collect { case (c, g) if g.size > 1 => c }

@@ -64,10 +64,11 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("SQL registration: spark.sql('graft_dot(...)') == Column API") {
-    Tables.embeddings(spark, sf0001)
+    val s = spark.newSession() // the view stays out of the shared session
+    Tables.embeddings(s, sf0001)
       .selectExpr("vec_id", "cast(embedding as array<double>) as v")
       .createOrReplaceTempView("emb_dot_test")
-    val viaSql = spark.sql(
+    val viaSql = s.sql(
       "SELECT vec_id, graft_dot(v, v) AS d FROM emb_dot_test ORDER BY vec_id")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val viaCol = Tables.embeddings(spark, sf0001)

@@ -64,28 +64,30 @@ class ExtensionsConfigPathSpec extends SparkSpec {
 
   test("config-path session: the native aggregate resolves by name from SQL") {
     // injection via the extensions config is the only registration there is
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val s = spark.newSession() // the view stays out of the shared session
+    s.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .createOrReplaceTempView("docs_ext")
-    val ks = spark.sql(
+    val ks = s.sql(
       "SELECT graft_topk_keys(CAST(n_chars AS DOUBLE), doc_id, 3) AS ks FROM docs_ext")
       .collect().head.getSeq[Long](0)
     assert(ks.length == 3, s"config-path graft_topk_keys returned $ks")
   }
 
   test("graft_topk_keys coerces numeric arguments like a builtin aggregate") {
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val s = spark.newSession() // the view stays out of the shared session
+    s.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .createOrReplaceTempView("docs_ext2")
     // n_chars is BIGINT, not DOUBLE — the injected builder must insert the
     // cast a SQL user of any builtin aggregate gets for free
-    val coerced = spark.sql(
+    val coerced = s.sql(
       "SELECT graft_topk_keys(n_chars, doc_id, 3) AS ks FROM docs_ext2")
       .collect().head.getSeq[Long](0)
-    val explicit = spark.sql(
+    val explicit = s.sql(
       "SELECT graft_topk_keys(CAST(n_chars AS DOUBLE), doc_id, 3) AS ks FROM docs_ext2")
       .collect().head.getSeq[Long](0)
     assert(coerced == explicit, s"implicit vs explicit cast disagree: $coerced / $explicit")
     // non-numeric children still fail analysis with the precise message
-    val err = intercept[Exception](spark.sql(
+    val err = intercept[Exception](s.sql(
       "SELECT graft_topk_keys(text, doc_id, 3) FROM docs_ext2").collect())
     assert(err.getMessage.contains("graft_topk_keys"), err.getMessage)
   }

@@ -121,11 +121,11 @@ class IndexMaintenanceSpec extends SparkSpec {
 
   test("compaction rewrites exactly the hot cells and retires their tombstones") {
     val (idx, _, _) = Similarity.ensureIvfPqIndex(spark, sf0001)
-    // force a fresh run so the gen1 relations on disk match this corpus
-    Similarity.indexDeleteCompact(spark, sf0001).count()
+    val (cells, _, _) = Similarity.scaledIvfPqParams(Tables.embeddings(spark, sf0001).count())
+    val gen1 = Similarity.compactedIndex(spark, sf0001, cells)
     val cells0 = spark.read.parquet(s"$idx/cells")
-    val cells1 = spark.read.parquet(s"${idx}_gen1/cells")
-    val tombs1 = spark.read.parquet(s"${idx}_gen1/tombstones")
+    val cells1 = spark.read.parquet(s"$gen1/cells")
+    val tombs1 = spark.read.parquet(s"$gen1/tombstones")
     val deadIds = cells0.filter(col("vec_id") % 5 === 2)
     // residual tombstones are a subset of the original delete feed, and
     // every residual tombstone's row is still present (mask, not rewrite)
@@ -140,7 +140,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(cells0.join(cells1, Seq("vec_id"), "left_anti")
       .filter(col("vec_id") % 5 =!= 2).count() == 0)
     // codes stay aligned with the surviving cell rows (PqM codes each)
-    val codes1 = spark.read.parquet(s"${idx}_gen1/codes")
+    val codes1 = spark.read.parquet(s"$gen1/codes")
     assert(codes1.count() == cells1.count() * Similarity.PqM)
   }
 }

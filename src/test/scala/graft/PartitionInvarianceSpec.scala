@@ -27,11 +27,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * whose outputs are partition-dependent BY CONTRACT (per-partition RNG
   * streams, KMeans aggregation order) and are spec-gated elsewhere
   * (SamplingSpec rate bounds, SimilaritySpec recall floors).
+  *
+  * The wall seconds of both runs are kept per entry, and the 15 entries
+  * with the largest total are reported.
   */
 class PartitionInvarianceSpec extends SparkSpec {
 
   private def runAt(partitions: Int, name: String, hostile: Boolean = false)(
-      fn: (SparkSession, String) => DataFrame): Seq[Any] = {
+      fn: (SparkSession, String) => DataFrame): (Seq[Any], Double) = {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     if (hostile) {
@@ -44,7 +47,7 @@ class PartitionInvarianceSpec extends SparkSpec {
       s.conf.set("spark.sql.adaptive.enabled", "false")
     }
     s.catalog.clearCache()
-    CatalogSweep.digest(fn(s, sf0001))
+    CatalogSweep.timed(CatalogSweep.digest(fn(s, sf0001)))
   }
 
   test("every oracled entry is invariant to the shuffle partition count") {
@@ -53,13 +56,18 @@ class PartitionInvarianceSpec extends SparkSpec {
       .filterNot { case (n, _) => partitionDependent(n) }
       .sortBy(_._1)
     assert(swept.size >= 140, s"sweep unexpectedly small: ${swept.size}")
+    val seconds = Seq.newBuilder[(String, Double, Double)]
     val failures = swept.flatMap { case (name, fn) =>
       try {
-        val a = runAt(3, name)(fn)
-        val b = runAt(17, name, hostile = true)(fn)
+        val (a, secA) = runAt(3, name)(fn)
+        val (b, secB) = runAt(17, name, hostile = true)(fn)
+        seconds += ((name, secA, secB))
         if (a == b) None
         else Some(s"$name: digest@3=$a digest@17/hostile=$b")
       } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+    }
+    seconds.result().sortBy { case (_, a, b) => -(a + b) }.take(15).foreach {
+      case (name, a, b) => info(f"$name: @3 $a%.2f s, @17/hostile $b%.2f s")
     }
     assert(failures.isEmpty, failures.mkString("\n"))
     // drop the last run's cache()d fragments so later suites (PlanSpec's

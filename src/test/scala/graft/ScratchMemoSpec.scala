@@ -1,16 +1,24 @@
 package graft
 
 import java.io.File
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.functions._
+
+import graft.functions.Det.dsum
+import graft.operators.{Joins, Sources}
 
 /** The scratch-memo protocol of [[Tables.scratchDir]] /
   * [[Tables.scratchRelation]], pinned on a private copy of two input
   * tables (so the spec can change their length and mtime) and a private
   * tag: one build per key, nothing published by a failed build, a rebuild
   * for every key change, whole-or-nothing publication of a multi-part
-  * directory, and the memo path's exact name. */
+  * directory, and the memo path's exact name. The last cases rewrite an
+  * input of an entry that writes (or once cached) state in place, within
+  * one JVM, and require the entry to follow it. */
 class ScratchMemoSpec extends SparkSpec {
 
   private val Tag = "memo_spec"
@@ -146,5 +154,108 @@ class ScratchMemoSpec extends SparkSpec {
     assert(df.inputFiles.forall(f => new File(new java.net.URI(f)).getParent == expected),
       s"expected files under $expected, got ${df.inputFiles.toSeq}")
     assert(new File(s"$expected/_SUCCESS").exists())
+  }
+
+  /** The key every scratch memo built over the data dir `d` carries,
+    * whatever its tag. */
+  private def copyKey(d: Path): String =
+    Tables.scratchName("", d.toString).stripPrefix("graft_")
+
+  private def memosOver(d: Path): Seq[File] =
+    Option(new File(sys.props("java.io.tmpdir")).listFiles()).toSeq.flatten
+      .filter(m => m.getName.startsWith("graft_") && m.getName.contains(copyKey(d)))
+
+  /** `f` on a private copy of `tables`; afterwards every scratch memo
+    * built over the copy and every catalog table named after one are
+    * removed. */
+  private def onCopy[A](tables: String*)(f: Path => A): A = {
+    val d = Files.createTempDirectory("scratch_memo_spec_rewrite")
+    tables.foreach(t => Files.copy(Paths.get(s"$sf0001/$t.parquet"), d.resolve(s"$t.parquet")))
+    try f(d)
+    finally {
+      rm(d.toFile)
+      memosOver(d).foreach(rm)
+      spark.catalog.listTables().collect().map(_.name)
+        .filter(_.toLowerCase.contains(copyKey(d).toLowerCase))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+  }
+
+  /** Replaces `table` in the copy `d` by `f` of it, as one parquet file
+    * under the same name. */
+  private def rewrite(d: Path, table: String)(f: DataFrame => DataFrame): Unit = {
+    val file = d.resolve(s"$table.parquet")
+    val out = d.resolve(s"${table}_rewrite").toString
+    f(spark.read.parquet(file.toString)).coalesce(1).write.parquet(out)
+    val part = new File(out).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.copy(part.toPath, file, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("join_bucketed_revenue follows a rewrite of orders within one JVM") {
+    onCopy("orders", "customer") { d =>
+      val dir = d.toString
+      def plainJoin(): Seq[Row] =
+        Tables.orders(spark, dir)
+          .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
+          .groupBy(col("c_mktsegment"))
+          .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total_value"))
+          .orderBy(col("c_mktsegment")).collect().toSeq
+      val before = Joins.bucketedRevenue(spark, dir).collect().toSeq
+      assert(before == plainJoin())
+      rewrite(d, "orders")(_.filter(col("o_orderkey") % 7 =!= 0))
+      val after = Joins.bucketedRevenue(spark, dir).collect().toSeq
+      assert(after != before, "dropping a slice of orders should change the revenue")
+      assert(after == Joins.bucketedRevenue(spark.newSession(), dir).collect().toSeq)
+      assert(after == plainJoin(), "the bucketed tables served the old orders")
+      // the memo-backed tables stay bucketed: without broadcast joins or
+      // AQE the sort-merge join reads both sides with no exchange below it
+      val s = spark.newSession()
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      s.conf.set("spark.sql.adaptive.enabled", "false")
+      val plan = Joins.bucketedRevenue(s, dir).queryExecution.executedPlan
+      val joins = plan.collect { case j: SortMergeJoinExec => j }
+      assert(joins.size == 1 && joins.head.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"the bucketed join shuffles its inputs:\n$plan")
+      // memos removed and rebuilt under the same keys: the session's
+      // registered tables must list the new files, not the deleted ones
+      memosOver(d).foreach(rm)
+      assert(Joins.bucketedRevenue(spark, dir).collect().toSeq == after)
+    }
+  }
+
+  test("the events loader decodes the same instants after ts is rewritten to raw nanos") {
+    onCopy("events") { d =>
+      val dir = d.toString
+      def instants(): Seq[Row] =
+        Tables.events(spark, dir).select(col("event_id"), col("ts"))
+          .orderBy(col("event_id")).collect().toSeq
+      val before = instants()
+      assert(Tables.events(spark, dir).schema("ts").dataType ==
+        org.apache.spark.sql.types.TimestampType)
+      rewrite(d, "events")(_.withColumn("ts", unix_micros(col("ts").cast("timestamp")) * 1000L))
+      assert(spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType ==
+        org.apache.spark.sql.types.LongType)
+      assert(instants() == before, "the nanos timeline was not decoded")
+    }
+  }
+
+  test("src_csv_roundtrip follows a rewrite of supplier under a new memo key") {
+    onCopy("supplier") { d =>
+      val dir = d.toString
+      def plain(): Seq[Row] =
+        Tables.supplier(spark, dir).groupBy(col("s_nationkey"))
+          .agg(count(lit(1)).as("n_suppliers"), dsum(col("s_acctbal")).as("sum_acctbal"),
+            min(col("s_name")).as("first_name"))
+          .orderBy(col("s_nationkey")).collect().toSeq
+      val before = Sources.csvRoundtrip(spark, dir).collect().toSeq
+      assert(before == plain())
+      rewrite(d, "supplier")(_.filter(col("s_suppkey") % 3 =!= 0))
+      val after = Sources.csvRoundtrip(spark, dir).collect().toSeq
+      assert(after != before, "dropping a slice of supplier should change the aggregate")
+      assert(after == plain(), "the round-trip read the old supplier")
+      val src = new File(s"$dir/supplier.parquet")
+      val key = s"${Tables.scratchPath("csv", dir)}_${src.length()}_${src.lastModified()}_v1"
+      assert(new File(s"$key/_SUCCESS").exists(), s"no memo published at $key")
+    }
   }
 }

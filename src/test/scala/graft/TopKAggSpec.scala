@@ -94,17 +94,19 @@ class TopKAggEngineSpec extends SparkSpec {
   }
 
   test("update skips null values and keys") {
-    import spark.implicits._
+    val s = spark.newSession() // the view stays out of the shared session
+    import s.implicits._
     Seq[(java.lang.Double, java.lang.Long)]((1.0, 1L), (null, 2L), (3.0, null), (2.0, 4L))
       .toDF("v", "k").createOrReplaceTempView("tk_nulls")
-    val out = spark.sql(
+    val out = s.sql(
       "SELECT graft_topk_keys(v, k, 3) AS ks FROM tk_nulls")
       .collect().head.getSeq[Long](0)
     assert(out == Seq(4L, 1L))
   }
 
   test("DECIMAL value and INT key coerce through the registered builder") {
-    import spark.implicits._
+    val s = spark.newSession() // the view stays out of the shared session
+    import s.implicits._
     // DECIMAL(10,2) value + INT key — the shapes a SQL user actually has
     // (money columns, surrogate int keys). Builtin aggregates get this
     // coercion from the analyzer; the builder must supply it for the raw
@@ -113,7 +115,7 @@ class TopKAggEngineSpec extends SparkSpec {
       .toDF("k", "v")
       .selectExpr("CAST(k AS INT) AS k", "CAST(v AS DECIMAL(10,2)) AS v")
       .createOrReplaceTempView("tk_decimal")
-    val out = spark.sql(
+    val out = s.sql(
       "SELECT graft_topk_keys(v, k, 2) AS ks FROM tk_decimal")
       .collect().head.getSeq[Long](0)
     assert(out == Seq(2L, 4L), s"decimal coercion produced $out")
