@@ -65,7 +65,7 @@ class ExtensionsConfigPathSpec extends SparkSpec {
   test("config-path session: the native aggregate resolves by name from SQL") {
     // injection via the extensions config is the only registration there is
     val s = spark.newSession() // the view stays out of the shared session
-    s.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    s.read.parquet(s"$sf0001/documents.parquet")
       .createOrReplaceTempView("docs_ext")
     val ks = s.sql(
       "SELECT graft_topk_keys(CAST(n_chars AS DOUBLE), doc_id, 3) AS ks FROM docs_ext")
@@ -75,7 +75,7 @@ class ExtensionsConfigPathSpec extends SparkSpec {
 
   test("graft_topk_keys coerces numeric arguments like a builtin aggregate") {
     val s = spark.newSession() // the view stays out of the shared session
-    s.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    s.read.parquet(s"$sf0001/documents.parquet")
       .createOrReplaceTempView("docs_ext2")
     // n_chars is BIGINT, not DOUBLE — the injected builder must insert the
     // cast a SQL user of any builtin aggregate gets for free
