@@ -235,15 +235,20 @@ object Aggregates {
     * key-cardinality product, tiny at any scale. */
   def cubeStatusPriority(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
-    o.cube(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(
+    statusPriorityCells(o.cube(col("o_orderstatus"), col("o_orderpriority")))
+  }
+
+  /** Order count and value per (status, priority) lattice cell, with the
+    * GROUPING() flags, in lattice order. */
+  private def statusPriorityCells(
+      cells: org.apache.spark.sql.RelationalGroupedDataset): DataFrame =
+    cells      .agg(
         count(lit(1)).as("n_orders"),
         dsum(col("o_totalprice")).as("total_value"),
         grouping(col("o_orderstatus")).cast("long").as("g_status"),
         grouping(col("o_orderpriority")).cast("long").as("g_priority"))
       .orderBy(col("g_status"), col("g_priority"),
         col("o_orderstatus"), col("o_orderpriority"))
-  }
 
   /** Explicit GROUPING SETS — the third grouping-lattice variant next to
     * rollup (prefix hierarchy) and cube (full 2^k lattice): ONLY the
@@ -254,16 +259,9 @@ object Aggregates {
     * not their product. */
   def groupingSetsMarginals(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
-    o.groupingSets(
-        Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority")), Seq()),
-        col("o_orderstatus"), col("o_orderpriority"))
-      .agg(
-        count(lit(1)).as("n_orders"),
-        dsum(col("o_totalprice")).as("total_value"),
-        grouping(col("o_orderstatus")).cast("long").as("g_status"),
-        grouping(col("o_orderpriority")).cast("long").as("g_priority"))
-      .orderBy(col("g_status"), col("g_priority"),
-        col("o_orderstatus"), col("o_orderpriority"))
+    statusPriorityCells(o.groupingSets(
+      Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority")), Seq()),
+      col("o_orderstatus"), col("o_orderpriority")))
   }
 
   /** Custom typed Aggregator (SURVEY.md §2.12 surface): bounded-state exact
@@ -395,6 +393,21 @@ object Aggregates {
       .orderBy(col("r_name"))
   }
 
+  /** lineitem quantity and price as exact 2-decimal `x` and `y`. */
+  private def quantityPrice: Seq[Column] = Seq(
+    col("l_quantity").cast(org.apache.spark.sql.types.DecimalType(12, 2)).as("x"),
+    col("l_extendedprice").cast(org.apache.spark.sql.types.DecimalType(12, 2)).as("y"))
+
+  /** The five moments of an (x, y) pair plus n: exact decimal sums over
+    * 2-decimal inputs, cast to double only once summed. */
+  private def pairMoments: Seq[Column] = Seq(
+    count(lit(1)).as("n"),
+    sum(col("x")).cast("double").as("sx"),
+    sum(col("y")).cast("double").as("sy"),
+    sum(col("x") * col("x")).cast("double").as("sxx"),
+    sum(col("y") * col("y")).cast("double").as("syy"),
+    sum(col("x") * col("y")).cast("double").as("sxy"))
+
   /** Exact-arithmetic correlation/covariance — the statistical aggregates
     * (`corr`, `covar_pop`) that are normally UN-oracleable: engines sum
     * doubles in different orders and use different one-pass update
@@ -408,18 +421,9 @@ object Aggregates {
     * persist per partition and merge. AggSanitySpec-style check: the spec
     * asserts agreement with Spark's built-in corr to float tolerance. */
   def corrManual(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val l = Tables.lineitem(spark, dir).select(col("l_returnflag"),
-      col("l_quantity").cast(DecimalType(12, 2)).as("x"),
-      col("l_extendedprice").cast(DecimalType(12, 2)).as("y"))
+    val l = Tables.lineitem(spark, dir).select(col("l_returnflag") +: quantityPrice: _*)
     l.groupBy(col("l_returnflag"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x")).cast("double").as("sx"),
-        sum(col("y")).cast("double").as("sy"),
-        sum(col("x") * col("x")).cast("double").as("sxx"),
-        sum(col("y") * col("y")).cast("double").as("syy"),
-        sum(col("x") * col("y")).cast("double").as("sxy"))
+      .agg(pairMoments.head, pairMoments.tail: _*)
       .select(col("l_returnflag"), col("n"),
         // round-6 (the module's libm/ulp rule): the moment VALUES are
         // exact, but decimal→double conversion of >2^53 magnitudes is
@@ -510,24 +514,15 @@ object Aggregates {
     * side — dims never shuffle the fact). Round-6 absorbs the
     * decimal→double conversion ulp (module rule, see corrManual). */
   def regressionManual(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val li = Tables.lineitem(spark, dir)
     val sup = Tables.supplier(spark, dir).select(col("s_suppkey"), col("s_nationkey"))
     val nat = Tables.nation(spark, dir).select(col("n_nationkey"), col("n_name"))
     val m = li
       .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-      .select(col("n_name"),
-        col("l_quantity").cast(DecimalType(12, 2)).as("x"),
-        col("l_extendedprice").cast(DecimalType(12, 2)).as("y"))
+      .select(col("n_name") +: quantityPrice: _*)
       .groupBy(col("n_name"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x")).cast("double").as("sx"),
-        sum(col("y")).cast("double").as("sy"),
-        sum(col("x") * col("x")).cast("double").as("sxx"),
-        sum(col("y") * col("y")).cast("double").as("syy"),
-        sum(col("x") * col("y")).cast("double").as("sxy"))
+      .agg(pairMoments.head, pairMoments.tail: _*)
     m.withColumn("slope_raw",
         (col("n") * col("sxy") - col("sx") * col("sy"))
           / (col("n") * col("sxx") - col("sx") * col("sx")))
@@ -1063,6 +1058,63 @@ object Aggregates {
             col("kth_hash").cast("double")).as("est_kmv"))
   }
 
+  /** The Cramer regressions' features over lineitem, all exact longs:
+    * `x1` = quantity, `x2` = discount in basis points, `y` = price cents. */
+  private def cramerFeatures: Seq[Column] = Seq(
+    floor(col("l_quantity")).cast("long").as("x1"),
+    floor(col("l_discount") * 100).cast("long").as("x2"),
+    floor(col("l_extendedprice") * 100).cast("long").as("y"))
+
+  /** The exact 10-moment aggregate of the 2-feature normal equations over
+    * `cramerFeatures`: n, Σx1, Σx2, Σy and the second moments, every
+    * product decimal(19,0)-seeded → 38 (the overflow-policy rule). */
+  private def cramerMoments: Seq[Column] = {
+    val dec = (c: Column) => c.cast("decimal(19,0)")
+    Seq(
+      count(lit(1)).as("n"),
+      sum(col("x1")).as("sx1"), sum(col("x2")).as("sx2"),
+      sum(col("y")).as("sy"),
+      sum(dec(col("x1")) * col("x1")).as("s11"),
+      sum(dec(col("x1")) * col("x2")).as("s12"),
+      sum(dec(col("x2")) * col("x2")).as("s22"),
+      sum(dec(col("x1")) * col("y")).as("sx1y"),
+      sum(dec(col("x2")) * col("y")).as("sx2y"),
+      sum(dec(col("y")) * col("y")).as("syy"))
+  }
+
+  /** The 2-feature normal equations solved by Cramer's rule: A symmetric
+    * = [[a,b,c],[b,d,e],[c,e,f]], rhs [g,h,i]; det = a(df−e²) − b(bf−ec)
+    * + c(be−dc), and β_k replaces column k with the rhs. Fixed IEEE op
+    * chains on exact operands, so the β are bit-identical across
+    * engines. */
+  private final case class CramerSystem(a: Column, b: Column, c: Column,
+      d: Column, e: Column, f: Column, g: Column, h: Column, i: Column) {
+    val det: Column = a * (d * f - e * e) - b * (b * f - e * c) +
+      c * (b * e - d * c)
+    val b0: Column = (g * (d * f - e * e) - b * (h * f - e * i) +
+      c * (h * e - d * i)) / det
+    val b1: Column = (a * (h * f - e * i) - g * (b * f - e * c) +
+      c * (b * i - h * c)) / det
+    val b2: Column = (a * (d * i - e * h) - b * (b * i - h * c) +
+      g * (b * e - d * c)) / det
+
+    /** β0..β2 round-6, NULL for a singular system. */
+    def coefficients: Seq[Column] = Seq(
+      when(det =!= 0.0, round(b0, 6)).as("b0_cents"),
+      when(det =!= 0.0, round(b1, 6)).as("b1_per_qty"),
+      when(det =!= 0.0, round(b2, 6)).as("b2_per_bp"))
+  }
+
+  private object CramerSystem {
+    /** The system over the `cramerMoments` columns, each read through
+      * `moment` (by its moment name) as a double. */
+    def apply(moment: String => Column): CramerSystem = {
+      val Seq(a, b, c, d, e, f, g, h, i) =
+        Seq("n", "sx1", "sx2", "s11", "s12", "s22", "sy", "sx1y", "sx2y").map(moment)
+      CramerSystem(a, b, c, d, e, f, g, h, i)
+    }
+  }
+
   /** Multiple OLS in closed form — `agg_regression_manual` (one
     * regressor, per-nation) generalized to the 2-feature normal
     * equations, solved by CRAMER'S RULE entirely in-plan: price_cents ~
@@ -1074,50 +1126,18 @@ object Aggregates {
     * op chains on exact operands, bit-identical across engines, no
     * libm; only the O(1)-magnitude coefficients/R² are rounded (6).
     * The 100 TB story is the same as A4: the model fits in one partial-
-    * aggregated pass, and the solve costs nothing at any scale.
-    *
-    * det expansion, A symmetric = [[n,b,c],[b,d,e],[c,e,f]], rhs
-    * [g,h,i]: det = a(df−e²) − b(bf−ec) + c(be−dc), and β_k replaces
-    * column k with the rhs. */
+    * aggregated pass (`cramerMoments`), and the solve (`CramerSystem`)
+    * costs nothing at any scale. */
   def olsCramer(spark: SparkSession, dir: String): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(19,0)")
-    val li = Tables.lineitem(spark, dir).select(
-      floor(col("l_quantity")).cast("long").as("x1"),
-      floor(col("l_discount") * 100).cast("long").as("x2"),
-      floor(col("l_extendedprice") * 100).cast("long").as("y"))
-    val m = li.agg(
-      count(lit(1)).as("n"),
-      sum(col("x1")).as("sx1"), sum(col("x2")).as("sx2"),
-      sum(col("y")).as("sy"),
-      sum(dec(col("x1")) * col("x1")).as("s11"),
-      sum(dec(col("x1")) * col("x2")).as("s12"),
-      sum(dec(col("x2")) * col("x2")).as("s22"),
-      sum(dec(col("x1")) * col("y")).as("sx1y"),
-      sum(dec(col("x2")) * col("y")).as("sx2y"),
-      sum(dec(col("y")) * col("y")).as("syy"))
-    val a = col("n").cast("double")
-    val b = col("sx1").cast("double"); val c = col("sx2").cast("double")
-    val d = col("s11").cast("double"); val e = col("s12").cast("double")
-    val f = col("s22").cast("double")
-    val g = col("sy").cast("double"); val h = col("sx1y").cast("double")
-    val i = col("sx2y").cast("double"); val yy = col("syy").cast("double")
-    val det = a * (d * f - e * e) - b * (b * f - e * c) +
-      c * (b * e - d * c)
-    val det0 = g * (d * f - e * e) - b * (h * f - e * i) +
-      c * (h * e - d * i)
-    val det1 = a * (h * f - e * i) - g * (b * f - e * c) +
-      c * (b * i - h * c)
-    val det2 = a * (d * i - e * h) - b * (b * i - h * c) +
-      g * (b * e - d * c)
-    val b0 = det0 / det; val b1 = det1 / det; val b2 = det2 / det
+    val m = Tables.lineitem(spark, dir).select(cramerFeatures: _*)
+      .agg(cramerMoments.head, cramerMoments.tail: _*)
+    val ols = CramerSystem(cm => col(cm).cast("double"))
+    import ols.{a, g, h, i, det, b0, b1, b2}
+    val yy = col("syy").cast("double")
     val sse = yy - (b0 * g + b1 * h + b2 * i)
     val sst = yy - g * g / a
-    m.select(col("n"),
-      when(det =!= 0.0, round(b0, 6)).as("b0_cents"),
-      when(det =!= 0.0, round(b1, 6)).as("b1_per_qty"),
-      when(det =!= 0.0, round(b2, 6)).as("b2_per_bp"),
-      when(det =!= 0.0 && sst > 0.0, round(lit(1.0) - sse / sst, 6))
-        .as("r2"))
+    m.select(col("n") +: ols.coefficients :+
+      when(det =!= 0.0 && sst > 0.0, round(lit(1.0) - sse / sst, 6)).as("r2"): _*)
   }
 
   /** Ridge regression in closed form — `ml_ols_cramer`'s REGULARIZED twin:
@@ -1133,57 +1153,29 @@ object Aggregates {
     * quadratic form sse = yy − 2βᵀXᵀy + βᵀ(XᵀX)β (valid off the OLS
     * optimum, where the λ=0 shortcut isn't).
     *
-    * Scale story = A4/olsCramer: ONE partial-aggregated pass collects the
-    * exact moments; the per-λ solves are O(1) on a broadcast 2-row λ
-    * table. No libm — fixed IEEE chains on exact operands, bit-identical
+    * Scale: ONE partial-aggregated pass collects the exact
+    * `cramerMoments`; the per-λ `CramerSystem` solves are O(1) on a
+    * broadcast 2-row λ table. No libm — fixed IEEE chains on exact operands, bit-identical
     * across engines; only the O(1) outputs are rounded (6). */
   def ridgeCramer(spark: SparkSession, dir: String): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(19,0)")
-    val li = Tables.lineitem(spark, dir).select(
-      floor(col("l_quantity")).cast("long").as("x1"),
-      floor(col("l_discount") * 100).cast("long").as("x2"),
-      floor(col("l_extendedprice") * 100).cast("long").as("y"))
-    val m = li.agg(
-      count(lit(1)).as("n"),
-      sum(col("x1")).as("sx1"), sum(col("x2")).as("sx2"),
-      sum(col("y")).as("sy"),
-      sum(dec(col("x1")) * col("x1")).as("s11"),
-      sum(dec(col("x1")) * col("x2")).as("s12"),
-      sum(dec(col("x2")) * col("x2")).as("s22"),
-      sum(dec(col("x1")) * col("y")).as("sx1y"),
-      sum(dec(col("x2")) * col("y")).as("sx2y"),
-      sum(dec(col("y")) * col("y")).as("syy"))
+    val m = Tables.lineitem(spark, dir).select(cramerFeatures: _*)
+      .agg(cramerMoments.head, cramerMoments.tail: _*)
     val lams = spark.createDataFrame(Seq(Tuple1(0L), Tuple1(100L)))
       .toDF("lam_per_obs")
     val j = m.crossJoin(broadcast(lams))
-    val a = col("n").cast("double")
-    val b = col("sx1").cast("double"); val c = col("sx2").cast("double")
-    val d = col("s11").cast("double"); val e = col("s12").cast("double")
-    val f = col("s22").cast("double")
-    val g = col("sy").cast("double"); val h = col("sx1y").cast("double")
-    val i = col("sx2y").cast("double"); val yy = col("syy").cast("double")
+    val xtx = CramerSystem(cm => col(cm).cast("double"))
+    import xtx.{a, b, c, d, e, f, g, h, i}
+    val yy = col("syy").cast("double")
     val lam = col("lam_per_obs").cast("double") * a
-    val dl = d + lam; val fl = f + lam
-    val det = a * (dl * fl - e * e) - b * (b * fl - e * c) +
-      c * (b * e - dl * c)
-    val det0 = g * (dl * fl - e * e) - b * (h * fl - e * i) +
-      c * (h * e - dl * i)
-    val det1 = a * (h * fl - e * i) - g * (b * fl - e * c) +
-      c * (b * i - h * c)
-    val det2 = a * (dl * i - e * h) - b * (b * i - h * c) +
-      g * (b * e - dl * c)
-    val b0 = det0 / det; val b1 = det1 / det; val b2 = det2 / det
+    val ridge = xtx.copy(d = d + lam, f = f + lam)
+    import ridge.{det, b0, b1, b2}
     val quad = b0 * b0 * a + b1 * b1 * d + b2 * b2 * f +
       lit(2.0) * b0 * b1 * b + lit(2.0) * b0 * b2 * c +
       lit(2.0) * b1 * b2 * e
     val sse = yy - lit(2.0) * (b0 * g + b1 * h + b2 * i) + quad
     val sst = yy - g * g / a
-    j.select(col("lam_per_obs"), col("n"),
-        when(det =!= 0.0, round(b0, 6)).as("b0_cents"),
-        when(det =!= 0.0, round(b1, 6)).as("b1_per_qty"),
-        when(det =!= 0.0, round(b2, 6)).as("b2_per_bp"),
-        when(det =!= 0.0 && sst > 0.0, round(lit(1.0) - sse / sst, 6))
-          .as("r2"))
+    j.select(Seq(col("lam_per_obs"), col("n")) ++ ridge.coefficients :+
+        when(det =!= 0.0 && sst > 0.0, round(lit(1.0) - sse / sst, 6)).as("r2"): _*)
       .orderBy(col("lam_per_obs"))
   }
 
@@ -1212,24 +1204,11 @@ object Aggregates {
     * libm rule; only O(1) outputs round (6). */
   def kfoldCv(spark: SparkSession, dir: String): DataFrame = {
     val K = 5
-    val dec = (c: Column) => c.cast("decimal(19,0)")
     val li = Tables.lineitem(spark, dir).select(
       (conv(substring(md5(concat(col("l_orderkey").cast("string"), lit(":"),
         col("l_linenumber").cast("string"))), 1, 15), 16, 10).cast("long")
-        % K).as("fold"),
-      floor(col("l_quantity")).cast("long").as("x1"),
-      floor(col("l_discount") * 100).cast("long").as("x2"),
-      floor(col("l_extendedprice") * 100).cast("long").as("y"))
-    val fm = li.groupBy(col("fold")).agg(
-      count(lit(1)).as("n"),
-      sum(col("x1")).as("sx1"), sum(col("x2")).as("sx2"),
-      sum(col("y")).as("sy"),
-      sum(dec(col("x1")) * col("x1")).as("s11"),
-      sum(dec(col("x1")) * col("x2")).as("s12"),
-      sum(dec(col("x2")) * col("x2")).as("s22"),
-      sum(dec(col("x1")) * col("y")).as("sx1y"),
-      sum(dec(col("x2")) * col("y")).as("sx2y"),
-      sum(dec(col("y")) * col("y")).as("syy"))
+        % K).as("fold") +: cramerFeatures: _*)
+    val fm = li.groupBy(col("fold")).agg(cramerMoments.head, cramerMoments.tail: _*)
     val tot = fm.agg(
       sum(col("n")).as("tn"),
       sum(col("sx1")).as("tsx1"), sum(col("sx2")).as("tsx2"),
@@ -1240,24 +1219,10 @@ object Aggregates {
       sum(col("syy")).as("tyy"))
     val j = fm.crossJoin(broadcast(tot))
     // train = total − held-out fold, cast once to double (exact operands)
-    val a = (col("tn") - col("n")).cast("double")
-    val b = (col("tsx1") - col("sx1")).cast("double")
-    val c = (col("tsx2") - col("sx2")).cast("double")
-    val d = (col("t11") - col("s11")).cast("double")
-    val e = (col("t12") - col("s12")).cast("double")
-    val f = (col("t22") - col("s22")).cast("double")
-    val g = (col("tsy") - col("sy")).cast("double")
-    val h = (col("tx1y") - col("sx1y")).cast("double")
-    val i = (col("tx2y") - col("sx2y")).cast("double")
-    val det = a * (d * f - e * e) - b * (b * f - e * c) +
-      c * (b * e - d * c)
-    val det0 = g * (d * f - e * e) - b * (h * f - e * i) +
-      c * (h * e - d * i)
-    val det1 = a * (h * f - e * i) - g * (b * f - e * c) +
-      c * (b * i - h * c)
-    val det2 = a * (d * i - e * h) - b * (b * i - h * c) +
-      g * (b * e - d * c)
-    val b0 = det0 / det; val b1 = det1 / det; val b2 = det2 / det
+    val total = Map("n" -> "tn", "sx1" -> "tsx1", "sx2" -> "tsx2", "sy" -> "tsy",
+      "s11" -> "t11", "s12" -> "t12", "s22" -> "t22", "sx1y" -> "tx1y", "sx2y" -> "tx2y")
+    val train = CramerSystem(cm => (col(total(cm)) - col(cm)).cast("double"))
+    import train.{det, b0, b1, b2}
     // held-out SSE from the held-out fold's OWN moments
     val hn = col("n").cast("double")
     val quad = b0 * b0 * hn + b1 * b1 * col("s11").cast("double") +
@@ -1272,13 +1237,10 @@ object Aggregates {
       lit(2.0) * (b0 * col("sy").cast("double") +
         b1 * col("sx1y").cast("double") + b2 * col("sx2y").cast("double")) +
       quad, lit(0.0))
-    j.select(col("fold"),
-        (col("tn") - col("n")).as("n_train"), col("n").as("n_test"),
-        when(det =!= 0.0, round(b0, 6)).as("b0_cents"),
-        when(det =!= 0.0, round(b1, 6)).as("b1_per_qty"),
-        when(det =!= 0.0, round(b2, 6)).as("b2_per_bp"),
+    j.select(Seq(col("fold"),
+        (col("tn") - col("n")).as("n_train"), col("n").as("n_test")) ++ train.coefficients :+
         when(det =!= 0.0 && col("n") > 0L,
-          round(sqrt(sse / hn), 6)).as("rmse_cents"))
+          round(sqrt(sse / hn), 6)).as("rmse_cents"): _*)
       .orderBy(col("fold"))
   }
 

@@ -606,6 +606,87 @@ object Behavior {
        |FROM ch ORDER BY channel""".stripMargin
   }
 
+  /** The experiment suite's events projection: user, type and event time
+    * in epoch micros, plus the event value in whole cents (`withCents`). */
+  private def abEvents(spark: SparkSession, dir: String,
+      withCents: Boolean = true): DataFrame = {
+    val cols = Seq(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
+    Tables.events(spark, dir).select(
+      (if (withCents) cols :+ floor(col("value") * 100).cast("long").as("cents")
+       else cols): _*)
+  }
+
+  /** Exposure: each user's first 'view', `(user_id, v_us)`. */
+  private def firstViews(e: DataFrame): DataFrame =
+    e.filter(col("event_type") === "view")
+      .groupBy(col("user_id")).agg(min(col("ts_us")).as("v_us"))
+
+  /** The binary conversion spine: every exposed user left-joined to the
+    * marker `c = 1` when a purchase falls strictly after the first view and
+    * within 24 h — `(user_id, v_us, c)`, `c` NULL for the unconverted. */
+  private def exposedConversion(spark: SparkSession, dir: String): DataFrame = {
+    val e = abEvents(spark, dir, withCents = false)
+    val firstView = firstViews(e)
+    val converted = e.filter(col("event_type") === "purchase")
+      .join(firstView, "user_id")
+      .filter(col("ts_us") > col("v_us") &&
+        col("ts_us") <= col("v_us") + lit(86400000000L))
+      .select(col("user_id")).distinct().withColumn("c", lit(1L))
+    firstView.join(converted, Seq("user_id"), "left")
+  }
+
+  /** The continuous-metric spine: every exposed user left-joined to their
+    * purchase cents strictly after the first view — `(user_id, v_us, y0)`,
+    * `y0` NULL for users who never bought after exposure. */
+  private def exposedSpend(spark: SparkSession, dir: String): DataFrame = {
+    val e = abEvents(spark, dir)
+    val firstView = firstViews(e)
+    val spend = e.filter(col("event_type") === "purchase")
+      .join(firstView, "user_id")
+      .filter(col("ts_us") > col("v_us"))
+      .groupBy(col("user_id")).agg(sum(col("cents")).as("y0"))
+    firstView.join(spend, Seq("user_id"), "left")
+  }
+
+  /** `exposedSpend` split into arms by user parity: `(variant, y)`, with
+    * non-buyers at y = 0. */
+  private def armSpend(spark: SparkSession, dir: String): DataFrame =
+    exposedSpend(spark, dir)
+      .select((col("user_id") % 2).as("variant"), coalesce(col("y0"), lit(0L)).as("y"))
+
+  /** The two-arm moment row over `armSpend`: `n`, `Σy` and `Σy²` per arm
+    * (`n_a, sy_a, syy_a, n_b, sy_b, syy_b`). The squared-cents sums are
+    * lifted to DECIMAL(38,0) (HUGEINT in the oracle): y² passes 2⁶³ once
+    * per-user revenue exceeds ~$30B cents-squared territory, i.e. Σy²
+    * wraps at ~10⁹ users × $10⁴ — decimal keeps the moment exact at any
+    * plausible SF on both engines. */
+  private def armMoments(users: DataFrame): DataFrame = {
+    def arm(v: Int, s: String) = Seq(
+      sum(when(col("variant") === v, 1L).otherwise(0L)).as(s"n_$s"),
+      sum(when(col("variant") === v, col("y")).otherwise(0L)).as(s"sy_$s"),
+      sum(when(col("variant") === v, col("y").cast("decimal(19,0)") * col("y"))
+        .otherwise(lit(0L))).as(s"syy_$s"))
+    val aggs = arm(0, "a") ++ arm(1, "b")
+    users.agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Arm mean `Σy / n` over an `armMoments` row. */
+  private def armMean(arm: String): Column =
+    col(s"sy_$arm").cast("double") / col(s"n_$arm")
+
+  /** Arm sample variance over an `armMoments` row, n−1 form:
+    * (Σy² − (Σy)²/n) / (n−1). */
+  private def armVar(arm: String): Column =
+    (col(s"syy_$arm").cast("double") -
+      col(s"sy_$arm").cast("double") * col(s"sy_$arm") / col(s"n_$arm")) /
+      (col(s"n_$arm") - lit(1L))
+
+  /** Per-arm value histogram over `armSpend`: `(y, t_a, t_b)`. */
+  private def armHist(users: DataFrame): DataFrame =
+    users.groupBy(col("y"))
+      .agg(sum(when(col("variant") === 0, 1L).otherwise(0L)).as("t_a"),
+        sum(when(col("variant") === 1, 1L).otherwise(0L)).as("t_b"))
+
   /** Two-proportion z-test — the A/B experiment readout: users split by
     * `user_id % 2`, exposure = first 'view', conversion = a purchase
     * strictly after that first view and within 24 h (a windowed funnel
@@ -622,18 +703,7 @@ object Behavior {
     * 1-row rollup) + one key equi-join — linear, no windows over the raw
     * log, nothing grows with data but the per-user agg. */
   def abZtest(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
-    val firstView = e.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts_us")).as("v_us"))
-    val converted = e.filter(col("event_type") === "purchase")
-      .join(firstView, "user_id")
-      .filter(col("ts_us") > col("v_us") &&
-        col("ts_us") <= col("v_us") + lit(86400000000L))
-      .select(col("user_id")).distinct()
-      .withColumn("c", lit(1L))
-    val users = firstView
-      .join(converted, Seq("user_id"), "left")
+    val users = exposedConversion(spark, dir)
       .select((col("user_id") % 2).as("variant"),
         coalesce(col("c"), lit(0L)).as("converted"))
     users.agg(
@@ -679,11 +749,8 @@ object Behavior {
     * Scale: one per-user hash-agg over the log, then a 1-row global agg
     * (A4 stance) — no windows, no second pass, nothing driver-side. */
   def cuped(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"),
-        floor(col("value") * 100).cast("long").as("cents"))
-    val firstView = e.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts_us")).as("v_us"))
+    val e = abEvents(spark, dir)
+    val firstView = firstViews(e)
     val perUser = e.filter(col("event_type") === "purchase")
       .join(firstView, "user_id")
       .groupBy(col("user_id"), col("v_us"))
@@ -730,24 +797,13 @@ object Behavior {
         col("diff_cuped"), col("var_red_bp"))
   }
 
-  /** Linear multi-touch attribution — the fairness-minded counterpart of
-    * `events_attribution`'s last-touch rule: every click/view in the 24 h
-    * BEFORE a purchase shares that purchase's credit equally. Credit is
-    * EXACTLY CONSERVED in integer micro-cents: each touch gets
-    * `cents·10⁶ DIV k` and the division remainder goes to the most recent
-    * touch (a deterministic tie-break, not a float) — so the per-channel
-    * rollup sums to precisely the purchased total, the reconciliation
-    * property finance asks of an attribution report. Purchases with no
-    * in-window touch carry their full credit in the 'none' bucket.
-    *
-    * Shape: one per-user equi-join (purchases × touches) with the 24 h
-    * lookback as a residual range predicate — per-user blocks bound the
-    * candidate volume exactly like the as-of family — then per-purchase
-    * count/rank windows and a |channels|-row hash-agg.
-    *
-    * Scale: everything keys on user_id; no global window, no self-join
-    * beyond the bounded per-user block. */
-  def linearAttribution(spark: SparkSession, dir: String): DataFrame = {
+  /** The multi-touch attribution journey: every purchase left-joined to
+    * the click/view touches of its user in the 24 h before it, with the
+    * per-purchase touch count `k` and the recency rank `rn` (1 = most
+    * recent touch). Columns: the purchase's `user_id, p_us, p_eid, cents`,
+    * the touch's `t_uid, t_us, t_eid, touch_type` (NULL when none), `k`,
+    * `rn`. */
+  private def attributionJourney(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"),
@@ -768,10 +824,31 @@ object Behavior {
       "left")
     val wp = Window.partitionBy(col("p_eid"))
     val wr = wp.orderBy(col("t_us").desc, col("t_eid").desc)
-    val ranked = cand
+    cand
       .withColumn("k", count(col("t_eid")).over(wp))
       .withColumn("rn", row_number().over(wr))
-    val credited = ranked.withColumn("credit_micro",
+  }
+
+  /** Linear multi-touch attribution — the fairness-minded counterpart of
+    * `events_attribution`'s last-touch rule: every click/view in the 24 h
+    * BEFORE a purchase shares that purchase's credit equally. Credit is
+    * EXACTLY CONSERVED in integer micro-cents: each touch gets
+    * `cents·10⁶ DIV k` and the division remainder goes to the most recent
+    * touch (a deterministic tie-break, not a float) — so the per-channel
+    * rollup sums to precisely the purchased total, the reconciliation
+    * property finance asks of an attribution report. Purchases with no
+    * in-window touch carry their full credit in the 'none' bucket.
+    *
+    * Shape: `attributionJourney`'s per-user equi-join (purchases ×
+    * touches) with the 24 h lookback as a residual range predicate —
+    * per-user blocks bound the candidate volume exactly like the as-of
+    * family — and per-purchase count/rank windows, then a |channels|-row
+    * hash-agg.
+    *
+    * Scale: everything keys on user_id; no global window, no self-join
+    * beyond the bounded per-user block. */
+  def linearAttribution(spark: SparkSession, dir: String): DataFrame = {
+    val credited = attributionJourney(spark, dir).withColumn("credit_micro",
       when(col("k") === 0, col("cents") * lit(1000000L))
         .otherwise(expr("cents * 1000000 DIV k") +
           when(col("rn") === 1, expr("(cents * 1000000) % k")).otherwise(lit(0L))))
@@ -785,10 +862,10 @@ object Behavior {
     * standard member of the family (last-touch rule, linear, Markov
     * removal, Shapley + this): the FIRST touch (discovery) and the LAST
     * touch (closer) each take 40% of a purchase's credit, the middles
-    * share the remaining 20% — the GA-style 40/20/40 rule. Same journey
-    * as `events_attribution_linear` (click/view in the 24 h before the
+    * share the remaining 20% — the GA-style 40/20/40 rule. The journey
+    * is `attributionJourney` (click/view in the 24 h before the
     * purchase, per-user equi-join with the lookback as a residual range
-    * predicate), same EXACT integer conservation discipline: all shares
+    * predicate), with the EXACT integer conservation discipline: all shares
     * are positive DIV on micro-cents and every remainder has a
     * deterministic home (k=1 → solo touch takes all; k=2 → half each,
     * remainder to the most recent; k≥3 → first = last = total·2 DIV 5,
@@ -797,31 +874,10 @@ object Behavior {
     * rollup sums to precisely the purchased total. Purchases with no
     * in-window touch land in ('none', 'none').
     *
-    * Scale: identical shape to the linear entry — per-user join blocks,
-    * per-purchase count/rank windows, a |channels×positions|-row
-    * hash-agg. */
+    * Scale: `attributionJourney`'s per-user join blocks and per-purchase
+    * count/rank windows, then a |channels×positions|-row hash-agg. */
   def positionAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"),
-        floor(col("value") * 100).cast("long").as("cents"))
-    val touches = e.filter(col("event_type").isin("click", "view"))
-      .select(col("user_id").as("t_uid"), col("ts_us").as("t_us"),
-        col("event_id").as("t_eid"), col("event_type").as("touch_type"))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts_us").as("p_us"),
-        col("event_id").as("p_eid"), col("cents"))
-    val cand = purchases.join(touches,
-      col("user_id") === col("t_uid") &&
-        col("t_us") < col("p_us") &&
-        col("t_us") >= col("p_us") - lit(86400000000L),
-      "left")
-    val wp = Window.partitionBy(col("p_eid"))
-    val wr = wp.orderBy(col("t_us").desc, col("t_eid").desc)
-    val ranked = cand
-      .withColumn("k", count(col("t_eid")).over(wp))
-      .withColumn("rn", row_number().over(wr))
-    val credited = ranked
+    val credited = attributionJourney(spark, dir)
       .withColumn("position",
         when(col("k") === 0, lit("none"))
           .when(col("k") === 1, lit("solo"))
@@ -849,19 +905,6 @@ object Behavior {
       .orderBy(col("channel"), col("position"))
   }
 
-  /** Welch's t-test on a CONTINUOUS metric — post-exposure revenue cents
-    * per exposed user — completing the readout suite: `behavior_ab_ztest`
-    * handles the binary conversion metric, this the unequal-variance mean
-    * comparison (Welch, the default over Student since arm variances
-    * never match in practice), `behavior_cuped` the variance-reduced
-    * variant, `behavior_srm_check` the validity gate. t, the per-arm
-    * means, and the Welch–Satterthwaite degrees of freedom all derive
-    * from one aggregated row of exact integer sums (n, Σy, Σy² per arm);
-    * sample variances use the n−1 form; every ratio is IEEE on identical
-    * operands re-rounded to 6. Degenerate arms (zero variance in both)
-    * → NULL t rather than a division error.
-    *
-    * Scale: per-user hash-agg + 1-row rollup, the A4 stance. */
   /** Half-sample replication CI for mean exposed-user revenue — the
     * resampling answer when no closed-form variance is trusted (the
     * production cousin of the bootstrap, deterministic by construction):
@@ -881,16 +924,7 @@ object Behavior {
     * rows, two 1-row broadcasts. */
   def halfsampleCi(spark: SparkSession, dir: String): DataFrame = {
     val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"),
-        floor(col("value") * 100).cast("long").as("cents"))
-    val firstView = e.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts_us")).as("v_us"))
-    val spend = e.filter(col("event_type") === "purchase")
-      .join(firstView, "user_id")
-      .filter(col("ts_us") > col("v_us"))
-      .groupBy(col("user_id")).agg(sum(col("cents")).as("y0"))
-    val users = firstView.join(spend, Seq("user_id"), "left")
+    val users = exposedSpend(spark, dir)
       .select(col("user_id"), coalesce(col("y0"), lit(0L)).as("y"),
         expr("cast(conv(substring(md5(cast(user_id as string)), 1, 15), 16, 10) as bigint)")
           .as("h"))
@@ -933,16 +967,7 @@ object Behavior {
     * lattice via round-6/ceil-to-long, IEEE chains on exact counts
     * identical in both engines. */
   def powerMde(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
-    val firstView = e.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts_us")).as("v_us"))
-    val converted = e.filter(col("event_type") === "purchase")
-      .join(firstView, "user_id")
-      .filter(col("ts_us") > col("v_us") &&
-        col("ts_us") <= col("v_us") + lit(86400000000L))
-      .select(col("user_id")).distinct().withColumn("c", lit(1L))
-    val st = firstView.join(converted, Seq("user_id"), "left")
+    val st = exposedConversion(spark, dir)
       .agg(count(lit(1)).as("n_exposed"),
         sum(coalesce(col("c"), lit(0L))).as("n_conv"))
       .withColumn("p", col("n_conv").cast("double") / col("n_exposed"))
@@ -963,43 +988,27 @@ object Behavior {
       .orderBy(col("lift_pct"))
   }
 
+  /** Welch's t-test on a CONTINUOUS metric — post-exposure revenue cents
+    * per exposed user — completing the readout suite: `behavior_ab_ztest`
+    * handles the binary conversion metric, this the unequal-variance mean
+    * comparison (Welch, the default over Student since arm variances
+    * never match in practice), `behavior_cuped` the variance-reduced
+    * variant, `behavior_srm_check` the validity gate. t, the per-arm
+    * means, and the Welch–Satterthwaite degrees of freedom all derive
+    * from one aggregated row of exact integer sums (n, Σy, Σy² per arm);
+    * sample variances use the n−1 form; every ratio is IEEE on identical
+    * operands re-rounded to 6. Degenerate arms (zero variance in both)
+    * → NULL t rather than a division error.
+    *
+    * Scale: per-user hash-agg + 1-row rollup, the A4 stance. */
   def welchTtest(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"),
-        floor(col("value") * 100).cast("long").as("cents"))
-    val firstView = e.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts_us")).as("v_us"))
-    val perUser = e.filter(col("event_type") === "purchase")
-      .join(firstView, "user_id")
-      .filter(col("ts_us") > col("v_us"))
-      .groupBy(col("user_id")).agg(sum(col("cents")).as("y0"))
-    val users = firstView.join(perUser, Seq("user_id"), "left")
-      .select((col("user_id") % 2).as("variant"),
-        coalesce(col("y0"), lit(0L)).as("y"))
-    val s = users.agg(
-      sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_a"),
-      sum(when(col("variant") === 0, col("y")).otherwise(0L)).as("sy_a"),
-      // squared-cents sums lifted to DECIMAL(38,0) (HUGEINT in the oracle):
-      // y² passes 2⁶³ once per-user revenue exceeds ~$30B cents-squared
-      // territory, i.e. Σy² wraps at ~10⁹ users × $10⁴ — decimal keeps the
-      // moment exact at any plausible SF on both engines
-      sum(when(col("variant") === 0, col("y").cast("decimal(19,0)") * col("y"))
-        .otherwise(lit(0L))).as("syy_a"),
-      sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_b"),
-      sum(when(col("variant") === 1, col("y")).otherwise(0L)).as("sy_b"),
-      sum(when(col("variant") === 1, col("y").cast("decimal(19,0)") * col("y"))
-        .otherwise(lit(0L))).as("syy_b"))
-    def meanC(sy: String, n: String) = col(sy).cast("double") / col(n)
-    // sample variance, n−1 form: (Σy² − (Σy)²/n) / (n−1)
-    def varC(syy: String, sy: String, n: String) =
-      (col(syy).cast("double") - col(sy).cast("double") * col(sy) / col(n)) /
-        (col(n) - lit(1L))
-    val se2a = varC("syy_a", "sy_a", "n_a") / col("n_a")
-    val se2b = varC("syy_b", "sy_b", "n_b") / col("n_b")
-    s.withColumn("mean_a", round(meanC("sy_a", "n_a"), 6))
-      .withColumn("mean_b", round(meanC("sy_b", "n_b"), 6))
+    val s = armMoments(armSpend(spark, dir))
+    val se2a = armVar("a") / col("n_a")
+    val se2b = armVar("b") / col("n_b")
+    s.withColumn("mean_a", round(armMean("a"), 6))
+      .withColumn("mean_b", round(armMean("b"), 6))
       .withColumn("t", when(se2a + se2b > 0.0, round(
-        (meanC("sy_a", "n_a") - meanC("sy_b", "n_b")) / sqrt(se2a + se2b), 6)))
+        (armMean("a") - armMean("b")) / sqrt(se2a + se2b), 6)))
       .withColumn("df_welch", when(se2a + se2b > 0.0, round(
         (se2a + se2b) * (se2a + se2b) /
           (se2a * se2a / (col("n_a") - lit(1L)) +
@@ -1026,9 +1035,7 @@ object Behavior {
     * Scale: one midpoint fold (A4 broadcast), two user-keyed hash-aggs,
     * one 1-row readout. */
   def postStratAte(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"),
-        floor(col("value") * 100).cast("long").as("cents"))
+    val e = abEvents(spark, dir)
       .cache() // midpoint fold + pre-activity + post-outcome read it
     val mid = e.agg(
       expr("(min(ts_us) + (max(ts_us) - min(ts_us)) DIV 2)").as("mid_us"))
@@ -1091,43 +1098,18 @@ object Behavior {
     * a fixed prior scale):
     * ln Λ = ½·ln(V/(V+τ²)) + θ̂²·τ² / (2·V·(V+τ²)), V = s²_a/n_a +
     * s²_b/n_b, θ̂ = mean_b − mean_a. Moment sums are exact (cents
-    * bigint, Σy² decimal-lifted — the Welch contract); ln/exp are libm,
+    * bigint, Σy² decimal-lifted — `armMoments`); ln/exp are libm,
     * so ln Λ and the p-value are round-6 and the ship/hold decision
     * compares the ROUNDED p (identical boundary behavior in both
     * engines).
     *
-    * Scale: the Welch shape — two hash-aggs to per-user, one 1-row
-    * conditional aggregation; the readout is O(1) at any corpus. */
+    * Scale: `armSpend`'s two hash-aggs to per-user, then `armMoments`'
+    * 1-row conditional aggregation; the readout is O(1) at any corpus. */
   def msprt(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"),
-        floor(col("value") * 100).cast("long").as("cents"))
-    val firstView = e.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts_us")).as("v_us"))
-    val perUser = e.filter(col("event_type") === "purchase")
-      .join(firstView, "user_id")
-      .filter(col("ts_us") > col("v_us"))
-      .groupBy(col("user_id")).agg(sum(col("cents")).as("y0"))
-    val users = firstView.join(perUser, Seq("user_id"), "left")
-      .select((col("user_id") % 2).as("variant"),
-        coalesce(col("y0"), lit(0L)).as("y"))
-    val s = users.agg(
-      sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_a"),
-      sum(when(col("variant") === 0, col("y")).otherwise(0L)).as("sy_a"),
-      sum(when(col("variant") === 0, col("y").cast("decimal(19,0)") * col("y"))
-        .otherwise(lit(0L))).as("syy_a"),
-      sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_b"),
-      sum(when(col("variant") === 1, col("y")).otherwise(0L)).as("sy_b"),
-      sum(when(col("variant") === 1, col("y").cast("decimal(19,0)") * col("y"))
-        .otherwise(lit(0L))).as("syy_b"))
-    def meanC(sy: String, n: String) = col(sy).cast("double") / col(n)
-    def varC(syy: String, sy: String, n: String) =
-      (col(syy).cast("double") - col(sy).cast("double") * col(sy) / col(n)) /
-        (col(n) - lit(1L))
+    val s = armMoments(armSpend(spark, dir))
     val tau2 = lit(10000.0) // τ = 100 cents: the fixed mixture prior scale
-    val v = varC("syy_a", "sy_a", "n_a") / col("n_a") +
-      varC("syy_b", "sy_b", "n_b") / col("n_b")
-    val theta = meanC("sy_b", "n_b") - meanC("sy_a", "n_a")
+    val v = armVar("a") / col("n_a") + armVar("b") / col("n_b")
+    val theta = armMean("b") - armMean("a")
     val lnLam = lit(0.5) * log(v / (v + tau2)) +
       theta * theta * tau2 / (lit(2.0) * v * (v + tau2))
     val pAv = round(least(lit(1.0), exp(-lnLam)), 6)
@@ -1139,23 +1121,6 @@ object Behavior {
         .as("reject_5pct"))
   }
 
-  /** Mann–Whitney U — the rank-based nonparametric twin of
-    * `behavior_ttest_revenue`, the test of record when the metric is
-    * heavy-tailed (revenue is): does one arm stochastically dominate the
-    * other, no normality assumed. Everything stays EXACT integers via the
-    * doubled-midrank trick: for value v with `lt` smaller values and `t`
-    * ties, 2·midrank = 2·lt + t + 1 — so per-arm rank sums, 2·U, and the
-    * tie-correction Σ(t³−t) are all integer arithmetic, and the only IEEE
-    * work is the final normal-approximation z (tie-corrected variance),
-    * re-rounded to 6. Midranks come from the VALUE HISTOGRAM (one hash-agg
-    * collapses users to distinct revenue values), and the cumulative count
-    * of smaller values is a TWO-PASS range-partitioned prefix sum (local
-    * cumulate per range partition + broadcast partition offsets), so no
-    * single task ever sees more than its value range even when distinct
-    * cents values approach user count.
-    *
-    * Output: n_a, n_b, u2_a (= 2·U_a, exact — U itself is half-integer
-    * under ties), z. Degenerate (all values tied) → NULL z. */
   /** Quantile treatment effects — the distribution-level readout a mean
     * difference hides: how did the experiment move the MEDIAN and the P90
     * of per-user revenue? (A treatment that only fattens the tail shows
@@ -1176,21 +1141,7 @@ object Behavior {
     * (A4). Degenerate arms (a single-parity log) yield NULL quantiles
     * rather than a wrong zero — the abZtest guard stance. */
   def quantileTreatmentEffect(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"),
-        floor(col("value") * 100).cast("long").as("cents"))
-    val firstView = e.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts_us")).as("v_us"))
-    val perUser = e.filter(col("event_type") === "purchase")
-      .join(firstView, "user_id")
-      .filter(col("ts_us") > col("v_us"))
-      .groupBy(col("user_id")).agg(sum(col("cents")).as("y0"))
-    val users = firstView.join(perUser, Seq("user_id"), "left")
-      .select((col("user_id") % 2).as("variant"),
-        coalesce(col("y0"), lit(0L)).as("y"))
-    val hist = users.groupBy(col("y"))
-      .agg(sum(when(col("variant") === 0, 1L).otherwise(0L)).as("t_a"),
-        sum(when(col("variant") === 1, 1L).otherwise(0L)).as("t_b"))
+    val hist = armHist(armSpend(spark, dir))
     val ranked = rangePrefixSums(hist, "y", Seq("t_a", "t_b"))
     val ks = hist.agg(sum(col("t_a")).as("n_a"), sum(col("t_b")).as("n_b"))
       .select(col("n_a"), col("n_b"),
@@ -1216,20 +1167,25 @@ object Behavior {
         (col("p90_b") - col("p90_a")).as("qte_p90"))
   }
 
+  /** Mann–Whitney U — the rank-based nonparametric twin of
+    * `behavior_ttest_revenue`, the test of record when the metric is
+    * heavy-tailed (revenue is): does one arm stochastically dominate the
+    * other, no normality assumed. Everything stays EXACT integers via the
+    * doubled-midrank trick: for value v with `lt` smaller values and `t`
+    * ties, 2·midrank = 2·lt + t + 1 — so per-arm rank sums, 2·U, and the
+    * tie-correction Σ(t³−t) are all integer arithmetic, and the only IEEE
+    * work is the final normal-approximation z (tie-corrected variance),
+    * re-rounded to 6. Midranks come from the VALUE HISTOGRAM (one hash-agg
+    * collapses users to distinct revenue values), and the cumulative count
+    * of smaller values is a TWO-PASS range-partitioned prefix sum (local
+    * cumulate per range partition + broadcast partition offsets), so no
+    * single task ever sees more than its value range even when distinct
+    * cents values approach user count.
+    *
+    * Output: n_a, n_b, u2_a (= 2·U_a, exact — U itself is half-integer
+    * under ties), z. Degenerate (all values tied) → NULL z. */
   def mannWhitney(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"),
-        floor(col("value") * 100).cast("long").as("cents"))
-    val firstView = e.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts_us")).as("v_us"))
-    val perUser = e.filter(col("event_type") === "purchase")
-      .join(firstView, "user_id")
-      .filter(col("ts_us") > col("v_us"))
-      .groupBy(col("user_id")).agg(sum(col("cents")).as("y0"))
-    val users = firstView.join(perUser, Seq("user_id"), "left")
-      .select((col("user_id") % 2).as("variant"),
-        coalesce(col("y0"), lit(0L)).as("y"))
-    val hist = users.groupBy(col("y"))
+    val hist = armSpend(spark, dir).groupBy(col("y"))
       .agg(count(lit(1)).as("t"),
         sum(when(col("variant") === 0, 1L).otherwise(0L)).as("t_a"))
     val ranked = rangePrefixSums(hist, "y", Seq("t"))
@@ -1413,22 +1369,7 @@ object Behavior {
     * Scale: per-user hash-agg → |distinct values| histogram → two-pass
     * prefix (no unpartitioned data-sized window) → 1-row max. */
   def ksTest(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"),
-        floor(col("value") * 100).cast("long").as("cents"))
-    val firstView = e.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts_us")).as("v_us"))
-    val perUser = e.filter(col("event_type") === "purchase")
-      .join(firstView, "user_id")
-      .filter(col("ts_us") > col("v_us"))
-      .groupBy(col("user_id")).agg(sum(col("cents")).as("y0"))
-    val users = firstView.join(perUser, Seq("user_id"), "left")
-      .select((col("user_id") % 2).as("variant"),
-        coalesce(col("y0"), lit(0L)).as("y"))
-    val hist = users.groupBy(col("y"))
-      .agg(sum(when(col("variant") === 0, 1L).otherwise(0L)).as("t_a"),
-        sum(when(col("variant") === 1, 1L).otherwise(0L)).as("t_b"))
-    val cdf = rangePrefixSums(hist, "y", Seq("t_a", "t_b"))
+    val cdf = rangePrefixSums(armHist(armSpend(spark, dir)), "y", Seq("t_a", "t_b"))
       .withColumn("ca", col("lt_t_a") + col("t_a")) // inclusive CDF counts
       .withColumn("cb", col("lt_t_b") + col("t_b"))
     // totals from the prefix output's cached base — NOT from hist, whose

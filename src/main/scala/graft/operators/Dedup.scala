@@ -79,6 +79,31 @@ object Dedup {
         .select(col("doc_id"), size(col("shingles")).cast("long").as("n"))
     }
 
+  /** Pairs carrying both shingle arrays `sa` and `sb`, kept when their
+    * exact Jaccard is ≥ 0.7, with `n_inter` and `jaccard` added. */
+  private def arrayJaccardAtLeast07(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("n_inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
+      .withColumn("jaccard",
+        col("n_inter").cast("double") /
+          (size(col("sa")) + size(col("sb")) - col("n_inter")))
+      .filter(col("jaccard") >= 0.7)
+
+  /** bands(doc_id, band_idx, band_val) from (doc_id, shingles) — the
+    * signature stage as a pure projection (no explode of shingles, no
+    * shuffle), shared by `minhashLsh`, the admission-gate entry, and the
+    * streaming gate. */
+  private[graft] def bandRelation(sh: DataFrame): DataFrame = {
+    val sig = sh
+      .select(col("doc_id"), transform(col("shingles"), g => md5(g)).as("hs"))
+      .select(col("doc_id") +: (0 until NumHashes).map(i =>
+        array_min(transform(col("hs"), h => substring(h, 4 * i + 1, 4))).as(s"s$i")): _*)
+    sig.select(col("doc_id"), explode(array(
+      (0 until NumHashes / 2).map(b =>
+        struct(lit(b).as("band_idx"), concat(col(s"s${2 * b}"), col(s"s${2 * b + 1}")).as("band_val"))): _*
+    )).as("band")).select(col("doc_id"), col("band.band_idx"), col("band.band_val"))
+  }
+
   /** MinHash + LSH near-dup pairs: shingle → 8 portable minhash lanes
     * (md5 is computed ONCE per shingle; lane i is the 16-bit hex slice
     * md5[4i..4i+4) — one digest instead of eight, same independence in
@@ -97,21 +122,6 @@ object Dedup {
     * pipeline's only wide stage. Docs with <3 words get null lanes, which
     * can never equal another band value, matching the explode
     * formulation's drop-the-doc behavior. */
-  /** bands(doc_id, band_idx, band_val) from (doc_id, shingles) — the
-    * signature stage as a pure projection (no explode of shingles, no
-    * shuffle), shared by `minhashLsh`, the admission-gate entry, and the
-    * streaming gate. */
-  private[graft] def bandRelation(sh: DataFrame): DataFrame = {
-    val sig = sh
-      .select(col("doc_id"), transform(col("shingles"), g => md5(g)).as("hs"))
-      .select(col("doc_id") +: (0 until NumHashes).map(i =>
-        array_min(transform(col("hs"), h => substring(h, 4 * i + 1, 4))).as(s"s$i")): _*)
-    sig.select(col("doc_id"), explode(array(
-      (0 until NumHashes / 2).map(b =>
-        struct(lit(b).as("band_idx"), concat(col(s"s${2 * b}"), col(s"s${2 * b + 1}")).as("band_val"))): _*
-    )).as("band")).select(col("doc_id"), col("band.band_idx"), col("band.band_val"))
-  }
-
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
     val sh = shingled(spark, dir).cache()
     // r13: band buckets grouped once — candidate pairs from the in-row
@@ -128,12 +138,7 @@ object Dedup {
     val withSets = cand
       .join(sh.select(col("doc_id").as("doc_a"), col("shingles").as("sa")), Seq("doc_a"))
       .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sb")), Seq("doc_b"))
-    withSets
-      .withColumn("n_inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .withColumn("jaccard",
-        col("n_inter").cast("double") /
-          (size(col("sa")) + size(col("sb")) - col("n_inter")))
-      .filter(col("jaccard") >= 0.7)
+    arrayJaccardAtLeast07(withSets)
       .select(col("doc_a"), col("doc_b"), col("n_inter"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -159,15 +164,10 @@ object Dedup {
     val cand = arrBands.join(baseBands, Seq("band_idx", "band_val"))
       .filter(col("doc_id") =!= col("base_id"))
       .select(col("doc_id"), col("base_id")).distinct()
-    val verified = cand
+    val verified = arrayJaccardAtLeast07(cand
       .join(baseSh.select(col("doc_id").as("base_id"), col("shingles").as("sa")),
         Seq("base_id"))
-      .join(arrSh.select(col("doc_id"), col("shingles").as("sb")), Seq("doc_id"))
-      .withColumn("n_inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .withColumn("jaccard",
-        col("n_inter").cast("double") /
-          (size(col("sa")) + size(col("sb")) - col("n_inter")))
-      .filter(col("jaccard") >= 0.7)
+      .join(arrSh.select(col("doc_id"), col("shingles").as("sb")), Seq("doc_id")))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("jaccard").desc, col("base_id"))
     val best = verified.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
@@ -231,6 +231,12 @@ object Dedup {
         col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_inter"))
+    jaccardAtLeast07(inter, sizes)
+  }
+
+  /** Pairs `inter(doc_a, doc_b, n_inter)` with Jaccard ≥ 0.7 over the
+    * exact full set sizes `sizes(doc_id, n)`, ordered by pair. */
+  private def jaccardAtLeast07(inter: DataFrame, sizes: DataFrame): DataFrame =
     inter
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
       .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
@@ -238,7 +244,6 @@ object Dedup {
       .filter(col("jaccard") >= 0.7)
       .select(col("doc_a"), col("doc_b"), col("n_inter"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** The (bands, rows-per-band) configurations the LSH sizing curve
     * evaluates — every factorization of the 12-lane signature budget. */
@@ -369,59 +374,76 @@ object Dedup {
     * the filter is hash-checked, not assumed. DedupConsistencySpec also
     * pins output equality and measures the candidate reduction. */
   def ngramJaccardPrefix(spark: SparkSession, dir: String): DataFrame = {
-    val (prefix, ex, sizes) = prefixIndex(spark, dir)
+    val (prefix, ex, sizes) = prefixIndex(spark, dir, JaccardPrefix)
     val cands = prefix.as("a").join(prefix.as("b"),
         col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    // r13 recount rewrite (guide §2.3/§2.4 — shuffle fewer bytes, drop an
-    // exchange): the old recount exploded each candidate pair by doc_a's
-    // full rare set (cands ⋈ ex = 13.0M rows at sf0.1 for 202k pairs),
-    // shuffled that on (doc_b, g), and hash-agged it back down. The
-    // minhash entry's verified-pair shape does the same count pair-
-    // locally: attach each side's rare-shingle ARRAY (one |docs|-sized
-    // grouped relation) and take size(array_intersect) in-row — exact
-    // integer, same n_inter (every candidate shares its prefix shingle,
-    // so the old inner join never dropped a pair either). Measured
-    // (interleaved A/B, min): 2.5-3.0 s → 1.6-1.8 s; no broadcast hint —
-    // the array relation is docs-sized, and the measured broadcast-build
-    // cost exceeded the join saving (3.9 s).
+    jaccardAtLeast07(prefixRecount(cands, ex), sizes)
+  }
+
+  /** The exact recount of prefix-join candidates `cands(doc_a, doc_b)`:
+    * n_inter = |rare(a) ∩ rare(b)| over the full rare index `ex`.
+    *
+    * r13 recount rewrite (guide §2.3/§2.4 — shuffle fewer bytes, drop an
+    * exchange): the old recount exploded each candidate pair by doc_a's
+    * full rare set (cands ⋈ ex = 13.0M rows at sf0.1 for 202k pairs),
+    * shuffled that on (doc_b, g), and hash-agged it back down. The
+    * minhash entry's verified-pair shape does the same count pair-
+    * locally: attach each side's rare-shingle ARRAY (one |docs|-sized
+    * grouped relation) and take size(array_intersect) in-row — exact
+    * integer, same n_inter (every candidate shares its prefix shingle,
+    * so the old inner join never dropped a pair either). Measured
+    * (interleaved A/B, min): 2.5-3.0 s → 1.6-1.8 s; no broadcast hint —
+    * the array relation is docs-sized, and the measured broadcast-build
+    * cost exceeded the join saving (3.9 s). */
+  private def prefixRecount(cands: DataFrame, ex: DataFrame): DataFrame = {
     val rareSets = ex.groupBy(col("doc_id")).agg(collect_list(col("g")).as("gs"))
-    val inter = cands
+    cands
       .join(rareSets.select(col("doc_id").as("doc_a"), col("gs").as("ga")), Seq("doc_a"))
       .join(rareSets.select(col("doc_id").as("doc_b"), col("gs").as("gb")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("ga"), col("gb"))).cast("long").as("n_inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
-      .withColumn("jaccard", col("n_inter").cast("double") / (col("na") + col("nb") - col("n_inter")))
-      .filter(col("jaccard") >= 0.7)
-      .select(col("doc_a"), col("doc_b"), col("n_inter"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** The prefix index + supporting relations behind `dedup_ngram_prefix`:
-    * (prefix(doc_id, g), full rare index ex(doc_id, g, df),
-    * sizes(doc_id, n)). */
-  private def prefixIndex(spark: SparkSession, dir: String)
+  /** A prefix-filter rule: the memo `tag` and `version` of its index,
+    * the similarity threshold as `tenths`/10 (a doc keeps its first
+    * |rare| − ⌈tenths·n/10⌉ + 1 rare shingles; the ceiling is the
+    * pure-integer (tenths·n+9) DIV 10) and an optional subject-side
+    * floor `minN` on the doc's shingle count. */
+  private final case class PrefixRule(tag: String, version: String, tenths: Int,
+      minN: Option[Long])
+
+  /** `dedup_ngram_prefix`: Jaccard ≥ 0.7, both sides prefix-indexed. */
+  private val JaccardPrefix =
+    PrefixRule("dedup_prefix_j", s"df${MaxShingleDf}_t7of10", 7, None)
+
+  /** `dedup_containment_prefix`: containment ≥ 0.8, subject side only,
+    * with the entry's `na >= 5` cut as the floor. */
+  private val ContainmentPrefix =
+    PrefixRule("dedup_prefix_c", s"df${MaxShingleDf}_t8of10_n5", 8, Some(5L))
+
+  /** A prefix index + supporting relations: (prefix(doc_id, g), the full
+    * rare index ex(doc_id, g, df), sizes(doc_id, n)). The prefix index IS
+    * the index artifact — a set-similarity deployment builds it once next
+    * to the posting list and probes it per query, so it is
+    * scratch-persisted like its substrate (r11; strings/longs,
+    * parquet-exact), the rule's threshold and floor in the key. */
+  private def prefixIndex(spark: SparkSession, dir: String, rule: PrefixRule)
       : (DataFrame, DataFrame, DataFrame) = {
     val ex = rareIndex(spark, dir)
       .cache() // probe side of the candidate join + exact recount
     val sizes = docSizes(spark, dir)
-    // the prefix index IS the index artifact — a set-similarity deployment
-    // builds it once next to the posting list and probes it per query, so
-    // it is scratch-persisted like its substrate (r11; strings/longs,
-    // parquet-exact)
-    val prefix = Tables.scratchRelation(spark, dir, "dedup_prefix_j",
-        Seq("documents"), s"df${MaxShingleDf}_t7of10") { // threshold 0.7 prefix rule in the key
+    val prefix = Tables.scratchRelation(spark, dir, rule.tag,
+        Seq("documents"), rule.version) {
       import org.apache.spark.sql.expressions.Window
       val rareN = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("nr"))
       val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("g"))
-      ex.withColumn("rk", row_number().over(wDoc).cast("long"))
+      val ranked = ex.withColumn("rk", row_number().over(wDoc).cast("long"))
         .join(sizes, Seq("doc_id"))
         .join(rareN, Seq("doc_id"))
-        .filter(col("rk") <= col("nr") - expr("(7 * n + 9) DIV 10") + lit(1L))
+      rule.minN.fold(ranked)(n => ranked.filter(col("n") >= n))
+        .filter(col("rk") <= col("nr") - expr(s"(${rule.tenths} * n + 9) DIV 10") + lit(1L))
         .select(col("doc_id"), col("g"))
     }
     (prefix, ex, sizes)
@@ -431,7 +453,7 @@ object Dedup {
     * tokens) — exposed so DedupConsistencySpec can measure the reduction
     * against the full inverted index. */
   private[graft] def prefixCandidateVolume(spark: SparkSession, dir: String): Long = {
-    val (prefix, _, _) = prefixIndex(spark, dir)
+    val (prefix, _, _) = prefixIndex(spark, dir, JaccardPrefix)
     prefix.groupBy(col("g")).agg(count(lit(1)).as("dfp"))
       .agg(sum(expr("(dfp * (dfp - 1)) DIV 2")))
       .collect().head.getLong(0)
@@ -457,13 +479,19 @@ object Dedup {
         col("a.g") === col("b.g") && col("a.doc_id") =!= col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_inter"))
+    containmentAtLeast08(inter, sizes)
+  }
+
+  /** Ordered pairs `inter(doc_a, doc_b, n_inter)` whose subject doc_a has
+    * at least 5 shingles and containment n_inter/|doc_a| ≥ 0.8, ordered
+    * by pair. */
+  private def containmentAtLeast08(inter: DataFrame, sizes: DataFrame): DataFrame =
     inter
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
       .withColumn("containment", col("n_inter").cast("double") / col("na"))
       .filter(col("na") >= 5 && col("containment") >= 0.8)
       .select(col("doc_a"), col("doc_b"), col("na"), col("n_inter"), col("containment"))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** Prefix-filtered twin of `dedup_containment` (the asymmetric/
     * containment variant of the PPJoin prefix filter already shipped for
@@ -476,65 +504,28 @@ object Dedup {
     * prefix, at most α(a) − 1 could be shared. Containment is asymmetric:
     * only the SUBJECT side (doc_a, the denominator) is prefix-indexed;
     * the probe side keeps the FULL rare index, so no b-side pair is ever
-    * missed. α uses the pure-integer ⌈0.8n⌉ = (8n+9) DIV 10 idiom, and
-    * the subject-side `n >= 5` floor mirrors the entry's output filter
+    * missed. `prefixIndex` with `ContainmentPrefix`: α uses the
+    * pure-integer ⌈0.8n⌉ = (8n+9) DIV 10 idiom, and the subject-side
+    * `n >= 5` floor mirrors the entry's output filter
     * (docs below the floor can never emit a row as doc_a). Subject docs
     * whose rare count nr < α(a) drop out entirely — they cannot reach the
     * threshold even if every rare shingle is shared.
     *
     * At 100 TB this turns the candidate join from Σ df·(df−1) ordered
     * pairs over EVERY surviving shingle into Σ dfp·(df−1) with dfp the
-    * tiny prefix df — the same scaling trick as `ngramJaccardPrefix`, and
+    * tiny prefix df — the `prefixIndex` scaling trick, and
     * the oracle is the UNFILTERED semantic twin (the same SQL
     * `dedup_containment` always had), so completeness of the filter is
     * hash-checked, not assumed. DedupConsistencySpec additionally pins
     * row-for-row equality against `containmentPairs` and measures the
     * candidate reduction. */
   def containmentPairsPrefix(spark: SparkSession, dir: String): DataFrame = {
-    val (prefix, ex, sizes) = containmentPrefixIndex(spark, dir)
+    val (prefix, ex, sizes) = prefixIndex(spark, dir, ContainmentPrefix)
     val cands = prefix.as("a").join(ex.as("b"),
         col("a.g") === col("b.g") && col("a.doc_id") =!= col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    // r13 recount rewrite — same array-intersect move as
-    // `ngramJaccardPrefix` (see its comment): pair-local exact count
-    // instead of the explode → (doc_b, g) shuffle → hash-agg chain.
-    val rareSets = ex.groupBy(col("doc_id")).agg(collect_list(col("g")).as("gs"))
-    val inter = cands
-      .join(rareSets.select(col("doc_id").as("doc_a"), col("gs").as("ga")), Seq("doc_a"))
-      .join(rareSets.select(col("doc_id").as("doc_b"), col("gs").as("gb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("ga"), col("gb"))).cast("long").as("n_inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
-      .withColumn("containment", col("n_inter").cast("double") / col("na"))
-      .filter(col("na") >= 5 && col("containment") >= 0.8)
-      .select(col("doc_a"), col("doc_b"), col("na"), col("n_inter"), col("containment"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** The containment prefix index + supporting relations:
-    * (prefix(doc_id, g) — subject side only, full rare index
-    * ex(doc_id, g, df), sizes(doc_id, n)). */
-  private def containmentPrefixIndex(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val ex = rareIndex(spark, dir)
-      .cache() // reused: probe side of the candidate join + exact recount
-    val sizes = docSizes(spark, dir)
-    // persisted index artifact, like prefixIndex above (r11)
-    val prefix = Tables.scratchRelation(spark, dir, "dedup_prefix_c",
-        Seq("documents"), s"df${MaxShingleDf}_t8of10_n5") { // 0.8 containment rule + n≥5 floor
-      import org.apache.spark.sql.expressions.Window
-      val rareN = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("nr"))
-      val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("g"))
-      ex.withColumn("rk", row_number().over(wDoc).cast("long"))
-        .join(sizes, Seq("doc_id"))
-        .join(rareN, Seq("doc_id"))
-        .filter(col("n") >= 5) // subject-side floor = the entry's na >= 5 cut
-        .filter(col("rk") <= col("nr") - expr("(8 * n + 9) DIV 10") + lit(1L))
-        .select(col("doc_id"), col("g"))
-    }
-    (prefix, ex, sizes)
+    containmentAtLeast08(prefixRecount(cands, ex), sizes)
   }
 
   /** Ordered-pair candidate volume of the containment prefix join
@@ -542,7 +533,7 @@ object Dedup {
     * partners) — exposed so DedupConsistencySpec can measure the
     * reduction against the unfiltered Σ df·(df−1). */
   private[graft] def containmentPrefixCandidateVolume(spark: SparkSession, dir: String): Long = {
-    val (prefix, ex, _) = containmentPrefixIndex(spark, dir)
+    val (prefix, ex, _) = prefixIndex(spark, dir, ContainmentPrefix)
     val dfFull = ex.groupBy(col("g")).agg(count(lit(1)).as("dff"))
     prefix.groupBy(col("g")).agg(count(lit(1)).as("dfp"))
       .join(dfFull, Seq("g"))
@@ -920,6 +911,12 @@ object Dedup {
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val pairs = minhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
     val (labels, _) = ccContract(pairs)
+    withClusterSizes(labels)
+  }
+
+  /** Cluster labels `(doc_id, cluster_id)` with each cluster's size
+    * `n_docs`, ordered by doc. */
+  private def withClusterSizes(labels: DataFrame): DataFrame = {
     val sizes = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_docs"))
     labels.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("n_docs"))
@@ -946,10 +943,7 @@ object Dedup {
     val stars = oldLabels
       .select(col("doc_id").as("doc_a"), col("cluster_id").as("doc_b"))
     val (labels, _) = ccContract(stars.unionByName(pairs.filter(isNew)))
-    val sizes = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_docs"))
-    labels.join(sizes, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"), col("n_docs"))
-      .orderBy(col("doc_id"))
+    withClusterSizes(labels)
   }
 
   /** The dedup pipeline's ENDING: the survivor report a corpus job

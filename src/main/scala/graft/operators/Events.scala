@@ -240,6 +240,35 @@ object Events {
       .orderBy(col("split"))
   }
 
+  /** The as-of family's side-tagged union: every click as
+    * `(user_id, ts_us, side = clickSide, event_id)` with NULL purchase
+    * columns, and every purchase — deduped per (user, ts) to its max
+    * event_id, so tie behavior is deterministic on any input — as
+    * `(p_id, p_ts_us)` on the other side. Ordered by `asofOrder`, side 1
+    * sorts after side 0 at the same instant, so `clickSide` = 1 puts
+    * same-instant purchases before a click and 0 after it. */
+  private def asofUnion(spark: SparkSession, dir: String, clickSide: Int): DataFrame = {
+    val e = Tables.events(spark, dir)
+      .withColumn("ts_us", unix_micros(col("ts")))
+    val purchases = e.filter(col("event_type") === "purchase")
+      .groupBy(col("user_id"), col("ts_us"))
+      .agg(max(col("event_id")).as("p_id"))
+    val clicks = e.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), col("ts_us"))
+    clicks
+      .select(col("user_id"), col("ts_us"), lit(clickSide).as("side"),
+        col("event_id"), lit(null).cast("long").as("p_id"),
+        lit(null).cast("long").as("p_ts_us"))
+      .unionByName(purchases
+        .select(col("user_id"), col("ts_us"), lit(1 - clickSide).as("side"),
+          lit(null).cast("long").as("event_id"), col("p_id"),
+          col("ts_us").as("p_ts_us")))
+  }
+
+  /** The as-of family's per-user merge order over `asofUnion`. */
+  private val asofOrder = Window.partitionBy(col("user_id"))
+    .orderBy(col("ts_us"), col("side"), col("event_id"))
+
   /** AS-OF JOIN — an operator Spark lacks natively, built by COMPOSITION
     * (SURVEY.md §2.12 preference (a)): each click is matched to the same
     * user's latest purchase at-or-before its timestamp.
@@ -248,34 +277,17 @@ object Events {
     * user ordered by (ts, side, event_id) — purchases sort before a click
     * at the same instant, so `<=` semantics hold — and
     * last_value(ignoreNulls) carries the most recent purchase forward;
-    * filter back to clicks. ONE shuffle on user_id and a per-key sort: the
-    * same cost profile as a sort-merge join, no range explosion, no
-    * broadcast requirement — the scalable as-of shape. Purchases are
-    * pre-deduped per (user, ts) by max event_id so tie behavior is
-    * deterministic on any input.
+    * filter back to clicks (`asofUnion` with clickSide 1, `asofOrder`).
+    * ONE shuffle on user_id and a per-key sort: the same cost profile as a
+    * sort-merge join, no range explosion, no broadcast requirement — the
+    * scalable as-of shape.
     *
     * Oracle: DuckDB's NATIVE `ASOF LEFT JOIN` — two independent
     * implementations of the operator must agree row-for-row. */
   def asofClicks(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .withColumn("ts_us", unix_micros(col("ts")))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("ts_us"))
-      .agg(max(col("event_id")).as("p_id"))
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts_us"))
-    val u = clicks
-      .select(col("user_id"), col("ts_us"), lit(1).as("side"),
-        col("event_id"), lit(null).cast("long").as("p_id"),
-        lit(null).cast("long").as("p_ts_us"))
-      .unionByName(purchases
-        .select(col("user_id"), col("ts_us"), lit(0).as("side"),
-          lit(null).cast("long").as("event_id"), col("p_id"),
-          col("ts_us").as("p_ts_us")))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    u.withColumn("asof_p_id", last(col("p_id"), ignoreNulls = true).over(w))
+    val w = asofOrder.rowsBetween(Window.unboundedPreceding, 0)
+    asofUnion(spark, dir, clickSide = 1)
+      .withColumn("asof_p_id", last(col("p_id"), ignoreNulls = true).over(w))
       .withColumn("asof_p_ts_us", last(col("p_ts_us"), ignoreNulls = true).over(w))
       .filter(col("side") === 1)
       .select(col("event_id"), col("user_id"), col("ts_us"),
@@ -286,10 +298,18 @@ object Events {
   /** Interval join — batch twin of Streams.clickPurchaseJoin (each click
     * matched to same-user purchases within the preceding hour), putting
     * the 4th streaming shape under the DuckDB hash gate (StreamingSpec
-    * separately proves stream ≡ this batch formulation). Scale: the join
-    * key is user_id (plain shuffle join); the time-range predicate is a
-    * post-join filter here and the state-eviction bound in streaming. */
-  def intervalClicks(spark: SparkSession, dir: String): DataFrame = {
+    * separately proves stream ≡ this batch formulation). Scale: that of
+    * `intervalJoin`; the time-range predicate that post-filters here is
+    * the state-eviction bound in streaming. */
+  def intervalClicks(spark: SparkSession, dir: String): DataFrame =
+    intervalJoin(spark, dir, "inner")
+
+  /** Clicks joined to same-user purchases in the preceding hour
+    * (`purchase_us ∈ [click_us − 1 h, click_us]`) with `joinType` — the
+    * batch form of `Streams.clickPurchaseJoin`. The join key is user_id
+    * (plain shuffle join); the time range is a post-join predicate. */
+  private def intervalJoin(spark: SparkSession, dir: String,
+      joinType: String): DataFrame = {
     val e = Tables.events(spark, dir).withColumn("ts_us", unix_micros(col("ts")))
     val c = e.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"), col("ts_us").as("click_us"))
@@ -298,7 +318,8 @@ object Events {
         col("ts_us").as("purchase_us"))
     c.join(p, col("user_id") === col("p_user_id") &&
         col("purchase_us") >= col("click_us") - lit(3600L * 1000000L) &&
-        col("purchase_us") <= col("click_us"))
+        col("purchase_us") <= col("click_us"),
+        joinType)
       .select(col("click_id"), col("user_id"), col("click_us"),
         col("purchase_id"), col("purchase_us"))
       .orderBy(col("click_id"), col("purchase_id"))
@@ -307,31 +328,15 @@ object Events {
   /** FORWARD as-of join — the time-reversed variant (pandas
     * merge_asof(direction='forward')): each click matched to the same
     * user's EARLIEST purchase at-or-after its timestamp ("time to next
-    * conversion"). Same one-shuffle union+window shape as asofClicks, with
-    * the carry reversed: the window ranges over FOLLOWING rows and takes
-    * the first non-null purchase. Purchases sort after clicks at the same
-    * instant (side ordering), so `>=` semantics hold. Oracle: DuckDB's
+    * conversion"). One shuffle over `asofUnion` with clickSide 0, the
+    * carry reversed: the `asofOrder` window ranges over FOLLOWING rows and
+    * takes the first non-null purchase. Purchases sort after clicks at the
+    * same instant, so `>=` semantics hold. Oracle: DuckDB's
     * native ASOF LEFT JOIN with a `<=` condition (direction inferred). */
   def asofForward(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .withColumn("ts_us", unix_micros(col("ts")))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("ts_us"))
-      .agg(max(col("event_id")).as("p_id"))
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts_us"))
-    val u = clicks
-      .select(col("user_id"), col("ts_us"), lit(0).as("side"),
-        col("event_id"), lit(null).cast("long").as("p_id"),
-        lit(null).cast("long").as("p_ts_us"))
-      .unionByName(purchases
-        .select(col("user_id"), col("ts_us"), lit(1).as("side"),
-          lit(null).cast("long").as("event_id"), col("p_id"),
-          col("ts_us").as("p_ts_us")))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("side"), col("event_id"))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    u.withColumn("next_p_id", first(col("p_id"), ignoreNulls = true).over(w))
+    val w = asofOrder.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    asofUnion(spark, dir, clickSide = 0)
+      .withColumn("next_p_id", first(col("p_id"), ignoreNulls = true).over(w))
       .withColumn("next_p_ts_us", first(col("p_ts_us"), ignoreNulls = true).over(w))
       .filter(col("side") === 0)
       .select(col("event_id"), col("user_id"), col("ts_us"),
@@ -342,8 +347,8 @@ object Events {
   /** As-of NEAREST (pandas merge_asof(direction='nearest')): each click
     * takes whichever same-user purchase is closer in time — backward or
     * forward — with ties to the backward (earlier) match, the attribution
-    * rule "closest touchpoint wins". One union-merge + ONE shuffle on
-    * user_id carries BOTH directional window passes (last-non-null
+    * rule "closest touchpoint wins". One `asofUnion` + ONE shuffle on
+    * user_id carries BOTH directional `asofOrder` window passes (last-non-null
     * preceding and first-non-null following over the same sorted
     * partition); the pick is a pure projection on the two candidates.
     * Same-ts purchases sort before the click (side order), so they are
@@ -352,28 +357,12 @@ object Events {
     * purchase even where the directional windows disagree on who "sees"
     * the equal timestamp. */
   def asofNearest(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .withColumn("ts_us", unix_micros(col("ts")))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("ts_us"))
-      .agg(max(col("event_id")).as("p_id"))
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts_us"))
-    val u = clicks
-      .select(col("user_id"), col("ts_us"), lit(1).as("side"),
-        col("event_id"), lit(null).cast("long").as("p_id"),
-        lit(null).cast("long").as("p_ts_us"))
-      .unionByName(purchases
-        .select(col("user_id"), col("ts_us"), lit(0).as("side"),
-          lit(null).cast("long").as("event_id"), col("p_id"),
-          col("ts_us").as("p_ts_us")))
-    val ord = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("side"), col("event_id"))
-    val wb = ord.rowsBetween(Window.unboundedPreceding, 0)
-    val wf = ord.rowsBetween(0, Window.unboundedFollowing)
+    val wb = asofOrder.rowsBetween(Window.unboundedPreceding, 0)
+    val wf = asofOrder.rowsBetween(0, Window.unboundedFollowing)
     val backWins = col("f_ts").isNull ||
       (col("b_ts").isNotNull && col("ts_us") - col("b_ts") <= col("f_ts") - col("ts_us"))
-    u.withColumn("b_id", last(col("p_id"), ignoreNulls = true).over(wb))
+    asofUnion(spark, dir, clickSide = 1)
+      .withColumn("b_id", last(col("p_id"), ignoreNulls = true).over(wb))
       .withColumn("b_ts", last(col("p_ts_us"), ignoreNulls = true).over(wb))
       .withColumn("f_id", first(col("p_id"), ignoreNulls = true).over(wf))
       .withColumn("f_ts", first(col("p_ts_us"), ignoreNulls = true).over(wf))
@@ -407,23 +396,10 @@ object Events {
     * preceding hour carry null purchase columns. In streaming those null
     * rows are emitted when the watermark closes the click's match interval;
     * here they fall out of a plain left join under the same predicate.
-    * Scale: identical to intervalClicks — shuffle join on user_id, the
-    * range predicate post-filters (and in streaming bounds state). */
-  def intervalClicksLeft(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir).withColumn("ts_us", unix_micros(col("ts")))
-    val c = e.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts_us").as("click_us"))
-    val p = e.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user_id"),
-        col("ts_us").as("purchase_us"))
-    c.join(p, col("user_id") === col("p_user_id") &&
-        col("purchase_us") >= col("click_us") - lit(3600L * 1000000L) &&
-        col("purchase_us") <= col("click_us"),
-        "left_outer")
-      .select(col("click_id"), col("user_id"), col("click_us"),
-        col("purchase_id"), col("purchase_us"))
-      .orderBy(col("click_id"), col("purchase_id"))
-  }
+    * Scale: that of `intervalJoin` — shuffle join on user_id, the range
+    * predicate post-filters (and in streaming bounds state). */
+  def intervalClicksLeft(spark: SparkSession, dir: String): DataFrame =
+    intervalJoin(spark, dir, "left_outer")
 
   /** The SAME as-of semantics through the custom physical operator
     * (graft.plans.AsOfJoinExec, extension tier (c)) — shares the DuckDB
@@ -864,10 +840,7 @@ object Events {
     * Scale: hour-key hash-agg on the scan, then |hours|·W bounded work. */
   def ewmaHourly(spark: SparkSession, dir: String): DataFrame = {
     val W = 20
-    val hourly = Tables.events(spark, dir)
-      .select(col("event_type"),
-        expr("unix_micros(date_trunc('hour', ts)) DIV 3600000000").as("h"))
-      .groupBy(col("event_type"), col("h")).agg(count(lit(1)).as("n"))
+    val hourly = hourlyByType(spark, dir)
       .cache() // both sides of the bounded self-join
     val past = hourly.select(col("event_type").as("et2"),
       col("h").as("h2"), col("n").as("n2"))
@@ -923,14 +896,39 @@ object Events {
     * an accumulating finalized-hour store (EwmaAnomalyStreamSpec proves
     * batch ≡ stream); this entry is the DuckDB-oracled anchor. */
   def ewmaAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    val hourly = Tables.events(spark, dir)
-      .select(col("event_type"),
-        expr("unix_micros(date_trunc('hour', ts)) DIV 3600000000").as("h"))
-      .groupBy(col("event_type"), col("h")).agg(count(lit(1)).as("n"))
+    val hourly = hourlyByType(spark, dir)
       .cache() // both sides of the strictly-prior self-join
     ewmaPrevVerdicts(hourly, hourly)
       .orderBy(col("event_type"), col("hour_no"))
   }
+
+  /** Hourly event volume `(h, y)`, h in epoch hours. */
+  private def hourlyCounts(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .select(expr("unix_micros(date_trunc('hour', ts)) DIV 3600000000").as("h"))
+      .groupBy(col("h")).agg(count(lit(1)).as("y"))
+
+  /** Hourly event volume per type `(event_type, h, n)`. */
+  private def hourlyByType(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .select(col("event_type"),
+        expr("unix_micros(date_trunc('hour', ts)) DIV 3600000000").as("h"))
+      .groupBy(col("event_type"), col("h")).agg(count(lit(1)).as("n"))
+
+  /** The first and last hour of an `(h, y)` series, one row `(h0, h1)`. */
+  private def hourBounds(hc: DataFrame): DataFrame =
+    hc.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
+
+  /** `hc` on the gap-filled regular grid: every hour from first to last,
+    * missing hours at y = 0 (the resample rule). */
+  private def gapFilled(hc: DataFrame): DataFrame =
+    hourBounds(hc).select(explode(sequence(col("h0"), col("h1"))).as("h"))
+      .join(hc, Seq("h"), "left")
+      .select(col("h"), coalesce(col("y"), lit(0L)).as("y"))
+
+  /** The gap-filled hourly volume series `(h, y)`. */
+  private def hourlyGrid(spark: SparkSession, dir: String): DataFrame =
+    gapFilled(hourlyCounts(spark, dir))
 
   /** Autocorrelation function of hourly event volume at lags 1–24 — the
     * seasonality probe run before picking an anomaly baseline (a strong
@@ -954,13 +952,7 @@ object Events {
     * lag join is an hour-key equi-join of the grid to itself — no
     * window over raw data, no quadratic pass. */
   def autocorrHourly(spark: SparkSession, dir: String): DataFrame = {
-    val hc = Tables.events(spark, dir)
-      .select(expr("unix_micros(date_trunc('hour', ts)) DIV 3600000000").as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("y"))
-    val bounds = hc.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-    val series = bounds.select(explode(sequence(col("h0"), col("h1"))).as("h"))
-      .join(hc, Seq("h"), "left")
-      .select(col("h"), coalesce(col("y"), lit(0L)).as("y"))
+    val series = hourlyGrid(spark, dir)
     val st = series.agg(count(lit(1)).as("n"), sum(col("y")).as("s"))
     val z = series.crossJoin(broadcast(st))
       .select(col("h"), (col("n") * col("y") - col("s"))
@@ -991,17 +983,11 @@ object Events {
     * DIV-scaled ratios — so the backtest hash-matches with no float
     * caveats.
     *
-    * Scale: the same hour-key hash-agg + gap-filled grid as the ACF
-    * entry; the forecast join is a 24-row-bounded hour-key equi-join and
+    * Scale: `hourlyGrid`'s hour-key hash-agg + gap-filled grid; the
+    * forecast join is a 24-row-bounded hour-key equi-join and
     * the aggregate window runs over ≤24 audit rows. */
   def snaiveBacktest(spark: SparkSession, dir: String): DataFrame = {
-    val hc = Tables.events(spark, dir)
-      .select(expr("unix_micros(date_trunc('hour', ts)) DIV 3600000000").as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("y"))
-    val bounds = hc.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-    val series = bounds.select(explode(sequence(col("h0"), col("h1"))).as("h"))
-      .join(hc, Seq("h"), "left")
-      .select(col("h"), coalesce(col("y"), lit(0L)).as("y"))
+    val series = hourlyGrid(spark, dir)
       .cache() // actuals + forecast legs + the h1 bound all read it
     val hmax = series.agg(max(col("h")).as("h1"))
     val lastDay = series.crossJoin(broadcast(hmax))
@@ -1136,9 +1122,7 @@ object Events {
     * cluster by the slope-histogram hash-agg. The nested-loop pair join
     * is over the broadcast bounded series, PlanSpec-allow-listed. */
   def theilSenTrend(spark: SparkSession, dir: String): DataFrame = {
-    val hc = Tables.events(spark, dir)
-      .select(expr("unix_micros(date_trunc('hour', ts)) DIV 3600000000").as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("y"))
+    val hc = hourlyCounts(spark, dir)
       .cache() // both pair legs + the hour count read it
     val a = hc.select(col("h").as("ha"), col("y").as("ya"))
     val b = hc.select(col("h").as("hb"), col("y").as("yb"))
@@ -1162,35 +1146,11 @@ object Events {
         (sum(when(ind > 0L, col("slope") * ind)) / lit(2.0)).as("slope"))
   }
 
-  /** Classical additive seasonal decomposition (the Persons/Macaulay
-    * moving-average method STL descends from) of hourly volume with
-    * period 24: trend = centered 2×24 MA (end lags half-weighted — the
-    * textbook even-period filter), seasonal = per-hour-of-day mean of the
-    * detrended series re-centered to sum ~0, residual = what's left.
-    * Output is the 24-row seasonal profile + per-slot residual MAE — the
-    * "what does a normal day look like, and how noisy is each hour"
-    * readout behind `events_snaive_backtest`'s forecast.
-    *
-    * Everything is EXACT integer micro-events: the MA numerator is
-    * 2·Σ±11 + y−12 + y+12 over the GAP-FILLED grid, trend = num·10⁶ DIV
-    * 48 (positive), and the possibly-negative detrended means use the
-    * sign-split floor division `fdiv` (Spark DIV truncates toward zero
-    * while DuckDB // floors — the divergence trap — so both branches
-    * keep operands positive). No floats anywhere.
-    *
-    * Scale: hour-key hash-agg, windows over the time-bounded hourly grid,
-    * a 24-row profile — nothing data-sized after the first pass. */
   /** The decomposition substrate shared by `events_seasonal_decomp` and
     * `events_seasonal_anomaly`: per in-window hour, (hour_of_day, h,
     * detrended micro-volume) from the gap-filled 2×24 centered MA. */
   private def detrendedHours(spark: SparkSession, dir: String): DataFrame = {
-    val hc = Tables.events(spark, dir)
-      .select(expr("unix_micros(date_trunc('hour', ts)) DIV 3600000000").as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("y"))
-    val bounds = hc.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-    val series = bounds.select(explode(sequence(col("h0"), col("h1"))).as("h"))
-      .join(hc, Seq("h"), "left")
-      .select(col("h"), coalesce(col("y"), lit(0L)).as("y"))
+    val series = hourlyGrid(spark, dir)
     val wMa = Window.orderBy(col("h")).rowsBetween(-12, 12)
     val wOrd = Window.orderBy(col("h"))
     series
@@ -1221,6 +1181,24 @@ object Events {
           " ELSE -((-gsum + k - 1) DIV k) END"))
   }
 
+  /** Classical additive seasonal decomposition (the Persons/Macaulay
+    * moving-average method STL descends from) of hourly volume with
+    * period 24: trend = centered 2×24 MA (end lags half-weighted — the
+    * textbook even-period filter), seasonal = per-hour-of-day mean of the
+    * detrended series re-centered to sum ~0, residual = what's left.
+    * Output is the 24-row seasonal profile + per-slot residual MAE — the
+    * "what does a normal day look like, and how noisy is each hour"
+    * readout behind `events_snaive_backtest`'s forecast.
+    *
+    * Everything is EXACT integer micro-events: the MA numerator is
+    * 2·Σ±11 + y−12 + y+12 over the GAP-FILLED grid, trend = num·10⁶ DIV
+    * 48 (positive), and the possibly-negative detrended means use the
+    * sign-split floor division `fdiv` (Spark DIV truncates toward zero
+    * while DuckDB // floors — the divergence trap — so both branches
+    * keep operands positive). No floats anywhere.
+    *
+    * Scale: hour-key hash-agg, windows over the time-bounded hourly grid,
+    * a 24-row profile — nothing data-sized after the first pass. */
   def seasonalDecomp(spark: SparkSession, dir: String): DataFrame = {
     val detr = detrendedHours(spark, dir)
       .select(col("hour_of_day"), col("detr"))
@@ -1401,15 +1379,10 @@ object Events {
     * window over raw data; the grid is time-bounded, never data-sized. */
   def holtLinear(spark: SparkSession, dir: String): DataFrame = {
     val W = 20
-    val hc = Tables.events(spark, dir)
-      .select(expr("unix_micros(date_trunc('hour', ts)) DIV 3600000000").as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("y"))
-    val bounds = hc.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-    val grid = bounds.select(explode(sequence(col("h0"), col("h1"))).as("h"))
-      .join(hc, Seq("h"), "left")
-      .select(col("h"), coalesce(col("y"), lit(0L)).as("y"))
+    val hc = hourlyCounts(spark, dir)
+    val grid = gapFilled(hc)
       .cache() // S1 expansion source + the final output join
-    val hMax = bounds.select(col("h1"))
+    val hMax = hourBounds(hc).select(col("h1"))
     def smoothed(src: DataFrame, v: String): DataFrame = src
       .select(col("h").as("h2"), col(v).as("v2"),
         explode(sequence(lit(0), lit(W - 1))).as("d"))

@@ -3,6 +3,15 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+/** Unsigned little-endian reads out of a byte array — the byte order of
+  * RIFF (WAV, AVI) and GIF. */
+private[graft] object LittleEndian {
+  def u16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
+  def u32(b: Array[Byte], i: Int): Long =
+    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
+      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
+}
+
 /** Multimodal-column plumbing — SURVEY.md §7.5. The IMAGE decode/resize
   * paths are real (JDK built-in `javax.imageio`: PNG/JPEG/BMP/GIF), the
   * AUDIO path is real for WAV/PCM (pure byte parsing + PCM16 RMS — WAV is
@@ -26,6 +35,7 @@ import org.apache.spark.sql.functions._
   * output is a narrow typed struct so downstream pruning drops the bytes.
   */
 object Multimodal {
+  import LittleEndian.{u16, u32}
 
   /** Typed media record: opaque payload + envelope metadata. */
   final case class MediaRecord(media_id: Long, kind: String, payload: Array[Byte])
@@ -194,6 +204,41 @@ object Multimodal {
   private val AdpcmIndexAdj: Array[Int] =
     Array(-1, -1, -1, -1, 2, 4, 6, 8, -1, -1, -1, -1, 2, 4, 6, 8)
 
+  /** The `fmt ` fields and the `data` range of a WAV payload. */
+  private final case class WavLayout(fmtTag: Int, ch: Int, rate: Int, bits: Int,
+      blockAlign: Int, samplesPerBlock: Int, dataOff: Long, dataLen: Long)
+
+  /** The strict RIFF chunk walk shared by the WAV decoders: None unless
+    * `b` is a RIFF/WAVE container of at least 44 bytes. Fields of an
+    * absent `fmt ` chunk read 0, and an absent `data` chunk leaves
+    * dataOff at −1. */
+  private def wavLayout(b: Array[Byte]): Option[WavLayout] = {
+    def tag(i: Int): String = new String(b, i, 4, "US-ASCII")
+    if (b.length < 44 || tag(0) != "RIFF" || tag(8) != "WAVE") return None
+    var pos = 12L
+    var fmtTag = 0; var rate = 0; var ch = 0; var bits = 0
+    var blockAlign = 0; var samplesPerBlock = 0
+    var dataOff = -1L; var dataLen = 0L
+    // chunk walk; `len` comes from untrusted bytes, so every step is
+    // bounds-checked and monotone (word-aligned) to rule out loops
+    while (pos + 8 <= b.length) {
+      val id = tag(pos.toInt); val len = u32(b, pos.toInt + 4)
+      if (id == "fmt " && pos + 24 <= b.length) {
+        fmtTag = u16(b, pos.toInt + 8)
+        ch = u16(b, pos.toInt + 10); rate = u32(b, pos.toInt + 12).toInt
+        blockAlign = u16(b, pos.toInt + 20)
+        bits = u16(b, pos.toInt + 22)
+        // the ADPCM fmt extension declares samples per block
+        if (pos + 28 <= b.length) samplesPerBlock = u16(b, pos.toInt + 26)
+      } else if (id == "data" && dataOff < 0) {
+        dataOff = pos + 8
+        dataLen = math.min(len, b.length - dataOff)
+      }
+      pos += 8 + len + (len & 1L)
+    }
+    Some(WavLayout(fmtTag, ch, rate, bits, blockAlign, samplesPerBlock, dataOff, dataLen))
+  }
+
   /** REAL audio decode with pure JDK byte parsing — WAV is a container,
     * not a codec: walk the RIFF chunk list for `fmt ` (format tag, rate,
     * channels, bits, block align) and `data`, then compute the signal RMS
@@ -209,40 +254,15 @@ object Multimodal {
     * and every index derived from untrusted bytes is clamped before use. */
   private[operators] def decodeWav(r: MediaRecord): Option[AudioFeatures] = {
     val b = r.payload
-    def u16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    def u32(i: Int): Long =
-      (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-    def tag(i: Int): String = new String(b, i, 4, "US-ASCII")
-    if (b.length < 44 || tag(0) != "RIFF" || tag(8) != "WAVE") return None
-    var pos = 12L
-    var fmtTag = 0; var rate = 0; var ch = 0; var bits = 0
-    var blockAlign = 0; var samplesPerBlock = 0
-    var dataOff = -1L; var dataLen = 0L
-    // chunk walk; `len` comes from untrusted bytes, so every step is
-    // bounds-checked and monotone (word-aligned) to rule out loops
-    while (pos + 8 <= b.length) {
-      val id = tag(pos.toInt); val len = u32(pos.toInt + 4)
-      if (id == "fmt " && pos + 24 <= b.length) {
-        fmtTag = u16(pos.toInt + 8)
-        ch = u16(pos.toInt + 10); rate = u32(pos.toInt + 12).toInt
-        blockAlign = u16(pos.toInt + 20)
-        bits = u16(pos.toInt + 22)
-        // the ADPCM fmt extension declares samples per block
-        if (pos + 28 <= b.length) samplesPerBlock = u16(pos.toInt + 26)
-      } else if (id == "data" && dataOff < 0) {
-        dataOff = pos + 8
-        dataLen = math.min(len, b.length - dataOff)
-      }
-      pos += 8 + len + (len & 1L)
-    }
+    val WavLayout(fmtTag, ch, rate, bits, blockAlign, samplesPerBlock, dataOff, dataLen) =
+      wavLayout(b) match { case Some(w) => w; case None => return None }
     if (rate <= 0 || ch <= 0 || dataOff < 0) return None
     if (fmtTag == 1 && bits == 16) {
       val nFrames = dataLen / (ch * 2)
       var i = dataOff.toInt; var acc = 0L; var n = 0L
       val end = (dataOff + dataLen).toInt
       while (i + 1 < end) {
-        val s = (u16(i) << 16) >> 16 // sign-extend PCM16
+        val s = (u16(b, i) << 16) >> 16 // sign-extend PCM16
         acc += s.toLong * s; n += 1; i += 2
       }
       val rms = if (n == 0) 0.0 else math.sqrt(acc.toDouble / n)
@@ -260,7 +280,7 @@ object Multimodal {
       val end = (dataOff + dataLen).toInt
       while (blockStart + 4 <= end) {
         val blockEnd = math.min(blockStart.toLong + blockAlign, end.toLong).toInt
-        var pred = (u16(blockStart) << 16) >> 16 // header IS sample 0
+        var pred = (u16(b, blockStart) << 16) >> 16 // header IS sample 0
         var index = math.min(88, math.max(0, b(blockStart + 2) & 0xff))
         acc += pred.toLong * pred; n += 1
         var produced = 1
@@ -559,7 +579,12 @@ object Multimodal {
     * the hash. RMS is engine-portable without a decimal lattice because
     * it is one exact-integer sum, one IEEE division and one sqrt (both
     * correctly rounded by IEEE 754 in every engine — unlike ln/exp). */
-  private[graft] def pcm16Wav(id: Long, n: Int, rate: Int): Array[Byte] = {
+  private[graft] def pcm16Wav(id: Long, n: Int, rate: Int): Array[Byte] =
+    monoPcm16Wav(n, rate)(i => (((id * 31 + i * 7) % 2003) - 1001).toShort)
+
+  /** A mono PCM16 WAV of `n` frames at `rate` Hz: the 44-byte
+    * RIFF/`fmt `/`data` header, then `sample(i)` for every frame i. */
+  private def monoPcm16Wav(n: Int, rate: Int)(sample: Int => Short): Array[Byte] = {
     val dataLen = n * 2
     val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -571,7 +596,7 @@ object Multimodal {
     bb.put("data".getBytes("US-ASCII")).putInt(dataLen)
     var i = 0
     while (i < n) {
-      bb.putShort((((id * 31 + i * 7) % 2003) - 1001).toShort)
+      bb.putShort(sample(i))
       i += 1
     }
     bb.array()
@@ -679,23 +704,32 @@ object Multimodal {
     * desynchronizes every later chunk boundary and the strict parser
     * rejects the file. */
   private[graft] def syntheticAvi(id: Long): Array[Byte] = {
-    def chunk(tag: String, data: Array[Byte]): Array[Byte] = {
-      val sz = data.length
-      val bb = java.nio.ByteBuffer.allocate(8 + sz + (sz & 1))
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.put(tag.getBytes("ISO-8859-1")).putInt(sz).put(data)
-      bb.array() // trailing pad byte (if odd) left zero by allocate
-    }
-    def list(kind: String, body: Array[Byte]): Array[Byte] =
-      chunk("LIST", kind.getBytes("ISO-8859-1") ++ body)
     val nf = (3 + id % 5).toInt
     val flen = (16 + id % 16).toInt
-    def frame(i: Int): Array[Byte] =
-      Array.tabulate(flen)(j => (((id * 3 + i * 7 + j * 11) % 256) & 0xff).toByte)
+    aviFile((0 until nf).map(i =>
+      Array.tabulate(flen)(j => (((id * 3 + i * 7 + j * 11) % 256) & 0xff).toByte)))
+  }
+
+  /** One RIFF chunk: fourcc, u32 little-endian size, data, and a zero pad
+    * byte when the size is odd (chunks start at even offsets). */
+  private def riffChunk(tag: String, data: Array[Byte]): Array[Byte] = {
+    val sz = data.length
+    val bb = java.nio.ByteBuffer.allocate(8 + sz + (sz & 1))
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put(tag.getBytes("ISO-8859-1")).putInt(sz).put(data)
+    bb.array() // trailing pad byte (if odd) left zero by allocate
+  }
+
+  /** A RIFF `LIST` chunk of the given list type. */
+  private def riffList(kind: String, body: Array[Byte]): Array[Byte] =
+    riffChunk("LIST", kind.getBytes("ISO-8859-1") ++ body)
+
+  /** A minimal AVI: LIST hdrl (strl/strh typed 'vids') + LIST movi with
+    * one coded-frame chunk (`00dc`) per entry of `frames`. */
+  private def aviFile(frames: Seq[Array[Byte]]): Array[Byte] = {
     val strh = "vids".getBytes("ISO-8859-1") ++ new Array[Byte](52)
-    val hdrl = list("hdrl", list("strl", chunk("strh", strh)))
-    val movi = list("movi",
-      (0 until nf).map(i => chunk("00dc", frame(i))).reduce(_ ++ _))
+    val hdrl = riffList("hdrl", riffList("strl", riffChunk("strh", strh)))
+    val movi = riffList("movi", frames.map(riffChunk("00dc", _)).reduce(_ ++ _))
     val body = hdrl ++ movi
     val bb = java.nio.ByteBuffer.allocate(12 + body.length)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -868,33 +902,13 @@ object Multimodal {
     baos.toByteArray
   }
 
-  /** Deterministic MOTION-JPEG AVI per video-kind doc: the same RIFF/movi
-    * layout as [[syntheticAvi]], but every '00dc' chunk is a REAL baseline
+  /** Deterministic MOTION-JPEG AVI per video-kind doc: the `aviFile`
+    * RIFF/movi layout, but every '00dc' chunk is a REAL baseline
     * JPEG (solid gray, [[mjpegGray]]) — the payload class an actual MJPEG
     * camera stream carries, and the one the JDK can decode to pixels. */
   private[graft] def syntheticMjpegAvi(id: Long): Array[Byte] = {
-    def chunk(tag: String, data: Array[Byte]): Array[Byte] = {
-      val sz = data.length
-      val bb = java.nio.ByteBuffer.allocate(8 + sz + (sz & 1))
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.put(tag.getBytes("ISO-8859-1")).putInt(sz).put(data)
-      bb.array()
-    }
-    def list(kind: String, body: Array[Byte]): Array[Byte] =
-      chunk("LIST", kind.getBytes("ISO-8859-1") ++ body)
     val nf = (2 + id % 4).toInt
-    val strh = "vids".getBytes("ISO-8859-1") ++ new Array[Byte](52)
-    val hdrl = list("hdrl", list("strl", chunk("strh", strh)))
-    val movi = list("movi",
-      (0 until nf).map(i =>
-        chunk("00dc", jpegSolidGray(mjpegGray(id, i), MjpegW, MjpegH)))
-        .reduce(_ ++ _))
-    val body = hdrl ++ movi
-    val bb = java.nio.ByteBuffer.allocate(12 + body.length)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("ISO-8859-1")).putInt(4 + body.length)
-      .put("AVI ".getBytes("ISO-8859-1")).put(body)
-    bb.array()
+    aviFile((0 until nf).map(i => jpegSolidGray(mjpegGray(id, i), MjpegW, MjpegH)))
   }
 
   /** Decoded per-frame pixel statistics — the schema of the video leg's
@@ -965,23 +979,8 @@ object Multimodal {
   /** PCM16 WAV of a SQUARE wave with the given sample period — pure
     * integer synthesis (±8000), so the oracle knows every sample
     * analytically. */
-  private[graft] def squareWav(id: Long, n: Int, rate: Int, period: Int): Array[Byte] = {
-    val dataLen = n * 2
-    val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-    bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(1).putInt(rate).putInt(rate * 2)
-      .putShort(2).putShort(16)
-    bb.put("data".getBytes("US-ASCII")).putInt(dataLen)
-    var i = 0
-    while (i < n) {
-      bb.putShort(if (i % period < period / 2) 8000 else -8000)
-      i += 1
-    }
-    bb.array()
-  }
+  private[graft] def squareWav(id: Long, n: Int, rate: Int, period: Int): Array[Byte] =
+    monoPcm16Wav(n, rate)(i => if (i % period < period / 2) 8000 else -8000)
 
   /** PCM16 WAV of an ENVELOPED square wave: amplitude is a per-64-sample-
     * window staircase env(w) = 0 when (id + w) % 4 = 0 (planted silence)
@@ -991,56 +990,25 @@ object Multimodal {
     * windowed energy refolds in SQL exactly. */
   private[graft] def envelopedWav(id: Long, n: Int, rate: Int): Array[Byte] = {
     val p = tonePeriod(id)
-    val dataLen = n * 2
-    val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-    bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(1).putInt(rate).putInt(rate * 2)
-      .putShort(2).putShort(16)
-    bb.put("data".getBytes("US-ASCII")).putInt(dataLen)
-    var i = 0
-    while (i < n) {
+    monoPcm16Wav(n, rate) { i =>
       val w = i / 64
       val env = if ((id + w) % 4 == 0) 0 else (1000 + 500 * (w % 8)).toInt
-      bb.putShort((if (i % p < p / 2) env else -env).toShort)
-      i += 1
+      (if (i % p < p / 2) env else -env).toShort
     }
-    bb.array()
   }
 
-  /** Parse a PCM16 mono WAV to (rate, samples) through the same strict
-    * RIFF walk as decodeWav — the sample-level view Goertzel needs. */
+  /** Parse a PCM16 mono WAV to (rate, samples) through the strict
+    * `wavLayout` RIFF walk — the sample-level view Goertzel needs. */
   private[graft] def pcm16Samples(b: Array[Byte]): Option[(Int, Array[Short])] = {
-    def u16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    def u32(i: Int): Long =
-      (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-    def tag(i: Int): String = new String(b, i, 4, "US-ASCII")
-    if (b.length < 44 || tag(0) != "RIFF" || tag(8) != "WAVE") return None
-    var pos = 12L
-    var fmtTag = 0; var rate = 0; var ch = 0; var bits = 0
-    var dataOff = -1L; var dataLen = 0L
-    while (pos + 8 <= b.length) {
-      val id = tag(pos.toInt); val len = u32(pos.toInt + 4)
-      if (id == "fmt " && pos + 24 <= b.length) {
-        fmtTag = u16(pos.toInt + 8)
-        ch = u16(pos.toInt + 10); rate = u32(pos.toInt + 12).toInt
-        bits = u16(pos.toInt + 22)
-      } else if (id == "data" && dataOff < 0) {
-        dataOff = pos + 8
-        dataLen = math.min(len, b.length - dataOff)
-      }
-      pos += 8 + len + (len & 1L)
-    }
+    val WavLayout(fmtTag, ch, rate, bits, _, _, dataOff, dataLen) =
+      wavLayout(b) match { case Some(w) => w; case None => return None }
     if (fmtTag != 1 || ch != 1 || bits != 16 || rate <= 0 || dataOff < 0) None
     else {
       val n = (dataLen / 2).toInt
       val out = new Array[Short](n)
       var i = 0
       while (i < n) {
-        out(i) = ((u16((dataOff + 2L * i).toInt) << 16) >> 16).toShort
+        out(i) = ((u16(b, (dataOff + 2L * i).toInt) << 16) >> 16).toShort
         i += 1
       }
       Some((rate, out))
@@ -1723,27 +1691,10 @@ private[graft] object Mp4Index {
   private def u64(b: Array[Byte], p: Int): Long = (u32(b, p) << 32) | u32(b, p + 4)
   private def tag(b: Array[Byte], p: Int): String = new String(b, p, 4, "ISO-8859-1")
 
-  /** Child boxes (type, payloadStart, payloadEnd) of byte range [start, end).
-    * Stops (rather than throws) at the first malformed header. */
-  private def children(b: Array[Byte], start: Int, end: Int): Vector[(String, Int, Int)] = {
-    val out = Vector.newBuilder[(String, Int, Int)]
-    var p = start
-    var ok = true
-    while (ok && p + 8 <= end) {
-      val sz0 = u32(b, p)
-      val typ = tag(b, p + 4)
-      val (hdr, sz): (Long, Long) =
-        if (sz0 == 1L && p + 16 <= end) (16L, u64(b, p + 8))
-        else if (sz0 == 0L) (8L, (end - p).toLong)
-        else (8L, sz0)
-      if (sz < hdr || p + sz > end) ok = false // malformed: stop the walk
-      else {
-        out += ((typ, p + hdr.toInt, p + sz.toInt))
-        p += sz.toInt
-      }
-    }
-    out.result()
-  }
+  /** Child boxes (type, payloadStart, payloadEnd) of byte range
+    * [start, end): `childrenWithStart` without the header start. */
+  private def children(b: Array[Byte], start: Int, end: Int): Vector[(String, Int, Int)] =
+    childrenWithStart(b, start, end).map { case (t, _, s, e) => (t, s, e) }
 
   private def find(b: Array[Byte], start: Int, end: Int, typ: String): Option[(Int, Int)] =
     children(b, start, end).collectFirst { case (t, s, e) if t == typ => (s, e) }
@@ -1889,9 +1840,10 @@ private[graft] object Mp4Index {
   private val TrunSampleFlags = 0x000400L
   private val TrunSampleCto = 0x000800L
 
-  /** Like [[children]], but also yields each box's own HEADER start — the
-    * fragment walk needs it (trun data offsets are relative to the first
-    * byte of the moof box, not its payload). */
+  /** Child boxes (type, headerStart, payloadStart, payloadEnd) of byte
+    * range [start, end). Stops (rather than throws) at the first malformed
+    * header. The fragment walk needs the header start (trun data offsets
+    * are relative to the first byte of the moof box, not its payload). */
   private def childrenWithStart(b: Array[Byte], start: Int, end: Int): Vector[(String, Int, Int, Int)] = {
     val out = Vector.newBuilder[(String, Int, Int, Int)]
     var p = start
@@ -2145,6 +2097,18 @@ private[graft] object WebmIndex {
     catch { case scala.util.control.NonFatal(_) => None }
 
   /** The first video (TrackType 1) track's number in a parsed Segment. */
+  /** The first Segment's payload range, its child elements and the video
+    * track number — None without a Segment or a video track. */
+  private def videoSegment(payload: Array[Byte])
+      : Option[(Int, Int, Vector[(Long, Int, Int)], Long)] = {
+    val top = children(payload, 0, payload.length, allowUnknownToEnd = true)
+    for {
+      (segS, segE) <- top.collectFirst { case (IdSegment, s, e) => (s, e) }
+      seg = children(payload, segS, segE, allowUnknownToEnd = false)
+      videoTrack <- videoTrackOf(payload, seg)
+    } yield (segS, segE, seg, videoTrack)
+  }
+
   private def videoTrackOf(payload: Array[Byte],
                            seg: Vector[(Long, Int, Int)]): Option[Long] =
     seg.collectFirst { case (IdTracks, ts, te) =>
@@ -2171,11 +2135,8 @@ private[graft] object WebmIndex {
     }
 
   private def sampleIndexUnsafe(payload: Array[Byte]): Option[Vector[(Long, Int)]] = {
-    val top = children(payload, 0, payload.length, allowUnknownToEnd = true)
     for {
-      (_, segS, segE) <- top.collectFirst { case (IdSegment, s, e) => ((), s, e) }
-      seg = children(payload, segS, segE, allowUnknownToEnd = false)
-      videoTrack <- videoTrackOf(payload, seg)
+      (_, _, seg, videoTrack) <- videoSegment(payload)
       frames = seg.collect { case (IdCluster, cs, ce) =>
         clusterBlocks(payload, cs, ce, videoTrack)
       }.flatten
@@ -2193,11 +2154,8 @@ private[graft] object WebmIndex {
     catch { case scala.util.control.NonFatal(_) => None }
 
   private def cueIndexUnsafe(payload: Array[Byte]): Option[Vector[(Long, Long)]] = {
-    val top = children(payload, 0, payload.length, allowUnknownToEnd = true)
     for {
-      (segS, segE) <- top.collectFirst { case (IdSegment, s, e) => (s, e) }
-      seg = children(payload, segS, segE, allowUnknownToEnd = false)
-      videoTrack <- videoTrackOf(payload, seg)
+      (segS, segE, seg, videoTrack) <- videoSegment(payload)
       (cuS, cuE) <- seg.collectFirst { case (IdCues, s, e) => (s, e) }
       pts = children(payload, cuS, cuE, allowUnknownToEnd = false).collect {
         case (IdCuePoint, ps, pe) =>
@@ -2235,11 +2193,8 @@ private[graft] object WebmIndex {
     catch { case scala.util.control.NonFatal(_) => None }
 
   private def sampleIndexViaCuesUnsafe(payload: Array[Byte]): Option[Vector[(Long, Int)]] = {
-    val top = children(payload, 0, payload.length, allowUnknownToEnd = true)
     for {
-      (segS, segE) <- top.collectFirst { case (IdSegment, s, e) => (s, e) }
-      seg = children(payload, segS, segE, allowUnknownToEnd = false)
-      videoTrack <- videoTrackOf(payload, seg)
+      (segS, segE, _, videoTrack) <- videoSegment(payload)
       cues <- cueIndexUnsafe(payload)
       frames = cues.flatMap { case (_, off) =>
         if (off < segS || off >= segE) Vector.empty
@@ -2297,8 +2252,9 @@ private[graft] object WebmIndex {
   * any grammar violation or missing trailer rejects the whole file —
   * sub-block lengths are load-bearing (no resync marker). */
 private[graft] object GifIndex {
+  import LittleEndian.u16
+
   def frameDescriptors(b: Array[Byte]): Option[Vector[(Int, Int, Int, Int)]] = {
-    def u16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
     if (b.length < 14) return None
     val hdr = new String(b, 0, 6, "US-ASCII")
     if (hdr != "GIF89a" && hdr != "GIF87a") return None
@@ -2322,7 +2278,7 @@ private[graft] object GifIndex {
           }
         case 0x2c => // image descriptor
           if (pos + 10 > b.length) return None
-          out += ((u16(pos + 1), u16(pos + 3), u16(pos + 5), u16(pos + 7)))
+          out += ((u16(b, pos + 1), u16(b, pos + 3), u16(b, pos + 5), u16(b, pos + 7)))
           val pk = b(pos + 9) & 0xff
           var p = pos + 10
           if ((pk & 0x80) != 0) p += 3 * (2 << (pk & 7)) // local CT
@@ -2339,9 +2295,8 @@ private[graft] object GifIndex {
 }
 
 private[graft] object AviIndex {
-  private def u32(b: Array[Byte], p: Int): Long = // RIFF is little-endian
-    (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-      ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
+  import LittleEndian.u32 // RIFF is little-endian
+
   private def tag(b: Array[Byte], p: Int): String =
     new String(b, p, 4, "ISO-8859-1")
 

@@ -78,6 +78,15 @@ object Similarity {
     (0 until bits).map(j =>
       when(element_at(v, j + 1) >= 0.0, lit(1L << j)).otherwise(lit(0L))).reduce(_ + _)
 
+  /** The `k` best `scored` rows per query by (cos desc, vec_id), ranked
+    * `rn` from 1 and ordered by (q_id, rn) — the KNN arms' readout. */
+  private def topKByCosine(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
+    scored.withColumn("rn", row_number().over(w).cast("long"))
+      .filter(col("rn") <= k)
+      .orderBy(col("q_id"), col("rn"))
+  }
+
   /** Exact brute-force top-5 neighbors for each budget query. |Q| is
     * constant, so the scoring join is O(|Q|·n) — a single linear scan of
     * the corpus — and broadcasting the query side is bounded. */
@@ -88,10 +97,7 @@ object Similarity {
     val scored = broadcast(q).join(all, col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"), col("label"),
         VectorOps.cosine(VectorOps.dot(col("qv"), col("v")), col("qn"), col("nrm")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 5)
-      .orderBy(col("q_id"), col("rn"))
+    topKByCosine(scored, 5)
   }
 
   /** Hybrid retrieval with Reciprocal Rank Fusion (Cormack, Clarke &
@@ -121,8 +127,8 @@ object Similarity {
   private[graft] val ArmDepth = 20
 
   /** Query-vocabulary term frequencies (doc_id, word, tf, dl) — the BM25
-    * arm's posting slice for the fixed query budget, shared VERBATIM by
-    * `sim_hybrid_rrf` and `pipe_hard_negatives` and scratch-persisted
+    * arm's posting slice for the fixed query budget, read by `bm25Lex`
+    * (`sim_hybrid_rrf`, `pipe_hard_negatives`) and scratch-persisted
     * (r12, the r11 verdict item #5): before the memo each entry re-ran
     * the corpus tokenize→explode→semi-join→hash-agg per call. dl rides
     * the token explode (BM25 needs a doc's length only for docs that
@@ -134,9 +140,7 @@ object Similarity {
   private def qtfRelation(spark: SparkSession, dir: String): DataFrame =
     Tables.scratchRelation(spark, dir, "bm25_qtf", Seq("documents"),
         s"qb${QueryBudget}_tok1") {
-      val d = Tables.documents(spark, dir)
-      val toksC = filter(split(col("text"), " "), t => length(t) > 0)
-      val docs = d.select(col("doc_id"), toksC.as("toks"))
+      val docs = Tables.documents(spark, dir).select(col("doc_id"), textTokens.as("toks"))
       val qterms = docs.filter(col("doc_id") < QueryBudget)
         .select(explode(array_distinct(slice(col("toks"), 1, 3))).as("word"))
       docs.select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
@@ -153,10 +157,18 @@ object Similarity {
       .agg(count(lit(1)).cast("double").as("n"),
         sum(col("dl_tok")).cast("double").as("total_dl"))
 
-  def hybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val toksC = filter(split(col("text"), " "), t => length(t) > 0)
-    val docs = d.select(col("doc_id"), toksC.as("toks"))
+  /** Whitespace tokens of `documents.text`, empty tokens dropped. */
+  private def textTokens: Column = filter(split(col("text"), " "), t => length(t) > 0)
+
+  /** The BM25 lexical arm over `docs(doc_id, toks)`: each budget query's
+    * first three distinct tokens (q_id = its doc_id) scored against the
+    * persisted posting slice (`qtfRelation` ⋈ df ⋈ `bm25Stats`), term
+    * scores in integer micro-units (the text_bm25 rule) summed per
+    * (q_id, doc_id) as `s_lex`, the query's own doc excluded, and the top
+    * `ArmDepth` per query by `lexOrder` kept as `r_lex`. Scale: a
+    * vocabulary-pruned token stream via broadcast semi-join, |Q|·ArmDepth
+    * candidates. */
+  private def bm25Lex(spark: SparkSession, dir: String, docs: DataFrame): DataFrame = {
     val qterms = docs.filter(col("doc_id") < QueryBudget)
       .select(col("doc_id").as("q_id"),
         explode(array_distinct(slice(col("toks"), 1, 3))).as("word"))
@@ -173,9 +185,16 @@ object Similarity {
           (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / (col("total_dl") / col("n")))) *
           1000000).cast("long"))
       .groupBy(col("q_id"), col("doc_id")).agg(sum(col("term_micro")).as("s_lex"))
-    val wl = Window.partitionBy(col("q_id")).orderBy(col("s_lex").desc, col("doc_id"))
-    val lex = lexScore.withColumn("r_lex", row_number().over(wl).cast("long"))
+    lexScore.withColumn("r_lex", row_number().over(lexOrder).cast("long"))
       .filter(col("r_lex") <= ArmDepth)
+  }
+
+  /** The lexical arm's per-query rank order: score desc, doc_id. */
+  private val lexOrder = Window.partitionBy(col("q_id")).orderBy(col("s_lex").desc, col("doc_id"))
+
+  def hybridRrf(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), textTokens.as("toks"))
+    val lex = bm25Lex(spark, dir, docs)
       .select(col("q_id"), col("doc_id"), col("r_lex"))
     val all = vectors(spark, dir).cache() // both dense sides derive from it
     val q = all.filter(col("vec_id") < QueryBudget)
@@ -214,39 +233,17 @@ object Similarity {
     * source doc (the fixture's query contract); negatives = top-NegK
     * surviving BM25 candidates.
     *
-    * Scale: the BM25 arm is sim_hybrid_rrf's (vocabulary-pruned token
-    * stream via broadcast semi-join, |Q|·ArmDepth candidates); the guard
+    * Scale: the BM25 arm is `bm25Lex` (vocabulary-pruned token stream
+    * via broadcast semi-join, |Q|·ArmDepth candidates); the guard
     * adds one doc_id equi-join against the fingerprint projection and
     * per-query windows over ≤ArmDepth rows. Determinism: BM25 term in
     * integer micro-units (the text_bm25 rule), fingerprints exact md5,
     * ranks fully tie-broken. */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val toksC = filter(split(col("text"), " "), t => length(t) > 0)
-    val docs = d.select(col("doc_id"), toksC.as("toks"),
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), textTokens.as("toks"),
       md5(trim(lower(col("text")))).as("fp"))
       .cache() // tf stream + corpus stats + both fingerprint sides
-    val qterms = docs.filter(col("doc_id") < QueryBudget)
-      .select(col("doc_id").as("q_id"),
-        explode(array_distinct(slice(col("toks"), 1, 3))).as("word"))
-    // the BM25 arm reads the persisted posting slice + doc-length stats
-    // (see qtfRelation/bm25Stats — shared with sim_hybrid_rrf)
-    val tf = qtfRelation(spark, dir)
-    val dfreq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    val stats = bm25Stats(spark, dir)
-    val lexScore = broadcast(qterms).join(tf, Seq("word"))
-      .filter(col("doc_id") =!= col("q_id"))
-      .join(broadcast(dfreq), Seq("word"))
-      .crossJoin(broadcast(stats))
-      .withColumn("term_micro",
-        round(log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          (col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / (col("total_dl") / col("n")))) *
-          1000000).cast("long"))
-      .groupBy(col("q_id"), col("doc_id")).agg(sum(col("term_micro")).as("s_lex"))
-    val wl = Window.partitionBy(col("q_id")).orderBy(col("s_lex").desc, col("doc_id"))
-    val cand = lexScore.withColumn("r_lex", row_number().over(wl).cast("long"))
-      .filter(col("r_lex") <= ArmDepth)
+    val cand = bm25Lex(spark, dir, docs)
     val qfp = docs.filter(col("doc_id") < QueryBudget)
       .select(col("doc_id").as("q_id"), col("fp").as("q_fp"))
     val guarded = cand
@@ -257,7 +254,7 @@ object Similarity {
       .withColumn("n_dup_filtered",
         sum(col("is_dup")).over(Window.partitionBy(col("q_id"))))
       .filter(col("is_dup") === 0)
-      .withColumn("neg_rank", row_number().over(wl).cast("long"))
+      .withColumn("neg_rank", row_number().over(lexOrder).cast("long"))
       .filter(col("neg_rank") <= NegK)
       .select(col("q_id"), col("neg_rank"), col("doc_id"), col("s_lex"),
         col("n_dup_filtered"))
@@ -376,10 +373,7 @@ object Similarity {
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("bucket"), col("vec_id"),
         VectorOps.cosine(VectorOps.dot(col("qv"), col("v")), col("qn"), col("nrm")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 3)
-      .orderBy(col("q_id"), col("rn"))
+    topKByCosine(scored, 3)
   }
 
   /** LSH recall@3 against brute-force truth — the eval harness run
@@ -473,10 +467,7 @@ object Similarity {
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
         VectorOps.cosine(VectorOps.dot(col("qv"), col("v")), col("qn"), col("nrm")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 3)
-      .orderBy(col("q_id"), col("rn"))
+    topKByCosine(scored, 3)
   }
 
   /** Multi-probe IVF ANN: a KMeans coarse quantizer (k = 16, seeded)
@@ -530,10 +521,7 @@ object Similarity {
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("cell"), col("vec_id"),
         VectorOps.cosine(VectorOps.dot(col("qv"), col("v")), col("qn"), col("nrm")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 3)
-      .orderBy(col("q_id"), col("rn"))
+    topKByCosine(scored, 3)
   }
 
   /** Int8 scalar quantization + integer-dot KNN — the memory lever every
@@ -844,10 +832,7 @@ object Similarity {
       .join(broadcast(q), Seq("q_id"))
       .withColumn("cos", VectorOps.dot(col("qv"), col("vn"))) // unit vectors
       .select(col("q_id"), col("vec_id"), col("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    rescored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 3)
-      .orderBy(col("q_id"), col("rn"))
+    topKByCosine(rescored, 3)
   }
 
   /** IVF-PQ with corpus-SCALED parameters — the fix for the measured
@@ -1186,27 +1171,6 @@ object Similarity {
   private val LloydRounds = 2
   private val LloydK = 8
 
-  /** Cosine argmax assignment of every vector to its nearest centroid —
-    * the kernel each Lloyd round (and the final readout) runs. `cent` is
-    * (cl, dim, c) with round-6 DECIMAL components, so dots and squared
-    * norms are exact decimal sums and the cosine is one IEEE chain on
-    * identical operands; ties break to the lowest cluster id. */
-  private def assignToCents(xs: DataFrame, cent: DataFrame): DataFrame = {
-    val cnorm = cent.groupBy(col("cl"))
-      .agg(sum(col("c") * col("c")).cast("double").as("c_sq"))
-    val vnorm = xs.groupBy(col("vec_id"))
-      .agg(sum(col("x") * col("x")).cast("double").as("v_sq"))
-    val dots = xs.join(broadcast(cent), "dim")
-      .groupBy(col("vec_id"), col("cl"))
-      .agg(sum(col("x") * col("c")).cast("double").as("dot"))
-    dots.join(vnorm, "vec_id").join(broadcast(cnorm), "cl")
-      .withColumn("cos", col("dot") / sqrt(col("v_sq") * col("c_sq")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("cos").desc, col("cl"))))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("cl"))
-  }
-
   /** Corpus cell assignment over the frozen Lloyd fit — the family's
     * SECOND dataset-level substrate next to the memoized fit itself: a
     * (vec_id, cl) relation of exact longs, built once per (embeddings,
@@ -1224,7 +1188,7 @@ object Similarity {
                                 xs: DataFrame): DataFrame =
     Tables.scratchRelation(spark, dir, "lloyd_assign", Seq("embeddings"),
       s"r${LloydRounds}k${LloydK}cos1") {
-      assignToCents(xs, lloydFitCached(spark, dir, xs))
+      assignTopCents(xs, lloydFitCached(spark, dir, xs), 1)
     }
 
   /** Fully-oracled Lloyd's k-means — closing the trained-ANN family's
@@ -1267,7 +1231,7 @@ object Similarity {
     var cent = xs.filter(col("vec_id") < LloydK)
       .select(col("vec_id").cast("long").as("cl"), col("dim"), col("x").as("c"))
     for (_ <- 1 to LloydRounds) {
-      val asg = assignToCents(xs, cent)
+      val asg = assignTopCents(xs, cent, 1)
       cent = xs.join(asg, "vec_id")
         .groupBy(col("cl"), col("dim"))
         .agg(round(sum(col("x")).cast("double") / count(lit(1)), 6)
@@ -1495,7 +1459,12 @@ object Similarity {
       .orderBy(col("q_id"), col("rn"))
   }
 
-  /** `assignToCents` generalized to the top-k cells (IVF probing). */
+  /** Cosine assignment of every vector to its `k` nearest centroids —
+    * k = 1 is the argmax kernel each Lloyd round (and the final readout)
+    * runs, k > 1 the IVF probe. `cent` is (cl, dim, c) with round-6
+    * DECIMAL components, so dots and squared norms are exact decimal sums
+    * and the cosine is one IEEE chain on identical operands; ties break
+    * to the lowest cluster id. */
   private def assignTopCents(xs: DataFrame, cent: DataFrame, k: Int): DataFrame = {
     val cnorm = cent.groupBy(col("cl"))
       .agg(sum(col("c") * col("c")).cast("double").as("c_sq"))

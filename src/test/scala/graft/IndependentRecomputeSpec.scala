@@ -37,8 +37,7 @@ class IndependentRecomputeSpec extends SparkSpec {
     }.toSeq.distinct.sorted
   }
 
-  private def round9(x: Double): Double =
-    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+  import HalfUp._
 
   // ------------------------------------------------- events_attribution_markov
 
@@ -160,7 +159,7 @@ class IndependentRecomputeSpec extends SparkSpec {
       val degSum = nodes.toSeq.map(n => adj(n).length.toLong).sum
       val rawTerm = internal.toDouble / mEdges.toDouble -
         (degSum.toDouble / (2.0 * mEdges)) * (degSum.toDouble / (2.0 * mEdges))
-      (label, nodes.size.toLong, internal, degSum, round9(rawTerm))
+      (label, nodes.size.toLong, internal, degSum, round9(rawTerm).toDouble)
     }.sortBy(_._1)
     val q = expected.map(t => BigDecimal(t._5)).sum.toDouble
     val got = Graph.queries("graph_modularity")(spark, sf0001).collect()
@@ -216,7 +215,7 @@ class IndependentRecomputeSpec extends SparkSpec {
       common = adj(a) & adj(c)
       if common.nonEmpty
     } yield {
-      val aa = common.toSeq.map(m => BigDecimal(round9(1.0 / math.log(deg(m).toDouble)))).sum
+      val aa = common.toSeq.map(m => BigDecimal(round9(1.0 / math.log(deg(m).toDouble)).toDouble)).sum
       (a, c, common.size.toLong, aa.toDouble)
     }
   }
@@ -453,8 +452,7 @@ class IndependentRecomputeSpec2 extends SparkSpec {
   import org.apache.spark.sql.functions._
   import graft.operators._
 
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  import HalfUp._
 
   test("zipf fit equals a driver OLS over an independently tokenized head") {
     val freq = scala.collection.mutable.HashMap.empty[String, Long]
@@ -522,7 +520,7 @@ class IndependentRecomputeSpec2 extends SparkSpec {
       }
     }
     val expected = co.toSeq.map { case ((a, b), c) =>
-      val cos = round6(c.toDouble / math.sqrt((marg(a) * marg(b)).toDouble))
+      val cos = round6(c.toDouble / math.sqrt((marg(a) * marg(b)).toDouble)).toDouble
       (a, b, c, marg(a), marg(b), cos)
     }.sortBy { case (a, b, c, _, _, cos) => (-cos, -c, a, b) }.take(25)
     val got = Recommend.queries("rec_item_cosine")(spark, sf0001).collect()
@@ -700,10 +698,7 @@ class IndependentRecomputeSpec3 extends SparkSpec {
   import org.apache.spark.sql.functions._
   import graft.operators._
 
-  private def round6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-  private def round9(x: Double): BigDecimal =
-    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP)
+  import HalfUp._
 
   test("PSI drift equals a driver Laplace-smoothed recompute") {
     val rows = Tables.orders(spark, sf0001)

@@ -12,12 +12,7 @@ import graft.operators._
   * kernels) and compared on the entry's documented lattice. */
 class IndependentRecomputeSpec5 extends SparkSpec {
 
-  private def round6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-  private def round9(x: Double): BigDecimal =
-    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP)
-  private def round0(x: Double): Long =
-    BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+  import HalfUp._
 
   test("token entropy equals a driver per-doc recompute on the round-6 lattice") {
     val docs = Tables.documents(spark, sf0001)

@@ -12,10 +12,7 @@ import graft.operators._
   * adjacency theorem over the whole 256×256 grid. */
 class IndependentRecomputeSpec6 extends SparkSpec {
 
-  private def round6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-  private def round9(x: Double): BigDecimal =
-    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP)
+  import HalfUp._
 
   /** The classic xy2d (Hilbert curve, order 8) — rotation by conditional
     * swap/reflect, structurally different from the entry's n−1-reflection

@@ -12,8 +12,7 @@ import graft.operators._
   * by DIRECT pair counting against the entry's Mann-Whitney identity). */
 class IndependentRecomputeSpec7 extends SparkSpec {
 
-  private def round6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+  import HalfUp._
 
   test("power/MDE table equals a driver recompute of the design formulas") {
     val ev = Tables.events(spark, sf0001)

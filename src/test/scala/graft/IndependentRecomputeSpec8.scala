@@ -11,10 +11,7 @@ import graft.operators._
   * and the LSH sizing curve. */
 class IndependentRecomputeSpec8 extends SparkSpec {
 
-  private def round6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-  private def round9(x: Double): BigDecimal =
-    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP)
+  import HalfUp._
 
   test("rank-1 ALS equals an imperative alternating solve, exactly") {
     val custOf = Tables.orders(spark, sf0001)

@@ -13,10 +13,7 @@ import graft.operators._
   * rank-1-ALS pins proved out. */
 class IndependentRecomputeSpec9 extends SparkSpec {
 
-  private def round6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-  private def micro6(x: Double): Long =
-    (round6(x) * BigDecimal(1000000)).toLongExact
+  import HalfUp._
 
   /** (customer, part) -> purchase count over sf0.001, the shared rating
     * relation of the CF entries. */

@@ -26,7 +26,8 @@ import scala.jdk.CollectionConverters._
   * On an intentional plan change: re-run with
   * `GRAFT_PLANS_REGEN=true sbt "testOnly graft.PlanGoldenSpec"`
   * (tests fork, so the env var — not a -D on the sbt JVM — reaches them),
-  * review the golden-file diff like source, commit both. */
+  * review the golden-file diff like source, commit both. A regen run
+  * reports the test as canceled, never as passed. */
 class PlanGoldenSpec extends SparkSpec {
 
   private val GoldenPath = "src/test/scala/graft/plan_fingerprints_sf0001.golden"
@@ -78,7 +79,9 @@ class PlanGoldenSpec extends SparkSpec {
     if (regen) {
       val body = now.map { case (n, f) => s"$n|$f" }.mkString("", "\n", "\n")
       Files.write(Paths.get(GoldenPath), body.getBytes(StandardCharsets.UTF_8))
-      info(s"regenerated $GoldenPath with ${now.size} entries")
+      // a regen run checks nothing, so it must not read as a pass
+      cancel(s"regenerated $GoldenPath with ${now.size} entries; review the diff " +
+        "and re-run without GRAFT_PLANS_REGEN to check it")
     } else {
       assert(Files.exists(Paths.get(GoldenPath)),
         s"golden file missing — run with GRAFT_PLANS_REGEN=true to create $GoldenPath")

@@ -19,8 +19,7 @@ import graft.operators._
   *    monotone non-increasing in the threshold. */
 class R11WaveSpec extends SparkSpec {
 
-  private def round6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+  import HalfUp._
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -25,8 +25,7 @@ import graft.operators._
   * `Recommend.ruleCap`, so the pin covers the rule arithmetic too. */
 class R12WaveSpec extends SparkSpec {
 
-  private def round6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+  import HalfUp._
 
   /** Distinct (orderkey, partkey) incidence at sf0.001, driver-side. */
   private lazy val opInc: Seq[(Long, Long)] =

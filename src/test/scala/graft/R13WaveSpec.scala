@@ -24,8 +24,7 @@ import graft.operators._
   *    argument) plus the unchanged DuckDB oracle at sf0.001/0.01. */
 class R13WaveSpec extends SparkSpec {
 
-  private def round6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+  import HalfUp._
 
   /** Hand-written 3×3 determinant in detC's exact term order:
     * ((t0 + t1) + t2), minors expanded as m11*m22 − m12*m21. */
@@ -187,8 +186,6 @@ class R13WaveSpec extends SparkSpec {
   }
 
   test("sim_davies_bouldin equals a fully imperative Lloyd fit + DB recompute") {
-    def round9(x: Double): BigDecimal =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP)
     val raw = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .collect()

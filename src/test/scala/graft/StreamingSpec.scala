@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -133,13 +134,11 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch merge sink: parquet base == last-write-wins over all batches") {
     import spark.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val tmp = sys.props("java.io.tmpdir")
-    val basePath = s"$tmp/graft_merge_sink_base"
-    val cp = s"$tmp/graft_merge_sink_cp"
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    Seq(basePath, cp).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
+    // the sink creates the base on its first batch, so both paths sit
+    // unborn inside a fresh directory
+    val tmp = Files.createTempDirectory("graft_merge_sink").toString
+    val basePath = s"$tmp/base"
+    val cp = s"$tmp/cp"
 
     val mem = MemoryStream[Chg]
     val q = graft.streaming.MergeSink.start(mem.toDF(), basePath, cp)
@@ -288,7 +287,6 @@ class StreamingSpec extends SparkSpec {
     // never double-write a finalized window
     import spark.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import java.nio.file.Files
     val ckpt = Files.createTempDirectory("graft_ckpt").toString
     val out = Files.createTempDirectory("graft_sink").toString
     def ev(id: Long, t: String, v: Double) =
@@ -327,7 +325,6 @@ class StreamingSpec extends SparkSpec {
     // incarnation discovers ONLY files that landed in between — incremental
     // batch processing with streaming's exactly-once file accounting,
     // zero reprocessing of the (at 100 TB, enormous) already-seen backlog
-    import java.nio.file.Files
     val src  = Files.createTempDirectory("graft_inc_src").toString
     val ckpt = Files.createTempDirectory("graft_inc_ckpt").toString
     val out  = Files.createTempDirectory("graft_inc_out").toString

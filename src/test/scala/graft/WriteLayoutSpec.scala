@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.functions._
 
 /** Write-side clustering for scan pruning (README scale stance): at 100 TB
@@ -15,7 +17,7 @@ class WriteLayoutSpec extends SparkSpec {
   // shared fixture: written once on first access, so each test is
   // self-contained (no hidden test-ordering dependency)
   private lazy val layoutPath: String = {
-    val out = s"${sys.props("java.io.tmpdir")}/graft_layout_orders"
+    val out = Files.createTempDirectory("graft_layout_orders").toString
     Tables.orders(spark, sf0001)
       .repartitionByRange(4, col("o_orderdate"))
       .sortWithinPartitions(col("o_orderdate"))
@@ -58,7 +60,7 @@ class WriteLayoutSpec extends SparkSpec {
     // wide structs are how multimodal/feature tables nest metadata; at
     // 100 TB reading the whole struct for one field multiplies scan IO —
     // Catalyst's nested-schema pruning must reach the parquet ReadSchema
-    val out = s"${sys.props("java.io.tmpdir")}/graft_nested_orders"
+    val out = Files.createTempDirectory("graft_nested_orders").toString
     Tables.orders(spark, sf0001)
       .select(col("o_orderkey"),
         struct(

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.Layout
@@ -34,9 +36,8 @@ class ZorderLayoutSpec extends SparkSpec {
               (col("l_orderkey") % 256).as("sx"))
       .withColumn("z", Layout.zkey(col("px"), col("sx")))
 
-    val tmp = sys.props("java.io.tmpdir")
-    val zPath = s"$tmp/graft_layout_zorder"
-    val pPath = s"$tmp/graft_layout_partsort"
+    val zPath = Files.createTempDirectory("graft_layout_zorder").toString
+    val pPath = Files.createTempDirectory("graft_layout_partsort").toString
     base.repartitionByRange(16, col("z")).sortWithinPartitions(col("z"))
       .drop(col("z")).write.mode("overwrite").parquet(zPath)
     base.repartitionByRange(16, col("px")).sortWithinPartitions(col("px"))

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.file.Files
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
@@ -17,11 +19,9 @@ class MergeSinkSpec extends SparkSpec {
   private def fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   test("recovery restores a complete base after a crash between the swap renames") {
-    val tmp = sys.props("java.io.tmpdir")
-    val basePath = s"$tmp/graft_merge_recover"
+    val basePath = Files.createTempDirectory("graft_merge_recover").toString + "/base"
     val base = new Path(basePath)
     val old = new Path(basePath + ".old")
-    Seq(base, old).foreach(p => fs.delete(p, true))
 
     MergeSink.applyMerge(Seq(MChg(1, "a", 1), MChg(2, "b", 2)).toDF(),
       basePath, "k", "seq")
