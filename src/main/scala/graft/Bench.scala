@@ -6,37 +6,27 @@ object Bench {
     // Untimed warmup: JVM class loading, parquet reader init, first
     // whole-stage-codegen compile. Amortizes one-time process costs so the
     // per-query numbers measure the queries, not whichever one ran first.
-    SparkEntry.queries.get("agg_nation_revenue").foreach { fn =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    SparkEntry.runEach(() => spark, Some(Seq("agg_nation_revenue"))) { (_, s, fn) =>
+      fn(s, sfDir).count()
     }
-    // sorted name order: the run order decides which entry pays for shared
-    // memo builds and warm codegen caches, so it must not follow HashMap order
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
+    // the runner clears the cache around each entry, OUTSIDE the timed
+    // window: keeps each timing self-contained and the process footprint
+    // one-query-bounded
+    val results = SparkEntry.runEach(() => spark) { (_, s, fn) =>
+      def once(): Double = SparkEntry.timed(fn(s, sfDir).count())._2
       // single-run times carry ±50% noise (GC, janino compile, IO jitter);
       // for entries above the 1s floor take min-of-2 — the standard
       // least-noise estimator of intrinsic cost — while cheap entries stay
       // single-run to bound total bench wall-clock
-      val timed =
-        try {
-          val t1 = once()
-          Right(if (t1 > 1.0) { spark.catalog.clearCache(); math.min(t1, once()) } else t1)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          Left(e)
-        }
-      // release intra-query caches OUTSIDE the timed window: keeps each
-      // timing self-contained and the process footprint one-query-bounded
-      spark.catalog.clearCache()
-      name -> timed
+      val t1 = once()
+      if (t1 > 1.0) { s.catalog.clearCache(); math.min(t1, once()) } else t1
     }
     // a failed entry is reported by name, never timed into the total
     val times = results.collect { case (name, Right(t)) => name -> t }
-    val failed = results.collect { case (name, Left(_)) => name }
+    val failed = results.collect { case (name, Left(e)) =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      name
+    }
     // Round per-query times to ms — the single-run variance floor (~±50%)
     // dwarfs 1 ms, and short numbers keep the JSON line small.
     def r3(v: Double): String = (math.round(v * 1000) / 1000.0).toString

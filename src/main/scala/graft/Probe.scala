@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Ad-hoc stage profiler for optimization work — not part of the driver
   * contract. Usage: `SPARK_GRAFT_<MODE>=<value> runMain graft.Probe` with
   * one of the modes below set (the first set, in this order, runs); with
@@ -16,16 +18,17 @@ object Probe {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession()
     def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"[probe] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
+      val (n, secs) = SparkEntry.timed(f)
+      println(f"[probe] $name%-28s $secs%8.2f s  rows=$n")
     }
-    // a catalog-name mode's value: comma-separated SparkEntry names
-    def entries(mode: String) =
-      sys.env(mode).split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { name =>
-        name -> SparkEntry.queries.getOrElse(name,
-          sys.error(s"unknown catalog entry: $name"))
-      }
+    // runs `action` on each entry a catalog-name mode's value names
+    // (comma-separated), printing a failing entry instead of throwing
+    def each(mode: String)(action: (String, SparkSession, SparkEntry.Query) => Unit): Unit =
+      SparkEntry.runEach(() => spark,
+          Some(sys.env(mode).split(",").map(_.trim).filter(_.nonEmpty)))(action)
+        .foreach { case (name, r) =>
+          r.swap.foreach(e => println(s"[probe] $name failed: ${e.getMessage}"))
+        }
     // warmup
     time("warmup agg")(operators.Aggregates.nationRevenue(spark, dir).count())
     if (sys.env.contains("SPARK_GRAFT_AMPLIFY")) {
@@ -136,16 +139,12 @@ object Probe {
       println(f"[recall] ivfpq SCALED n=$n cells=$cells nprobe=$np refineT=$rt " +
         f"recall@3=${recalls.sum / recalls.size}%.3f wall=$secs%6.2f s")
     } else if (sys.env.contains("SPARK_GRAFT_TIME")) {
-      // generic per-entry timing: each entry run cold (plan+codegen+execute)
-      // then warm (codegen cache hot) — the same min-of-2-style evidence
-      // Bench uses, but targeted, so an optimization can be measured
-      // without a full catalog sweep
-      entries("SPARK_GRAFT_TIME").foreach { case (name, fn) =>
-        time(s"$name cold")(fn(spark, dir).count())
-        spark.catalog.clearCache()
-        time(s"$name warm")(fn(spark, dir).count())
-        spark.catalog.clearCache()
-      }
+      // generic per-entry timing: one pass cold (plan+codegen+execute),
+      // then one pass warm (codegen cache hot) — the same min-of-2-style
+      // evidence Bench uses, but targeted, so an optimization can be
+      // measured without a full catalog sweep
+      for (pass <- Seq("cold", "warm"))
+        each("SPARK_GRAFT_TIME")((name, s, fn) => time(s"$name $pass")(fn(s, dir).count()))
     } else if (sys.env.contains("SPARK_GRAFT_EXPLAIN_FMT")) {
       // `.explain("formatted")` dump for the optimization-round plan
       // artifacts (plans/r13/<query>_{before,after}.txt): prints each
@@ -153,25 +152,23 @@ object Probe {
       // shell loop can split them into files. Pre-execution (initial AQE
       // plan) — the same thing explain() shows a user, and stable across
       // runs, unlike the post-AQE executed plan.
-      entries("SPARK_GRAFT_EXPLAIN_FMT").foreach { case (name, fn) =>
-        val df = fn(spark, dir)
+      each("SPARK_GRAFT_EXPLAIN_FMT") { (name, s, fn) =>
+        val df = fn(s, dir)
         println(s"===== BEGIN $name =====")
         println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
         println(s"===== END $name =====")
-        spark.catalog.clearCache()
       }
     } else {
       // SPARK_GRAFT_EXPLAIN_Q, the POST-EXECUTION plan audit: runs the
       // query first so the printed plan is the final AQE-decided physical
       // plan (join strategies actually chosen at runtime), which is what
       // matters when adjudicating broadcast-vs-SMJ drift
-      entries("SPARK_GRAFT_EXPLAIN_Q").foreach { case (name, fn) =>
-        val df = fn(spark, dir)
+      each("SPARK_GRAFT_EXPLAIN_Q") { (name, s, fn) =>
+        val df = fn(s, dir)
         df.count()
         println(s"===== $name (executed, post-AQE) =====")
         println(df.queryExecution.executedPlan.toString)
-        spark.catalog.clearCache()
       }
     }
     spark.stop()

@@ -10,35 +10,16 @@ object Verify {
     // The driver passes two args (full dump); the filter is a builder-side
     // convenience for re-verifying just-changed entries.
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) {
-        val names = args(2).split(",").toSet
-        val unknown = names -- SparkEntry.queries.keySet
-        // fail fast: a typo'd filter name would otherwise skip that entry
-        // silently, indistinguishable from a green partial run
-        require(unknown.isEmpty,
-          s"unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}")
-        Some(names)
-      } else None
+    // (the runner rejects an unknown filter name before any entry runs)
+    val only = if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    val failed = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
-        val error =
-          try {
-            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/$name")
-            None
-          } catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-            Some(name -> e.getClass.getName)
-          }
-        // operators cache() intermediates for intra-query reuse; release them
-        // between queries so the dump's footprint stays one-query-bounded
-        spark.catalog.clearCache()
-        error
-      }
+    val failed = SparkEntry.runEach(() => spark, only) { (name, s, fn) =>
+      fn(s, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }.collect { case (name, Left(e)) =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      name -> e.getClass.getName
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -1325,9 +1325,9 @@ object Behavior {
     * boundary-independent: offset + local prefix is the global prefix
     * wherever the range splits fall. Adds `lt_<col>` per requested
     * column; the input relation is cached for its two reads (the SAME
-    * partitioning both times; released by Verify/Bench's per-entry
-    * `spark.catalog.clearCache()`, the repo-wide cache contract every
-    * intra-query cache site relies on). Shared by the
+    * partitioning both times; released by the per-entry
+    * `spark.catalog.clearCache()` of `SparkEntry.runEach`, the cache
+    * contract every intra-query cache site relies on). Shared by the
     * Mann-Whitney midranks, the KS-test CDFs, and the quality-classifier
     * AUC (`TextAnalysis.qualityAuc`). */
   private[graft] def rangePrefixSums(hist: DataFrame, ord: String,

@@ -1109,7 +1109,8 @@ object Dedup {
     * bounded by distinct source dirs, not invocations. The entries are
     * still held until released: long-lived sessions that are done with a
     * dir should call [[releaseSpanCaches]] (or
-    * `spark.catalog.clearCache()`, as Probe does between measurements)
+    * `spark.catalog.clearCache()`, as `SparkEntry.runEach` does around
+    * every entry)
     * after the result is consumed. */
   private val SpanN = 8
 

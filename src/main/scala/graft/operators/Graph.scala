@@ -159,8 +159,8 @@ object Graph {
     *
     * Scale: per half-step one edge-key equi-join + hash-agg (the
     * pagerank shuffle shape) and a broadcast 1-row total (the A4
-    * pattern); the edge list is cached once for its 4 reads (repo
-    * cache contract: Verify/Bench clearCache between entries). Top-15
+    * pattern); the edge list is cached once for its 4 reads (released by
+    * the cache contract of `SparkEntry.runEach`). Top-15
     * per side via a per-side rank window (partitioned by node_type). */
   def hits(spark: SparkSession, dir: String): DataFrame = {
     val e = spAll(spark, dir)
@@ -343,19 +343,6 @@ object Graph {
     * supply-chain blast zone), not full single-source shortest path. */
   private val MaxHops = 4
 
-  /** Multi-source BFS: exact shortest HOP distance (≤ MaxHops) from a
-    * seed set (suppliers 1–5) to every reachable node in the bipartite
-    * supply graph — the traversal primitive next to pagerank's fixed-point
-    * and dedup_cc's contraction. Level-synchronous frontier expansion:
-    * each round joins ONLY the current frontier (nodes first discovered
-    * last round — strictly shrinking as the neighborhood saturates)
-    * against the cached, pre-partitioned edge list, then folds candidates
-    * into the distance relation with a min-agg. Everything is equi-join +
-    * hash-agg; per-round wire cost is |frontier|·avg-degree, never
-    * |edges|, and the driver holds no vertex state — the 100 TB BFS
-    * shape. Distances are small integers: bit-deterministic, no float
-    * anywhere. Oracle: depth-capped WITH RECURSIVE (UNION dedup) + MIN —
-    * topology-independent, like dedup_cc's closure oracle. */
   /** The BFS core over an arbitrary (src, dst) edge relation and (node)
     * seed relation — split from the catalog entry so GraphSpec can drive
     * it on a long-path fixture where depths actually reach the horizon
@@ -382,7 +369,20 @@ object Graph {
     dist.select(col("node"), col("d").as("dist")).orderBy(col("node"))
   }
 
-  /** Eager iterative fit: the BFS rounds run at construction. */
+  /** Multi-source BFS: exact shortest HOP distance (≤ MaxHops) from a
+    * seed set (suppliers 1–5) to every reachable node in the bipartite
+    * supply graph — the traversal primitive next to pagerank's fixed-point
+    * and dedup_cc's contraction. Level-synchronous frontier expansion:
+    * each round joins ONLY the current frontier (nodes first discovered
+    * last round — strictly shrinking as the neighborhood saturates)
+    * against the cached, pre-partitioned edge list, then folds candidates
+    * into the distance relation with a min-agg. Everything is equi-join +
+    * hash-agg; per-round wire cost is |frontier|·avg-degree, never
+    * |edges|, and the driver holds no vertex state — the 100 TB BFS
+    * shape. Distances are small integers: bit-deterministic, no float
+    * anywhere. Oracle: depth-capped WITH RECURSIVE (UNION dedup) + MIN —
+    * topology-independent, like dedup_cc's closure oracle. Eager
+    * iterative fit: the BFS rounds run at construction. */
   def khopDistance(spark: SparkSession, dir: String): DataFrame = {
     val seeds = Tables.lineitem(spark, dir)
       .filter(col("l_suppkey") <= 5)
@@ -514,12 +514,6 @@ object Graph {
     * final label and community size — all-integer, fully deterministic. */
   private val LpaRounds = 4
 
-  /** The sparsified co-supply pair list (u < v, distinct) shared by the
-    * community/link-prediction entries — the scratch-persisted relation
-    * (was a duplicate inline derivation before the r10 edge memo). */
-  private def coSupplyPairs(spark: SparkSession, dir: String): DataFrame =
-    cosupplyPairs(spark, dir)
-
   /** The synchronous LPA loop over a both-directions (m, x) edge
     * relation — shared by graph_label_prop and graph_modularity. */
   private[graft] def lpaLabels(und: DataFrame): DataFrame = {
@@ -537,7 +531,7 @@ object Graph {
   }
 
   def labelPropagation(spark: SparkSession, dir: String): DataFrame = {
-    val e = coSupplyPairs(spark, dir)
+    val e = cosupplyPairs(spark, dir)
     val und = e.select(col("u").as("m"), col("v").as("x"))
       .unionByName(e.select(col("v").as("m"), col("u").as("x")))
       .cache() // real reuse: init + one read per round
@@ -563,7 +557,7 @@ object Graph {
     * two label-decorating equi-joins and |labels|-key hash-aggs. */
   def modularityQ(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val e = coSupplyPairs(spark, dir).cache() // edge count + internal-edge join
+    val e = cosupplyPairs(spark, dir).cache() // edge count + internal-edge join
     val und = e.select(col("u").as("m"), col("v").as("x"))
       .unionByName(e.select(col("v").as("m"), col("u").as("x")))
       .cache() // degree agg + one read per LPA round
@@ -716,28 +710,38 @@ object Graph {
     * relation — split from the catalog entry so GraphSpec can drive it on
     * a clique-plus-pendant-chain fixture with a known core. */
   private[graft] def kcoreSurvivors(ed0: DataFrame, k: Int,
-                                    rounds: Int): DataFrame = {
-    var ed = ed0.localCheckpoint(true)
-    var prev = -1L
-    var cur = ed.count()
-    var round = 0
-    while (round < rounds && cur != prev) {
+                                    rounds: Int): DataFrame =
+    peelToFixpoint(ed0, rounds, "k-core") { ed =>
       val keep = ed.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("node"))
-      ed = ed
-        .join(keep.select(col("node").as("ksrc")), col("src") === col("ksrc"))
+      ed.join(keep.select(col("node").as("ksrc")), col("src") === col("ksrc"))
         .join(keep.select(col("node").as("kdst")), col("dst") === col("kdst"))
         .select(col("src"), col("dst"))
-        .localCheckpoint(true)
+    }.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_degree"))
+      .orderBy(col("node"))
+
+  /** The peel loop shared by k-core and k-truss: applies `peel` to the
+    * edge relation until its edge count stops changing, with an eager
+    * localCheckpoint per round so the lineage stays O(1) (the ccContract
+    * rule) and only edge COUNTS reach the driver. A round budget exceeded
+    * before the fixed point is a loud failure naming the `what` peel,
+    * never a silent partial result. */
+  private def peelToFixpoint(e0: DataFrame, rounds: Int, what: String)(
+      peel: DataFrame => DataFrame): DataFrame = {
+    var e = e0.localCheckpoint(true)
+    var prev = -1L
+    var cur = e.count()
+    var round = 0
+    while (round < rounds && cur != prev) {
+      e = peel(e).localCheckpoint(true)
       prev = cur
-      cur = ed.count()
+      cur = e.count()
       round += 1
     }
     require(cur == prev,
-      s"k-core peel did not converge within $rounds rounds " +
+      s"$what peel did not converge within $rounds rounds " +
         s"(edges $prev -> $cur); raise the round budget")
-    ed.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_degree"))
-      .orderBy(col("node"))
+    e
   }
 
   /** k-truss (k = 4): the edge-level analogue of k-core — iteratively
@@ -747,7 +751,7 @@ object Graph {
     * the supplier co-purchase projection (suppliers sharing a qty-50
     * part — the one graph in the harness with real triangles; the kcore
     * bipartite graph has none by construction). Same fixpoint discipline
-    * as `kcoreSurvivors`: per-round eager localCheckpoint, convergence
+    * as `kcoreSurvivors` (`peelToFixpoint`): per-round eager localCheckpoint, convergence
     * REQUIREd inside the round budget.
     *
     * Support counting is the standard adjacency equi-join (edge ⋈ und ⋈
@@ -771,24 +775,10 @@ object Graph {
   /** The truss peel over an arbitrary (u < v) edge relation — split out so
     * GraphSpec can drive it on a clique-plus-pendant fixture. */
   private[graft] def trussSurvivors(e0: DataFrame, minSup: Int,
-                                    rounds: Int): DataFrame = {
-    var e = e0.localCheckpoint(true)
-    var prev = -1L
-    var cur = e.count()
-    var round = 0
-    while (round < rounds && cur != prev) {
-      e = edgeSupports(e).filter(col("support") >= minSup)
-        .select(col("u"), col("v"))
-        .localCheckpoint(true)
-      prev = cur
-      cur = e.count()
-      round += 1
-    }
-    require(cur == prev,
-      s"k-truss peel did not converge within $rounds rounds " +
-        s"(edges $prev -> $cur); raise the round budget")
-    edgeSupports(e).orderBy(col("u"), col("v"))
-  }
+                                    rounds: Int): DataFrame =
+    edgeSupports(peelToFixpoint(e0, rounds, "k-truss") { e =>
+      edgeSupports(e).filter(col("support") >= minSup).select(col("u"), col("v"))
+    }).orderBy(col("u"), col("v"))
 
   // quantity is integral ≤ 50, so the shared > 49 slice IS the = 50
   // slice the oracle filters on — one persisted pair list serves both

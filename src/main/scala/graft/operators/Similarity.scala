@@ -175,15 +175,11 @@ object Similarity {
     val tf = qtfRelation(spark, dir)
     val dfreq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
     val stats = bm25Stats(spark, dir)
-    val lexScore = broadcast(qterms).join(tf, Seq("word"))
-      .filter(col("doc_id") =!= col("q_id"))
-      .join(broadcast(dfreq), Seq("word"))
-      .crossJoin(broadcast(stats))
-      .withColumn("term_micro",
-        round(log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          (col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / (col("total_dl") / col("n")))) *
-          1000000).cast("long"))
+    val lexScore = TextAnalysis.withBm25Term(
+        broadcast(qterms).join(tf, Seq("word"))
+          .filter(col("doc_id") =!= col("q_id"))
+          .join(broadcast(dfreq), Seq("word")),
+        stats)
       .groupBy(col("q_id"), col("doc_id")).agg(sum(col("term_micro")).as("s_lex"))
     lexScore.withColumn("r_lex", row_number().over(lexOrder).cast("long"))
       .filter(col("r_lex") <= ArmDepth)
@@ -1807,8 +1803,8 @@ object Similarity {
       .select(col("vec_id"), col("c_label").as("cluster"), col("cos_c").as("cent_cos"))
       .cache() // one row per member; feeds the pair join, both dominance
                // ends, and the rollup — without this the argmax window
-               // subtree re-plans 4× (caller-release contract: Verify and
-               // Bench clearCache() between entries)
+               // subtree re-plans 4× (released by the cache contract of
+               // SparkEntry.runEach)
     val m = all.join(assign.select(col("vec_id"), col("cluster")), "vec_id")
     val pairDots = m.as("a").join(m.as("b"),
         col("a.cluster") === col("b.cluster") && col("a.dim") === col("b.dim") &&

@@ -955,6 +955,18 @@ object TextAnalysis {
         size(filter(toks, t => length(t) > 0)).cast("long").as("dl_tok"))
     }
 
+  /** Adds `term_micro`, the BM25 term score (k1 = 1.2, b = 0.75) in
+    * integer micro-units, to a (tf, df, dl) relation, with the corpus
+    * stats (n, total_dl) cross-joined from the 1-row `stats` broadcast —
+    * shared by `text_bm25` and Similarity's lexical arm. */
+  private[operators] def withBm25Term(terms: DataFrame, stats: DataFrame): DataFrame =
+    terms.crossJoin(broadcast(stats))
+      .withColumn("term_micro",
+        round(log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
+          (col("tf") * 2.2) /
+          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / (col("total_dl") / col("n")))) *
+          1000000).cast("long"))
+
   def bm25Query(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
     val dlRel = docLengths(spark, dir)
@@ -966,14 +978,7 @@ object TextAnalysis {
       .filter(col("word").isin("spark", "table", "join"))
       .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
     val df = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    tf.join(broadcast(df), "word")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("term_micro",
-        round(log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          (col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / (col("total_dl") / col("n")))) *
-          1000000).cast("long"))
+    withBm25Term(tf.join(broadcast(df), "word").join(dl, "doc_id"), stats)
       .groupBy(col("doc_id")).agg(sum(col("term_micro")).as("bm25_micro"))
       .orderBy(col("bm25_micro").desc, col("doc_id")).limit(25)
   }

@@ -38,20 +38,24 @@ class ContractSpec extends SparkSpec {
   test("every query runs at sf0.001 with unique column names") {
     // (zero rows is legal for near-dup thresholds at tiny SF; the driver's
     // rows>0 smoke applies only to entry())
-    CatalogSweep.entries.sortBy(e => -(e.buildSeconds + e.digestSeconds)).take(15)
-      .foreach(e => info(f"${e.name}: build ${e.buildSeconds}%.2f s, digest ${e.digestSeconds}%.2f s"))
-    val failures = CatalogSweep.entries.flatMap { e =>
-      val dups = e.built.toSeq.flatMap(_.columns)
-        .groupBy(identity).collect { case (c, g) if g.size > 1 => c }
-      e.error.map(err => s"${e.name}: ${err.getMessage}")
-        .orElse(if (dups.nonEmpty) Some(s"${e.name}: duplicate columns $dups") else None)
+    val ran = CatalogSweep.entries.collect { case CatalogSweep.Entry(name, Right(r)) => name -> r }
+    ran.sortBy { case (_, r) => -(r.buildSeconds + r.digestSeconds) }.take(15).foreach {
+      case (name, r) => info(f"$name: build ${r.buildSeconds}%.2f s, digest ${r.digestSeconds}%.2f s")
+    }
+    val failures = CatalogSweep.entries.flatMap {
+      case CatalogSweep.Entry(name, Left(err)) => Some(s"$name: ${err.getMessage}")
+      case CatalogSweep.Entry(name, Right(r)) =>
+        val dups = r.built.columns.groupBy(identity).collect { case (c, g) if g.size > 1 => c }
+        if (dups.nonEmpty) Some(s"$name: duplicate columns $dups") else None
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("no entry leaves temp views, temporary functions or session variables behind") {
-    val dirty = CatalogSweep.entries.filter(_.leftovers.nonEmpty)
-      .map(e => s"${e.name}: ${e.leftovers.mkString(", ")}")
+    val dirty = CatalogSweep.entries.collect {
+      case CatalogSweep.Entry(name, Right(r)) if r.leftovers.nonEmpty =>
+        s"$name: ${r.leftovers.mkString(", ")}"
+    }
     assert(dirty.isEmpty, s"${dirty.size} entries left session state:\n${dirty.mkString("\n")}")
   }
 }

@@ -18,10 +18,11 @@ import scala.jdk.CollectionConverters._
   * no expressions, subqueries included — so it survives run-to-run noise
   * (exchange/codegen numbering, alias ids) but not shape changes
   * (an extra Exchange, a lost TakeOrderedAndProject, a window where none
-  * was). Entries whose physical shape legitimately depends on what ran
-  * before them in the JVM (trained models, memoized fits) are excluded by
-  * the UNSTABLE list with per-name reasons. The plans come from the
-  * shared [[CatalogSweep]].
+  * was). Every entry is pinned, the trained-quantizer and memoized-fit
+  * entries included: their fits are seeded, and a memoized one plans over
+  * the published memo whether it built it or found it, so each shape is
+  * the same on an empty and on a warm scratch root. The plans come from
+  * the shared [[CatalogSweep]].
   *
   * On an intentional plan change: re-run with
   * `GRAFT_PLANS_REGEN=true sbt "testOnly graft.PlanGoldenSpec"`
@@ -31,29 +32,6 @@ import scala.jdk.CollectionConverters._
 class PlanGoldenSpec extends SparkSpec {
 
   private val GoldenPath = "src/test/scala/graft/plan_fingerprints_sf0001.golden"
-
-  /** Entries excluded from the pin, each with the reason it cannot be
-    * fingerprint-stable across suite orderings in one JVM. */
-  private val Unstable: Map[String, String] = Map(
-    // trained-model entries: the fit runs at plan-build time; assignment
-    // cardinalities (and with them join-side estimates) may shift with
-    // KMeans seeds/corpus regeneration
-    "sim_knn_ivf" -> "trained quantizer",
-    "sim_knn_pq" -> "trained quantizer",
-    "sim_knn_ivfpq" -> "trained quantizer",
-    "sim_knn_ivfpq_tuned" -> "trained quantizer",
-    "sim_index_serve" -> "trained quantizer (build phase) + scratch-path index",
-    "sim_index_append" -> "trained quantizer (build phase) + scratch-path index",
-    // the relational Lloyd fit is memoized to scratch parquet (r9): the
-    // plan is the full unrolled training lineage on the first build per
-    // (dataset, mtime) and a parquet scan of the persisted centroids
-    // afterwards — same values (decimal round-trip is exact), two shapes
-    "sim_kmeans_lloyd" -> "memoized Lloyd fit (train vs scratch-parquet scan)",
-    "sim_cluster_purity" -> "memoized Lloyd fit (train vs scratch-parquet scan)",
-    "sim_silhouette" -> "memoized Lloyd fit (train vs scratch-parquet scan)",
-    "sim_knn_ivf_lloyd" -> "memoized Lloyd fit (train vs scratch-parquet scan)",
-    "sim_davies_bouldin" -> "memoized Lloyd fit (train vs scratch-parquet scan)"
-  )
 
   private def fingerprint(s: String): String = {
     val op = """(?m)^\(\d+\) ([A-Za-z][A-Za-z0-9 ]*)""".r
@@ -68,8 +46,8 @@ class PlanGoldenSpec extends SparkSpec {
     // the same plan would fingerprint differently after an earlier entry
     // ran; the sweep clears the cache before each build and takes the
     // explain string before execution, pinning the unmaterialized shape
-    CatalogSweep.entries.filterNot(e => Unstable.contains(e.name)).map { e =>
-      e.name -> fingerprint(e.built.getOrElse(throw e.error.get).explain)
+    CatalogSweep.entries.map { e =>
+      e.name -> fingerprint(e.ran.fold(throw _, _.built.explain))
     }
 
   test("per-entry physical-plan operator multisets match the committed golden file") {

@@ -48,9 +48,9 @@ class PlanSpec extends SparkSpec {
     // entry optimizes to InMemoryRelation — no Aggregate node visible below
     // the window. CatalogSweep clears the cache before building each entry,
     // so its optimized plans show the unsubstituted shape. Entries that
-    // failed to build are skipped (ContractSpec reports them).
+    // failed are skipped (ContractSpec reports them).
     val offenders = CatalogSweep.entries.flatMap { e =>
-      e.built.toSeq.flatMap(_.plan.collect {
+      e.ran.toSeq.flatMap(_.built.plan.collect {
         case w: LWindow if w.partitionSpec.isEmpty &&
             w.child.collectFirst { case _: Aggregate => () }.isEmpty => e.name
       })
@@ -335,10 +335,10 @@ class PlanSpec extends SparkSpec {
         // |budget|² broadcast non-equi user-pair frame + 1-row metric
         // broadcasts (A4) over the serving-budget-bounded list relation
         "rec_coverage_diversity")
-    // entries that failed to build are skipped (ContractSpec reports them)
+    // entries that failed are skipped (ContractSpec reports them)
     val offenders = CatalogSweep.entries.flatMap { e =>
       val name = e.name
-      val p = e.built.fold("")(_.explain)
+      val p = e.ran.fold(_ => "", _.built.explain)
       if (p.contains("CartesianProduct")) Some(name)
       else if (p.contains("BroadcastNestedLoopJoin") &&
                !allowedNestedLoop.contains(name) &&

@@ -7,8 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared ScalaTest base: the suites share one process-wide session built
   * by [[GraftSession]], the same configuration Verify and Bench run. It is
   * pinned at 4 cores and 4 shuffle partitions whatever `SPARK_GRAFT_CPUS`
-  * says, because the plan goldens and PartitionInvarianceSpec's co-prime
-  * 3/17 partition counts are designed against that baseline. */
+  * says, so every suite plans alike on any host. The catalog-wide passes
+  * set their own counts on `newSession()` clones: [[CatalogSweep]] runs 3
+  * shuffle partitions and PartitionInvarianceSpec's hostile run 17, both
+  * co-prime with each other and unequal to this default. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   protected val sf0001: String = SparkSpec.Sf0001
 
