@@ -31,8 +31,15 @@ object Tables {
     * Applied ONLY to tables whose downstream per-row work is expensive
     * (documents: regex/shingling/digests; embeddings: vector folds). For
     * plain relational scans the shuffle costs more than the single-threaded
-    * scan saves — measured, not guessed. */
-  private def fanOut(df: DataFrame): DataFrame =
+    * scan saves — measured, not guessed.
+    *
+    * The same spread serves two relations whose rows EXPLODE downstream:
+    * the grouped basket memos of `Recommend` apply it once at build, so
+    * the memo is written as one file per core and every read plans at
+    * least one split per file; `Dedup`'s grouped LSH buckets, which are a
+    * coalesced `groupBy` output and not a memo, apply it before their
+    * pair generator. */
+  private[graft] def fanOut(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** The name prefix of a [[scratchDir]] memo: one sanitization scheme,

@@ -627,7 +627,9 @@ object Aggregates {
     // from the in-row C(n,2) generator over each sorted basket array
     // (same multiset as the old distinct-projection self-join, which
     // recomputed the incidence inline per call), so the entry shares the
-    // substrate build and skips the self-join shuffle entirely.
+    // substrate build and skips the self-join shuffle entirely; the memo
+    // is spread over the cores at build, so the generator runs in its
+    // scan splits and the pair aggregation is the only exchange.
     Recommend.arrayPairs(Recommend.opBaskets(spark, dir), "ps",
         "part_a", "part_b")
       .groupBy(col("part_a"), col("part_b"))

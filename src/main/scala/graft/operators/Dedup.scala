@@ -129,10 +129,10 @@ object Dedup {
     // pair set to the old band self-join; one groupBy exchange instead of
     // two shuffled join sides). See embeddingLshWith's bucket note.
     val cand = Recommend.arrayPairs(
-        bandRelation(sh)
+        Tables.fanOut(bandRelation(sh)
           .groupBy(col("band_idx"), col("band_val"))
           .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-          .select(col("ds")),
+          .select(col("ds"))),
         "ds", "doc_a", "doc_b")
       .distinct()
     val withSets = cand
@@ -757,6 +757,8 @@ object Dedup {
     // machinery (and before that, two SortMergeJoins) dissolves. One
     // groupBy exchange replaces the self-join's two shuffled sides; only
     // the capped twin applies it, so the uncapped oracle is untouched.
+    // The AQE-coalesced buckets are spread over the cores before the
+    // generator explodes them ([[Tables.fanOut]]).
     val key = Seq("band_idx", "band_val", "ext1", "ext2", "ext3")
     val buckets = bandsAll.groupBy(key.map(col): _*)
       .agg(sort_array(collect_list(col("vec_id"))).as("vs"))
@@ -776,7 +778,7 @@ object Dedup {
         buckets.crossJoin(broadcast(capRel))
           .filter(size(col("vs")).cast("long") <= col("bcap"))
       } else buckets
-    val cand = Recommend.arrayPairs(kept.select(col("vs")), "vs",
+    val cand = Recommend.arrayPairs(Tables.fanOut(kept.select(col("vs"))), "vs",
         "vec_a", "vec_b")
       .distinct()
     cand

@@ -17,8 +17,10 @@ import graft.Tables
   * generator over each grouped basket (orderkey / custkey) — cost
   * Σ|basket|², the standard co-occurrence bound — never an all-pairs item
   * join. Each undirected pair is counted by ONE hash-agg and joins the
-  * item marginals once per side; rules emit both directions in-row from
-  * that counted row. Top-k is TakeOrderedAndProject. At 100 TB the added
+  * item marginals once per side. Rules rank the counted pairs by their
+  * better direction (a TakeOrderedAndProject over pairs) and expand only
+  * the top pairs into both directions for the final top-k; every other
+  * top-k is one TakeOrderedAndProject. At 100 TB the added
   * guard is the hot-key cap (see [[capBaskets]], pair generation only),
   * carried by the `*_capped` catalog twins so the lever itself is oracled.
   *
@@ -39,7 +41,20 @@ object Recommend {
     * round-trips bit-for-bit and every consumer is hash-identical to the
     * inline derivation. At 100 TB this IS the production shape:
     * materialize the interaction table once, serve every model build off
-    * it. */
+    * it.
+    *
+    * The three GROUPED memos below are kilobytes of arrays that EXPLODE
+    * into millions of pair rows downstream — an amplification AQE cannot
+    * see (it sizes shuffles on input bytes). It coalesces the build's
+    * `groupBy` on those bytes too, so a small memo is written as few files
+    * (one, for the sf0.01 order baskets on 4 cores) and the quadratic
+    * generation would land in that many scan splits. Each build ends
+    * with the round-robin spread over the executor cores
+    * ([[Tables.fanOut]]): the memo is written as one file per core, so
+    * every read plans at least one split per file with no shuffle of its
+    * own (the scan charges each file `spark.sql.files.openCostInBytes` on
+    * top of its length, so no two of the equal-sized files fit one
+    * split). */
 
   /** Distinct order baskets GROUPED by order key: (o, ps = sorted distinct
     * part array) — assocRules + nextPart. r13 optimization (guide §8/§2.4):
@@ -50,34 +65,34 @@ object Recommend {
     * basket. `sort_array` pins a deterministic element order; exploding
     * the arrays reproduces the old flat relation exactly (same distinct
     * (o,p) multiset), so every consumer stays hash-identical. */
-  private[operators] def opBaskets(spark: SparkSession, dir: String): DataFrame =
-    Tables.scratchRelation(spark, dir, "rec_op_bo", Seq("lineitem"), "v1") {
-      Tables.lineitem(spark, dir)
+  private[graft] def opBaskets(spark: SparkSession, dir: String): DataFrame =
+    Tables.scratchRelation(spark, dir, "rec_op_bo", Seq("lineitem"), "v2") {
+      Tables.fanOut(Tables.lineitem(spark, dir)
         .groupBy(col("l_orderkey").as("o"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
+        .agg(sort_array(collect_set(col("l_partkey"))).as("ps")))
     }
 
   /** Distinct customer baskets GROUPED by customer: (c, ps = sorted
     * distinct part array) — itemCosine pair generation, userCf degrees/
     * votes/own-item checks. Same grouped-memo rationale as [[opBaskets]]. */
-  private def cpBaskets(spark: SparkSession, dir: String): DataFrame =
-    Tables.scratchRelation(spark, dir, "rec_cp_bc", Seq("lineitem", "orders"), "v1") {
-      Tables.lineitem(spark, dir)
+  private[graft] def cpBaskets(spark: SparkSession, dir: String): DataFrame =
+    Tables.scratchRelation(spark, dir, "rec_cp_bc", Seq("lineitem", "orders"), "v2") {
+      Tables.fanOut(Tables.lineitem(spark, dir)
         .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("c"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
+        .agg(sort_array(collect_set(col("l_partkey"))).as("ps")))
     }
 
   /** The TRANSPOSE grouping: part audiences (p, cs = sorted distinct
     * customer array) — itemCosine marginals (size(cs) IS n_users, no agg)
     * and userCf pair generation (audience self-pairs in-row). Derived from
     * [[cpBaskets]] so the source join runs once per dataset. */
-  private def cpAudiences(spark: SparkSession, dir: String): DataFrame =
-    Tables.scratchRelation(spark, dir, "rec_cp_pc", Seq("lineitem", "orders"), "v1") {
-      cpBaskets(spark, dir)
+  private[graft] def cpAudiences(spark: SparkSession, dir: String): DataFrame =
+    Tables.scratchRelation(spark, dir, "rec_cp_pc", Seq("lineitem", "orders"), "v2") {
+      Tables.fanOut(cpBaskets(spark, dir)
         .select(col("c"), explode(col("ps")).as("p"))
         .groupBy(col("p"))
-        .agg(sort_array(collect_set(col("c"))).as("cs"))
+        .agg(sort_array(collect_set(col("c"))).as("cs")))
     }
 
   /** All C(n,2) ordered element pairs (a < b in array position, and the
@@ -85,20 +100,28 @@ object Recommend {
     * the in-row replacement for equi-self-join pair generation. Two
     * chained generators: position-explode the array, then explode its
     * strict suffix; emissions are exactly the pairs the old
-    * `a.key = b.key && a.p < b.p` join produced, in the same multiset. */
+    * `a.key = b.key && a.p < b.p` join produced, in the same multiset.
+    * It only generates: the generation runs in whatever partitions
+    * `grouped` arrives in, so a caller spreads its input first (the
+    * grouped memos are spread at build). */
   private[operators] def arrayPairs(grouped: DataFrame, arr: String,
                          aName: String, bName: String): DataFrame =
     grouped
-      // The grouped memo is kilobytes of arrays that EXPLODE into millions
-      // of pair rows — an amplification AQE cannot see (it sizes shuffles
-      // on input bytes), so without this the whole quadratic generation
-      // lands in the single scan split the tiny memo packs into. Pinned
-      // round-robin over the executor cores (scale-adaptive: derived from
-      // the deployment, not a tuned literal; guide §2.5 input-skew rule).
-      .repartition(grouped.sparkSession.sparkContext.defaultParallelism)
       .select(col(arr), posexplode(col(arr)).as(Seq("_i", aName)))
       .select(col(aName),
         explode(slice(col(arr), col("_i") + lit(2), size(col(arr)))).as(bName))
+
+  /** Part marginals over the order baskets: (p, n_item = baskets holding
+    * p) — assocRules. A memo rather than an in-query aggregate because
+    * both sides of every pair join it: as an aggregate the two joins share
+    * one shuffle, and when AQE re-plans one join to broadcast the
+    * marginals, that join's final aggregate runs again over the reused
+    * exchange. */
+  private def opMarginals(spark: SparkSession, dir: String): DataFrame =
+    Tables.scratchRelation(spark, dir, "rec_op_pm", Seq("lineitem"), "v1") {
+      opBaskets(spark, dir).select(explode(col("ps")).as("p"))
+        .groupBy(col("p")).agg(count(lit(1)).as("n_item"))
+    }
 
   /** (custkey, partkey, purchase-count) ratings — mfRank1 + slopeOne. */
   private def cprRatings(spark: SparkSession, dir: String): DataFrame =
@@ -178,8 +201,17 @@ object Recommend {
   /** Association rules a→b with support/confidence/lift over order
     * baskets. Pair candidates from the in-row [[arrayPairs]] generator
     * over each order basket (a < b keeps one undirected candidate; it is
-    * counted once and both rule directions are emitted from its row),
-    * top-20 rules by lift with full tie-break. */
+    * counted once), top-20 rules by lift with full tie-break.
+    *
+    * The top-k runs on PAIRS before either direction is emitted. Lift is
+    * symmetric, so a pair's two rules differ only in confidence, and its
+    * better rule is a→b when conf(a→b) ≥ conf(b→a) — a < b, so the rule
+    * order's antecedent tie-break gives a tie to a→b. Rank pairs by that
+    * better rule's key (lift, conf, antecedent, consequent). Every pair
+    * above the pair of some top-20 rule has a better rule of its own,
+    * distinct from the others and ranked above that rule, so at most 19
+    * pairs rank above it: the top-20 pairs hold every top-20 rule, ties
+    * included, and expanding just those 20 pairs gives the same rows. */
   def assocRules(spark: SparkSession, dir: String): DataFrame =
     assocRulesWith(spark, dir, NoCap)
 
@@ -192,34 +224,43 @@ object Recommend {
   private[graft] def assocRulesWith(spark: SparkSession, dir: String,
                                     cap: KeyCap): DataFrame = {
     // r13: grouped-basket memo — n_baskets is a count of the memo rows,
-    // marginals explode it in-row (same distinct (o,p) multiset as the old
-    // flat incidence), and pair generation is the [[arrayPairs]] generator:
-    // no cache, no self-join; the only shuffle ahead of the (pa,pb)
-    // aggregation's own exchange is arrayPairs' round-robin spread.
+    // the marginals are their own memo ([[opMarginals]]), and pair
+    // generation is the [[arrayPairs]] generator over the memo's per-core
+    // files: no cache, no self-join, and no shuffle ahead of the (pa,pb)
+    // aggregation's own exchange.
     val bo = opBaskets(spark, dir)
     val nBaskets = bo.agg(count(lit(1)).as("n_baskets"))
-    val marg = bo.select(explode(col("ps")).as("p"))
-      .groupBy(col("p")).agg(count(lit(1)).as("n_item"))
+    val marg = opMarginals(spark, dir)
     val src = capBaskets(bo, "ps", cap)
     val pairs = arrayPairs(src, "ps", "pa", "pb")
       .groupBy(col("pa"), col("pb"))
       .agg(count(lit(1)).as("n_ab"))
       .join(marg.select(col("p").as("pa"), col("n_item").as("n_a")), "pa")
       .join(marg.select(col("p").as("pb"), col("n_item").as("n_b")), "pb")
-    // both rule directions in-row from each counted undirected pair: a
-    // union of two direction projections would re-run the final (pa, pb)
-    // aggregate per branch (exchange reuse saves only the map side)
+      .crossJoin(broadcast(nBaskets))
+      .withColumn("lift_ppm", expr("n_ab * n_baskets * 1000000 DIV (n_a * n_b)"))
+    // top-20 undirected pairs by their better rule (see [[assocRules]]):
+    // its conf divides by the smaller marginal, and it is a→b unless b→a's
+    // conf is strictly higher. Only these pairs expand, so the rule-level
+    // top-k reads 40 rows, not 2×|pairs|
+    val abFirst = expr("n_ab * 1000000 DIV n_a >= n_ab * 1000000 DIV n_b")
+    val top = pairs
+      .orderBy(col("lift_ppm").desc,
+        expr("n_ab * 1000000 DIV least(n_a, n_b)").desc,
+        when(abFirst, col("pa")).otherwise(col("pb")),
+        when(abFirst, col("pb")).otherwise(col("pa")))
+      .limit(20)
+    // both rule directions in-row from each kept pair: a union of two
+    // direction projections would re-run the final (pa, pb) aggregate per
+    // branch (exchange reuse saves only the map side)
     def rule(ante: String, cons: String, nAnte: String, nCons: String): Column =
       struct(col(ante).as("antecedent"), col(cons).as("consequent"),
         col(nAnte).as("n_ante"), col(nCons).as("n_cons"))
-    val rules = pairs
+    top
       .select(explode(array(rule("pa", "pb", "n_a", "n_b"), rule("pb", "pa", "n_b", "n_a")))
-        .as("r"), col("n_ab"))
-      .select(col("r.*"), col("n_ab"))
-      .crossJoin(broadcast(nBaskets))
-    rules
+        .as("r"), col("n_ab"), col("n_baskets"), col("lift_ppm"))
+      .select(col("r.*"), col("n_ab"), col("n_baskets"), col("lift_ppm"))
       .withColumn("conf_ppm", expr("n_ab * 1000000 DIV n_ante"))
-      .withColumn("lift_ppm", expr("n_ab * n_baskets * 1000000 DIV (n_ante * n_cons)"))
       .select(col("antecedent"), col("consequent"), col("n_ab"), col("n_ante"),
         col("n_cons"), col("n_baskets"), col("conf_ppm"), col("lift_ppm"))
       .orderBy(col("lift_ppm").desc, col("conf_ppm").desc,

@@ -104,34 +104,43 @@ class IndependentRecomputeSpec extends SparkSpec {
   // ------------------------------------------------------------ rec_assoc_rules
 
   test("assoc rules equal a brute-force basket recount, all 8 columns, top-20") {
-    val op = Tables.lineitem(spark, sf0001)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val nBaskets = op.map(_._1).distinct.length.toLong
-    val marg = op.groupBy(_._2).map { case (p, g) => p -> g.length.toLong }
-    val pairCounts = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
-    op.groupBy(_._1).values.foreach { items =>
-      val ps = items.map(_._2).distinct.sorted
-      for (i <- ps.indices; j <- (i + 1) until ps.length) {
-        val k = (ps(i), ps(j))
-        pairCounts(k) = pairCounts.getOrElse(k, 0L) + 1L
+    // sf0.001, and the synthetic baskets whose top-20 cut falls inside a
+    // run of rules tied on lift and confidence
+    TieBaskets.withDirs(spark, TieBaskets.Tied, TieBaskets.Directed) { ties =>
+      (sf0001 +: ties).foreach { dir =>
+        val op = Tables.lineitem(spark, dir)
+          .select(col("l_orderkey"), col("l_partkey")).distinct()
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+        val nBaskets = op.map(_._1).distinct.length.toLong
+        val marg = op.groupBy(_._2).map { case (p, g) => p -> g.length.toLong }
+        val pairCounts = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+        op.groupBy(_._1).values.foreach { items =>
+          val ps = items.map(_._2).distinct.sorted
+          for (i <- ps.indices; j <- (i + 1) until ps.length) {
+            val k = (ps(i), ps(j))
+            pairCounts(k) = pairCounts.getOrElse(k, 0L) + 1L
+          }
+        }
+        val ranked = pairCounts.toSeq
+          .flatMap { case ((a, b), nab) => Seq((a, b, nab), (b, a, nab)) }
+          .map { case (ante, cons, nab) =>
+            val na = marg(ante); val nc = marg(cons)
+            (ante, cons, nab, na, nc, nBaskets,
+              nab * 1000000L / na, nab * nBaskets * 1000000L / (na * nc))
+          }
+          .sortBy { case (a, c, _, _, _, _, conf, lift) => (-lift, -conf, a, c) }
+        if (ties.contains(dir))
+          assert(ranked(19)._7 == ranked(20)._7 && ranked(19)._8 == ranked(20)._8,
+            s"the synthetic top-20 cut is not inside a tie: ${ranked.slice(18, 22)}")
+        val expected = ranked.take(20)
+        val got = Recommend.queries("rec_assoc_rules")(spark, dir).collect()
+          .map(r => (r.getAs[Long]("antecedent"), r.getAs[Long]("consequent"),
+            r.getAs[Long]("n_ab"), r.getAs[Long]("n_ante"), r.getAs[Long]("n_cons"),
+            r.getAs[Long]("n_baskets"), r.getAs[Long]("conf_ppm"),
+            r.getAs[Long]("lift_ppm"))).toSeq
+        assert(got == expected, s"\n$dir entry: ${got.take(3)}…\nindependent: ${expected.take(3)}…")
       }
     }
-    val expected = pairCounts.toSeq
-      .flatMap { case ((a, b), nab) => Seq((a, b, nab), (b, a, nab)) }
-      .map { case (ante, cons, nab) =>
-        val na = marg(ante); val nc = marg(cons)
-        (ante, cons, nab, na, nc, nBaskets,
-          nab * 1000000L / na, nab * nBaskets * 1000000L / (na * nc))
-      }
-      .sortBy { case (a, c, _, _, _, _, conf, lift) => (-lift, -conf, a, c) }
-      .take(20)
-    val got = Recommend.queries("rec_assoc_rules")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("antecedent"), r.getAs[Long]("consequent"),
-        r.getAs[Long]("n_ab"), r.getAs[Long]("n_ante"), r.getAs[Long]("n_cons"),
-        r.getAs[Long]("n_baskets"), r.getAs[Long]("conf_ppm"),
-        r.getAs[Long]("lift_ppm"))).toSeq
-    assert(got == expected, s"\nentry: ${got.take(3)}…\nindependent: ${expected.take(3)}…")
   }
 
   // ----------------------------------------------------------- graph_modularity

@@ -106,18 +106,54 @@ class PlanSpec extends SparkSpec {
   test("basket pair generation is join-free (in-row generator over the basket memo)") {
     // r13: agg_basket_pairs rides the grouped order-basket memo and emits
     // its C(n,2) pairs from two chained generators — the self-join (and
-    // the exchange-reuse pin that guarded it) is GONE. The plan must stay
-    // join-free with exactly the two structural exchanges (the pinned
-    // generator-spreading repartition and the (pa, pb) aggregation
-    // shuffle); a refactor that reintroduces a join here would re-shuffle
-    // the incidence twice at 100 TB.
+    // the exchange-reuse pin that guarded it) is GONE. The memo is spread
+    // over the cores when it is built, so the generators run in its scan
+    // splits and the plan must stay join-free with one exchange, the
+    // (pa, pb) aggregation shuffle; a refactor that reintroduces a join
+    // here would re-shuffle the incidence twice at 100 TB, and a spread
+    // per read would shuffle the memo on every run.
     val p = plan(Aggregates.basketPairs(spark, sf0001))
     assert(!p.contains("Join"), s"pair generation reintroduced a join:\n$p")
     assert(p.contains("Generate"), s"no generator in basket-pairs plan:\n$p")
     // tree occurrences only ("Exchange (n)"); the details section repeats
     // each operator as "(n) Exchange"
-    assert("Exchange \\(\\d+\\)".r.findAllIn(p).size <= 2,
-      s"more exchanges than the repartition + pair agg:\n$p")
+    assert("Exchange \\(\\d+\\)".r.findAllIn(p).size <= 1,
+      s"more exchanges than the pair agg:\n$p")
+  }
+
+  test("the grouped basket memos scan in at least one split per core") {
+    // each memo build ends with a spread over the cores, so the memo is
+    // one file per core and a read needs no shuffle to run its pair
+    // generator in parallel; sf0.01, where a memo is large enough that
+    // AQE would coalesce an unspread build into fewer files than cores
+    val sf001 = s"${new java.io.File(sf0001).getParent}/sf0.01"
+    val cores = spark.sparkContext.defaultParallelism
+    Seq("opBaskets" -> Recommend.opBaskets(spark, sf001),
+        "cpBaskets" -> Recommend.cpBaskets(spark, sf001),
+        "cpAudiences" -> Recommend.cpAudiences(spark, sf001)).foreach { case (memo, df) =>
+      val splits = df.rdd.getNumPartitions
+      assert(splits >= cores, s"$memo scans in $splits splits on $cores cores")
+    }
+  }
+
+  test("assoc rules expand rule directions only for the top pairs") {
+    // the top-20 is taken over undirected pairs (by their better rule)
+    // before the two-rule array is exploded: the Generate that emits
+    // the directions must sit above a TakeOrderedAndProject, or every
+    // counted pair is doubled into rules before the final top-k
+    import org.apache.spark.sql.catalyst.expressions.{CreateArray, Explode}
+    import org.apache.spark.sql.execution.{GenerateExec, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Stages extends AdaptiveSparkPlanHelper
+    Seq("rec_assoc_rules", "rec_assoc_rules_capped").foreach { name =>
+      val root = SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan
+      val expand = Stages.collect(root) {
+        case g @ GenerateExec(Explode(_: CreateArray), _, _, _, _) => g
+      }
+      assert(expand.size == 1, s"$name: expected one rule-direction Generate in:\n$root")
+      assert(Stages.collect(expand.head.child) { case t: TakeOrderedAndProjectExec => t }.nonEmpty,
+        s"$name expands rule directions before its pair top-k:\n$root")
+    }
   }
 
   test("assoc rules count each part pair once: no union, no final aggregate over a reused exchange") {

@@ -27,9 +27,9 @@ class R12WaveSpec extends SparkSpec {
 
   import HalfUp._
 
-  /** Distinct (orderkey, partkey) incidence at sf0.001, driver-side. */
-  private lazy val opInc: Seq[(Long, Long)] =
-    Tables.lineitem(spark, sf0001)
+  /** Distinct (orderkey, partkey) incidence of `dir`, driver-side. */
+  private def opInc(dir: String): Seq[(Long, Long)] =
+    Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey")).distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
@@ -41,37 +41,47 @@ class R12WaveSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
   test("rec_assoc_rules_capped equals an imperative capped recompute, exactly") {
-    val byBasket = opInc.groupBy(_._1)
-    val nBaskets = byBasket.size.toLong
-    val marg = opInc.groupBy(_._2).map { case (p, xs) => p -> xs.size.toLong }
-    // the rule-derived cap, recomputed imperatively (2× mean basket size)
-    val orderCap =
-      Recommend.ruleCap(Recommend.OrderBasketRule, opInc.size.toLong, nBaskets)
-    assert(orderCap == 8L, s"sizing rule drifted: expected cap 8 at sf0.001, got $orderCap")
-    // the cap must bite at this sf, else the twin is a no-op test
-    assert(byBasket.values.exists(_.size > orderCap),
-      s"no basket exceeds $orderCap at sf0.001 — cap untested")
-    val capped = byBasket.filter(_._2.size <= orderCap)
-    val nAb = collection.mutable.Map[(Long, Long), Long]().withDefaultValue(0L)
-    for ((_, items) <- capped) {
-      val ps = items.map(_._2).sorted
-      for (i <- ps.indices; j <- (i + 1) until ps.size)
-        nAb((ps(i), ps(j))) += 1
+    // sf0.001, and the synthetic baskets whose capped top-20 cut falls
+    // inside a run of rules tied on lift and confidence
+    TieBaskets.withDirs(spark, TieBaskets.Tied) { case Seq(ties) =>
+      Seq(sf0001 -> 8L, ties -> 4L).foreach { case (dir, cap) =>
+        val inc = opInc(dir)
+        val byBasket = inc.groupBy(_._1)
+        val nBaskets = byBasket.size.toLong
+        val marg = inc.groupBy(_._2).map { case (p, xs) => p -> xs.size.toLong }
+        // the rule-derived cap, recomputed imperatively (2× mean basket size)
+        val orderCap =
+          Recommend.ruleCap(Recommend.OrderBasketRule, inc.size.toLong, nBaskets)
+        assert(orderCap == cap, s"sizing rule drifted: expected cap $cap on $dir, got $orderCap")
+        // the cap must bite, else the twin is a no-op test
+        assert(byBasket.values.exists(_.size > orderCap),
+          s"no basket exceeds $orderCap on $dir — cap untested")
+        val capped = byBasket.filter(_._2.size <= orderCap)
+        val nAb = collection.mutable.Map[(Long, Long), Long]().withDefaultValue(0L)
+        for ((_, items) <- capped) {
+          val ps = items.map(_._2).sorted
+          for (i <- ps.indices; j <- (i + 1) until ps.size)
+            nAb((ps(i), ps(j))) += 1
+        }
+        val rules = nAb.toSeq.flatMap { case ((pa, pb), n) =>
+          Seq((pa, pb, n), (pb, pa, n))
+        }.map { case (ante, cons, n) =>
+          val na = marg(ante); val nc = marg(cons)
+          (ante, cons, n, na, nc, nBaskets,
+            n * 1000000L / na, n * nBaskets * 1000000L / (na * nc))
+        }
+        val ranked = rules.sortBy { case (a, c, _, _, _, _, conf, lift) =>
+          (-lift, -conf, a, c)
+        }
+        if (dir == ties)
+          assert(ranked(19)._7 == ranked(20)._7 && ranked(19)._8 == ranked(20)._8,
+            s"the synthetic top-20 cut is not inside a tie: ${ranked.slice(18, 22)}")
+        val got = Recommend.queries("rec_assoc_rules_capped")(spark, dir)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
+        assert(got.toSeq == ranked.take(20), s"on $dir")
+      }
     }
-    val rules = nAb.toSeq.flatMap { case ((pa, pb), n) =>
-      Seq((pa, pb, n), (pb, pa, n))
-    }.map { case (ante, cons, n) =>
-      val na = marg(ante); val nc = marg(cons)
-      (ante, cons, n, na, nc, nBaskets,
-        n * 1000000L / na, n * nBaskets * 1000000L / (na * nc))
-    }
-    val expected = rules.sortBy { case (a, c, _, _, _, _, conf, lift) =>
-      (-lift, -conf, a, c)
-    }.take(20)
-    val got = Recommend.queries("rec_assoc_rules_capped")(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
-    assert(got.toSeq == expected)
   }
 
   test("rec_item_cosine_capped equals an imperative capped recompute, exactly") {
