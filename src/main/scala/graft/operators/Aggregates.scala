@@ -928,11 +928,9 @@ object Aggregates {
     * first week trains the reference histogram. */
   private[graft] val PsiCutUs = 1704672000000000L
 
-  /** Per-window PSI against a frozen reference histogram — the kernel
-    * both `agg_psi_windows` (batch, oracled) and
-    * `streaming.PsiDriftStream` (per finalized window) run, so batch and
-    * stream monitors agree by construction. `curg` is
-    * (w_us, bin, n_cur) — windowed current counts; `ref` is (bin, n_ref).
+  /** Per-window PSI against a frozen reference histogram — the kernel of
+    * `agg_psi_windows`. `curg` is (w_us, bin, n_cur) — windowed current
+    * counts; `ref` is (bin, n_ref).
     * Laplace-smoothed shares, per-bin term round-6 → DECIMAL(18,6)
     * (module libm rule), exact decimal sum per window → double. Scale:
     * the window frame is |windows|·10 rows — time-bounded, not
@@ -966,8 +964,7 @@ object Aggregates {
   /** SLIDING-WINDOW PSI over the event stream — `agg_psi_drift`'s
     * monitoring twin on the time axis: instead of one ref-vs-current
     * snapshot, every 24-hour window (sliding 12 h, epoch-aligned — the
-    * exact alignment Spark's streaming `window()` uses, so the streaming
-    * twin shares window identity bit-for-bit) of post-cut events is
+    * exact alignment Spark's `window()` uses) of post-cut events is
     * scored against the frozen first-week reference histogram of event
     * values. The window membership is ARITHMETIC — each event lands in
     * its two covering windows via an explode over k ∈ {0,1} and

@@ -252,11 +252,10 @@ object Behavior {
       .orderBy(col("status_at_ship"), col("ship_year"))
   }
 
-  /** Typed `KeyValueGroupedDataset.mapGroups` — the batch face of the
-    * typed-state surface the streaming sessionizers use
-    * (flatMapGroupsWithState / transformWithState): per customer, the
-    * longest streak of CONSECUTIVE active months, computed imperatively
-    * over the group's sorted distinct months. Exactly the kind of run
+  /** Typed `KeyValueGroupedDataset.mapGroups` — the batch face of Spark's
+    * typed-state surface (flatMapGroupsWithState / transformWithState):
+    * per customer, the longest streak of CONSECUTIVE active months,
+    * computed imperatively over the group's sorted distinct months. Exactly the kind of run
     * logic that is natural as ~6 lines of Scala and contorted as SQL —
     * and the DuckDB gaps-and-islands oracle (m − row_number() run keys)
     * proves the imperative fold and the relational form are the same

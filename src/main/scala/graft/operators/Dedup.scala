@@ -26,9 +26,9 @@ object Dedup {
 
   /** doc_id + distinct 3-word shingles for an arbitrary (doc_id, text)
     * relation (guarded for <3-word docs; Spark's sequence() DESCENDS when
-    * stop<start, so the guard is not optional). Shared by the batch
-    * entries and the streaming admission gate so both sides shingle
-    * identically by construction. */
+    * stop<start, so the guard is not optional). Shared by the minhash
+    * entries and the admission gate, whose arrivals and corpus must
+    * shingle identically. */
   private[graft] def shingleDocs(d: DataFrame): DataFrame = {
     val toks = split(col("text"), " ")
     d.select(
@@ -91,8 +91,7 @@ object Dedup {
 
   /** bands(doc_id, band_idx, band_val) from (doc_id, shingles) — the
     * signature stage as a pure projection (no explode of shingles, no
-    * shuffle), shared by `minhashLsh`, the admission-gate entry, and the
-    * streaming gate. */
+    * shuffle), shared by `minhashLsh` and the admission-gate entry. */
   private[graft] def bandRelation(sh: DataFrame): DataFrame = {
     val sig = sh
       .select(col("doc_id"), transform(col("shingles"), g => md5(g)).as("hs"))
@@ -144,9 +143,7 @@ object Dedup {
   }
 
   /** Admission verdicts for arriving docs against a STATIC near-dup
-    * index — the kernel both `dedup_admission_gate` (batch twin) and
-    * `streaming.NearDupGateStream` (per micro-batch) run, so batch and
-    * stream verdicts agree by construction. `arrSh` is the arrivals'
+    * index — the kernel of `dedup_admission_gate`. `arrSh` is the arrivals'
     * (doc_id, shingles); `baseSh`/`baseBands` are the corpus index
     * relations (`baseBands` pre-renamed to base_id). One band equi-join
     * (work = Σ bucket², never |arrivals|·|corpus|) → exact-Jaccard verify
@@ -157,10 +154,8 @@ object Dedup {
       baseBands: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val arrBands = bandRelation(arrSh)
-    // self-exclusion: an arrival never matches its OWN id in the index —
-    // load-bearing for replay idempotence in the growing stream gate,
-    // where an at-least-once re-run judges a doc against a store that
-    // already holds it (a no-op for the batch entry's disjoint id sets)
+    // self-exclusion: an arrival never matches its OWN id in the index
+    // (a no-op for the entry, whose arrival and corpus ids are disjoint)
     val cand = arrBands.join(baseBands, Seq("band_idx", "band_val"))
       .filter(col("doc_id") =!= col("base_id"))
       .select(col("doc_id"), col("base_id")).distinct()
@@ -179,19 +174,15 @@ object Dedup {
         col("dup_of"), col("jaccard"))
   }
 
-  /** NEAR-DUP ADMISSION GATE, batch twin — the ingest-time counterpart of
+  /** NEAR-DUP ADMISSION GATE — the ingest-time counterpart of
     * the pair entries: instead of enumerating duplicate PAIRS after the
     * fact, decide per arriving document whether it may ENTER the corpus.
     * Every 10th document (doc_id % 10 == 7) plays the day's arrivals; the
     * rest are the standing corpus whose band index gates admission. A
     * rejected arrival reports its best base match (highest Jaccard, ties
     * to the lowest base id) — the provenance a data-curation pipeline
-    * logs with every drop. `streaming.NearDupGateStream` runs the
-    * IDENTICAL kernel per micro-batch (NearDupGateStreamSpec proves
-    * stream ≡ batch and slicing-invariance); this entry is the DuckDB-
-    * oracled anchor for both. Scale: the arrivals-side band join is the
-    * only wide stage — Σ bucket² like `dedup_minhash_lsh`, with the
-    * static index built once and reused across micro-batches online. */
+    * logs with every drop. Scale: the arrivals-side band join is the
+    * only wide stage — Σ bucket² like `dedup_minhash_lsh`. */
   def admissionGate(spark: SparkSession, dir: String): DataFrame = {
     val sh = shingled(spark, dir).cache()
     val isArrival = col("doc_id") % 10 === 7

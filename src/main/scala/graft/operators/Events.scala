@@ -7,11 +7,9 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Det._
 
-/** Event-stream analytics as BATCH twins — SURVEY.md §7.5 streaming
-  * extension. Structured Streaming can't be DuckDB-hash-checked, so each
-  * streaming shape ships twice: the batch formulation here (oracle'd) and
-  * the streaming formulation in graft.streaming.Streams, with a ScalaTest
-  * asserting batch ≡ stream on the same input (StreamingSpec).
+/** Event-stream analytics as batch queries over the `events` table —
+  * SURVEY.md §7.5: windowed counts, sessions, interval joins and online
+  * detectors, each written as a Catalyst plan the DuckDB oracle checks.
   *
   * Scale notes: tumbling aggregation is a plain hash-agg on (window, type)
   * — map-side partials apply. Sessionization is the gaps-and-islands
@@ -21,8 +19,7 @@ import graft.functions.Det._
   */
 object Events {
 
-  /** Tumbling 1-hour windowed aggregation (batch twin of
-    * Streams.tumblingCounts). */
+  /** Tumbling 1-hour windowed aggregation. */
   def tumblingHour(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
     e.withColumn("hour_start", date_trunc("hour", col("ts")))
@@ -35,10 +32,9 @@ object Events {
   }
 
   /** Sliding (hopping) window aggregation — 3-hour windows advancing every
-    * hour, so each event contributes to 3 overlapping windows (batch twin
-    * of Streams.slidingCounts; StreamingSpec proves batch ≡ stream). In
-    * batch this is one Expand (×3 rows, the width/slide ratio) + a hash
-    * agg; the Expand is map-side, BEFORE the shuffle, so partial
+    * hour, so each event contributes to 3 overlapping windows. This is one
+    * Expand (×3 rows, the width/slide ratio) + a hash agg; the Expand is
+    * map-side, BEFORE the shuffle, so partial
     * aggregation still collapses each task's output to |windows|·|types|
     * rows — the amplification never crosses the wire. Oracle: each event's
     * member windows enumerated with a 3-value offset cross join. */
@@ -110,8 +106,8 @@ object Events {
       .orderBy(col("window_start"))
   }
 
-  /** Sessionization with a 30-minute inactivity gap (batch twin of
-    * Streams.sessionWindows): lag → gap flag → running sum = session id. */
+  /** Sessionization with a 30-minute inactivity gap: lag → gap flag →
+    * running sum = session id. */
   def sessionization(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -295,19 +291,15 @@ object Events {
       .orderBy(col("event_id"))
   }
 
-  /** Interval join — batch twin of Streams.clickPurchaseJoin (each click
-    * matched to same-user purchases within the preceding hour), putting
-    * the 4th streaming shape under the DuckDB hash gate (StreamingSpec
-    * separately proves stream ≡ this batch formulation). Scale: that of
-    * `intervalJoin`; the time-range predicate that post-filters here is
-    * the state-eviction bound in streaming. */
+  /** Interval join: each click matched to same-user purchases within the
+    * preceding hour. Scale: that of `intervalJoin`. */
   def intervalClicks(spark: SparkSession, dir: String): DataFrame =
     intervalJoin(spark, dir, "inner")
 
   /** Clicks joined to same-user purchases in the preceding hour
-    * (`purchase_us ∈ [click_us − 1 h, click_us]`) with `joinType` — the
-    * batch form of `Streams.clickPurchaseJoin`. The join key is user_id
-    * (plain shuffle join); the time range is a post-join predicate. */
+    * (`purchase_us ∈ [click_us − 1 h, click_us]`) with `joinType`. The
+    * join key is user_id (plain shuffle join); the time range is a
+    * post-join predicate. */
   private def intervalJoin(spark: SparkSession, dir: String,
       joinType: String): DataFrame = {
     val e = Tables.events(spark, dir).withColumn("ts_us", unix_micros(col("ts")))
@@ -391,13 +383,11 @@ object Events {
       .orderBy(col("event_id"))
   }
 
-  /** LEFT-OUTER interval join — batch twin of Streams.clickPurchaseLeftJoin:
-    * every click survives; clicks with no same-user purchase in the
-    * preceding hour carry null purchase columns. In streaming those null
-    * rows are emitted when the watermark closes the click's match interval;
-    * here they fall out of a plain left join under the same predicate.
-    * Scale: that of `intervalJoin` — shuffle join on user_id, the range
-    * predicate post-filters (and in streaming bounds state). */
+  /** LEFT-OUTER interval join: every click survives; clicks with no
+    * same-user purchase in the preceding hour carry null purchase columns,
+    * from a plain left join under the same predicate. Scale: that of
+    * `intervalJoin` — shuffle join on user_id, the range predicate
+    * post-filters. */
   def intervalClicksLeft(spark: SparkSession, dir: String): DataFrame =
     intervalJoin(spark, dir, "left_outer")
 
@@ -866,9 +856,7 @@ object Events {
     * detector may not let the current hour contaminate its own baseline.
     * The spike test is division-free: n > 3·ewma_prev ⇔ n·wsum > 3·num,
     * exact bigints end to end. Warm-up hours (no prior history) emit
-    * NULL baseline and false spike — LEFT join, never dropped. Shared by
-    * the oracled batch entry and `streaming.EwmaAnomalyStream`, so batch
-    * and stream verdicts agree by construction. */
+    * NULL baseline and false spike — LEFT join, never dropped. */
   private[graft] def ewmaPrevVerdicts(cur: DataFrame, hist: DataFrame): DataFrame = {
     val W = 20
     val past = hist.select(col("event_type").as("et2"),
@@ -891,10 +879,7 @@ object Events {
     * `events_rate_anomaly` (whose z-test reads the WHOLE timeline's
     * stats, a retrospective audit): each hour is judged only against the
     * EWMA of its strictly-prior 20 hours, the decision an alerting
-    * system could actually have made at the time. `streaming.
-    * EwmaAnomalyStream` runs the IDENTICAL kernel per micro-batch over
-    * an accumulating finalized-hour store (EwmaAnomalyStreamSpec proves
-    * batch ≡ stream); this entry is the DuckDB-oracled anchor. */
+    * system could actually have made at the time. */
   def ewmaAnomaly(spark: SparkSession, dir: String): DataFrame = {
     val hourly = hourlyByType(spark, dir)
       .cache() // both sides of the strictly-prior self-join

@@ -703,9 +703,9 @@ object Similarity {
     * `codebook(code, pq_centroid)`, `cells(vec_id, cell)`,
     * `codes(vec_id, m, code)`. The quantizers depend only on the corpus
     * and `cells`, never on the nprobe/refineT serving knobs, so every
-    * caller (the ANN entries, the index lifecycle entries, the streaming
-    * server, Probe's recall sweeps) reads one artifact instead of
-    * re-running two KMeans fits and the corpus encode. This is the
+    * caller (the ANN entries, the index lifecycle entries, Probe's recall
+    * sweeps) reads one artifact instead of re-running two KMeans fits and
+    * the corpus encode. This is the
     * build/serve split a deployed ANN index banks on (`sim_index_serve`
     * measures it). Longs and doubles round-trip parquet exactly, so
     * served results are identical to a train-per-call path. The version
@@ -771,10 +771,10 @@ object Similarity {
       centroids, codebook, cells, codes, nprobe, refineT)
 
   /** The same serving plan with the QUERY relation decoupled from the
-    * corpus — the online-serving shape: `q(q_id, qv)` may be a micro-batch
-    * of fresh queries (see `streaming.AnnServeStream`) while corpus +
-    * index relations stay static. Self-matches are excluded by id, which
-    * only bites when queries ARE corpus vectors (the offline twin). */
+    * corpus — the online-serving shape: `q(q_id, qv)` may be any batch of
+    * fresh queries while corpus + index relations stay static.
+    * Self-matches are excluded by id, which only bites when queries ARE
+    * corpus vectors (the offline twin). */
   private[graft] def serveIvfPqQueries(q: DataFrame, corpus: DataFrame,
       centroids: DataFrame, codebook: DataFrame, cells: DataFrame,
       codes: DataFrame, nprobe: Int, refineT: Int): DataFrame = {
@@ -890,8 +890,8 @@ object Similarity {
     serveIvfPqIndex(spark, dir, idx, nprobe, refineT)
   }
 
-  /** The BUILD half of [[knnIvfPqServed]], callable on its own (the
-    * streaming server needs the index without the offline query batch):
+  /** The BUILD half of [[knnIvfPqServed]], callable on its own (a server
+    * needs the index without the offline query batch):
     * the [[ivfPqIndex]] at the corpus-scaled cell count. Returns
     * (indexPath, nprobe, refineT) at the corpus-scaled parameters. */
   private[graft] def ensureIvfPqIndex(spark: SparkSession,

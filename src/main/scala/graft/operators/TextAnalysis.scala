@@ -1413,51 +1413,16 @@ object TextAnalysis {
     * the standard industrial decontamination shape, linear in corpus size
     * with shuffle bounded by |distinct shingles|. The injected exact dups
     * make cross-split contamination non-empty by construction. */
-  /** The guarded 5-word md5 shingle array shared by the batch entry and
-    * the streaming admission gate — one definition so the two faces of
-    * the decontamination kernel can't silently diverge. */
-  private def shingleArr5: org.apache.spark.sql.Column = {
+  def contamination(spark: SparkSession, dir: String): DataFrame = {
     val toks = split(col("text"), " ")
-    when(size(toks) >= 5,
+    val shingles = when(size(toks) >= 5,
       array_distinct(transform(sequence(lit(1), size(toks) - 4),
         i => md5(array_join(slice(toks, i, lit(5)), " ")))))
       .otherwise(array().cast("array<string>"))
-  }
-
-  /** The training side's DISTINCT shingle hash set (content-hash split
-    * rule: md5 first hex e/f is held-out, the rest trains) — built once
-    * and cached by the streaming gate, recomputed in-plan by the batch
-    * entry. */
-  private[graft] def trainShingleSet(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .filter(!substring(md5(col("text")), 1, 1).isin("e", "f"))
-      .select(explode(shingleArr5).as("g"))
-      .distinct()
-
-  /** Per-arrival contamination verdicts against a standing train-shingle
-    * set — the kernel `ContaminationGateStream` runs per micro-batch and
-    * ContaminationGateStreamSpec equates with the batch entry: a doc is
-    * `contaminated` iff ANY of its 5-gram shingles appears in the train
-    * set (one semi-join + distinct, bounded by the arrival's shingle
-    * count — never corpus×arrivals). */
-  private[graft] def contaminationVerdicts(arrivals: DataFrame,
-                                           trainShingles: DataFrame): DataFrame = {
-    val sh = arrivals.select(col("doc_id"), col("source"), shingleArr5.as("sh"))
-    val hits = sh.select(col("doc_id"), explode(col("sh")).as("g"))
-      .join(trainShingles, Seq("g"), "left_semi")
-      .select(col("doc_id")).distinct()
-      .withColumn("hit", lit(true))
-    sh.join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"),
-        size(col("sh")).cast("long").as("n_shingles"),
-        when(col("hit").isNotNull, "contaminated").otherwise("clean").as("verdict"))
-  }
-
-  def contamination(spark: SparkSession, dir: String): DataFrame = {
     val sh = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
         substring(md5(col("text")), 1, 1).as("hx"),
-        shingleArr5.as("sh"))
+        shingles.as("sh"))
       .cache() // feeds both split sides and the denominator
     val isEval = col("hx").isin("e", "f")
     val train = sh.filter(!isEval)

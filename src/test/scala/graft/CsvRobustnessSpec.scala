@@ -16,11 +16,16 @@ import org.apache.spark.sql.functions._
   */
 class CsvRobustnessSpec extends SparkSpec {
 
+  private val csvDir = Files.createTempDirectory("graft_csv_bad")
   private lazy val csvFile = {
-    val d = Files.createTempDirectory("graft_csv_bad")
-    val f = d.resolve("data.csv")
+    val f = csvDir.resolve("data.csv")
     Files.writeString(f, "id,amount\n1,10.5\n2,not_a_number\n3,7.25\n")
     f.toString
+  }
+
+  override protected def afterAll(): Unit = {
+    try TempDirs.remove(csvDir)
+    finally super.afterAll()
   }
 
   test("PERMISSIVE quarantines the malformed row in the corrupt-record column") {

@@ -185,6 +185,31 @@ class DedupConsistencySpec extends SparkSpec {
     assert(candidates > 0, "fixture has no near-dup collisions to measure")
     assert(candidates * 10 < allPairs,
       s"band join examined >10% of all pairs: $candidates vs $allPairs")
+    // six planted arrivals, ids above any corpus doc_id: exact copies of
+    // three corpus docs are rejected at jaccard 1 against a corpus doc; a
+    // word-reversed copy (no shared 3-word shingle: word order is part of
+    // near-dup identity), a fresh out-of-vocabulary doc and a sub-3-word
+    // doc (no shingles, so no band collides) are admitted
+    import spark.implicits._
+    val idBase = 1L << 41
+    val copies = Tables.documents(spark, sf).filter(!isArr)
+      .orderBy(col("doc_id")).limit(3).select(col("text")).as[String].collect().toSeq
+    val planted = copies ++ Seq(copies.head.split(" ").reverse.mkString(" "),
+      "zxqv wbfk pltm djrn ghsc", "two words")
+    val arrSh = Dedup.shingleDocs(
+      planted.zipWithIndex.map { case (t, i) => (idBase + i, t) }.toDF("doc_id", "text"))
+    val verdicts = Dedup.gateVerdicts(arrSh, sh.filter(!isArr), baseBands).collect()
+      .map(r => (r.getAs[Long]("doc_id") - idBase).toInt -> r).toMap
+    (0 until 3).foreach { i =>
+      val v = verdicts(i)
+      assert(v.getAs[String]("verdict") == "reject", s"exact copy $i was admitted")
+      assert(v.getAs[Double]("jaccard") == 1.0,
+        s"copy $i jaccard ${v.getAs[Double]("jaccard")}, want 1.0")
+      assert(v.getAs[Long]("dup_of") < idBase, "dup_of must point into the corpus")
+    }
+    Seq(3 -> "reversed-word", 4 -> "fresh OOV", 5 -> "sub-3-word").foreach { case (i, what) =>
+      assert(verdicts(i).getAs[String]("verdict") == "admit", s"$what doc was rejected")
+    }
     sh.unpersist()
   }
 }

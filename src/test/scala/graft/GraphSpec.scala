@@ -191,17 +191,12 @@ class GraphSpec extends SparkSpec {
 
   test("k-hop distances follow a rewrite of lineitem within one session") {
     // a private copy of lineitem, so the spec can rewrite it in place
-    val dir = Files.createTempDirectory("graph_stale_input")
-    val li = dir.resolve("lineitem.parquet")
-    Files.copy(Paths.get(s"$sf0001/lineitem.parquet"), li)
-    def rm(f: File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete()
-    }
-    def dist(s: SparkSession): Seq[(Long, Long)] =
-      Graph.khopDistance(s, dir.toString).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toSeq
-    try {
+    TempDirs.withDir("graph_stale_input") { dir =>
+      val li = dir.resolve("lineitem.parquet")
+      Files.copy(Paths.get(s"$sf0001/lineitem.parquet"), li)
+      def dist(s: SparkSession): Seq[(Long, Long)] =
+        Graph.khopDistance(s, dir.toString).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toSeq
       val before = dist(spark)
       // drop supplier 1 — one of the BFS seeds — and publish the smaller
       // file under the same name
@@ -215,13 +210,6 @@ class GraphSpec extends SparkSpec {
         "the session served distances computed from the old lineitem")
       assert(after.nonEmpty && after != before,
         "dropping a seed supplier should change, not empty, the distances")
-    } finally {
-      rm(dir.toFile)
-      // every scratch memo built over the private copy, whatever its tag
-      val copyKey = Tables.scratchName("", dir.toString).stripPrefix("graft_")
-      Option(new File(sys.props("java.io.tmpdir")).listFiles()).toSeq.flatten
-        .filter(f => f.getName.startsWith("graft_") && f.getName.contains(copyKey))
-        .foreach(rm)
     }
   }
 }

@@ -463,13 +463,19 @@ class IndependentRecomputeSpec2 extends SparkSpec {
 
   import HalfUp._
 
-  test("zipf fit equals a driver OLS over an independently tokenized head") {
+  /** Token frequencies of the sf0.001 corpus, tokenized on the driver as
+    * the text entries do: split on single spaces, empties dropped. */
+  private lazy val tokenFreq: Map[String, Long] = {
     val freq = scala.collection.mutable.HashMap.empty[String, Long]
     Tables.documents(spark, sf0001).select(col("text")).collect().foreach { r =>
       r.getString(0).split(" ").filter(_.nonEmpty)
         .foreach(w => freq(w) = freq.getOrElse(w, 0L) + 1L)
     }
-    val top = freq.toSeq.sortBy { case (w, f) => (-f, w) }.take(32)
+    freq.toMap
+  }
+
+  test("zipf fit equals a driver OLS over an independently tokenized head") {
+    val top = tokenFreq.toSeq.sortBy { case (w, f) => (-f, w) }.take(32)
     val pts = top.zipWithIndex.map { case ((_, f), i) =>
       (math.log((i + 1).toDouble), math.log(f.toDouble))
     }
@@ -488,6 +494,18 @@ class IndependentRecomputeSpec2 extends SparkSpec {
       s"slope ${row.getAs[Double]("zipf_slope")} vs independent $slope")
     assert(math.abs(row.getAs[Double]("intercept") - intercept) < 1e-5)
     assert(math.abs(row.getAs[Double]("r2") - r2) < 1e-5)
+  }
+
+  test("heavy hitters equal the exact token set with cnt·33 > n") {
+    // the entry's Misra–Gries pass only nominates candidates; its exact
+    // recount must keep precisely the tokens above 3% of all tokens
+    val n = tokenFreq.values.sum
+    val truth = tokenFreq.filter { case (_, c) => c * 33 > n }
+    assert(truth.nonEmpty, "fixture lost its heavy hitters — check the corpus")
+    val got = TextAnalysis.queries("text_heavy_hitters")(spark, sf0001).collect()
+      .map(r => r.getAs[String]("token") -> r.getAs[Long]("cnt")).toMap
+    assert(got == truth,
+      s"extra=${got.keySet -- truth.keySet} missing=${truth.keySet -- got.keySet}")
   }
 
   test("hourly EWMA equals an imperative dyadic-weight recompute, exactly") {

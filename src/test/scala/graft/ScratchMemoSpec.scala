@@ -38,13 +38,8 @@ class ScratchMemoSpec extends SparkSpec {
       .filter(_.getName.startsWith(prefix))
   }
 
-  private def rm(f: File): Unit = {
-    Option(f.listFiles()).toSeq.flatten.foreach(rm)
-    f.delete()
-  }
-
   override protected def afterAll(): Unit = {
-    try { leftovers().foreach(rm); rm(new File(dir)) }
+    try TempDirs.remove(Paths.get(dir))
     finally super.afterAll()
   }
 
@@ -156,30 +151,17 @@ class ScratchMemoSpec extends SparkSpec {
     assert(new File(s"$expected/_SUCCESS").exists())
   }
 
-  /** The key every scratch memo built over the data dir `d` carries,
-    * whatever its tag. */
-  private def copyKey(d: Path): String =
-    Tables.scratchName("", d.toString).stripPrefix("graft_")
-
-  private def memosOver(d: Path): Seq[File] =
-    Option(new File(sys.props("java.io.tmpdir")).listFiles()).toSeq.flatten
-      .filter(m => m.getName.startsWith("graft_") && m.getName.contains(copyKey(d)))
-
   /** `f` on a private copy of `tables`; afterwards every scratch memo
     * built over the copy and every catalog table named after one are
     * removed. */
-  private def onCopy[A](tables: String*)(f: Path => A): A = {
-    val d = Files.createTempDirectory("scratch_memo_spec_rewrite")
-    tables.foreach(t => Files.copy(Paths.get(s"$sf0001/$t.parquet"), d.resolve(s"$t.parquet")))
-    try f(d)
-    finally {
-      rm(d.toFile)
-      memosOver(d).foreach(rm)
-      spark.catalog.listTables().collect().map(_.name)
-        .filter(_.toLowerCase.contains(copyKey(d).toLowerCase))
+  private def onCopy[A](tables: String*)(f: Path => A): A =
+    TempDirs.withDir("scratch_memo_spec_rewrite") { d =>
+      tables.foreach(t => Files.copy(Paths.get(s"$sf0001/$t.parquet"), d.resolve(s"$t.parquet")))
+      try f(d)
+      finally spark.catalog.listTables().collect().map(_.name)
+        .filter(_.toLowerCase.contains(TempDirs.memoKey(d).toLowerCase))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     }
-  }
 
   /** Replaces `table` in the copy `d` by `f` of it, as one parquet file
     * under the same name. */
@@ -218,7 +200,7 @@ class ScratchMemoSpec extends SparkSpec {
         s"the bucketed join shuffles its inputs:\n$plan")
       // memos removed and rebuilt under the same keys: the session's
       // registered tables must list the new files, not the deleted ones
-      memosOver(d).foreach(rm)
+      TempDirs.memosOver(d).foreach(TempDirs.rm)
       assert(Joins.bucketedRevenue(spark, dir).collect().toSeq == after)
     }
   }

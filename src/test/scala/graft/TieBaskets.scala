@@ -1,7 +1,7 @@
 package graft
 
 import java.io.File
-import java.nio.file.{Files, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
 
 import org.apache.spark.sql.SparkSession
 
@@ -39,35 +39,22 @@ object TieBaskets {
 
   /** `f` on fresh dirs holding `layouts`; afterwards the dirs and every
     * scratch memo built over them are removed. */
-  def withDirs[A](spark: SparkSession, layouts: Seq[Seq[Long]]*)(f: Seq[String] => A): A = {
-    val dirs = layouts.map(write(spark, _))
-    try f(dirs) finally dirs.foreach(cleanUp)
-  }
+  def withDirs[A](spark: SparkSession, layouts: Seq[Seq[Long]]*)(f: Seq[String] => A): A =
+    if (layouts.isEmpty) f(Nil)
+    else TempDirs.withDir("tie_baskets") { d =>
+      write(spark, d, layouts.head)
+      withDirs(spark, layouts.tail: _*)(ds => f(d.toString +: ds))
+    }
 
-  /** Writes one dir (one parquet file, like the harness tables) under the
-    * scratch root and returns its path. */
-  private def write(spark: SparkSession, baskets: Seq[Seq[Long]]): String = {
+  /** Writes the baskets into `d` as one parquet file, like the harness
+    * tables. */
+  private def write(spark: SparkSession, d: Path, baskets: Seq[Seq[Long]]): Unit = {
     import spark.implicits._
     val rows = baskets.zipWithIndex.flatMap { case (ps, o) => ps.map(p => (o + 1L, p)) }
-    val d = Files.createTempDirectory("tie_baskets")
     val out = d.resolve("lineitem_parts").toString
     rows.toDF("l_orderkey", "l_partkey").coalesce(1).write.parquet(out)
     val part = new File(out).listFiles().filter(_.getName.endsWith(".parquet")).head
     Files.move(part.toPath, d.resolve("lineitem.parquet"), StandardCopyOption.ATOMIC_MOVE)
-    remove(new File(out))
-    d.toString
-  }
-
-  private def cleanUp(dir: String): Unit = {
-    val key = Tables.scratchName("", dir).stripPrefix("graft_")
-    Option(new File(sys.props("java.io.tmpdir")).listFiles()).toSeq.flatten
-      .filter(m => m.getName.startsWith("graft_") && m.getName.contains(key))
-      .foreach(remove)
-    remove(new File(dir))
-  }
-
-  private def remove(f: File): Unit = {
-    Option(f.listFiles()).toSeq.flatten.foreach(remove)
-    f.delete()
+    TempDirs.rm(new File(out))
   }
 }

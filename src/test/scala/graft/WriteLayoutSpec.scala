@@ -16,13 +16,19 @@ class WriteLayoutSpec extends SparkSpec {
 
   // shared fixture: written once on first access, so each test is
   // self-contained (no hidden test-ordering dependency)
+  private val layoutDir = Files.createTempDirectory("graft_layout_orders")
   private lazy val layoutPath: String = {
-    val out = Files.createTempDirectory("graft_layout_orders").toString
+    val out = layoutDir.toString
     Tables.orders(spark, sf0001)
       .repartitionByRange(4, col("o_orderdate"))
       .sortWithinPartitions(col("o_orderdate"))
       .write.mode("overwrite").parquet(out)
     out
+  }
+
+  override protected def afterAll(): Unit = {
+    try TempDirs.remove(layoutDir)
+    finally super.afterAll()
   }
 
   test("repartitionByRange + sortWithinPartitions yields disjoint per-file key ranges") {
@@ -60,19 +66,21 @@ class WriteLayoutSpec extends SparkSpec {
     // wide structs are how multimodal/feature tables nest metadata; at
     // 100 TB reading the whole struct for one field multiplies scan IO —
     // Catalyst's nested-schema pruning must reach the parquet ReadSchema
-    val out = Files.createTempDirectory("graft_nested_orders").toString
-    Tables.orders(spark, sf0001)
-      .select(col("o_orderkey"),
-        struct(
-          col("o_totalprice").as("price"),
-          col("o_orderpriority").as("prio"),
-          col("o_orderstatus").as("note")).as("info"))
-      .write.mode("overwrite").parquet(out)
-    val q = spark.read.parquet(out)
-      .select(col("o_orderkey"), col("info.price"))
-      .filter(col("o_orderkey") > 0)
-    val plan = q.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    val plan = TempDirs.withDir("graft_nested_orders") { d =>
+      val out = d.toString
+      Tables.orders(spark, sf0001)
+        .select(col("o_orderkey"),
+          struct(
+            col("o_totalprice").as("price"),
+            col("o_orderpriority").as("prio"),
+            col("o_orderstatus").as("note")).as("info"))
+        .write.mode("overwrite").parquet(out)
+      val q = spark.read.parquet(out)
+        .select(col("o_orderkey"), col("info.price"))
+        .filter(col("o_orderkey") > 0)
+      q.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    }
     val readSchema = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(readSchema.contains("price"), s"pruned away the needed field: $readSchema")
     assert(!readSchema.contains("note") && !readSchema.contains("prio"),

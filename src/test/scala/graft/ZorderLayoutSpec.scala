@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.Layout
@@ -36,15 +34,14 @@ class ZorderLayoutSpec extends SparkSpec {
               (col("l_orderkey") % 256).as("sx"))
       .withColumn("z", Layout.zkey(col("px"), col("sx")))
 
-    val zPath = Files.createTempDirectory("graft_layout_zorder").toString
-    val pPath = Files.createTempDirectory("graft_layout_partsort").toString
-    base.repartitionByRange(16, col("z")).sortWithinPartitions(col("z"))
-      .drop(col("z")).write.mode("overwrite").parquet(zPath)
-    base.repartitionByRange(16, col("px")).sortWithinPartitions(col("px"))
-      .drop(col("z")).write.mode("overwrite").parquet(pPath)
-
-    val (zwPx, zwSx) = meanWidths(zPath)
-    val (pwPx, pwSx) = meanWidths(pPath)
+    def widths(prefix: String, key: String): (Double, Double) =
+      TempDirs.withDir(prefix) { d =>
+        base.repartitionByRange(16, col(key)).sortWithinPartitions(col(key))
+          .drop(col("z")).write.mode("overwrite").parquet(d.toString)
+        meanWidths(d.toString)
+      }
+    val (zwPx, zwSx) = widths("graft_layout_zorder", "z")
+    val (pwPx, pwSx) = widths("graft_layout_partsort", "px")
 
     val globalSx = base.agg(max(col("sx")) - min(col("sx"))).head().getLong(0)
 
