@@ -168,8 +168,8 @@ object DataGen {
     // bijective per-copy token renaming (copy 0 untouched). Empty /
     // whitespace-only text stays verbatim across copies: split("", " ")
     // yields [""], so renaming would turn a 0-token doc into a "_cK"
-    // 1-token doc and break the per-copy shingle isomorphism (ADVICE r11
-    // #5) — a doc with no tokens has no shingles to preserve anyway.
+    // 1-token doc and break the per-copy shingle isomorphism — a doc
+    // with no tokens has no shingles to preserve anyway.
     amp("documents")(df => {
       val renamed =
         when(col("copy") === 0 || trim(col("text")) === "", col("text")).otherwise(

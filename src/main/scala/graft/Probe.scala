@@ -146,8 +146,8 @@ object Probe {
       for (pass <- Seq("cold", "warm"))
         each("SPARK_GRAFT_TIME")((name, s, fn) => time(s"$name $pass")(fn(s, dir).count()))
     } else if (sys.env.contains("SPARK_GRAFT_EXPLAIN_FMT")) {
-      // `.explain("formatted")` dump for the optimization-round plan
-      // artifacts (plans/r13/<query>_{before,after}.txt): prints each
+      // `.explain("formatted")` dump for before/after plan comparisons
+      // of an optimization, one file per entry: prints each
       // entry's formatted physical plan between BEGIN/END markers so a
       // shell loop can split them into files. Pre-execution (initial AQE
       // plan) — the same thing explain() shows a user, and stable across

@@ -1231,7 +1231,7 @@ object Aggregates {
       lit(2.0) * b1 * b2 * col("s12").cast("double")
     // clamp: the moment-expanded SSE cancels large doubles and can round
     // to a tiny negative on a near-perfect fold; Spark sqrt(neg) = NaN but
-    // DuckDB errors, so both engines clamp to 0 (ADVICE r11 #3)
+    // DuckDB errors, so both engines clamp to 0 and agree on that fold
     val sse = greatest(col("syy").cast("double") -
       lit(2.0) * (b0 * col("sy").cast("double") +
         b1 * col("sx1y").cast("double") + b2 * col("sx2y").cast("double")) +

@@ -61,7 +61,7 @@ object Dedup {
     * corpus generation, every similarity join reads the index. */
   private def rareIndex(spark: SparkSession, dir: String): DataFrame =
     Tables.scratchRelation(spark, dir, "dedup_rare_ex", Seq("documents"),
-        s"df${MaxShingleDf}_sh3") { // key carries the df cap + shingle width (ADVICE r11 #1)
+        s"df${MaxShingleDf}_sh3") { // key carries the df cap + shingle width: a change rebuilds
       val exAll = shingled(spark, dir)
         .select(col("doc_id"), explode(col("shingles")).as("g"))
       val rare = exAll.groupBy(col("g"))
@@ -575,8 +575,8 @@ object Dedup {
       .groupBy(col("thr"))
       .agg(count(lit(1)).as("n_docs_dropped"),
         sum(col("n_chars")).as("chars_dropped"))
-    // the output is DRIVEN from the literal threshold relation (ADVICE r11
-    // #4): a threshold with zero surviving pairs must still report a 0-row
+    // the output is DRIVEN from the literal threshold relation: a
+    // threshold with zero surviving pairs must still report a 0-row
     // curve point, not vanish from the budgeting readout. Joining on the
     // DOUBLE thr is safe here by construction — every thr on the agg side
     // is the identical literal bits broadcast from this same relation.

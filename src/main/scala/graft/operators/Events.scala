@@ -511,7 +511,7 @@ object Events {
     * (`div`, truncating; both operands are non-negative so truncation ==
     * floor). Oracle-side the quotient is taken in HUGEINT, because
     * DuckDB's `//` on DECIMAL operands silently returns DOUBLE — lossy
-    * above 2^53, a sibling of the div-portability rule in the ADVICE log.
+    * above 2^53 (integer division is spelled per engine throughout).
     * One lead() window and one hash-agg, both partitioned on
     * user_id; output is |users|-bounded. */
   def timeWeightedAvg(spark: SparkSession, dir: String): DataFrame = {

@@ -1082,7 +1082,7 @@ object Multimodal {
     * before transcription to drop silence. The DuckDB oracle recomputes
     * every window analytically from the envelope formula (|±env| = env),
     * so a parser slip, a window-boundary error, or an energy-sum overflow
-    * all break the hash; R11WaveSpec additionally re-parses a sample of
+    * all break the hash; OperatorSpec additionally re-parses a sample of
     * WAVs through javax.sound.sampled (a second, independent parser) and
     * demands identical window sums. Scale: 1→N flatMap per media row,
     * synthesis+parse state per partition — the mm_audio_features shape. */

@@ -188,7 +188,7 @@ object Recommend {
     * body: order baskets 2.0× mean (cap 8 at all SFs — drops 29/296/3203
     * baskets at sf0.001/0.01/0.1), customer baskets 1.5× mean (cap
     * 53/59/59 vs max 66/90/105 — drops 13/128/1332), part audiences 1.4×
-    * mean (cap 37/41/41 vs max 39/49/53 — drops 3/30/432). R13WaveSpec
+    * mean (cap 37/41/41 vs max 39/49/53 — drops 3/30/432). RecommendRecomputeSpec
     * re-proves the bite imperatively at sf0.001. */
   private[graft] val OrderBasketRule = MeanCap(2, 1)
   private[graft] val CustBasketRule = MeanCap(3, 2)

@@ -694,7 +694,7 @@ object TextAnalysis {
     // (r11; strings/longs, parquet-exact); scoring still scans the full
     // transition stream per call, the honest corpus-sized cost
     val refBi = Tables.scratchRelation(spark, dir, "ccnet_ref_bi",
-        Seq("documents"), "tok1") { // tokenization rules are part of the key (ADVICE r11 #1)
+        Seq("documents"), "tok1") { // tokenization rules are part of the key: a new rule rebuilds
       trans.filter(col("lang") === "en")
         .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
     }

@@ -6,7 +6,11 @@ import graft.operators.Dedup
   * implementations over the same corpus, so set-algebra relations between
   * their outputs are theorems, not coincidences — stronger evidence than
   * any single oracle because a bug would have to break two pipelines in
-  * the same way to pass.
+  * the same way to pass. The sf0.001 pins below add the threshold and
+  * sizing readouts: the ROI curve against the exact pair set, the capped
+  * and level-refined embedding LSH as subsets of their wider twins, and
+  * the LSH sizing curve against brute-force pairs over the collected
+  * documents ([[BaseRows]]).
   */
 class DedupConsistencySpec extends SparkSpec {
 
@@ -198,7 +202,14 @@ class DedupConsistencySpec extends SparkSpec {
       "zxqv wbfk pltm djrn ghsc", "two words")
     val arrSh = Dedup.shingleDocs(
       planted.zipWithIndex.map { case (t, i) => (idBase + i, t) }.toDF("doc_id", "text"))
-    val verdicts = Dedup.gateVerdicts(arrSh, sh.filter(!isArr), baseBands).collect()
+    // the base side also holds a sub-3-word doc: a doc without shingles
+    // has null minhash lanes, which never equal a band value, so the
+    // planted "two words" arrival must not collide with it
+    val base = sh.filter(!isArr).unionByName(Dedup.shingleDocs(
+      Seq((idBase + planted.length, "lone pair")).toDF("doc_id", "text")))
+    val gateBands = Dedup.bandRelation(base)
+      .select(col("doc_id").as("base_id"), col("band_idx"), col("band_val"))
+    val verdicts = Dedup.gateVerdicts(arrSh, base, gateBands).collect()
       .map(r => (r.getAs[Long]("doc_id") - idBase).toInt -> r).toMap
     (0 until 3).foreach { i =>
       val v = verdicts(i)
@@ -211,5 +222,116 @@ class DedupConsistencySpec extends SparkSpec {
       assert(verdicts(i).getAs[String]("verdict") == "admit", s"$what doc was rejected")
     }
     sh.unpersist()
+  }
+
+  test("dedup_roi_curve 0.7 row counts the ngram-jaccard pair set; measures are threshold-monotone") {
+    val rows = Dedup.queries("dedup_roi_curve")(spark, sf0001).collect()
+      .map(r => (r.getAs[Double]("thr"), r.getAs[Long]("n_pairs"),
+        r.getAs[Long]("n_docs_dropped"), r.getAs[Long]("chars_dropped")))
+      .sortBy(_._1)
+    val jacPairs = Dedup.queries("dedup_ngram_jaccard")(spark, sf0001).count()
+    assert(rows.find(_._1 == 0.7).get._2 == jacPairs)
+    for (Array(lo, hi) <- rows.sliding(2).map(_.toArray)) {
+      assert(lo._2 >= hi._2 && lo._3 >= hi._3 && lo._4 >= hi._4,
+        s"non-monotone: $lo -> $hi")
+    }
+    // the curve must actually discriminate on this corpus (not flat)
+    assert(rows.head._2 > rows.last._2)
+  }
+
+  test("LSH sizing curve equals a driver S-curve recompute over brute-force pairs") {
+    val docs = BaseRows.documents.map(d => (d.docId, d.text))
+    val shingles = docs.map { case (id, text) =>
+      val ws = text.split(" ", -1)
+      val sh = if (ws.length >= 3) ws.sliding(3).map(_.mkString(" ")).toSet
+               else Set.empty[String]
+      id -> sh
+    }.toMap
+    // brute-force all-pairs sharing >= 1 shingle (df cap is a no-op here,
+    // pinned elsewhere) — a different pair generator than the inverted index
+    val ids = shingles.keys.toSeq.sorted
+    val pairSims = for {
+      i <- ids.indices; j <- (i + 1) until ids.length
+      a = shingles(ids(i)); b = shingles(ids(j))
+      inter = (a & b).size
+      if inter > 0
+    } yield inter.toDouble / (a.size + b.size - inter)
+    val expected = Dedup.LshCurveConfigs.map { case (bnd, r) =>
+      val terms = pairSims.map { s =>
+        // mirror the entry's left-assoc chains exactly
+        var sr = s; for (_ <- 2 to r) sr *= s
+        val q = 1.0 - sr
+        var qb = q; for (_ <- 2 to bnd) qb *= q
+        1.0 - qb
+      }
+      (bnd.toLong, r.toLong, terms.length.toLong,
+        terms.count(_ > 0.5).toLong,
+        terms.map(HalfUp.round9).sum.toDouble)
+    }
+    val rows = Dedup.queries("dedup_lsh_curve")(spark, sf0001).collect()
+      .map(r => (r.getAs[Int]("bands").toLong, r.getAs[Int]("rows_per_band").toLong,
+        r.getAs[Long]("n_pairs"), r.getAs[Long]("n_likely"),
+        r.getAs[Double]("expected_cands"))).toSeq
+    rows.zip(expected).foreach { case (g, e) =>
+      assert(g._1 == e._1 && g._2 == e._2)
+      assert(g._3 == e._3, s"config ${g._1}x${g._2} n_pairs ${g._3} vs ${e._3}")
+      assert(g._4 == e._4, s"config ${g._1}x${g._2} n_likely")
+      assert(math.abs(g._5 - e._5) < 1e-7, s"config ${g._1}x${g._2} expected_cands")
+    }
+  }
+
+  test("occupancy-capped LSH pairs are a subset of uncapped and the cap bites") {
+    import org.apache.spark.sql.functions._
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_a", "vec_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val uncapped = pairs(Dedup.embeddingLshWith(spark, sf0001))
+    val capped = pairs(Dedup.embeddingLshCapped(spark, sf0001))
+    assert(capped.subsetOf(uncapped)) // dropping buckets can only remove candidates
+    assert(pairs(Dedup.queries("dedup_embedding_lsh")(spark, sf0001)) == uncapped)
+    // the occupancy rule (13n DIV 320), evaluated imperatively
+    val occCap = Dedup.embOccupancyCap(BaseRows.embeddings.length.toLong)
+    // the rule BITES at this sf: over-cap buckets exist (recomputed from
+    // the entry's own sign-band definition, so the bands stay in Spark)
+    import graft.functions.VectorOps
+    val e = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val bands = e.select(col("vec_id"), explode(array(
+      (0 until Dedup.EmbBands).map(b => struct(
+        lit(b).as("band_idx"),
+        VectorOps.signBand(col("v"), b, Dedup.EmbBandBits).as("band_val"))): _*
+    )).as("band")).select(col("band.band_idx"), col("band.band_val"))
+    val overCap = bands.groupBy(col("band_idx"), col("band_val"))
+      .agg(count(lit(1)).as("bsz")).filter(col("bsz") > occCap).count()
+    assert(overCap > 0, s"no bucket exceeds the occupancy cap $occCap at sf0.001 — rule untested")
+  }
+
+  test("embedding-LSH band-width level rule: boundaries + AND-construction refinement") {
+    import org.apache.spark.sql.functions.col
+    // the level thresholds, imperatively (what the in-plan CASE mirrors)
+    assert(Dedup.embBandLevel(6400L) == 1 && Dedup.embBandLevel(6401L) == 2)
+    assert(Dedup.embBandLevel(65536L) == 2 && Dedup.embBandLevel(65537L) == 3)
+    assert(Dedup.embBandLevel(2097152L) == 3 && Dedup.embBandLevel(2097153L) == 4)
+    // occupancy cap follows the level's bucket space
+    assert(Dedup.embOccupancyCap(2000L) == 2000L * 13 / 320)
+    assert(Dedup.embOccupancyCap(20000L) == 20000L * 13 / 10240)
+    assert(Dedup.embOccupancyCap(300000L) == 300000L * 13 / 327680)
+    assert(Dedup.embOccupancyCap(3000000L) == 3000000L * 13 / 10485760)
+    // widening the key can only REFINE buckets: level-2 pairs are a
+    // subset of level-1 pairs on the same corpus (the AND-construction
+    // property the sizing rule relies on), and both levels find pairs
+    def pairs(l: Int) = Dedup.embeddingLshWith(spark, sf0001,
+        forceLevel = Some(l))
+      .select(col("vec_a"), col("vec_b")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val p1 = pairs(1); val p2 = pairs(2)
+    assert(p2.subsetOf(p1), s"level-2 pairs not a subset: ${p2.diff(p1).take(3)}")
+    assert(p1.nonEmpty && p2.nonEmpty)
+    // at sf0.001 the derived level is 1: the entry output is the forced
+    // level-1 output byte-for-byte (the harness-SF hash-stability claim)
+    val entry = Dedup.queries("dedup_embedding_lsh")(spark, sf0001).collect().toSeq
+    val forced = Dedup.embeddingLshWith(spark, sf0001,
+      forceLevel = Some(1)).collect().toSeq
+    assert(entry == forced)
   }
 }

@@ -11,9 +11,16 @@ import graft.operators.Graph
 /** Invariants for the graph module (fixed-point PageRank + degree
   * histogram) that the DuckDB hash gate can't express:
   * handshake-lemma mass balance, the damping floor, and run-to-run
-  * bit-determinism of the integer iteration.
+  * bit-determinism of the integer iteration. The graph entries are also
+  * recomputed on the driver from the collected sf0.001 rows ([[BaseRows]])
+  * by imperative second implementations (power iteration, LPA with the
+  * Newman–Girvan score, brute-force wedges and triangles) and compared
+  * exactly or on the documented round-9 lattice.
   */
 class GraphSpec extends SparkSpec {
+
+  import BaseRows._
+  import HalfUp._
 
   test("degree histogram obeys the handshake lemma") {
     val pairs = Tables.lineitem(spark, sf0001)
@@ -175,12 +182,10 @@ class GraphSpec extends SparkSpec {
   test("BFS level monotonicity on the corpus: every non-seed node sits one hop above some neighbor") {
     val d = Graph.khopDistance(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val edges = Tables.lineitem(spark, sf0001)
-      .select(col("l_suppkey"), col("l_partkey")).distinct()
-      .collect().flatMap(r => {
-        val s = r.getLong(0) * 2; val p = r.getLong(1) * 2 + 1
-        Seq((s, p), (p, s))
-      })
+    val edges = supplierParts.flatMap { case (s0, p0) =>
+      val s = s0 * 2; val p = p0 * 2 + 1
+      Seq((s, p), (p, s))
+    }
     val adj = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
     d.foreach { case (n, dn) =>
       if (dn > 0)
@@ -211,5 +216,218 @@ class GraphSpec extends SparkSpec {
       assert(after.nonEmpty && after != before,
         "dropping a seed supplier should change, not empty, the distances")
     }
+  }
+
+  // ------------------------------------------------------------- recomputes
+
+  test("pagerank equals an imperative integer power iteration, exactly") {
+    val sp = supplierParts.map { case (s, p) => (s * 2, p * 2 + 1) }
+    val edges = sp.flatMap { case (s, p) => Seq((s, p), (p, s)) }
+    val outAdj = edges.groupBy(_._1).map { case (s, g) => s -> g.map(_._2) }
+    val deg = outAdj.map { case (s, g) => s -> g.length.toLong }
+    var r: Map[Long, Long] = deg.keys.map(n => n -> 1000000L).toMap
+    for (_ <- 1 to 3) {
+      val inbox = scala.collection.mutable.HashMap.empty[Long, Long]
+      outAdj.foreach { case (src, dsts) =>
+        val contrib = r.getOrElse(src, 0L) / deg(src)
+        dsts.foreach(d => inbox(d) = inbox.getOrElse(d, 0L) + contrib)
+      }
+      r = inbox.map { case (node, s) => node -> (150000L + 85L * s / 100L) }.toMap
+    }
+    val expected = r.toSeq.map { case (node, rr) => (node, rr / 1000000.0) }
+      .sortBy { case (node, rank) => (-rank, node) }.take(25)
+    val got = Graph.queries("graph_pagerank")(spark, sf0001).collect()
+      .map(r2 => (r2.getAs[Long]("node"), r2.getAs[Double]("rank"))).toSeq
+    assert(got == expected, s"\nentry: ${got.take(5)}\nindependent: ${expected.take(5)}")
+  }
+
+  test("ppr concentrates rank mass on and around the seed set") {
+    val rows = entry("graph_ppr_seeded").collect()
+    val top5 = rows.take(5).map(_.getLong(0)).toSet
+    // seeds are supplier nodes 2·{1..5}; with teleport returning to them
+    // every round, at least 3 of the top-5 must be seeds on any fixture
+    assert(top5.count(n => n % 2 == 0 && n / 2 <= 5) >= 3,
+      s"seed nodes missing from PPR head: $top5")
+  }
+
+  test("HITS equals an imperative integer mutual-reinforcement recompute") {
+    val sp = supplierParts
+    def normalize(raw: Map[Long, Long]): Map[Long, Long] = {
+      val tot = raw.values.sum
+      raw.map { case (k, v) => k -> v * 1000000L / tot }
+    }
+    var h: Map[Long, Long] = sp.map(_._1).distinct.map(s => s -> 1000000L).toMap
+    var a: Map[Long, Long] = Map.empty
+    for (_ <- 1 to 2) {
+      a = normalize(sp.groupBy(_._2).map { case (p, es) =>
+        p -> es.map(e => h(e._1)).sum
+      })
+      h = normalize(sp.groupBy(_._1).map { case (s, es) =>
+        s -> es.map(e => a(e._2)).sum
+      })
+    }
+    def top15(m: Map[Long, Long], kind: String) =
+      m.toSeq.sortBy { case (id, s) => (-s, id) }.take(15).zipWithIndex
+        .map { case ((id, s), i) => (kind, id, s, (i + 1).toLong) }
+    val expected = top15(a, "authority") ++ top15(h, "hub")
+    val got = Graph.queries("graph_hits")(spark, sf0001).collect()
+      .map(r => (r.getAs[String]("node_type"), r.getAs[Long]("node_id"),
+        r.getAs[Long]("score_mu"), r.getAs[Long]("rk"))).toSeq
+    assert(got == expected, s"\nentry: ${got.take(4)}\nindependent: ${expected.take(4)}")
+  }
+
+  test("modularity Q equals an imperative LPA + Newman-Girvan recompute") {
+    val edges = coSupplyEdges
+    val und = edges.flatMap { case (u, v) => Seq((u, v), (v, u)) }
+    val adj = und.groupBy(_._1).map { case (m, xs) => m -> xs.map(_._2) }
+    // synchronous LPA, 4 rounds, ties -> smallest label (the deterministic
+    // variant the entry documents)
+    var lab: Map[Long, Long] = adj.keys.map(n => n -> n).toMap
+    for (_ <- 1 to 4) {
+      lab = adj.map { case (m, nbrs) =>
+        val best = nbrs.map(lab).groupBy(identity).toSeq
+          .map { case (l, g) => (l, g.size) }
+          .minBy { case (l, c) => (-c, l) }._1
+        m -> best
+      }
+    }
+    val mEdges = edges.length.toLong
+    val byLabel = lab.groupBy(_._2)
+    val expected = byLabel.toSeq.map { case (label, members) =>
+      val nodes = members.keySet
+      val internal = edges.count { case (u, v) => lab(u) == label && lab(v) == label }.toLong
+      val degSum = nodes.toSeq.map(n => adj(n).length.toLong).sum
+      val rawTerm = internal.toDouble / mEdges.toDouble -
+        (degSum.toDouble / (2.0 * mEdges)) * (degSum.toDouble / (2.0 * mEdges))
+      (label, nodes.size.toLong, internal, degSum, round9(rawTerm).toDouble)
+    }.sortBy(_._1)
+    val q = expected.map(t => BigDecimal(t._5)).sum.toDouble
+    val got = Graph.queries("graph_modularity")(spark, sf0001).collect()
+    assert(got.length == expected.length)
+    got.sortBy(_.getAs[Long]("label")).zip(expected).foreach { case (r, e) =>
+      assert(r.getAs[Long]("label") == e._1)
+      assert(r.getAs[Long]("n_nodes") == e._2, s"label ${e._1} n_nodes")
+      assert(r.getAs[Long]("n_internal_edges") == e._3, s"label ${e._1} internal")
+      assert(r.getAs[Long]("deg_sum") == e._4, s"label ${e._1} deg_sum")
+      assert(math.abs(r.getAs[Double]("term") - e._5) < 1e-9, s"label ${e._1} term")
+      assert(math.abs(r.getAs[Double]("modularity_q") - q) < 1e-8, "Q")
+    }
+  }
+
+  test("assortativity equals a driver Pearson over endpoint degrees") {
+    val edges = coSupplyEdges
+    val und = edges.flatMap { case (u, v) => Seq((u, v), (v, u)) }
+    val deg = und.groupBy(_._1).map { case (m, xs) => m -> xs.length.toLong }
+    val pairsDeg = und.map { case (m, x) => (deg(m), deg(x)) }
+    val n = pairsDeg.length.toLong
+    val sx = pairsDeg.map(_._1).sum; val sy = pairsDeg.map(_._2).sum
+    val sxx = pairsDeg.map(p => p._1.toDouble * p._1).sum
+    val syy = pairsDeg.map(p => p._2.toDouble * p._2).sum
+    val sxy = pairsDeg.map(p => p._1.toDouble * p._2).sum
+    val r = (n * sxy - sx.toDouble * sy) /
+      math.sqrt((n * sxx - sx.toDouble * sx) * (n * syy - sy.toDouble * sy))
+    val sumDeg = pairsDeg.map(_._1).sum
+    val meanPpm = (sumDeg / n) * 1000000L + (sumDeg % n) * 1000000L / n
+    val row = Graph.queries("graph_assortativity")(spark, sf0001).collect().head
+    assert(row.getAs[Long]("n_directed_edges") == n)
+    assert(row.getAs[Long]("mean_degree_ppm") == meanPpm)
+    assert(math.abs(row.getAs[Double]("assortativity") - r) < 1e-6,
+      s"entry ${row.getAs[Double]("assortativity")} vs independent $r")
+  }
+
+  test("clustering coefficients equal a brute-force driver recompute") {
+    val edges = coSupplyEdges.toSet
+    val adj = scala.collection.mutable.HashMap.empty[Long, Set[Long]]
+    edges.foreach { case (u, v) =>
+      adj(u) = adj.getOrElse(u, Set.empty) + v
+      adj(v) = adj.getOrElse(v, Set.empty) + u
+    }
+    val perNode = adj.toSeq.map { case (node, nbrs) =>
+      val d = nbrs.size.toLong
+      val ns = nbrs.toSeq.sorted
+      var tri = 0L
+      for (i <- ns.indices; j <- (i + 1) until ns.length)
+        if (edges.contains((ns(i), ns(j))) || edges.contains((ns(j), ns(i)))) tri += 1
+      val coeff = if (d >= 2) tri * 2000000L / (d * (d - 1L)) else 0L
+      (node, d, tri, coeff)
+    }
+    val tri3 = perNode.map(_._3).sum
+    val wedges2 = perNode.map(e => e._2 * (e._2 - 1L)).sum
+    val trans = if (wedges2 > 0) tri3 * 2000000L / wedges2 else 0L
+    val avg = perNode.map(_._4).sum / perNode.length
+    val expected = perNode.sortBy { case (n2, _, _, c) => (-c, n2) }.take(20)
+      .map { case (n2, d, tri, c) => (n2, d, tri, c, trans, avg) }
+    val got = Graph.queries("graph_clustering_coeff")(spark, sf0001).collect()
+      .map(r => (r.getAs[Long]("s_suppkey"), r.getAs[Long]("degree"),
+        r.getAs[Long]("n_triangles"), r.getAs[Long]("coeff_ppm"),
+        r.getAs[Long]("transitivity_ppm"), r.getAs[Long]("avg_coeff_ppm"))).toSeq
+    assert(got == expected, s"\nentry: ${got.take(3)}\nindependent: ${expected.take(3)}")
+  }
+
+  /** Brute-force wedge scores over the co-supply graph: for every
+    * non-adjacent pair, the shared-neighbor count and the Adamic–Adar sum
+    * on the entry's round-9 weight lattice. */
+  private lazy val linkPredScores: Seq[(Long, Long, Long, Double)] = {
+    val edges = coSupplyEdges.toSet
+    val und = coSupplyEdges.flatMap { case (u, v) => Seq((u, v), (v, u)) }
+    val adj = und.groupBy(_._1).map { case (m, xs) => m -> xs.map(_._2).toSet }
+    val deg = adj.map { case (m, xs) => m -> xs.size }
+    val nodes = adj.keys.toSeq.sorted
+    for {
+      i <- nodes.indices; j <- (i + 1) until nodes.length
+      a = nodes(i); c = nodes(j)
+      if !edges.contains((a, c))
+      common = adj(a) & adj(c)
+      if common.nonEmpty
+    } yield {
+      val aa = common.toSeq.map(m => BigDecimal(round9(1.0 / math.log(deg(m).toDouble)).toDouble)).sum
+      (a, c, common.size.toLong, aa.toDouble)
+    }
+  }
+
+  test("common-neighbors top-20 equals the brute-force non-adjacent wedge count") {
+    val expected = linkPredScores
+      .map { case (a, c, n, _) => (a, c, n) }
+      .sortBy { case (a, c, n) => (-n, a, c) }.take(20)
+    val got = Graph.queries("graph_common_neighbors")(spark, sf0001).collect()
+      .map(r => (r.getAs[Long]("sa"), r.getAs[Long]("sc"), r.getAs[Long]("n_common")))
+      .toSeq
+    assert(got == expected)
+  }
+
+  test("adamic-adar top-20 equals the brute-force weighted wedge sum") {
+    val expected = linkPredScores
+      .sortBy { case (a, c, _, aa) => (-aa, a, c) }.take(20)
+    val got = Graph.queries("graph_adamic_adar")(spark, sf0001).collect()
+      .map(r => (r.getAs[Long]("sa"), r.getAs[Long]("sc"),
+        r.getAs[Long]("n_common"), r.getAs[Double]("aa_score"))).toSeq
+    assert(got.map(t => (t._1, t._2, t._3)) == expected.map(t => (t._1, t._2, t._3)))
+    got.zip(expected).foreach { case (g, e) =>
+      assert(math.abs(g._4 - e._4) < 1e-9, s"pair (${g._1},${g._2}) aa_score")
+    }
+  }
+
+  test("jaccard link prediction equals an imperative wedge recompute, exactly") {
+    val edges = coSupplyEdges.toSet
+    val adj = (edges.toSeq.flatMap { case (u, v) => Seq(u -> v, v -> u) })
+      .groupBy(_._1).map { case (n, g) => n -> g.map(_._2).toSet }
+    val nodes = adj.keys.toSeq.sorted
+    val cand = (for {
+      i <- nodes.indices; j <- i + 1 until nodes.length
+      u = nodes(i); v = nodes(j)
+      if !edges.contains((u, v))
+      common = (adj(u) & adj(v)).size.toLong
+      if common > 0L
+    } yield {
+      val union = adj(u).size.toLong + adj(v).size - common
+      (u, v, common, union,
+        round6(common.toDouble / union.toDouble).toDouble)
+    }).sortBy { case (u, v, c, _, jc) => (-jc, -c, u, v) }.take(20)
+    val got = Graph.queries("graph_jaccard_links")(spark, sf0001).collect()
+      .map(r => (r.getAs[Long]("sa"), r.getAs[Long]("sc"),
+        r.getAs[Long]("n_common"), r.getAs[Long]("n_union"),
+        r.getAs[Double]("jaccard"))).toSeq
+    assert(got == cand, s"\nentry: ${got.take(5)}\nindependent: ${cand.take(5)}")
+    assert(got.forall(t => t._5 > 0.0 && t._5 <= 1.0))
   }
 }

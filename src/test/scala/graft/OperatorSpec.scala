@@ -902,4 +902,66 @@ class OperatorSpec extends SparkSpec {
       }
     }
   }
+
+  test("goertzel detection equals a brute-force DFT-bin argmax") {
+    // second implementation: the direct DFT projection Σ x·e^{-iwn}
+    // (two running sums), not the Goertzel recurrence
+    def dftPower(x: Array[Short], p: Int): Double = {
+      val w = 2.0 * math.Pi / p
+      var re = 0.0; var im = 0.0
+      var i = 0
+      while (i < x.length) {
+        re += x(i) * math.cos(w * i); im -= x(i) * math.sin(w * i)
+        i += 1
+      }
+      re * re + im * im
+    }
+    Seq(0L, 1L, 2L, 3L, 21L, 46L, 103L).foreach { id =>
+      val n = (256 + id % 128).toInt
+      val planted = Multimodal.tonePeriod(id)
+      val wav = Multimodal.squareWav(id, n, 8000, planted)
+      val (_, xs) = Multimodal.pcm16Samples(wav).get
+      val viaDft = Multimodal.TonePeriods.maxBy(dftPower(xs, _))
+      val viaGoertzel = Multimodal.TonePeriods.maxBy(Multimodal.goertzelPower(xs, _))
+      assert(viaDft == planted && viaGoertzel == planted,
+        s"id $id: planted $planted, dft $viaDft, goertzel $viaGoertzel")
+      // the two formulations agree on the whole power ranking, not just argmax
+      val rankG = Multimodal.TonePeriods.sortBy(p => -Multimodal.goertzelPower(xs, p)).toSeq
+      val rankD = Multimodal.TonePeriods.sortBy(p => -dftPower(xs, p)).toSeq
+      assert(rankG == rankD, s"id $id ranking: goertzel $rankG vs dft $rankD")
+    }
+  }
+
+  test("mm_audio_rms_windows equals a javax.sound second-parse window recompute") {
+    import javax.sound.sampled.AudioSystem
+    val got = Multimodal.queries("mm_audio_rms_windows")(spark, sf0001)
+      .collect()
+      .map(r => (r.getAs[Long]("media_id"), r.getAs[Long]("win")) ->
+        ((r.getAs[Long]("n_samp"), r.getAs[Long]("sum_abs"),
+          r.getAs[Long]("sum_sq"), r.getAs[Long]("active")))).toMap
+    assert(got.nonEmpty)
+    val ids = got.keys.map(_._1).toSeq.distinct.sorted.take(6)
+    for (id <- ids) {
+      val bytes = Multimodal.envelopedWav(id, (256 + id % 128).toInt, 8000)
+      val ais = AudioSystem.getAudioInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      assert(ais.getFormat.getSampleSizeInBits == 16 &&
+        ais.getFormat.getChannels == 1 && !ais.getFormat.isBigEndian)
+      val raw = ais.readAllBytes()
+      val xs = Array.tabulate(raw.length / 2)(i =>
+        (((raw(2 * i + 1) & 0xff) << 8) | (raw(2 * i) & 0xff)).toShort)
+      for (w <- 0 until (xs.length + 63) / 64) {
+        val s = w * 64; val e = math.min(s + 64, xs.length)
+        val slice = xs.slice(s, e).map(_.toLong)
+        val sa = slice.map(math.abs).sum
+        val sq = slice.map(v => v * v).sum
+        val active = if (sq > 1000000L) 1L else 0L
+        assert(got((id, w.toLong)) == ((e - s).toLong, sa, sq, active),
+          s"id=$id win=$w")
+      }
+      // the planted silence actually exists and the gate detects it
+      assert(got.exists { case ((i2, _), (_, _, _, a)) => i2 == id && a == 0L })
+      assert(got.exists { case ((i2, _), (_, _, _, a)) => i2 == id && a == 1L })
+    }
+  }
 }

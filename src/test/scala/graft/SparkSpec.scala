@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +15,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   protected val sf0001: String = SparkSpec.Sf0001
 
   protected lazy val spark: SparkSession = SparkSpec.session
+
+  /** The catalog entry `name` at sf0.001. */
+  protected def entry(name: String): DataFrame = SparkEntry.queries(name)(spark, sf0001)
 
   override protected def afterAll(): Unit = {
     // SparkSession is process-shared across suites (getOrCreate); do not stop

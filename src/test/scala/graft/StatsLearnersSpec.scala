@@ -9,8 +9,17 @@ import graft.operators.{Aggregates, Behavior, Events, Similarity, TextAnalysis}
   * algorithms guarantee by construction, and agreement between the exact
   * and approximate arms. The oracle proves Spark ≡ DuckDB; these prove
   * both compute the THING the entry claims.
+  *
+  * The `ml_*` learners are also refit on the driver from the collected
+  * sf0.001 rows ([[BaseRows]]) by a second implementation (Gaussian
+  * elimination against the entries' Cramer solves, an imperative
+  * trainer/scorer, brute-force votes and split searches) and compared
+  * exactly or on the documented lattice.
   */
 class StatsLearnersSpec extends SparkSpec {
+
+  import BaseRows._
+  import HalfUp._
 
   test("markov attribution: removal effects and credits are coherent") {
     val rows = Behavior.markovAttribution(spark, sf0001).collect()
@@ -175,5 +184,291 @@ class StatsLearnersSpec extends SparkSpec {
     rows.foreach { r =>
       assert(r.getLong(2) <= r.getLong(1), "hits cannot exceed truth size")
     }
+  }
+
+  // ---------------------------------------------------- learner recomputes
+
+  /** The regression design of the OLS family per line item: (quantity,
+    * discount basis points, price cents), each floored to a long. */
+  private lazy val olsRows: Seq[(Long, Long, Long)] = lineitem.map(l =>
+    (math.floor(l.quantity).toLong, math.floor(l.discount * 100).toLong,
+      math.floor(l.extendedprice * 100).toLong))
+
+  test("OLS by Cramer equals a Gaussian-elimination solve of the normal equations") {
+    val rows = olsRows
+    val n = rows.length.toDouble
+    // normal equations A·beta = b, A = Xᵀ X for X = [1, x1, x2]
+    val a = Array(
+      Array(n, rows.map(_._1.toDouble).sum, rows.map(_._2.toDouble).sum),
+      Array(0.0, rows.map(r => r._1.toDouble * r._1).sum, rows.map(r => r._1.toDouble * r._2).sum),
+      Array(0.0, 0.0, rows.map(r => r._2.toDouble * r._2).sum))
+    a(1)(0) = a(0)(1); a(2)(0) = a(0)(2); a(2)(1) = a(1)(2)
+    val b = Array(rows.map(_._3.toDouble).sum,
+      rows.map(r => r._1.toDouble * r._3).sum,
+      rows.map(r => r._2.toDouble * r._3).sum)
+    // Gaussian elimination with partial pivoting — a different solver than
+    // the entry's cofactor expansion
+    val m = a.map(_.clone)
+    val rhs = b.clone
+    for (kk <- 0 until 3) {
+      val piv = (kk until 3).maxBy(i => math.abs(m(i)(kk)))
+      val tmp = m(kk); m(kk) = m(piv); m(piv) = tmp
+      val t2 = rhs(kk); rhs(kk) = rhs(piv); rhs(piv) = t2
+      for (i <- (kk + 1) until 3) {
+        val f = m(i)(kk) / m(kk)(kk)
+        for (j <- kk until 3) m(i)(j) -= f * m(kk)(j)
+        rhs(i) -= f * rhs(kk)
+      }
+    }
+    val beta = Array(0.0, 0.0, 0.0)
+    for (i <- 2 to 0 by -1) {
+      var s = rhs(i)
+      for (j <- (i + 1) until 3) s -= m(i)(j) * beta(j)
+      beta(i) = s / m(i)(i)
+    }
+    val syy = rows.map(r => r._3.toDouble * r._3).sum
+    val sse = syy - (beta(0) * b(0) + beta(1) * b(1) + beta(2) * b(2))
+    val sst = syy - b(0) * b(0) / n
+    val row = Aggregates.queries("ml_ols_cramer")(spark, sf0001).collect().head
+    def rel(g: Double, e: Double) = math.abs(g - e) / math.max(1.0, math.abs(e))
+    assert(rel(row.getAs[Double]("b0_cents"), beta(0)) < 1e-5, s"b0 ${row.getAs[Double]("b0_cents")} vs ${beta(0)}")
+    assert(rel(row.getAs[Double]("b1_per_qty"), beta(1)) < 1e-5, s"b1 ${row.getAs[Double]("b1_per_qty")} vs ${beta(1)}")
+    assert(rel(row.getAs[Double]("b2_per_bp"), beta(2)) < 1e-5, s"b2 ${row.getAs[Double]("b2_per_bp")} vs ${beta(2)}")
+    assert(math.abs(row.getAs[Double]("r2") - (1.0 - sse / sst)) < 1e-5, "r2")
+  }
+
+  test("ridge at lambda=0 equals the OLS Cramer solve, exactly") {
+    val ols = Aggregates.queries("ml_ols_cramer")(spark, sf0001).collect()(0)
+    val ridge = Aggregates.queries("ml_ridge_cramer")(spark, sf0001).collect()
+    assert(ridge.length == 2)
+    val r0 = ridge.find(_.getAs[Long]("lam_per_obs") == 0L).get
+    assert(r0.getAs[Double]("b0_cents") == ols.getAs[Double]("b0_cents"))
+    assert(r0.getAs[Double]("b1_per_qty") == ols.getAs[Double]("b1_per_qty"))
+    assert(r0.getAs[Double]("b2_per_bp") == ols.getAs[Double]("b2_per_bp"))
+    assert(r0.getAs[Double]("r2") == ols.getAs[Double]("r2"))
+  }
+
+  test("ridge equals an independent Gaussian-elimination solve") {
+    val rows = olsRows
+    val n = rows.length.toDouble
+    def s(f: ((Long, Long, Long)) => Double): Double = rows.iterator.map(f).sum
+    for (lamPerObs <- Seq(0L, 100L)) {
+      val lam = lamPerObs * n
+      // normal equations (intercept unpenalized) solved by partial-pivot
+      // elimination — an algorithm the entry does NOT use
+      val a = Array(
+        Array(n, s(t => t._1.toDouble), s(t => t._2.toDouble), s(t => t._3.toDouble)),
+        Array(s(t => t._1.toDouble), s(t => t._1.toDouble * t._1) + lam,
+          s(t => t._1.toDouble * t._2), s(t => t._1.toDouble * t._3)),
+        Array(s(t => t._2.toDouble), s(t => t._1.toDouble * t._2),
+          s(t => t._2.toDouble * t._2) + lam, s(t => t._2.toDouble * t._3)))
+      for (col0 <- 0 until 3) {
+        val piv = (col0 until 3).maxBy(r => math.abs(a(r)(col0)))
+        val tmp = a(col0); a(col0) = a(piv); a(piv) = tmp
+        for (r <- 0 until 3; if r != col0) {
+          val f = a(r)(col0) / a(col0)(col0)
+          for (k <- col0 to 3) a(r)(k) -= f * a(col0)(k)
+        }
+      }
+      val beta = (0 until 3).map(r => a(r)(3) / a(r)(r))
+      val got = Aggregates.queries("ml_ridge_cramer")(spark, sf0001).collect()
+        .find(_.getAs[Long]("lam_per_obs") == lamPerObs).get
+      val ent = Seq(got.getAs[Double]("b0_cents"), got.getAs[Double]("b1_per_qty"),
+        got.getAs[Double]("b2_per_bp"))
+      for (k <- 0 until 3) {
+        val scale = math.max(1.0, math.abs(beta(k)))
+        assert(math.abs(ent(k) - beta(k)) / scale < 1e-6,
+          s"lam=$lamPerObs beta$k: entry ${ent(k)} vs elimination ${beta(k)}")
+      }
+    }
+  }
+
+  test("ml_kfold_cv equals an imperative fold/moment/Cramer recompute, exactly") {
+    def md5hex(s: String): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val rows = lineitem.zip(olsRows).map { case (l, (x1, x2, y)) =>
+      (java.lang.Long.parseLong(
+        md5hex(s"${l.orderkey}:${l.linenumber}").substring(0, 15), 16) % 5,
+        x1, x2, y)
+    }
+    case class M(var n: BigInt = 0, var sx1: BigInt = 0, var sx2: BigInt = 0,
+                 var sy: BigInt = 0, var s11: BigInt = 0, var s12: BigInt = 0,
+                 var s22: BigInt = 0, var sx1y: BigInt = 0,
+                 var sx2y: BigInt = 0, var syy: BigInt = 0)
+    val fm = Array.fill(5)(M())
+    for ((f, x1, x2, y) <- rows) {
+      val m = fm(f.toInt)
+      m.n += 1; m.sx1 += x1; m.sx2 += x2; m.sy += y
+      m.s11 += BigInt(x1) * x1; m.s12 += BigInt(x1) * x2
+      m.s22 += BigInt(x2) * x2; m.sx1y += BigInt(x1) * y
+      m.sx2y += BigInt(x2) * y; m.syy += BigInt(y) * y
+    }
+    val tot = M()
+    for (m <- fm) {
+      tot.n += m.n; tot.sx1 += m.sx1; tot.sx2 += m.sx2; tot.sy += m.sy
+      tot.s11 += m.s11; tot.s12 += m.s12; tot.s22 += m.s22
+      tot.sx1y += m.sx1y; tot.sx2y += m.sx2y; tot.syy += m.syy
+    }
+    val expected = (0 until 5).map { k =>
+      val m = fm(k)
+      val a = (tot.n - m.n).toDouble; val b = (tot.sx1 - m.sx1).toDouble
+      val c = (tot.sx2 - m.sx2).toDouble; val d = (tot.s11 - m.s11).toDouble
+      val e = (tot.s12 - m.s12).toDouble; val f = (tot.s22 - m.s22).toDouble
+      val g = (tot.sy - m.sy).toDouble; val h = (tot.sx1y - m.sx1y).toDouble
+      val i = (tot.sx2y - m.sx2y).toDouble
+      val det = a * (d * f - e * e) - b * (b * f - e * c) + c * (b * e - d * c)
+      val det0 = g * (d * f - e * e) - b * (h * f - e * i) + c * (h * e - d * i)
+      val det1 = a * (h * f - e * i) - g * (b * f - e * c) + c * (b * i - h * c)
+      val det2 = a * (d * i - e * h) - b * (b * i - h * c) + g * (b * e - d * c)
+      val b0 = det0 / det; val b1 = det1 / det; val b2 = det2 / det
+      val hn = m.n.toDouble
+      val quad = b0 * b0 * hn + b1 * b1 * m.s11.toDouble +
+        b2 * b2 * m.s22.toDouble + 2.0 * b0 * b1 * m.sx1.toDouble +
+        2.0 * b0 * b2 * m.sx2.toDouble + 2.0 * b1 * b2 * m.s12.toDouble
+      val sse = m.syy.toDouble -
+        2.0 * (b0 * m.sy.toDouble + b1 * m.sx1y.toDouble +
+          b2 * m.sx2y.toDouble) + quad
+      (k.toLong, (tot.n - m.n).toLong, m.n.toLong, round6(b0), round6(b1),
+        round6(b2), round6(math.sqrt(sse / hn)))
+    }
+    val got = Aggregates.queries("ml_kfold_cv")(spark, sf0001).collect()
+      .map(r => (r.getAs[Long]("fold"), r.getAs[Long]("n_train"),
+        r.getAs[Long]("n_test"), BigDecimal(r.getAs[Double]("b0_cents")),
+        BigDecimal(r.getAs[Double]("b1_per_qty")),
+        BigDecimal(r.getAs[Double]("b2_per_bp")),
+        BigDecimal(r.getAs[Double]("rmse_cents")))).toSeq
+    assert(got == expected, s"\nentry: $got\nindependent: $expected")
+    // fold partition: every row held out exactly once
+    assert(got.map(_._3).sum == rows.length.toLong)
+  }
+
+  test("decision stump candidates and ranking equal a driver split search") {
+    val rows = lineitem.map(l =>
+      (if (l.returnflag == "R") 1L else 0L, l.quantity, l.discount, l.extendedprice))
+    def h(pos: Long, n: Long): Double =
+      if (pos == 0 || pos == n) 0.0
+      else {
+        val p = pos.toDouble / n
+        -p * math.log(p) - (1 - p) * math.log(1 - p)
+      }
+    val feats = Seq[(String, ((Long, Double, Double, Double)) => Double)](
+      ("discount", _._3), ("extendedprice", _._4), ("quantity", _._2))
+    val cands = feats.flatMap { case (fname, fval) =>
+      val vals = rows.map(r => (fval(r), r._1))
+      val nTot = vals.length.toLong
+      val posTot = vals.map(_._2).sum
+      val dv = vals.groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (v, g) => (v, g.length.toLong, g.map(_._2).sum) }
+      var cumN = 0L; var cumPos = 0L
+      val cuts = (1 to 19).map(i => i * nTot / 20).filter(_ >= 1).toSet
+      dv.flatMap { case (v, nn, pp) =>
+        val lo = cumN
+        cumN += nn; cumPos += pp
+        if (cumN < nTot && cuts.exists(p => p > lo && p <= cumN)) {
+          val gain = round9(h(posTot, nTot) -
+            (cumN.toDouble / nTot) * h(cumPos, cumN) -
+            ((nTot - cumN).toDouble / nTot) * h(posTot - cumPos, nTot - cumN))
+          Some((fname, v, cumN, cumPos, nTot - cumN, posTot - cumPos, gain))
+        } else None
+      }
+    }
+    val expected = cands
+      .sortWith { (a, b) =>
+        if (a._7 != b._7) a._7 > b._7
+        else if (a._1 != b._1) a._1 < b._1
+        else a._2 < b._2
+      }
+      .zipWithIndex.map { case ((f, t, nl, pl, nr, pr, g), i) =>
+        (f, t, nl, pl, nr, pr, g.toDouble, (i + 1).toLong)
+      }
+    val got = Aggregates.queries("ml_decision_stump")(spark, sf0001).collect()
+      .map(r => (r.getAs[String]("feature"), r.getAs[Double]("threshold"),
+        r.getAs[Long]("n_left"), r.getAs[Long]("pos_left"),
+        r.getAs[Long]("n_right"), r.getAs[Long]("pos_right"),
+        r.getAs[Double]("gain"), r.getAs[Long]("rk"))).toSeq
+    assert(got.length == expected.length,
+      s"candidate count ${got.length} vs ${expected.length}")
+    got.zip(expected).foreach { case (g, e) =>
+      assert(g._1 == e._1 && g._2 == e._2, s"rk ${g._8}: split ${g._1}<=${g._2} vs ${e._1}<=${e._2}")
+      assert((g._3, g._4, g._5, g._6) == (e._3, e._4, e._5, e._6), s"rk ${g._8} counts")
+      assert(math.abs(g._7 - e._7) < 1e-9, s"rk ${g._8} gain")
+      assert(g._8 == e._8)
+    }
+  }
+
+  test("naive bayes confusion matrix equals an imperative trainer/scorer") {
+    val docs = documents.map(d => (d.docId, d.lang, d.text))
+    val train = docs.filter(_._1 % 5 != 0)
+    val test = docs.filter(_._1 % 5 == 0)
+    val classDocs = train.groupBy(_._2).map { case (c, g) => c -> g.length.toLong }
+    val nTrain = train.length.toLong
+    val tokClass = scala.collection.mutable.HashMap.empty[(String, String), Long]
+    train.foreach { case (_, c, text) =>
+      text.split(" ").filter(_.nonEmpty).foreach { w =>
+        tokClass((c, w)) = tokClass.getOrElse((c, w), 0L) + 1L
+      }
+    }
+    val classToks = tokClass.groupBy(_._1._1).map { case (c, m) => c -> m.values.sum }
+    val vocab = tokClass.keys.map(_._2).toSet
+    val v = vocab.size.toLong
+    val priors = classDocs.map { case (c, n) =>
+      c -> round9(math.log(n.toDouble / nTrain))
+    }
+    val classes = classDocs.keys.toSeq.sorted
+    val confusion = scala.collection.mutable.HashMap.empty[(String, String), Long]
+    test.foreach { case (_, lang, text) =>
+      val tf = text.split(" ").filter(w => w.nonEmpty && vocab.contains(w))
+        .groupBy(identity).map { case (w, g) => w -> g.length.toLong }
+      val pred = classes.map { c =>
+        val score = priors(c) + tf.map { case (w, f) =>
+          BigDecimal(f) * round9(math.log(
+            (tokClass.getOrElse((c, w), 0L) + 1.0) / (classToks(c) + v)))
+        }.sum
+        (c, score)
+      }.minBy { case (c, s) => (-s, c) }(
+        Ordering.Tuple2(Ordering.BigDecimal, Ordering.String))._1
+      confusion((lang, pred)) = confusion.getOrElse((lang, pred), 0L) + 1L
+    }
+    val nTest = test.length.toLong
+    val nCorrect = confusion.collect { case ((t, p), n) if t == p => n }.sum
+    val expected = confusion.toSeq.map { case ((t, p), n) =>
+      (t, p, n, nTest, nCorrect, nCorrect * 1000000L / nTest)
+    }.sortBy(e => (e._1, e._2))
+    val got = TextAnalysis.queries("ml_naive_bayes")(spark, sf0001).collect()
+      .map(r => (r.getAs[String]("true_lang"), r.getAs[String]("pred_lang"),
+        r.getAs[Long]("n_docs"), r.getAs[Long]("n_test"),
+        r.getAs[Long]("n_correct"), r.getAs[Long]("accuracy_ppm"))).toSeq
+    assert(got == expected, s"\nentry: $got\nindependent: $expected")
+  }
+
+  test("k-NN classifier equals a brute-force driver vote, exactly") {
+    val all = embeddings.map(e => (e.vecId, e.label, e.vec))
+    def dot(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < a.length) { s += a(i) * b(i); i += 1 }
+      s
+    }
+    val norm = all.map(v => v._1 -> math.sqrt(dot(v._3, v._3))).toMap
+    val qs = all.filter(_._1 < 20L)
+    val train = all.filter(_._1 >= 20L)
+    val verdicts = qs.sortBy(_._1).map { case (qid, trueLab, qv) =>
+      val top5 = train
+        .map(t => (t._1, t._2, dot(qv, t._3) / (norm(qid) * norm(t._1))))
+        .sortBy { case (id, _, c) => (-c, id) }.take(5)
+      val (pred, nv) = top5.groupBy(_._2).toSeq
+        .map { case (l, g) => (l, g.length.toLong) }
+        .minBy { case (l, c) => (-c, l) }
+      (qid, trueLab, pred, nv)
+    }
+    val nTest = verdicts.length.toLong
+    val nCorrect = verdicts.count(v => v._2 == v._3).toLong
+    val acc = nCorrect * 1000000L / nTest
+    val got = Similarity.queries("ml_knn_classifier")(spark, sf0001).collect()
+      .map(r => (r.getAs[Long]("q_id"), r.getAs[Int]("true_label"),
+        r.getAs[Int]("pred_label"), r.getAs[Long]("n_votes"),
+        r.getAs[Long]("accuracy_ppm"))).toSeq
+    assert(got == verdicts.map(v => (v._1, v._2, v._3, v._4, acc)).toSeq,
+      s"\nentry: ${got.take(3)}\nindependent: ${verdicts.take(3)} acc=$acc")
   }
 }

@@ -8,14 +8,14 @@ set -euo pipefail
 # linear-in-corpus bound, gets the BASELINE.md adjudication treatment.
 #
 # Usage:  tools/sf1bench.sh r12
-# SPARK_GRAFT_CPUS sets local[N] for every sbt run here (default 32, the
-# core count the r11-r13 records were made at).
+# SPARK_GRAFT_CPUS sets local[N] for every sbt run here (default: the
+# host's core count; the r11-r13 records were made at 32).
 # Requires: a same-session sf0.1 bench record in BENCH_FULL.json (run
-#   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+#   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=$(nproc) \
 #     sbt -batch 'runMain graft.Bench'
 # first); never run concurrently with another sbt command.
 cd "$(dirname "$0")/.."
-export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 TAG=${1:?round tag (e.g. r12)}
 SF1=${SPARK_GRAFT_SF1_DIR:-/tmp/graft_sf1}
 if [ ! -d "$SF1/lineitem.parquet" ]; then

@@ -13,11 +13,11 @@ set -euo pipefail
 # capped twin IS probed; "capped stays flat" is the gate.
 #
 # Usage:  tools/skewbench.sh r13
-# SPARK_GRAFT_CPUS sets local[N] for every sbt run here (default 32, the
-# core count the r11-r13 records were made at).
+# SPARK_GRAFT_CPUS sets local[N] for every sbt run here (default: the
+# host's core count; the r11-r13 records were made at 32).
 # Never run concurrently with another sbt command.
 cd "$(dirname "$0")/.."
-export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 TAG=${1:?round tag (e.g. r13)}
 SKEW=${SPARK_GRAFT_SKEW_DIR:-/tmp/graft_sf1skew}
 if [ ! -d "$SKEW/lineitem.parquet" ]; then
