@@ -2,17 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Aggregates, Etl, Layout, Windows}
+import graft.operators.{Aggregates, Layout}
 
-/** Independent recomputes and semantic pins of the relational analytics
-  * entries: `Aggregates`, `Layout`, `Etl`, `Windows` and the TPC-H join
-  * heads.
+/** Independent recomputes of the relational analytics entries:
+  * `Aggregates` and `Layout`.
   *
   * Each recompute rebuilds its entry on the driver from the collected
   * sf0.001 rows ([[BaseRows]]) in plain Scala, with a different
   * formulation where one exists (mean-absolute-difference Gini, two-pass
-  * central moments, the classic xy2d Hilbert walk, brute-force stabbing
-  * depth), and compares exactly on the integer kernels or to the
+  * central moments, brute-force stabbing depth), and compares exactly on the integer kernels or to the
   * documented rounding lattice. Where an entry's own decimal cast defines
   * its integer cents, the pin keeps that cast in Spark and recomputes the
   * rest. */
@@ -99,58 +97,6 @@ class AggregatesRecomputeSpec extends SparkSpec {
     }
   }
 
-  test("MAD outlier counts equal a driver percentile recompute") {
-    val ev = events.map(e => (e.eventType, math.floor(e.value * 100.0)))
-    def pct50(v: Seq[Double]): Double = {
-      val s = v.sorted
-      val idx = 0.5 * (s.length - 1)
-      val lo = idx.toInt; val frac = idx - lo
-      if (lo + 1 < s.length) s(lo) + (s(lo + 1) - s(lo)) * frac else s(lo)
-    }
-    val expected = ev.groupBy(_._1).map { case (et, g) =>
-      val cents = g.map(_._2)
-      val med = pct50(cents)
-      val adev = cents.map(c => math.abs(c - med))
-      val mad = pct50(adev)
-      et -> (cents.length.toLong, med, mad, adev.count(_ > 4.4478 * mad).toLong)
-    }
-    Aggregates.queries("agg_mad_outliers")(spark, sf0001).collect().foreach { r =>
-      val (n, med, mad, out) = expected(r.getAs[String]("event_type"))
-      assert(r.getAs[Long]("n_events") == n)
-      assert(math.abs(r.getAs[Double]("med_cents") - med) < 1e-9)
-      assert(math.abs(r.getAs[Double]("mad_cents") - mad) < 1e-9)
-      assert(r.getAs[Long]("n_outliers") == out, s"type ${r.getAs[String]("event_type")}")
-    }
-  }
-
-  test("winsorize equals a driver percentile-clip recompute") {
-    val xs = orders.map(o => (o.orderpriority, o.totalprice))
-    def pct(v: Seq[Double], p: Double): Double = {
-      val s = v.sorted
-      val idx = p * (s.length - 1)
-      val lo = idx.toInt; val frac = idx - lo
-      if (lo + 1 < s.length) s(lo) + (s(lo + 1) - s(lo)) * frac else s(lo)
-    }
-    val all = xs.map(_._2)
-    val lo = round6(pct(all, 0.05)).toDouble
-    val hi = round6(pct(all, 0.95)).toDouble
-    val expected: Map[String, (Long, Double, Double, Long)] =
-      xs.groupBy(_._1).map { case (p, g) =>
-        val clipped = g.map(t => math.max(lo, math.min(hi, t._2)))
-        val sr = g.map(t => round6(t._2)).sum.toDouble
-        val scp = clipped.map(round6).sum.toDouble
-        val nc = g.zip(clipped).count { case (t, c) => c != t._2 }.toLong
-        p -> ((g.length.toLong, sr, scp, nc))
-      }
-    Etl.queries("etl_winsorize")(spark, sf0001).collect().foreach { r =>
-      val (n, sr, scp, nc) = expected(r.getAs[String]("o_orderpriority"))
-      assert(r.getAs[Long]("n_orders") == n)
-      assert(math.abs(r.getAs[Double]("sum_raw") - sr) < 1e-4)
-      assert(math.abs(r.getAs[Double]("sum_clipped") - scp) < 1e-4)
-      assert(r.getAs[Long]("n_clipped") == nc, s"priority ${r.getAs[String]("o_orderpriority")}")
-    }
-  }
-
   // ------------------------------------------------- drift and audit tables
 
   test("PSI drift equals a driver Laplace-smoothed recompute") {
@@ -201,57 +147,6 @@ class AggregatesRecomputeSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  /** The returnflag × linestatus contingency table, recounted in driver. */
-  private lazy val contingency: (Map[(String, String), Long], Map[String, Long], Map[String, Long], Long) = {
-    val xs = lineitem.map(l => (l.returnflag, l.linestatus))
-    val joint = xs.groupBy(identity).map { case (k, g) => k -> g.length.toLong }
-    val mx = xs.groupBy(_._1).map { case (k, g) => k -> g.length.toLong }
-    val my = xs.groupBy(_._2).map { case (k, g) => k -> g.length.toLong }
-    (joint, mx, my, xs.length.toLong)
-  }
-
-  test("mutual information equals a driver contingency recompute") {
-    val (joint, mx, my, n) = contingency
-    val miTerms = joint.map { case ((x, y), c) =>
-      (x, y) -> round9((c.toDouble / n) * math.log(c.toDouble * n / (mx(x).toDouble * my(y).toDouble)))
-    }
-    val mi = miTerms.values.sum
-    val got = Aggregates.queries("agg_mutual_info")(spark, sf0001).collect()
-    assert(got.length == joint.size)
-    got.foreach { r =>
-      val k = (r.getAs[String]("returnflag"), r.getAs[String]("linestatus"))
-      assert(r.getAs[Long]("c_xy") == joint(k))
-      assert(r.getAs[Long]("c_x") == mx(k._1) && r.getAs[Long]("c_y") == my(k._2))
-      assert(r.getAs[Long]("n_rows") == n)
-      assert(math.abs(r.getAs[Double]("mi_term") - miTerms(k).toDouble) < 1e-9)
-      assert(math.abs(r.getAs[Double]("mi_nats") - mi.toDouble) < 1e-8)
-    }
-  }
-
-  test("chi-square and Cramér's V equal a driver full-grid recompute") {
-    val (joint, mx, my, n) = contingency
-    val cells = for (x <- mx.keys.toSeq; y <- my.keys.toSeq) yield {
-      val o = joint.getOrElse((x, y), 0L)
-      val e = mx(x).toDouble * my(y).toDouble / n
-      ((x, y), o, e, round6((o - e) * (o - e) / e))
-    }
-    val chi2 = cells.map(_._4).sum
-    val dof = (mx.size - 1L) * (my.size - 1L)
-    val v = math.sqrt(chi2.toDouble / (n.toDouble * math.min(mx.size - 1, my.size - 1)))
-    val got = Aggregates.queries("agg_chi2_independence")(spark, sf0001).collect()
-    assert(got.length == cells.length)
-    val byKey = cells.map(c => c._1 -> c).toMap
-    got.foreach { r =>
-      val c = byKey((r.getAs[String]("returnflag"), r.getAs[String]("linestatus")))
-      assert(r.getAs[Long]("c_xy") == c._2)
-      assert(math.abs(r.getAs[Double]("expected") - c._3) < 1e-5)
-      assert(math.abs(r.getAs[Double]("chi2_term") - c._4.toDouble) < 1e-9)
-      assert(math.abs(r.getAs[Double]("chi2_total") - chi2.toDouble) < 1e-7)
-      assert(r.getAs[Long]("dof") == dof)
-      assert(math.abs(r.getAs[Double]("cramers_v") - v) < 1e-6)
-    }
-  }
-
   // --------------------------------------------------------------- regression
 
   test("per-nation regression equals a two-pass centered recompute") {
@@ -277,134 +172,7 @@ class AggregatesRecomputeSpec extends SparkSpec {
     }
   }
 
-  test("rolling beta equals an imperative windowed-moment recompute, exactly") {
-    // the cents are the entry's own decimal(12,2) cast, so the projection
-    // stays in Spark
-    val rows = Tables.lineitem(spark, sf0001)
-      .filter(col("l_partkey") <= 200)
-      .select(col("l_partkey"), col("l_orderkey"), col("l_linenumber"),
-        col("l_shipdate").cast("string").as("sd"),
-        col("l_quantity").cast("long").as("q"),
-        (col("l_extendedprice").cast("decimal(12,2)") * 100).cast("long").as("c"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getString(3),
-        r.getLong(4), r.getLong(5)))
-    val expected = rows.groupBy(_._1).toSeq.flatMap { case (part, g) =>
-      val ordered = g.toSeq.sortBy(t => (t._4, t._2, t._3))
-      ordered.indices.map { i =>
-        val w = ordered.slice(math.max(0, i - 20), i + 1)
-        val n = w.length.toLong
-        val sq = w.map(_._5).sum; val sc = w.map(_._6).sum
-        val sqc = w.map(t => t._5 * t._6).sum; val sqq = w.map(t => t._5 * t._5).sum
-        val den = n * sqq - sq * sq
-        val beta = if (den == 0) None else Some(1000000L * (n * sqc - sq * sc) / den)
-        (part, ordered(i)._2, ordered(i)._3, n, beta)
-      }
-    }.sortBy(t => (t._1, t._2, t._3))
-    val got = Windows.queries("win_rolling_beta")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("part"), r.getAs[Long]("l_orderkey"),
-        r.getAs[Int]("l_linenumber"), r.getAs[Long]("n"),
-        Option(r.getAs[java.lang.Long]("beta_micro")).map(_.toLong))).toSeq
-    assert(got == expected, s"first diff: ${got.zip(expected).find(p => p._1 != p._2)}")
-  }
-
-  // ----------------------------------------------------------------- sketches
-
-  test("kmv intersection equals an imperative theta-sketch recompute, exactly") {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def h60(s: String): Long = {
-      val hex = md.digest(s.getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.substring(0, 15)
-      java.lang.Long.parseLong(hex, 16)
-    }
-    val docs = documents.filter(d => d.source == "src0" || d.source == "src1")
-      .map(d => (d.source, d.text))
-    val bySrc = docs.groupBy(_._1).map { case (s, g) =>
-      s -> g.flatMap { case (_, t) =>
-        val w = t.split(" ", -1)
-        if (w.length < 3) Seq.empty
-        else (0 to w.length - 3).map(i => s"${w(i)} ${w(i + 1)} ${w(i + 2)}")
-      }.map(h60).distinct.sorted
-    }
-    val (sa, sb) = (bySrc("src0"), bySrc("src1"))
-    val full = 1L << 60
-    def theta(xs: Seq[Long]): Long = if (xs.length < 128) full else xs(127)
-    val th = math.min(theta(sa), theta(sb))
-    val (ka, kb) = (sa.take(128).toSet, sb.take(128).toSet)
-    val nS = (ka & kb).count(_ < th).toLong
-    val est = nS.toDouble * 1.152921504606846976e18 / th.toDouble
-    val nExact = (sa.toSet & sb.toSet).size.toLong
-    val got = Aggregates.queries("agg_kmv_intersect")(spark, sf0001)
-      .collect()(0)
-    assert(got.getAs[Long]("k") == 128L)
-    assert(got.getAs[Long]("n_a_exact") == sa.length.toLong)
-    assert(got.getAs[Long]("n_b_exact") == sb.length.toLong)
-    assert(got.getAs[Long]("theta") == th)
-    assert(got.getAs[Long]("n_s") == nS)
-    assert(got.getAs[Double]("est_intersect") == est)
-    assert(got.getAs[Long]("n_exact_intersect") == nExact)
-    assert(nExact > 0L, "sources share no shingles — vacuous intersection")
-  }
-
-  test("kmv: small-set rule is exact and the merged estimate is calibrated") {
-    val rows = entry("agg_kmv_merge").collect()
-    val (union, srcs) = rows.partition(_.getString(0) == "__union__")
-    srcs.foreach { r =>
-      if (r.getLong(2) < 128) // n_min < k ⇒ sketch IS the exact answer
-        assert(r.getDouble(4) == r.getLong(1).toDouble,
-          s"small-set rule broken for ${r.getString(0)}")
-    }
-    val u = union.head
-    val (exact, est) = (u.getLong(1).toDouble, u.getDouble(4))
-    if (u.getLong(2) == 128) // estimator path: within 5/√k of truth
-      assert(math.abs(est - exact) / exact < 5.0 / math.sqrt(128.0),
-        s"merged estimate $est vs exact $exact outside 5σ")
-  }
-
   // ------------------------------------------------------------------- layout
-
-  test("hilbert buckets match the classic xy2d walk and the adjacency theorem") {
-    // the defining property: consecutive curve positions are grid-adjacent
-    val inv = Array.fill(65536)((0L, 0L))
-    for (x <- 0L until 256L; y <- 0L until 256L) inv(xy2d(x, y).toInt) = (x, y)
-    for (i <- 1 until 65536) {
-      val (x0, y0) = inv(i - 1); val (x1, y1) = inv(i)
-      assert(math.abs(x1 - x0) + math.abs(y1 - y0) == 1,
-        s"curve jump at d=$i: ($x0,$y0) -> ($x1,$y1)")
-    }
-    // the entry's bucket profile vs an independent recount through xy2d
-    val pairs = lineitem.map(l => (l.partkey % 256, l.suppkey % 256))
-    val expected = pairs.map { case (px, sx) => (xy2d(px, sx) / 3000L, px, sx) }
-      .groupBy(_._1).toSeq.map { case (b, g) =>
-        (b, g.length.toLong, g.map(_._2).min, g.map(_._2).max,
-          g.map(_._3).min, g.map(_._3).max)
-      }.sortBy(_._1)
-    val got = Layout.queries("layout_hilbert_buckets")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("h_bucket"), r.getAs[Long]("n_rows"),
-        r.getAs[Long]("min_part"), r.getAs[Long]("max_part"),
-        r.getAs[Long]("min_supp"), r.getAs[Long]("max_supp"))).toSeq
-    assert(got == expected, s"\nentry: ${got.take(3)}\nindependent: ${expected.take(3)}")
-  }
-
-  /** The classic xy2d (Hilbert curve, order 8) — rotation by conditional
-    * swap/reflect, structurally different from the entry's n−1-reflection
-    * CASE walk. */
-  private def xy2d(xIn: Long, yIn: Long): Long = {
-    var x = xIn; var y = yIn; var d = 0L
-    var s = 128L
-    while (s > 0) {
-      val rx = if ((x & s) > 0) 1L else 0L
-      val ry = if ((y & s) > 0) 1L else 0L
-      d += s * s * ((3 * rx) ^ ry)
-      // rotate quadrant
-      if (ry == 0) {
-        if (rx == 1) { x = s - 1 - x; y = s - 1 - y }
-        val t = x; x = y; y = t
-      }
-      s >>= 1
-    }
-    d
-  }
 
   test("layout_overlap_depth equals the definitional stabbing count, and clustering reduces depth") {
     val base = lineitem.map { l =>
@@ -438,40 +206,4 @@ class AggregatesRecomputeSpec extends SparkSpec {
     assert(got("clustered")._3 <= got("insertion")._3)
   }
 
-  test("binpack equals an imperative packing and respects the load bounds") {
-    val sizes = lineitem.groupBy(_.orderkey / 2048)
-      .map { case (f, g) => f -> g.length.toLong }.toSeq
-    val T = 4096L
-    val sorted = sizes.sortBy { case (id, sz) => (-sz, id) }
-    var cum = 0L
-    val planned = sorted.map { case (id, sz) =>
-      val bin = cum / T; cum += sz; (bin, id, sz)
-    }
-    val expected = planned.groupBy(_._1).toSeq.sortBy(_._1).map { case (b, g) =>
-      (b, g.length.toLong, g.map(_._3).sum, g.map(_._3).max, g.map(_._2).min)
-    }
-    val got = Layout.queries("layout_binpack")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("bin"), r.getAs[Long]("n_files"),
-        r.getAs[Long]("bin_rows"), r.getAs[Long]("largest_file"),
-        r.getAs[Long]("first_file"))).toSeq
-    assert(got == expected, s"\nentry: $got\nindependent: $expected")
-    // load bound: every bin < T + its largest member (the sorted-cumulative
-    // guarantee); conservation: no row lost or double-packed
-    assert(got.forall { case (_, _, rows, largest, _) => rows < T + largest })
-    assert(got.map(_._3).sum == sizes.map(_._2).sum)
-    assert(got.map(_._2).sum == sizes.length.toLong)
-  }
-
-  // ------------------------------------------------------------- join heads
-
-  test("q3/q10 heads are revenue-sorted within their limits") {
-    val q3 = entry("join_shipping_q3").collect()
-    assert(q3.length <= 10 && q3.nonEmpty)
-    val rev3 = q3.map(_.getDouble(3))
-    assert(rev3.sameElements(rev3.sortBy(-_)))
-    val q10 = entry("join_returned_q10").collect()
-    assert(q10.length <= 20 && q10.nonEmpty)
-    val rev10 = q10.map(_.getDouble(3))
-    assert(rev10.sameElements(rev10.sortBy(-_)))
-  }
 }

@@ -153,4 +153,13 @@ object BaseRows {
     * hours at 0. */
   lazy val hourlySeries: Seq[(Long, Long)] =
     (hourCounts.keys.min to hourCounts.keys.max).map(h => h -> hourCounts.getOrElse(h, 0L))
+
+  /** (doc_id, text) of every document. */
+  def docTexts: Seq[(Long, String)] = documents.map(d => (d.docId, d.text))
+
+  /** The regression design of the OLS family per line item: (quantity,
+    * discount basis points, price cents), each floored to a long. */
+  lazy val olsRows: Seq[(Long, Long, Long)] = lineitem.map(l =>
+    (math.floor(l.quantity).toLong, math.floor(l.discount * 100).toLong,
+      math.floor(l.extendedprice * 100).toLong))
 }

@@ -7,10 +7,9 @@ import graft.operators.Dedup
   * their outputs are theorems, not coincidences — stronger evidence than
   * any single oracle because a bug would have to break two pipelines in
   * the same way to pass. The sf0.001 pins below add the threshold and
-  * sizing readouts: the ROI curve against the exact pair set, the capped
-  * and level-refined embedding LSH as subsets of their wider twins, and
-  * the LSH sizing curve against brute-force pairs over the collected
-  * documents ([[BaseRows]]).
+  * sizing readouts: the ROI curve against the exact pair set, and the LSH
+  * sizing curve against brute-force pairs over the collected documents
+  * ([[BaseRows]]).
   */
 class DedupConsistencySpec extends SparkSpec {
 
@@ -280,58 +279,4 @@ class DedupConsistencySpec extends SparkSpec {
     }
   }
 
-  test("occupancy-capped LSH pairs are a subset of uncapped and the cap bites") {
-    import org.apache.spark.sql.functions._
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("vec_a", "vec_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val uncapped = pairs(Dedup.embeddingLshWith(spark, sf0001))
-    val capped = pairs(Dedup.embeddingLshCapped(spark, sf0001))
-    assert(capped.subsetOf(uncapped)) // dropping buckets can only remove candidates
-    assert(pairs(Dedup.queries("dedup_embedding_lsh")(spark, sf0001)) == uncapped)
-    // the occupancy rule (13n DIV 320), evaluated imperatively
-    val occCap = Dedup.embOccupancyCap(BaseRows.embeddings.length.toLong)
-    // the rule BITES at this sf: over-cap buckets exist (recomputed from
-    // the entry's own sign-band definition, so the bands stay in Spark)
-    import graft.functions.VectorOps
-    val e = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val bands = e.select(col("vec_id"), explode(array(
-      (0 until Dedup.EmbBands).map(b => struct(
-        lit(b).as("band_idx"),
-        VectorOps.signBand(col("v"), b, Dedup.EmbBandBits).as("band_val"))): _*
-    )).as("band")).select(col("band.band_idx"), col("band.band_val"))
-    val overCap = bands.groupBy(col("band_idx"), col("band_val"))
-      .agg(count(lit(1)).as("bsz")).filter(col("bsz") > occCap).count()
-    assert(overCap > 0, s"no bucket exceeds the occupancy cap $occCap at sf0.001 — rule untested")
-  }
-
-  test("embedding-LSH band-width level rule: boundaries + AND-construction refinement") {
-    import org.apache.spark.sql.functions.col
-    // the level thresholds, imperatively (what the in-plan CASE mirrors)
-    assert(Dedup.embBandLevel(6400L) == 1 && Dedup.embBandLevel(6401L) == 2)
-    assert(Dedup.embBandLevel(65536L) == 2 && Dedup.embBandLevel(65537L) == 3)
-    assert(Dedup.embBandLevel(2097152L) == 3 && Dedup.embBandLevel(2097153L) == 4)
-    // occupancy cap follows the level's bucket space
-    assert(Dedup.embOccupancyCap(2000L) == 2000L * 13 / 320)
-    assert(Dedup.embOccupancyCap(20000L) == 20000L * 13 / 10240)
-    assert(Dedup.embOccupancyCap(300000L) == 300000L * 13 / 327680)
-    assert(Dedup.embOccupancyCap(3000000L) == 3000000L * 13 / 10485760)
-    // widening the key can only REFINE buckets: level-2 pairs are a
-    // subset of level-1 pairs on the same corpus (the AND-construction
-    // property the sizing rule relies on), and both levels find pairs
-    def pairs(l: Int) = Dedup.embeddingLshWith(spark, sf0001,
-        forceLevel = Some(l))
-      .select(col("vec_a"), col("vec_b")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val p1 = pairs(1); val p2 = pairs(2)
-    assert(p2.subsetOf(p1), s"level-2 pairs not a subset: ${p2.diff(p1).take(3)}")
-    assert(p1.nonEmpty && p2.nonEmpty)
-    // at sf0.001 the derived level is 1: the entry output is the forced
-    // level-1 output byte-for-byte (the harness-SF hash-stability claim)
-    val entry = Dedup.queries("dedup_embedding_lsh")(spark, sf0001).collect().toSeq
-    val forced = Dedup.embeddingLshWith(spark, sf0001,
-      forceLevel = Some(1)).collect().toSeq
-    assert(entry == forced)
-  }
 }

@@ -20,7 +20,6 @@ import graft.operators.{Behavior, Events}
 class EventsRecomputeSpec extends SparkSpec {
 
   import BaseRows._
-  import HalfUp._
 
   // ------------------------------------------------------------ attribution
 
@@ -80,71 +79,6 @@ class EventsRecomputeSpec extends SparkSpec {
     assert(got == expected, s"\nentry: $got\nindependent: $expected")
   }
 
-  test("events_attribution_position equals an imperative U-shaped recompute and conserves credit") {
-    val e = events.map(x => (x.userId, x.tsUs, x.eventId, x.eventType, x.cents))
-    val touchesByUser = e.filter(t => t._4 == "click" || t._4 == "view")
-      .groupBy(_._1).view.mapValues(_.toSeq).toMap
-    val purchases = e.filter(_._4 == "purchase")
-    val credits = collection.mutable.Buffer[(String, String, Long)]()
-    var totalMicro = 0L; var creditedMicro = 0L
-    for ((uid, pUs, _, _, cents) <- purchases) {
-      val total = cents * 1000000L
-      totalMicro += total
-      val win = touchesByUser.getOrElse(uid, Seq.empty)
-        .filter(t => t._2 < pUs && t._2 >= pUs - 86400000000L)
-        .sortBy(t => (-t._2, -t._3)) // (t_us desc, t_eid desc) = rn order
-      val k = win.length
-      if (k == 0) credits += (("none", "none", total))
-      else if (k == 1) credits += ((win.head._4, "solo", total))
-      else if (k == 2) {
-        credits += ((win(0)._4, "last", total / 2 + total % 2))
-        credits += ((win(1)._4, "first", total / 2))
-      } else {
-        val share = total * 2 / 5
-        val pool = total - share * 2
-        credits += ((win(0)._4, "last", share))
-        credits += ((win(k - 1)._4, "first", share))
-        for (i <- 1 until k - 1) // rn = i+1; most recent middle is rn=2
-          credits += ((win(i)._4, "middle",
-            pool / (k - 2) + (if (i == 1) pool % (k - 2) else 0L)))
-      }
-    }
-    creditedMicro = credits.map(_._3).sum
-    assert(creditedMicro == totalMicro, "credit not conserved")
-    val expected = credits.groupBy(c => (c._1, c._2)).map { case ((ch, pos), g) =>
-      (ch, pos, g.length.toLong, g.map(_._3).sum)
-    }.toSeq.sortBy(t => (t._1, t._2))
-    val got = Behavior.queries("events_attribution_position")(spark, sf0001)
-      .collect().map(r => (r.getString(0), r.getString(1),
-        r.getLong(2), r.getLong(3))).toSeq
-    assert(got == expected, s"first diff: ${got.zip(expected).find(p => p._1 != p._2)}")
-    // the interesting positions actually occur at this sf
-    assert(Set("first", "middle", "last").subsetOf(got.map(_._2).toSet),
-      "no k>=3 journey at sf0.001 - U-shape untested")
-  }
-
-  test("shapley attribution satisfies the efficiency axiom") {
-    val rows = entry("events_attribution_shapley").collect()
-    assert(rows.length == 4, "one row per channel")
-    val sumX24 = rows.map(_.getLong(1)).sum
-    // efficiency: Σφ = v(N) − v(∅), in the entry's ppm×24 units — recompute
-    // the two coalition values from the raw events via an independent path
-    val fp = events.filter(_.eventType == "purchase")
-      .groupBy(_.userId).map { case (u, g) => u -> g.map(_.tsUs).min }
-    val touch = Set("click", "error", "signup", "view")
-    val k = events.filter(e => touch(e.eventType) && fp.get(e.userId).forall(e.tsUs < _))
-      .groupBy(_.userId).map { case (u, g) => u -> g.map(_.eventType).distinct.length.toLong }
-    val au = events.map(_.userId).distinct
-      .map(u => (k.getOrElse(u, 0L), if (fp.contains(u)) 1L else 0L))
-    def vPpm(kVal: Long): Long = {
-      val g = au.filter(_._1 == kVal)
-      if (g.isEmpty) 0L else g.map(_._2).sum * 1000000L / g.length
-    }
-    val expected = 24L * (vPpm(4) - vPpm(0))
-    assert(sumX24 == expected,
-      s"efficiency violated: Σφ×24 = $sumX24, 24·(v(N)−v(∅)) = $expected")
-  }
-
   // ------------------------------------------------------------ experiments
 
   /** Per experiment user (arm, pre-view cents, post-view cents,
@@ -197,49 +131,6 @@ class EventsRecomputeSpec extends SparkSpec {
     }
   }
 
-  /** Post-view revenue cents of each experiment user in arm `arm`. */
-  private def postCents(arm: Long): Seq[Long] =
-    expUsers.filter(_.arm == arm).map(_.postCents)
-
-  test("welch t-test equals a driver recompute of means, t, and df") {
-    val a = postCents(0)
-    val b = postCents(1)
-    def m(v: Seq[Long]) = v.map(_.toDouble).sum / v.length
-    def va(v: Seq[Long]) = {
-      val mm = m(v); v.map(y => (y - mm) * (y - mm)).sum / (v.length - 1.0)
-    }
-    val se2a = va(a) / a.length; val se2b = va(b) / b.length
-    val row = Behavior.queries("behavior_ttest_revenue")(spark, sf0001).collect().head
-    assert(row.getAs[Long]("n_a") == a.length.toLong)
-    assert(row.getAs[Long]("n_b") == b.length.toLong)
-    assert(math.abs(row.getAs[Double]("mean_a") - m(a)) < 1e-5)
-    assert(math.abs(row.getAs[Double]("mean_b") - m(b)) < 1e-5)
-    if (se2a + se2b > 0.0) {
-      val t = (m(a) - m(b)) / math.sqrt(se2a + se2b)
-      val df = (se2a + se2b) * (se2a + se2b) /
-        (se2a * se2a / (a.length - 1.0) + se2b * se2b / (b.length - 1.0))
-      assert(math.abs(row.getAs[Double]("t") - t) < 1e-6, s"t ${row.getAs[Double]("t")} vs $t")
-      assert(math.abs(row.getAs[Double]("df_welch") - df) < 1e-4)
-    }
-  }
-
-  test("quantile treatment effects equal driver order statistics, exactly") {
-    def stats(v: Seq[Long]): (Double, Long) = {
-      val s = v.sorted
-      val n = s.length
-      val med = (s(((n + 1) / 2) - 1).toDouble + s((n / 2 + 1) - 1).toDouble) / 2.0
-      val p90 = s(((9 * n + 9) / 10) - 1)
-      (med, p90)
-    }
-    val (ma, p90a) = stats(postCents(0))
-    val (mb, p90b) = stats(postCents(1))
-    val row = Behavior.queries("behavior_qte")(spark, sf0001).collect().head
-    assert(row.getAs[Double]("median_a") == ma && row.getAs[Double]("median_b") == mb)
-    assert(row.getAs[Double]("qte_median") == mb - ma)
-    assert(row.getAs[Long]("p90_a") == p90a && row.getAs[Long]("p90_b") == p90b)
-    assert(row.getAs[Long]("qte_p90") == p90b - p90a)
-  }
-
   test("mann-whitney U and z equal an explicit midrank recompute") {
     val mwUsers = expUsers.map(u => (u.arm, u.postCents))
     val n = mwUsers.length.toLong
@@ -267,158 +158,6 @@ class EventsRecomputeSpec extends SparkSpec {
       val z = (u2a.toDouble / 2.0 - nA.toDouble * nB / 2.0) / math.sqrt(varU)
       assert(math.abs(row.getAs[Double]("z") - z) < 1e-6,
         s"z ${row.getAs[Double]("z")} vs independent $z")
-    }
-  }
-
-  test("KS statistic equals a driver exact-CDF recompute") {
-    val a = postCents(0)
-    val b = postCents(1)
-    val na = a.length.toLong; val nb = b.length.toLong
-    val values = (a ++ b).distinct.sorted
-    var ca = 0L; var cb = 0L; var dNum = 0L
-    values.foreach { v =>
-      ca += a.count(_ == v); cb += b.count(_ == v)
-      dNum = math.max(dNum, math.abs(ca * nb - cb * na))
-    }
-    val row = Behavior.queries("behavior_ks_test")(spark, sf0001).collect().head
-    assert(row.getAs[Long]("n_a") == na && row.getAs[Long]("n_b") == nb)
-    assert(row.getAs[Long]("d_num") == dNum)
-    val ks = dNum.toDouble / (na.toDouble * nb.toDouble)
-    assert(math.abs(row.getAs[Double]("ks") - ks) < 1e-6)
-    val reject = ks > 1.358 * math.sqrt((na + nb).toDouble / (na.toDouble * nb.toDouble))
-    assert(row.getAs[Long]("reject_05") == (if (reject) 1L else 0L))
-  }
-
-  test("power/MDE table equals a driver recompute of the design formulas") {
-    val users = expUsers.map(_.conv24h)
-    val nExp = users.length.toLong
-    val nConv = users.count(identity).toLong
-    val p = nConv.toDouble / nExp
-    val zsum = 1.959964 + 0.841621
-    val rows = Behavior.queries("behavior_power_mde")(spark, sf0001).collect()
-    assert(rows.map(_.getAs[Long]("lift_pct")).toSeq == Seq(1L, 2L, 5L, 10L))
-    rows.foreach { r =>
-      assert(r.getAs[Long]("n_exposed") == nExp && r.getAs[Long]("n_conv") == nConv)
-      assert(r.getAs[Long]("p_bp") == nConv * 10000L / nExp)
-      if (p > 0 && p < 1) {
-        val lift = r.getAs[Long]("lift_pct").toDouble
-        val nReq = math.ceil(zsum * zsum * 2.0 * p * (1.0 - p) /
-          ((p * lift / 100.0) * (p * lift / 100.0))).toLong
-        assert(r.getAs[Long]("n_per_arm_required") == nReq, s"lift $lift")
-        val mde = zsum * math.sqrt(2.0 * p * (1.0 - p) / (nExp / 2.0))
-        assert(math.abs(r.getAs[Double]("mde_abs") - mde) < 1e-6)
-      }
-    }
-  }
-
-  test("diff-in-diff cells and estimate equal a driver recompute, exactly") {
-    val postFrom = java.time.LocalDateTime.of(2024, 1, 16, 0, 0)
-      .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
-    val per = events.groupBy(e => (e.userId % 2, if (e.tsUs < postFrom) "pre" else "post", e.userId))
-      .map { case ((arm, period, _), g) =>
-        (arm, period,
-          g.filter(_.eventType == "purchase").map(_.cents).sum,
-          g.count(_.eventType == "purchase").toLong)
-      }
-    val cells = per.groupBy(e => (e._1, e._2)).map { case ((arm, period), g) =>
-      val nUsers = g.size.toLong
-      val rev = g.map(_._3).sum
-      val mean = (rev / nUsers) * 1000000L + (rev % nUsers) * 1000000L / nUsers
-      (arm, period) -> (nUsers, g.map(_._4).sum, rev, mean)
-    }
-    val did = (cells((1L, "post"))._4 - cells((1L, "pre"))._4) -
-      (cells((0L, "post"))._4 - cells((0L, "pre"))._4)
-    Behavior.queries("behavior_diff_in_diff")(spark, sf0001).collect().foreach { r =>
-      val e = cells((r.getAs[Long]("arm"), r.getAs[String]("period")))
-      assert(r.getAs[Long]("n_users") == e._1)
-      assert(r.getAs[Long]("n_purchases") == e._2)
-      assert(r.getAs[Long]("revenue_cents") == e._3)
-      assert(r.getAs[Long]("mean_microcents") == e._4)
-      assert(r.getAs[Long]("did_microcents") == did)
-    }
-  }
-
-  test("post-stratified ATE equals a driver stratify-and-weight recompute") {
-    val ev = events.map(e => (e.userId, e.eventType, e.tsUs, e.cents))
-    val mid = ev.map(_._3).min + (ev.map(_._3).max - ev.map(_._3).min) / 2
-    val users = ev.map(_._1).distinct
-    val nPre = ev.filter(_._3 < mid).groupBy(_._1).map { case (u, g) => u -> g.length.toLong }
-    val post = ev.filter(e => e._3 >= mid && e._2 == "purchase")
-      .groupBy(_._1).map { case (u, g) => u -> g.map(_._4).sum }
-    val muMicro = users.map(u => nPre.getOrElse(u, 0L)).sum * 1000000L / users.length
-    val rows = users.map { u =>
-      val s = math.min(nPre.getOrElse(u, 0L) * 2000000L / math.max(muMicro, 1L), 3L)
-      (u % 2, s, post.getOrElse(u, 0L))
-    }
-    val n = rows.length.toDouble
-    val terms = (0L to 3L).map { s =>
-      val c = rows.filter(r => r._2 == s && r._1 == 0).map(_._3)
-      val t = rows.filter(r => r._2 == s && r._1 == 1).map(_._3)
-      if (c.nonEmpty && t.nonEmpty)
-        (c.length + t.length) / n *
-          (t.sum.toDouble / t.length - c.sum.toDouble / c.length)
-      else 0.0
-    }
-    val used = (0L to 3L).count { s =>
-      rows.exists(r => r._2 == s && r._1 == 0) && rows.exists(r => r._2 == s && r._1 == 1)
-    }.toLong
-    val t1 = rows.filter(_._1 == 1); val t0 = rows.filter(_._1 == 0)
-    val naive = t1.map(_._3).sum.toDouble / t1.length - t0.map(_._3).sum.toDouble / t0.length
-    val row = Behavior.queries("behavior_poststrat_ate")(spark, sf0001).collect().head
-    assert(row.getAs[Long]("n") == rows.length.toLong)
-    assert(row.getAs[Long]("n_strata_used") == used)
-    assert(math.abs(row.getAs[Double]("ate_cents") - terms.sum) < 1e-5,
-      s"ate ${row.getAs[Double]("ate_cents")} vs ${terms.sum}")
-    assert(math.abs(row.getAs[Double]("naive_cents") - naive) < 1e-5)
-  }
-
-  test("SRM chi-square equals a driver recompute") {
-    val ev = events.filter(_.eventType == "view").map(_.userId).distinct
-    val na = ev.count(_ % 2 == 0).toLong; val nb = ev.count(_ % 2 == 1).toLong
-    val e = (na + nb) / 2.0
-    val chi2 = (na - e) * (na - e) / e + (nb - e) * (nb - e) / e
-    val row = Behavior.queries("behavior_srm_check")(spark, sf0001).collect().head
-    assert(row.getAs[Long]("n_a") == na && row.getAs[Long]("n_b") == nb)
-    assert(math.abs(row.getAs[Double]("chi2") - chi2) < 1e-6)
-    assert(row.getAs[Long]("srm_flag") == (if (chi2 > 3.841) 1L else 0L))
-  }
-
-  test("delta-method ratio z equals a driver moment recompute") {
-    val per = events
-      .map(e => (e.userId, if (e.eventType == "purchase") e.cents else 0L))
-      .groupBy(_._1).toSeq
-      .map { case (u, g) => (u % 2, g.map(_._2).sum, g.length.toLong) }
-    def arm(v: Long): (Long, Double, Double, Double, Double, Double) = {
-      val g = per.filter(_._1 == v)
-      val n = g.length.toLong
-      val sx = g.map(_._2).sum.toDouble; val sy = g.map(_._3).sum.toDouble
-      val sxx = g.map(u => BigDecimal(u._2) * BigDecimal(u._2)).sum.toDouble
-      val syy = g.map(u => BigDecimal(u._3) * BigDecimal(u._3)).sum.toDouble
-      val sxy = g.map(u => BigDecimal(u._2) * BigDecimal(u._3)).sum.toDouble
-      (n, sx, sy, sxx, syy, sxy)
-    }
-    val (naL, sxa, sya, sxxa, syya, sxya) = arm(0)
-    val (nbL, sxb, syb, sxxb, syyb, sxyb) = arm(1)
-    def varR(n: Long, sx: Double, sy: Double, sxx: Double, syy: Double, sxy: Double): Double = {
-      val nn = n.toDouble
-      val r = sx / sy
-      val vx = (nn * sxx - sx * sx) / (nn * (nn - 1.0))
-      val vy = (nn * syy - sy * sy) / (nn * (nn - 1.0))
-      val cxy = (nn * sxy - sx * sy) / (nn * (nn - 1.0))
-      (vx - 2.0 * r * cxy + r * r * vy) / (nn * (sy / nn) * (sy / nn))
-    }
-    val row = Behavior.queries("behavior_ratio_delta")(spark, sf0001).collect().head
-    assert(row.getAs[Long]("n_a") == naL && row.getAs[Long]("n_b") == nbL)
-    assert(math.abs(row.getAs[Double]("ratio_a") - sxa / sya) < 1e-6)
-    assert(math.abs(row.getAs[Double]("ratio_b") - sxb / syb) < 1e-6)
-    if (naL > 1 && nbL > 1 && sya > 0 && syb > 0) {
-      val vsum = varR(naL, sxa, sya, sxxa, syya, sxya) +
-        varR(nbL, sxb, syb, sxxb, syyb, sxyb)
-      if (vsum > 0.0) {
-        assert(math.abs(row.getAs[Double]("se") - math.sqrt(vsum)) < 1e-6)
-        assert(math.abs(row.getAs[Double]("z") -
-          (sxa / sya - sxb / syb) / math.sqrt(vsum)) < 1e-6)
-      }
     }
   }
 
@@ -470,21 +209,6 @@ class EventsRecomputeSpec extends SparkSpec {
     assert(math.abs(row.getAs[Double]("ssw") - ssw) < 1e-6 * math.abs(ssw), "ssw")
     assert(math.abs(row.getAs[Double]("f") - f) < 1e-4,
       s"F ${row.getAs[Double]("f")} vs independent $f")
-  }
-
-  test("anova decomposes nonnegative variance; spearman is a correlation") {
-    val a = entry("behavior_anova_f").collect().head
-    assert(a.getLong(0) == 5 && a.getDouble(2) >= 0.0 && a.getDouble(3) > 0.0)
-    assert(a.getDouble(4) > 0.0)
-    val s = entry("behavior_spearman").collect().head
-    assert(math.abs(s.getDouble(1)) <= 1.0)
-  }
-
-  test("msprt p-value is always-valid-shaped and decision-consistent") {
-    val r = entry("behavior_msprt").collect().head
-    val (p, reject) = (r.getDouble(4), r.getLong(5))
-    assert(p > 0.0 && p <= 1.0)
-    assert((reject == 1L) == (p < 0.05))
   }
 
   // ---------------------------------------------------- hourly monitoring
@@ -550,143 +274,6 @@ class EventsRecomputeSpec extends SparkSpec {
     assert(plantedGot.filter(_._5 == 1L).map(_._2) == Seq(40L))
   }
 
-  test("3-sigma rate flags equal an exact integer driver recompute") {
-    val hourly = typeHourCounts
-    val expected = hourly.toSeq.map { case ((et, h), cnt) =>
-      val grp = hourly.filter(_._1._1 == et).values.toSeq
-      val n = grp.length.toLong; val tot = grp.sum
-      val sumsq = grp.map(c => c * c).sum
-      val dev = n * cnt - tot
-      (et, h, cnt, dev * dev > 9L * (n * sumsq - tot * tot))
-    }.sortBy(e => (e._1, e._2))
-    val got = Events.queries("events_rate_anomaly")(spark, sf0001).collect()
-      .map(r => (r.getAs[String]("event_type"),
-        r.getAs[java.sql.Timestamp]("hour_start").toString.replace(".0", ""),
-        r.getAs[Long]("cnt"), r.getAs[Boolean]("is_anomaly"))).toSeq
-    assert(got.map(e => (e._1, e._3, e._4)) == expected.map(e => (e._1, e._3, e._4)),
-      s"first diff: ${got.zip(expected).find(p => (p._1._1, p._1._3, p._1._4) != (p._2._1, p._2._3, p._2._4))}")
-  }
-
-  test("CUSUM peak equals an imperative prefix recompute, exactly") {
-    val days = events.map(e => Math.floorDiv(e.tsUs, 86400000000L) * 86400000000L)
-    val daily = days.groupBy(identity).map { case (d, g) => d -> g.length.toLong }
-    val ds = daily.keys.toSeq.sorted
-    val dCount = ds.length.toLong
-    val total = daily.values.sum
-    var s = 0L; var peakAbs = -1L; var peakDay = 0L
-    ds.foreach { d =>
-      s += daily(d) * dCount - total
-      if (math.abs(s) > peakAbs) { peakAbs = math.abs(s); peakDay = d }
-    }
-    val row = Events.queries("events_cusum_shift")(spark, sf0001).collect().head
-    assert(row.getAs[Long]("n_days") == dCount)
-    assert(row.getAs[Long]("total_events") == total)
-    assert(row.getAs[Long]("peak_day_us") == peakDay)
-    assert(row.getAs[Long]("cusum_peak") == peakAbs)
-    assert(math.abs(row.getAs[Double]("shift_score") -
-      peakAbs.toDouble / (dCount.toDouble * total.toDouble)) < 1e-6)
-  }
-
-  test("theil-sen slope equals a brute-force pairwise-median recompute") {
-    val hc = hourCounts
-    val hs = hc.keys.toSeq.sorted
-    val slopes = (for {
-      i <- hs.indices; j <- (i + 1) until hs.length
-    } yield (hc(hs(j)) - hc(hs(i))).toDouble / (hs(j) - hs(i))).sorted
-    val m = slopes.length
-    val median = (slopes(((m + 1) / 2) - 1) + slopes((m / 2 + 1) - 1)) / 2.0
-    val row = Events.queries("events_theilsen_trend")(spark, sf0001).collect().head
-    assert(row.getAs[Long]("n_hours") == hs.length.toLong)
-    assert(row.getAs[Long]("n_pairs") == m.toLong)
-    assert(math.abs(row.getAs[Double]("slope") - median) < 1e-12,
-      s"slope ${row.getAs[Double]("slope")} vs independent $median")
-  }
-
-  test("theil-sen pairs count matches the hour count exactly") {
-    val r = entry("events_theilsen_trend").collect().head
-    val h = r.getLong(0); val m = r.getLong(1)
-    assert(m == h * (h - 1) / 2, s"pairs $m != C($h,2)")
-  }
-
-  test("holm step-down equals an imperative recompute and actually steps down") {
-    val counts = hourCounts.toSeq
-    val n = counts.length.toDouble
-    val sc = counts.map(_._2).sum.toDouble
-    val sc2 = counts.map(c => c._2 * c._2).sum.toDouble
-    val mean = sc / n
-    val sd = math.sqrt((sc2 - sc * sc / n) / (n - 1.0))
-    val crit = Array(2865260L, 2837597L, 2807034L, 2772921L, 2734369L,
-      2690110L, 2638257L, 2575829L, 2497705L, 2393980L, 2241403L, 1959964L)
-    val cand = counts.map { case (h, c) => (h, c, (c.toDouble - mean) / sd) }
-      .sortBy { case (h, _, z) => (-math.abs(z), h) }.take(12)
-    var alive = 1L
-    val expected = cand.zipWithIndex.map { case ((h, c, z), i) =>
-      val ind = if (math.abs(z) >= crit(i) / 1000000.0) 1L else 0L
-      alive = math.min(alive, ind)
-      ((i + 1).toLong, h, c, round6(z).toDouble, crit(i), alive)
-    }
-    val got = Behavior.queries("behavior_holm_anomalies")(spark, sf0001)
-      .collect()
-      .map(r => (r.getAs[Long]("rnk"), r.getAs[Long]("hour_no"),
-        r.getAs[Long]("n_events"), r.getAs[Double]("z"),
-        r.getAs[Long]("crit_micro"), r.getAs[Long]("rejected"))).toSeq
-    assert(got == expected,
-      s"\nentry: ${got.take(4)}\nindependent: ${expected.take(4)}")
-    // the correction must bite in BOTH directions: something rejects and
-    // something survives, else the demo is vacuous
-    assert(got.exists(_._6 == 1L), "nothing rejected — no planted signal")
-    assert(got.exists(_._6 == 0L), "everything rejected — no correction")
-  }
-
-  test("hourly ACF equals a driver exact-moment recompute") {
-    val ys = hourlySeries.map(_._2)
-    val n = ys.length.toLong; val s = ys.sum
-    val z = ys.map(y => BigInt(n * y - s))
-    val den = z.map(v => v * v).sum
-    val expected = (1 to 24).flatMap { k =>
-      if (k >= z.length) None
-      else {
-        val num = (k until z.length).map(i => z(i) * z(i - k)).sum
-        Some((k.toLong, (z.length - k).toLong,
-          round6(num.toDouble / den.toDouble).toDouble))
-      }
-    }
-    val got = Events.queries("events_acf_hourly")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("lag"), r.getAs[Long]("n_terms"),
-        r.getAs[Double]("acf"))).toSeq
-    assert(got.map(t => (t._1, t._2)) == expected.map(t => (t._1, t._2)))
-    got.zip(expected).foreach { case (g, e) =>
-      assert(math.abs(g._3 - e._3) < 1e-6, s"lag ${g._1}: ${g._3} vs ${e._3}")
-    }
-  }
-
-  test("seasonal-naive backtest equals a driver recompute of the final day") {
-    val series = hourlySeries.toMap
-    val h1 = hourlySeries.map(_._1).max
-    val audit = ((h1 - 23) to h1).flatMap { h =>
-      series.get(h - 24).map { f =>
-        val y = series(h)
-        val ae = math.abs(y - f)
-        val smape = if (y + f == 0) 0L else 2000000L * ae / (y + f)
-        (h, y, f, ae, smape)
-      }
-    }
-    val got = Events.queries("events_snaive_backtest")(spark, sf0001).collect()
-    assert(got.nonEmpty && got.length == audit.length)
-    val maeMicro = audit.map(_._4).sum * 1000000L / audit.length
-    val smapeMean = audit.map(_._5).sum / audit.length
-    val byH = audit.map(a => a._1 -> a).toMap
-    got.foreach { r =>
-      val h = r.getAs[Long]("hour_no")
-      val e = byH(h)
-      assert(r.getAs[Long]("actual") == e._2 && r.getAs[Long]("forecast") == e._3, s"hour $h")
-      assert(r.getAs[Long]("abs_err") == e._4, s"hour $h abs_err")
-      assert(r.getAs[Long]("smape_ppm") == e._5, s"hour $h smape")
-      assert(r.getAs[Long]("mae_micro") == maeMicro)
-      assert(r.getAs[Long]("smape_mean_ppm") == smapeMean)
-    }
-  }
-
   test("holt linear smoother equals an imperative dyadic double-EWMA, exactly") {
     val hc = hourCounts
     val h0 = hc.keys.min; val h1 = hc.keys.max
@@ -713,17 +300,6 @@ class EventsRecomputeSpec extends SparkSpec {
         r.getAs[Long]("level_micro"), r.getAs[Long]("trend_micro"),
         r.getAs[Long]("forecast_next_micro"))).toSeq
     assert(got == expected, s"first diff: ${got.zip(expected).find(p => p._1 != p._2)}")
-  }
-
-  test("seasonal decomposition centers the profile and balances slots") {
-    val rows = entry("events_seasonal_decomp").collect()
-    assert(rows.length == 24)
-    val centered = rows.map(_.getLong(2)).sum
-    // re-centering is an exact floor division: residue ∈ [0, k)
-    assert(centered >= 0 && centered < 24,
-      s"seasonal sum $centered outside the floor-div residue band")
-    val obs = rows.map(_.getLong(1))
-    assert(obs.max - obs.min <= 1, "hour-of-day slots unbalanced")
   }
 
   // ------------------------------------------------- per-user and per-day
@@ -754,102 +330,4 @@ class EventsRecomputeSpec extends SparkSpec {
     assert(got == expected, s"\nentry: $got\nindependent: $expected")
   }
 
-  test("markov steady state conserves mass up to DIV floor loss") {
-    val pis = entry("events_markov_steady").collect().map(_.getLong(1))
-    assert(pis.sum <= 1000000L && pis.sum >= 980000L,
-      s"mass ${pis.sum} drifted beyond floor-loss bounds")
-    assert(pis.forall(_ >= 0))
-  }
-
-  test("time-weighted average equals an imperative hold-interval recompute") {
-    // the decimal(18,2) cents cast is the entry's own, so it stays in Spark
-    val ev = Tables.events(spark, sf0001)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val expected = ev.groupBy(_._1).toSeq.flatMap { case (u, g) =>
-      val ordered = g.toSeq.sortBy(r => (r._3, r._2))
-      val holds = ordered.zip(ordered.tail).map { case (cur, nxt) =>
-        (cur._4, nxt._3 - cur._3)
-      }
-      val denom = holds.map(_._2).sum
-      if (holds.isEmpty || denom <= 0) None
-      else {
-        val numer = holds.map { case (c, d) => BigInt(c) * d }.sum
-        Some((u, holds.length.toLong, denom, (numer / denom).toLong))
-      }
-    }.sortBy(_._1)
-    val got = Events.queries("agg_time_weighted_avg")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_holds"),
-        r.getAs[Long]("span_us"), r.getAs[Long]("twap_cents"))).toSeq
-    assert(got == expected, s"first diff: ${got.zip(expected).find(p => p._1 != p._2)}")
-  }
-
-  test("DAU/WAU stickiness equals an imperative recompute, exactly") {
-    val ud = events.map(e => (e.userId, e.tsUs / 86400000000L)).distinct
-    val dau = ud.groupBy(_._2).map { case (d, g) => d -> g.length.toLong }
-    val wau = ud.flatMap { case (u, d) => (0L to 6L).map(g => (u, d + g)) }
-      .distinct.groupBy(_._2).map { case (w, g) => w -> g.length.toLong }
-    val expected = dau.keys.toSeq.sorted.map { d =>
-      (d, dau(d), wau(d), dau(d) * 1000000L / wau(d))
-    }
-    val got = Events.queries("events_dau_stickiness")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("day_idx"), r.getAs[Long]("dau"),
-        r.getAs[Long]("wau"), r.getAs[Long]("stickiness_micro"))).toSeq
-    assert(got == expected)
-  }
-
-  test("sliding 3h distinct equals a direct per-window set-union recompute") {
-    // the window starts are compared as the entry's timestamp strings, so
-    // the hour key keeps its date_trunc(...).cast("string") projection
-    val uh = Tables.events(spark, sf0001)
-      .select(date_trunc("hour", col("ts")).cast("string").as("h"), col("user_id"))
-      .distinct().collect().map(r => (r.getString(0), r.getLong(1)))
-    // direct formulation: for each window start w, union the user sets of
-    // hours {w, w+1h, w+2h} — no expansion trick, genuinely different shape
-    val byHour = uh.groupBy(_._1).map { case (h, g) => h -> g.map(_._2).toSet }
-    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
-    def parse(s: String) = java.time.LocalDateTime.parse(s, fmt)
-    val starts = byHour.keys.flatMap { h =>
-      val t = parse(h)
-      Seq(t, t.minusHours(1), t.minusHours(2))
-    }.toSet
-    val expected = starts.toSeq.map { w =>
-      val users = (0 to 2).flatMap(k =>
-        byHour.getOrElse(w.plusHours(k).format(fmt), Set.empty[Long])).toSet
-      (w.format(fmt), users.size.toLong)
-    }.filter(_._2 > 0).sortBy(_._1)
-    val got = Events.queries("events_sliding_distinct")(spark, sf0001).collect()
-      .map(r => (r.getAs[java.sql.Timestamp]("window_start").toString
-        .stripSuffix(".0"), r.getAs[Long]("n_distinct_users"))).toSeq
-    assert(got == expected, s"first diff: ${got.zip(expected).find(p => p._1 != p._2)}")
-  }
-
-  test("as-of nearest equals a driver two-direction scan with backward ties") {
-    val ev = events.map(e => (e.eventId, e.userId, e.tsUs, e.eventType))
-    val purchases = ev.filter(_._4 == "purchase")
-      .groupBy(e => (e._2, e._3))
-      .map { case ((u, ts), g) => (u, ts, g.map(_._1).max) }
-      .groupBy(_._1).map { case (u, g) => u -> g.toSeq.sortBy(_._2) }
-    val expected = ev.filter(_._4 == "click").sortBy(_._1).map { c =>
-      val ps = purchases.getOrElse(c._2, Seq.empty)
-      val back = ps.filter(_._2 <= c._3).lastOption
-      val fwd = ps.find(_._2 > c._3)
-      val pick = (back, fwd) match {
-        case (Some(b), None) => Some(b)
-        case (None, Some(f)) => Some(f)
-        case (Some(b), Some(f)) =>
-          if (c._3 - b._2 <= f._2 - c._3) Some(b) else Some(f)
-        case _ => None
-      }
-      (c._1, c._2, c._3, pick.map(_._3), pick.map(_._2))
-    }.toSeq
-    val got = Events.queries("join_asof_nearest")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("event_id"), r.getAs[Long]("user_id"),
-        r.getAs[Long]("ts_us"),
-        Option(r.getAs[java.lang.Long]("near_p_id")).map(_.toLong),
-        Option(r.getAs[java.lang.Long]("near_p_ts_us")).map(_.toLong))).toSeq
-    assert(got == expected, s"first diff: ${got.zip(expected).find(p => p._1 != p._2)}")
-  }
 }

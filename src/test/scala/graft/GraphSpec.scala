@@ -14,8 +14,8 @@ import graft.operators.Graph
   * bit-determinism of the integer iteration. The graph entries are also
   * recomputed on the driver from the collected sf0.001 rows ([[BaseRows]])
   * by imperative second implementations (power iteration, LPA with the
-  * Newman–Girvan score, brute-force wedges and triangles) and compared
-  * exactly or on the documented round-9 lattice.
+  * Newman–Girvan score, brute-force wedges) and compared exactly or on
+  * the documented round-9 lattice.
   */
 class GraphSpec extends SparkSpec {
 
@@ -241,41 +241,6 @@ class GraphSpec extends SparkSpec {
     assert(got == expected, s"\nentry: ${got.take(5)}\nindependent: ${expected.take(5)}")
   }
 
-  test("ppr concentrates rank mass on and around the seed set") {
-    val rows = entry("graph_ppr_seeded").collect()
-    val top5 = rows.take(5).map(_.getLong(0)).toSet
-    // seeds are supplier nodes 2·{1..5}; with teleport returning to them
-    // every round, at least 3 of the top-5 must be seeds on any fixture
-    assert(top5.count(n => n % 2 == 0 && n / 2 <= 5) >= 3,
-      s"seed nodes missing from PPR head: $top5")
-  }
-
-  test("HITS equals an imperative integer mutual-reinforcement recompute") {
-    val sp = supplierParts
-    def normalize(raw: Map[Long, Long]): Map[Long, Long] = {
-      val tot = raw.values.sum
-      raw.map { case (k, v) => k -> v * 1000000L / tot }
-    }
-    var h: Map[Long, Long] = sp.map(_._1).distinct.map(s => s -> 1000000L).toMap
-    var a: Map[Long, Long] = Map.empty
-    for (_ <- 1 to 2) {
-      a = normalize(sp.groupBy(_._2).map { case (p, es) =>
-        p -> es.map(e => h(e._1)).sum
-      })
-      h = normalize(sp.groupBy(_._1).map { case (s, es) =>
-        s -> es.map(e => a(e._2)).sum
-      })
-    }
-    def top15(m: Map[Long, Long], kind: String) =
-      m.toSeq.sortBy { case (id, s) => (-s, id) }.take(15).zipWithIndex
-        .map { case ((id, s), i) => (kind, id, s, (i + 1).toLong) }
-    val expected = top15(a, "authority") ++ top15(h, "hub")
-    val got = Graph.queries("graph_hits")(spark, sf0001).collect()
-      .map(r => (r.getAs[String]("node_type"), r.getAs[Long]("node_id"),
-        r.getAs[Long]("score_mu"), r.getAs[Long]("rk"))).toSeq
-    assert(got == expected, s"\nentry: ${got.take(4)}\nindependent: ${expected.take(4)}")
-  }
-
   test("modularity Q equals an imperative LPA + Newman-Girvan recompute") {
     val edges = coSupplyEdges
     val und = edges.flatMap { case (u, v) => Seq((u, v), (v, u)) }
@@ -335,35 +300,6 @@ class GraphSpec extends SparkSpec {
       s"entry ${row.getAs[Double]("assortativity")} vs independent $r")
   }
 
-  test("clustering coefficients equal a brute-force driver recompute") {
-    val edges = coSupplyEdges.toSet
-    val adj = scala.collection.mutable.HashMap.empty[Long, Set[Long]]
-    edges.foreach { case (u, v) =>
-      adj(u) = adj.getOrElse(u, Set.empty) + v
-      adj(v) = adj.getOrElse(v, Set.empty) + u
-    }
-    val perNode = adj.toSeq.map { case (node, nbrs) =>
-      val d = nbrs.size.toLong
-      val ns = nbrs.toSeq.sorted
-      var tri = 0L
-      for (i <- ns.indices; j <- (i + 1) until ns.length)
-        if (edges.contains((ns(i), ns(j))) || edges.contains((ns(j), ns(i)))) tri += 1
-      val coeff = if (d >= 2) tri * 2000000L / (d * (d - 1L)) else 0L
-      (node, d, tri, coeff)
-    }
-    val tri3 = perNode.map(_._3).sum
-    val wedges2 = perNode.map(e => e._2 * (e._2 - 1L)).sum
-    val trans = if (wedges2 > 0) tri3 * 2000000L / wedges2 else 0L
-    val avg = perNode.map(_._4).sum / perNode.length
-    val expected = perNode.sortBy { case (n2, _, _, c) => (-c, n2) }.take(20)
-      .map { case (n2, d, tri, c) => (n2, d, tri, c, trans, avg) }
-    val got = Graph.queries("graph_clustering_coeff")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("s_suppkey"), r.getAs[Long]("degree"),
-        r.getAs[Long]("n_triangles"), r.getAs[Long]("coeff_ppm"),
-        r.getAs[Long]("transitivity_ppm"), r.getAs[Long]("avg_coeff_ppm"))).toSeq
-    assert(got == expected, s"\nentry: ${got.take(3)}\nindependent: ${expected.take(3)}")
-  }
-
   /** Brute-force wedge scores over the co-supply graph: for every
     * non-adjacent pair, the shared-neighbor count and the Adamic–Adar sum
     * on the entry's round-9 weight lattice. */
@@ -407,27 +343,4 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("jaccard link prediction equals an imperative wedge recompute, exactly") {
-    val edges = coSupplyEdges.toSet
-    val adj = (edges.toSeq.flatMap { case (u, v) => Seq(u -> v, v -> u) })
-      .groupBy(_._1).map { case (n, g) => n -> g.map(_._2).toSet }
-    val nodes = adj.keys.toSeq.sorted
-    val cand = (for {
-      i <- nodes.indices; j <- i + 1 until nodes.length
-      u = nodes(i); v = nodes(j)
-      if !edges.contains((u, v))
-      common = (adj(u) & adj(v)).size.toLong
-      if common > 0L
-    } yield {
-      val union = adj(u).size.toLong + adj(v).size - common
-      (u, v, common, union,
-        round6(common.toDouble / union.toDouble).toDouble)
-    }).sortBy { case (u, v, c, _, jc) => (-jc, -c, u, v) }.take(20)
-    val got = Graph.queries("graph_jaccard_links")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("sa"), r.getAs[Long]("sc"),
-        r.getAs[Long]("n_common"), r.getAs[Long]("n_union"),
-        r.getAs[Double]("jaccard"))).toSeq
-    assert(got == cand, s"\nentry: ${got.take(5)}\nindependent: ${cand.take(5)}")
-    assert(got.forall(t => t._5 > 0.0 && t._5 <= 1.0))
-  }
 }

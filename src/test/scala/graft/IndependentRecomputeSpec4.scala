@@ -12,30 +12,15 @@ import graft.operators._
   * entry's documented lattice (exact for the integer kernels). */
 class IndependentRecomputeSpec4 extends SparkSpec {
 
-  /** The shared experiment substrate: per exposed user (variant,
-    * post-exposure purchase cents with NO 24 h cap) — the exact input of
-    * ttest/qte/mann-whitney/ks. */
-  private lazy val expUsers: Seq[(Long, Long)] = {
-    val ev = Tables.events(spark, sf0001)
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"),
-        floor(col("value") * 100).cast("long").as("cents"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    ev.groupBy(_._1).toSeq.flatMap { case (uid, rows) =>
-      val views = rows.filter(_._2 == "view")
-      if (views.isEmpty) None
-      else {
-        val v = views.map(_._3).min
-        Some((uid % 2,
-          rows.filter(r => r._2 == "purchase" && r._3 > v).map(_._4).sum))
-      }
-    }
-  }
+  import BaseRows._
+
+  /** Post-view revenue cents of each experiment user in arm `arm`. */
+  private def postCents(arm: Long): Seq[Long] =
+    expUsers.filter(_.arm == arm).map(_.postCents)
 
   test("welch t-test equals a driver recompute of means, t, and df") {
-    val a = expUsers.filter(_._1 == 0).map(_._2)
-    val b = expUsers.filter(_._1 == 1).map(_._2)
+    val a = postCents(0)
+    val b = postCents(1)
     def m(v: Seq[Long]) = v.map(_.toDouble).sum / v.length
     def va(v: Seq[Long]) = {
       val mm = m(v); v.map(y => (y - mm) * (y - mm)).sum / (v.length - 1.0)
@@ -63,8 +48,8 @@ class IndependentRecomputeSpec4 extends SparkSpec {
       val p90 = s(((9 * n + 9) / 10) - 1)
       (med, p90)
     }
-    val (ma, p90a) = stats(expUsers.filter(_._1 == 0).map(_._2))
-    val (mb, p90b) = stats(expUsers.filter(_._1 == 1).map(_._2))
+    val (ma, p90a) = stats(postCents(0))
+    val (mb, p90b) = stats(postCents(1))
     val row = Behavior.queries("behavior_qte")(spark, sf0001).collect().head
     assert(row.getAs[Double]("median_a") == ma && row.getAs[Double]("median_b") == mb)
     assert(row.getAs[Double]("qte_median") == mb - ma)
@@ -73,16 +58,13 @@ class IndependentRecomputeSpec4 extends SparkSpec {
   }
 
   test("diff-in-diff cells and estimate equal a driver recompute, exactly") {
-    val ev = Tables.events(spark, sf0001)
-      .select(col("user_id"), col("ts").cast("string").as("ts"),
-        col("event_type"), floor(col("value") * 100).cast("long").as("cents"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-    val per = ev.groupBy(e => (e._1 % 2, if (e._2 < "2024-01-16") "pre" else "post", e._1))
+    val postFrom = java.time.LocalDateTime.of(2024, 1, 16, 0, 0)
+      .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
+    val per = events.groupBy(e => (e.userId % 2, if (e.tsUs < postFrom) "pre" else "post", e.userId))
       .map { case ((arm, period, _), g) =>
         (arm, period,
-          g.filter(_._3 == "purchase").map(_._4).sum,
-          g.count(_._3 == "purchase").toLong)
+          g.filter(_.eventType == "purchase").map(_.cents).sum,
+          g.count(_.eventType == "purchase").toLong)
       }
     val cells = per.groupBy(e => (e._1, e._2)).map { case ((arm, period), g) =>
       val nUsers = g.size.toLong
@@ -103,11 +85,7 @@ class IndependentRecomputeSpec4 extends SparkSpec {
   }
 
   test("post-stratified ATE equals a driver stratify-and-weight recompute") {
-    val ev = Tables.events(spark, sf0001)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"),
-        floor(col("value") * 100).cast("long").as("cents"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+    val ev = events.map(e => (e.userId, e.eventType, e.tsUs, e.cents))
     val mid = ev.map(_._3).min + (ev.map(_._3).max - ev.map(_._3).min) / 2
     val users = ev.map(_._1).distinct
     val nPre = ev.filter(_._3 < mid).groupBy(_._1).map { case (u, g) => u -> g.length.toLong }
@@ -141,9 +119,7 @@ class IndependentRecomputeSpec4 extends SparkSpec {
   }
 
   test("SRM chi-square equals a driver recompute") {
-    val ev = Tables.events(spark, sf0001)
-      .filter(col("event_type") === "view")
-      .select(col("user_id")).distinct().collect().map(_.getLong(0))
+    val ev = events.filter(_.eventType == "view").map(_.userId).distinct
     val na = ev.count(_ % 2 == 0).toLong; val nb = ev.count(_ % 2 == 1).toLong
     val e = (na + nb) / 2.0
     val chi2 = (na - e) * (na - e) / e + (nb - e) * (nb - e) / e
@@ -154,8 +130,8 @@ class IndependentRecomputeSpec4 extends SparkSpec {
   }
 
   test("KS statistic equals a driver exact-CDF recompute") {
-    val a = expUsers.filter(_._1 == 0).map(_._2)
-    val b = expUsers.filter(_._1 == 1).map(_._2)
+    val a = postCents(0)
+    val b = postCents(1)
     val na = a.length.toLong; val nb = b.length.toLong
     val values = (a ++ b).distinct.sorted
     var ca = 0L; var cb = 0L; var dNum = 0L
@@ -173,11 +149,8 @@ class IndependentRecomputeSpec4 extends SparkSpec {
   }
 
   test("delta-method ratio z equals a driver moment recompute") {
-    val per = Tables.events(spark, sf0001)
-      .select(col("user_id"),
-        when(col("event_type") === "purchase",
-          floor(col("value") * 100).cast("long")).otherwise(0L).as("cents"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val per = events
+      .map(e => (e.userId, if (e.eventType == "purchase") e.cents else 0L))
       .groupBy(_._1).toSeq
       .map { case (u, g) => (u % 2, g.map(_._2).sum, g.length.toLong) }
     def arm(v: Long): (Long, Double, Double, Double, Double, Double) = {
@@ -215,11 +188,7 @@ class IndependentRecomputeSpec4 extends SparkSpec {
   }
 
   test("3-sigma rate flags equal an exact integer driver recompute") {
-    val ev = Tables.events(spark, sf0001)
-      .select(col("event_type"),
-        date_trunc("hour", col("ts")).cast("string").as("h"))
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    val hourly = ev.groupBy(identity).map { case (k, g) => k -> g.length.toLong }
+    val hourly = typeHourCounts
     val expected = hourly.toSeq.map { case ((et, h), cnt) =>
       val grp = hourly.filter(_._1._1 == et).values.toSeq
       val n = grp.length.toLong; val tot = grp.sum
@@ -236,6 +205,7 @@ class IndependentRecomputeSpec4 extends SparkSpec {
   }
 
   test("time-weighted average equals an imperative hold-interval recompute") {
+    // the decimal(18,2) cents cast is the entry's own, so it stays in Spark
     val ev = Tables.events(spark, sf0001)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
         (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
@@ -260,9 +230,7 @@ class IndependentRecomputeSpec4 extends SparkSpec {
   }
 
   test("CUSUM peak equals an imperative prefix recompute, exactly") {
-    val days = Tables.events(spark, sf0001)
-      .select(unix_micros(date_trunc("day", col("ts"))).as("d")).collect()
-      .map(_.getLong(0))
+    val days = events.map(e => Math.floorDiv(e.tsUs, 86400000000L) * 86400000000L)
     val daily = days.groupBy(identity).map { case (d, g) => d -> g.length.toLong }
     val ds = daily.keys.toSeq.sorted
     val dCount = ds.length.toLong
@@ -282,10 +250,7 @@ class IndependentRecomputeSpec4 extends SparkSpec {
   }
 
   test("theil-sen slope equals a brute-force pairwise-median recompute") {
-    val hours = Tables.events(spark, sf0001)
-      .select(expr("unix_micros(date_trunc('hour', ts)) DIV 3600000000").as("h"))
-      .collect().map(_.getLong(0))
-    val hc = hours.groupBy(identity).map { case (h, g) => h -> g.length.toLong }
+    val hc = hourCounts
     val hs = hc.keys.toSeq.sorted
     val slopes = (for {
       i <- hs.indices; j <- (i + 1) until hs.length
@@ -300,10 +265,7 @@ class IndependentRecomputeSpec4 extends SparkSpec {
   }
 
   test("MAD outlier counts equal a driver percentile recompute") {
-    val ev = Tables.events(spark, sf0001)
-      .filter(col("value").isNotNull)
-      .select(col("event_type"), col("value")).collect()
-      .map(r => (r.getString(0), math.floor(r.getDouble(1) * 100.0)))
+    val ev = events.map(e => (e.eventType, math.floor(e.value * 100.0)))
     def pct50(v: Seq[Double]): Double = {
       val s = v.sorted
       val idx = 0.5 * (s.length - 1)

@@ -12,12 +12,21 @@ import graft.operators._
   * kernels) and compared on the entry's documented lattice. */
 class IndependentRecomputeSpec5 extends SparkSpec {
 
+  import BaseRows._
   import HalfUp._
+  import SimilaritySpec.{dist, lloydFit}
+
+  /** The returnflag × linestatus contingency table, recounted in driver. */
+  private lazy val contingency: (Map[(String, String), Long], Map[String, Long], Map[String, Long], Long) = {
+    val xs = lineitem.map(l => (l.returnflag, l.linestatus))
+    val joint = xs.groupBy(identity).map { case (k, g) => k -> g.length.toLong }
+    val mx = xs.groupBy(_._1).map { case (k, g) => k -> g.length.toLong }
+    val my = xs.groupBy(_._2).map { case (k, g) => k -> g.length.toLong }
+    (joint, mx, my, xs.length.toLong)
+  }
 
   test("token entropy equals a driver per-doc recompute on the round-6 lattice") {
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
+    val docs = docTexts
     val got = TextAnalysis.queries("text_entropy")(spark, sf0001).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(got.size == docs.length)
@@ -40,9 +49,7 @@ class IndependentRecomputeSpec5 extends SparkSpec {
   }
 
   test("tf-idf top-20 equals a driver recount and rescore") {
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
+    val docs = docTexts
     val nDocs = docs.length.toDouble
     val tf = scala.collection.mutable.HashMap.empty[String, Long]
     val df = scala.collection.mutable.HashMap.empty[String, Long]
@@ -64,9 +71,7 @@ class IndependentRecomputeSpec5 extends SparkSpec {
   }
 
   test("BM25 top-25 equals a driver Okapi recompute, exactly") {
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
+    val docs = docTexts
     val n = docs.length.toDouble
     val dl = docs.map { case (id, t) => id -> t.split(" ", -1).length.toLong }.toMap
     val totalDl = dl.values.sum.toDouble
@@ -89,9 +94,7 @@ class IndependentRecomputeSpec5 extends SparkSpec {
   }
 
   test("HITS equals an imperative integer mutual-reinforcement recompute") {
-    val sp = Tables.lineitem(spark, sf0001)
-      .select(col("l_suppkey"), col("l_partkey")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val sp = supplierParts
     def normalize(raw: Map[Long, Long]): Map[Long, Long] = {
       val tot = raw.values.sum
       raw.map { case (k, v) => k -> v * 1000000L / tot }
@@ -117,14 +120,7 @@ class IndependentRecomputeSpec5 extends SparkSpec {
   }
 
   test("clustering coefficients equal a brute-force driver recompute") {
-    val ps = Tables.lineitem(spark, sf0001)
-      .filter(col("l_quantity") > 49)
-      .select(col("l_partkey"), col("l_suppkey")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val edges = ps.groupBy(_._1).values.flatMap { g =>
-      val ss = g.map(_._2).distinct.sorted
-      for (i <- ss.indices; j <- (i + 1) until ss.length) yield (ss(i), ss(j))
-    }.toSet
+    val edges = coSupplyEdges.toSet
     val adj = scala.collection.mutable.HashMap.empty[Long, Set[Long]]
     edges.foreach { case (u, v) =>
       adj(u) = adj.getOrElse(u, Set.empty) + v
@@ -150,17 +146,6 @@ class IndependentRecomputeSpec5 extends SparkSpec {
         r.getAs[Long]("n_triangles"), r.getAs[Long]("coeff_ppm"),
         r.getAs[Long]("transitivity_ppm"), r.getAs[Long]("avg_coeff_ppm"))).toSeq
     assert(got == expected, s"\nentry: ${got.take(3)}\nindependent: ${expected.take(3)}")
-  }
-
-  /** The returnflag × linestatus contingency table, recounted in driver. */
-  private lazy val contingency: (Map[(String, String), Long], Map[String, Long], Map[String, Long], Long) = {
-    val xs = Tables.lineitem(spark, sf0001)
-      .select(col("l_returnflag"), col("l_linestatus")).collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    val joint = xs.groupBy(identity).map { case (k, g) => k -> g.length.toLong }
-    val mx = xs.groupBy(_._1).map { case (k, g) => k -> g.length.toLong }
-    val my = xs.groupBy(_._2).map { case (k, g) => k -> g.length.toLong }
-    (joint, mx, my, xs.length.toLong)
   }
 
   test("mutual information equals a driver contingency recompute") {
@@ -206,10 +191,7 @@ class IndependentRecomputeSpec5 extends SparkSpec {
   }
 
   test("k-NN classifier equals a brute-force driver vote, exactly") {
-    val all = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("label"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2).toArray))
+    val all = embeddings.map(e => (e.vecId, e.label, e.vec))
     def dot(a: Array[Double], b: Array[Double]): Double = {
       var s = 0.0; var i = 0
       while (i < a.length) { s += a(i) * b(i); i += 1 }
@@ -239,6 +221,8 @@ class IndependentRecomputeSpec5 extends SparkSpec {
   }
 
   test("rolling beta equals an imperative windowed-moment recompute, exactly") {
+    // the cents are the entry's own decimal(12,2) cast, so the projection
+    // stays in Spark
     val rows = Tables.lineitem(spark, sf0001)
       .filter(col("l_partkey") <= 200)
       .select(col("l_partkey"), col("l_orderkey"), col("l_linenumber"),
@@ -268,9 +252,7 @@ class IndependentRecomputeSpec5 extends SparkSpec {
   }
 
   test("mixture HHI equals a driver concentration recompute") {
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("lang"), col("source")).collect()
-      .map(r => (r.getString(0), r.getString(1)))
+    val docs = documents.map(d => (d.lang, d.source))
     val expected = docs.groupBy(_._1).map { case (lang, g) =>
       val bySrc = g.groupBy(_._2).map { case (_, s) => s.length.toLong }.toSeq
       val sum = bySrc.sum
@@ -286,40 +268,8 @@ class IndependentRecomputeSpec5 extends SparkSpec {
   }
 
   test("silhouette equals a fully imperative Lloyd fit + score pipeline") {
-    val raw = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    val comps: Map[Long, Array[BigDecimal]] =
-      raw.map { case (id, v) => id -> v.map(round6) }.toMap
-    val d = raw.head._2.length
-    def assign(cent: Map[Long, Array[BigDecimal]]): Map[Long, Long] = {
-      comps.map { case (vid, x) =>
-        val vsq = x.map(b => b * b).sum.toDouble
-        val best = cent.toSeq.map { case (cl, c) =>
-          val dotv = x.zip(c).map { case (a, b) => a * b }.sum.toDouble
-          val csq = c.map(b => b * b).sum.toDouble
-          (cl, dotv / math.sqrt(vsq * csq))
-        }.minBy { case (cl, cos) => (-cos, cl) }._1
-        vid -> best
-      }
-    }
-    var cent: Map[Long, Array[BigDecimal]] =
-      comps.filter(_._1 < 8L).map { case (id, x) => id -> x.clone }
-    for (_ <- 1 to 2) {
-      val asg = assign(cent)
-      cent = asg.groupBy(_._2).map { case (cl, members) =>
-        val ids = members.keys.toSeq
-        cl -> Array.tabulate(d) { j =>
-          round6(ids.map(id => comps(id)(j)).sum.toDouble / ids.length)
-        }
-      }
-    }
-    val asg = assign(cent)
+    val (comps, cent, asg) = lloydFit
     // distances to every centroid on the round-9 lattice
-    def dist(x: Array[BigDecimal], c: Array[BigDecimal]): BigDecimal =
-      round9(math.sqrt(x.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum.toDouble))
     val sVals = comps.toSeq.map { case (vid, x) =>
       val own = asg(vid)
       val da = dist(x, cent(own)).toDouble

@@ -12,6 +12,7 @@ import graft.operators._
   * adjacency theorem over the whole 256×256 grid. */
 class IndependentRecomputeSpec6 extends SparkSpec {
 
+  import BaseRows._
   import HalfUp._
 
   /** The classic xy2d (Hilbert curve, order 8) — rotation by conditional
@@ -44,9 +45,7 @@ class IndependentRecomputeSpec6 extends SparkSpec {
         s"curve jump at d=$i: ($x0,$y0) -> ($x1,$y1)")
     }
     // the entry's bucket profile vs an independent recount through xy2d
-    val pairs = Tables.lineitem(spark, sf0001)
-      .select((col("l_partkey") % 256).as("px"), (col("l_suppkey") % 256).as("sx"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val pairs = lineitem.map(l => (l.partkey % 256, l.suppkey % 256))
     val expected = pairs.map { case (px, sx) => (xy2d(px, sx) / 3000L, px, sx) }
       .groupBy(_._1).toSeq.map { case (b, g) =>
         (b, g.length.toLong, g.map(_._2).min, g.map(_._2).max,
@@ -57,15 +56,6 @@ class IndependentRecomputeSpec6 extends SparkSpec {
         r.getAs[Long]("min_part"), r.getAs[Long]("max_part"),
         r.getAs[Long]("min_supp"), r.getAs[Long]("max_supp"))).toSeq
     assert(got == expected, s"\nentry: ${got.take(3)}\nindependent: ${expected.take(3)}")
-  }
-
-  /** The gap-filled hourly series shared by the ACF and snaive pins. */
-  private lazy val hourlySeries: Seq[(Long, Long)] = {
-    val hours = Tables.events(spark, sf0001)
-      .select(expr("unix_micros(date_trunc('hour', ts)) DIV 3600000000").as("h"))
-      .collect().map(_.getLong(0))
-    val hc = hours.groupBy(identity).map { case (h, g) => h -> g.length.toLong }
-    (hc.keys.min to hc.keys.max).map(h => h -> hc.getOrElse(h, 0L))
   }
 
   test("hourly ACF equals a driver exact-moment recompute") {
@@ -118,11 +108,8 @@ class IndependentRecomputeSpec6 extends SparkSpec {
   }
 
   test("decision stump candidates and ranking equal a driver split search") {
-    val rows = Tables.lineitem(spark, sf0001)
-      .select(when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"),
-        col("l_quantity").cast("double"), col("l_discount").cast("double"),
-        col("l_extendedprice").cast("double"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+    val rows = lineitem.map(l =>
+      (if (l.returnflag == "R") 1L else 0L, l.quantity, l.discount, l.extendedprice))
     def h(pos: Long, n: Long): Double =
       if (pos == 0 || pos == n) 0.0
       else {
@@ -175,9 +162,7 @@ class IndependentRecomputeSpec6 extends SparkSpec {
   }
 
   test("winsorize equals a driver percentile-clip recompute") {
-    val xs = Tables.orders(spark, sf0001)
-      .select(col("o_orderpriority"), col("o_totalprice")).collect()
-      .map(r => (r.getString(0), r.getDouble(1)))
+    val xs = orders.map(o => (o.orderpriority, o.totalprice))
     def pct(v: Seq[Double], p: Double): Double = {
       val s = v.sorted
       val idx = p * (s.length - 1)
@@ -205,9 +190,7 @@ class IndependentRecomputeSpec6 extends SparkSpec {
   }
 
   test("weighted sample equals a driver exponential-race recompute and is weight-biased") {
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("source"), col("n_chars"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
+    val docs = documents.map(d => (d.docId, d.source, d.nChars, d.text))
     val md = java.security.MessageDigest.getInstance("MD5")
     def key(text: String, w: Long): Double = {
       val hex = md.digest(text.getBytes("UTF-8"))
@@ -230,10 +213,8 @@ class IndependentRecomputeSpec6 extends SparkSpec {
   }
 
   test("token packing conserves tokens and matches a driver first-fit recompute") {
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("source"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        r.getString(2).split(" ", -1).count(_.nonEmpty).toLong))
+    val docs = documents
+      .map(d => (d.docId, d.source, d.text.split(" ", -1).count(_.nonEmpty).toLong))
       .filter(_._3 > 0)
     val expected = docs.groupBy(_._2).toSeq.flatMap { case (src, g) =>
       var running = 0L
@@ -254,9 +235,7 @@ class IndependentRecomputeSpec6 extends SparkSpec {
   }
 
   test("DAU/WAU stickiness equals an imperative recompute, exactly") {
-    val ud = Tables.events(spark, sf0001)
-      .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("d"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).distinct
+    val ud = events.map(e => (e.userId, e.tsUs / 86400000000L)).distinct
     val dau = ud.groupBy(_._2).map { case (d, g) => d -> g.length.toLong }
     val wau = ud.flatMap { case (u, d) => (0L to 6L).map(g => (u, d + g)) }
       .distinct.groupBy(_._2).map { case (w, g) => w -> g.length.toLong }
@@ -270,9 +249,7 @@ class IndependentRecomputeSpec6 extends SparkSpec {
   }
 
   test("ngram novelty equals a driver first-occurrence recount, exactly") {
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("source"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+    val docs = documents.map(d => (d.docId, d.source, d.text))
     val tris = docs.flatMap { case (id, src, text) =>
       val t = text.split(" ", -1).filter(_.nonEmpty)
       t.sliding(3).filter(_.length == 3).map(w => (id, src, w.mkString(" "))).toSeq.distinct
@@ -292,6 +269,8 @@ class IndependentRecomputeSpec6 extends SparkSpec {
   }
 
   test("sliding 3h distinct equals a direct per-window set-union recompute") {
+    // the window starts are compared as the entry's timestamp strings, so
+    // the hour key keeps its date_trunc(...).cast("string") projection
     val uh = Tables.events(spark, sf0001)
       .select(date_trunc("hour", col("ts")).cast("string").as("h"), col("user_id"))
       .distinct().collect().map(r => (r.getString(0), r.getLong(1)))

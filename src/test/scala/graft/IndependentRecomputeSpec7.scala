@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators._
 
 /** Wave 7 of the round-10 oracle-independence pins — the last mirrored
@@ -12,21 +10,55 @@ import graft.operators._
   * by DIRECT pair counting against the entry's Mann-Whitney identity). */
 class IndependentRecomputeSpec7 extends SparkSpec {
 
+  import BaseRows._
   import HalfUp._
 
-  test("power/MDE table equals a driver recompute of the design formulas") {
-    val ev = Tables.events(spark, sf0001)
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val users = ev.groupBy(_._1).toSeq.flatMap { case (_, rows) =>
-      val views = rows.filter(_._2 == "view")
-      if (views.isEmpty) None
+  /** The lrDocs → 3×GD → score pipeline, replayed imperatively on the
+    * entry's documented decimal lattice: per-doc (f1, f2, y) standardized
+    * features, zero-init weights, three full-batch steps at lr = 2.0. */
+  private lazy val lrScored: Seq[(BigDecimal, Long)] = {
+    val docs = documents.map(_.text)
+    val raw = docs.flatMap { text =>
+      val ws = text.split(" ", -1).filter(_.nonEmpty)
+      if (ws.isEmpty) None
       else {
-        val v = views.map(_._3).min
-        Some(rows.exists(r => r._2 == "purchase" && r._3 > v && r._3 <= v + 86400000000L))
+        val n = ws.length.toLong
+        val nd = ws.distinct.length.toLong
+        val nStop = ws.count(w => w == "the" || w == "a").toLong
+        Some((round6(nd.toDouble / n), round6(nStop.toDouble / n),
+          if (n >= 55) 1L else 0L))
       }
     }
+    val m = raw.length
+    def z(fs: Seq[BigDecimal]): Seq[BigDecimal] = {
+      val s1 = fs.sum; val s11 = fs.map(f => f * f).sum
+      val mean = s1.toDouble / m
+      val variance = s11.toDouble / m - mean * mean
+      if (variance > 0.0) fs.map(f => round6((f.toDouble - mean) / math.sqrt(variance)))
+      else fs.map(_ => BigDecimal(0))
+    }
+    val f1 = z(raw.map(_._1)); val f2 = z(raw.map(_._2))
+    val ys = raw.map(_._3)
+    var w = (BigDecimal(0), BigDecimal(0), BigDecimal(0))
+    def score(i: Int): BigDecimal = {
+      val zv = (w._1 + w._2 * f1(i) + w._3 * f2(i)).toDouble
+      round6(1.0 / (1.0 + math.exp(-zv)))
+    }
+    for (_ <- 1 to 3) {
+      var g0 = BigDecimal(0); var g1 = BigDecimal(0); var g2 = BigDecimal(0)
+      for (i <- 0 until m) {
+        val r = score(i) - BigDecimal(ys(i))
+        g0 += r; g1 += r * f1(i); g2 += r * f2(i)
+      }
+      w = (round6(w._1.toDouble - 2.0 * g0.toDouble / m),
+        round6(w._2.toDouble - 2.0 * g1.toDouble / m),
+        round6(w._3.toDouble - 2.0 * g2.toDouble / m))
+    }
+    (0 until m).map(i => (score(i), ys(i)))
+  }
+
+  test("power/MDE table equals a driver recompute of the design formulas") {
+    val users = expUsers.map(_.conv24h)
     val nExp = users.length.toLong
     val nConv = users.count(identity).toLong
     val p = nConv.toDouble / nExp
@@ -48,10 +80,7 @@ class IndependentRecomputeSpec7 extends SparkSpec {
   }
 
   test("as-of nearest equals a driver two-direction scan with backward ties") {
-    val ev = Tables.events(spark, sf0001)
-      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_type")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+    val ev = events.map(e => (e.eventId, e.userId, e.tsUs, e.eventType))
     val purchases = ev.filter(_._4 == "purchase")
       .groupBy(e => (e._2, e._3))
       .map { case ((u, ts), g) => (u, ts, g.map(_._1).max) }
@@ -78,9 +107,7 @@ class IndependentRecomputeSpec7 extends SparkSpec {
   }
 
   test("repetition signals equal a driver bigram recount, exactly") {
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
+    val docs = docTexts
     val expected = docs.flatMap { case (id, text) =>
       val ws = text.split(" ", -1).filter(_.nonEmpty)
       val pairs = ws.zip(ws.drop(1)).map { case (a, b) => s"$a $b" }
@@ -102,9 +129,7 @@ class IndependentRecomputeSpec7 extends SparkSpec {
   }
 
   test("mixture sampling equals a driver Knuth-hash recount, exactly") {
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("source")).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
+    val docs = documents.map(d => (d.docId, d.source))
     val sizes = docs.groupBy(_._2).map { case (s, g) => s -> g.length.toLong }
     val nTotal = docs.length.toLong; val nSources = sizes.size.toLong
     val expected = sizes.keys.toSeq.sorted.map { src =>
@@ -120,51 +145,6 @@ class IndependentRecomputeSpec7 extends SparkSpec {
         r.getAs[Double]("target_rate"), r.getAs[Long]("n_kept"),
         r.getAs[Double]("achieved_rate"))).toSeq
     assert(got == expected)
-  }
-
-  /** The lrDocs → 3×GD → score pipeline, replayed imperatively on the
-    * entry's documented decimal lattice: per-doc (f1, f2, y) standardized
-    * features, zero-init weights, three full-batch steps at lr = 2.0. */
-  private lazy val lrScored: Seq[(BigDecimal, Long)] = {
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("text")).collect().map(_.getString(0))
-    val raw = docs.flatMap { text =>
-      val ws = text.split(" ", -1).filter(_.nonEmpty)
-      if (ws.isEmpty) None
-      else {
-        val n = ws.length.toLong
-        val nd = ws.distinct.length.toLong
-        val nStop = ws.count(w => w == "the" || w == "a").toLong
-        Some((round6(nd.toDouble / n), round6(nStop.toDouble / n),
-          if (n >= 55) 1L else 0L))
-      }
-    }
-    val m = raw.length
-    def z(fs: Seq[BigDecimal]): Seq[BigDecimal] = {
-      val s1 = fs.sum; val s11 = fs.map(f => f * f).sum
-      val mean = s1.toDouble / m
-      val variance = s11.toDouble / m - mean * mean
-      if (variance > 0.0) fs.map(f => round6((f.toDouble - mean) / math.sqrt(variance)))
-      else fs.map(_ => BigDecimal(0))
-    }
-    val f1 = z(raw.map(_._1).toSeq); val f2 = z(raw.map(_._2).toSeq)
-    val ys = raw.map(_._3)
-    var w = (BigDecimal(0), BigDecimal(0), BigDecimal(0))
-    def score(i: Int): BigDecimal = {
-      val zv = (w._1 + w._2 * f1(i) + w._3 * f2(i)).toDouble
-      round6(1.0 / (1.0 + math.exp(-zv)))
-    }
-    for (_ <- 1 to 3) {
-      var g0 = BigDecimal(0); var g1 = BigDecimal(0); var g2 = BigDecimal(0)
-      for (i <- 0 until m) {
-        val r = score(i) - BigDecimal(ys(i))
-        g0 += r; g1 += r * f1(i); g2 += r * f2(i)
-      }
-      w = (round6(w._1.toDouble - 2.0 * g0.toDouble / m),
-        round6(w._2.toDouble - 2.0 * g1.toDouble / m),
-        round6(w._3.toDouble - 2.0 * g2.toDouble / m))
-    }
-    (0 until m).map(i => (score(i), ys(i)))
   }
 
   test("quality AUC: direct pair counting equals the entry's Mann-Whitney identity") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators._
 
 /** Wave 9 of the oracle-independence pins — the round-10 session-2
@@ -13,22 +11,21 @@ import graft.operators._
   * rank-1-ALS pins proved out. */
 class IndependentRecomputeSpec9 extends SparkSpec {
 
+  import BaseRows._
   import HalfUp._
 
-  /** (customer, part) -> purchase count over sf0.001, the shared rating
-    * relation of the CF entries. */
-  private lazy val ratings: Map[(Long, Long), Long] = {
-    val custOf = Tables.orders(spark, sf0001)
-      .select(col("o_orderkey"), col("o_custkey")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Tables.lineitem(spark, sf0001)
-      .select(col("l_orderkey"), col("l_partkey")).collect()
-      .flatMap(r => custOf.get(r.getLong(0)).map(c => (c, r.getLong(1))))
-      .groupBy(identity).map { case (k, g) => k -> g.length.toLong }
+  /** The vector corpus with the entries' sequential-fold dot
+    * (((0 + a0·b0) + a1·b1) + … — the VectorOps order, replicated). */
+  private lazy val vecs: Map[Long, Array[Double]] =
+    embeddings.map(e => e.vecId -> e.vec).toMap
+  private def dotSeq(a: Array[Double], b: Array[Double]): Double = {
+    var acc = 0.0; var i = 0
+    while (i < a.length && i < b.length) { acc += a(i) * b(i); i += 1 }
+    acc
   }
 
   test("slope one equals an imperative deviation recompute, exactly") {
-    val byUser = ratings.toSeq.map { case ((c, p), r) => (c, p, r) }
+    val byUser = ratings
       .groupBy(_._1).map { case (c, g) => c -> g.map(t => t._2 -> t._3).toMap }
     // undirected deviation accumulators keyed (pi < pj)
     val acc = scala.collection.mutable.Map.empty[(Long, Long), (Long, Long)]
@@ -65,7 +62,7 @@ class IndependentRecomputeSpec9 extends SparkSpec {
   }
 
   test("user-based CF equals an imperative neighbor-vote recompute, exactly") {
-    val items = ratings.keys.toSeq.groupBy(_._1)
+    val items = purchases.keys.toSeq.groupBy(_._1)
       .map { case (c, g) => c -> g.map(_._2).toSet }
     val users = items.keys.toSeq.sorted
     val expected = users.filter(_ < 20L).flatMap { u =>
@@ -97,19 +94,13 @@ class IndependentRecomputeSpec9 extends SparkSpec {
   }
 
   test("ranking evaluation equals an imperative metric recompute, exactly") {
-    // NTZ wall-time strings sort chronologically — timezone-free compare
-    val cut = "1999-07-01"
-    val custOf = Tables.orders(spark, sf0001)
-      .select(col("o_orderkey"), col("o_custkey"),
-        col("o_orderdate").cast("string")).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-    val inter = Tables.lineitem(spark, sf0001)
-      .select(col("l_orderkey"), col("l_partkey")).collect()
-      .flatMap { r =>
-        custOf.get(r.getLong(0)).map { case (c, ts) => (c, r.getLong(1), ts) }
-      }
-    val train = inter.collect { case (c, p, ts) if ts < cut => (c, p) }.toSet
-    val testNew = inter.collect { case (c, p, ts) if ts >= cut => (c, p) }
+    val cut = java.time.LocalDateTime.of(1999, 7, 1, 0, 0)
+    val orderOf = orders.map(o => o.orderkey -> o).toMap
+    val inter = lineitem.flatMap { l =>
+      orderOf.get(l.orderkey).map(o => (o.custkey, l.partkey, o.orderdate))
+    }
+    val train = inter.collect { case (c, p, ts) if ts.isBefore(cut) => (c, p) }.toSet
+    val testNew = inter.collect { case (c, p, ts) if !ts.isBefore(cut) => (c, p) }
       .toSet -- train
     val disc = Array(1000000L, 630930L, 500000L, 430677L, 386853L,
       356207L, 333333L, 315465L, 301030L, 289065L)
@@ -149,11 +140,7 @@ class IndependentRecomputeSpec9 extends SparkSpec {
   }
 
   test("ridge equals an independent Gaussian-elimination solve") {
-    val rows = Tables.lineitem(spark, sf0001)
-      .select(floor(col("l_quantity")).cast("long"),
-        floor(col("l_discount") * 100).cast("long"),
-        floor(col("l_extendedprice") * 100).cast("long")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val rows = olsRows
     val n = rows.length.toDouble
     def s(f: ((Long, Long, Long)) => Double): Double = rows.iterator.map(f).sum
     for (lamPerObs <- Seq(0L, 100L)) {
@@ -185,18 +172,6 @@ class IndependentRecomputeSpec9 extends SparkSpec {
           s"lam=$lamPerObs beta$k: entry ${ent(k)} vs elimination ${beta(k)}")
       }
     }
-  }
-
-  /** The vector corpus at sf0.001 with the entries' sequential-fold dot
-    * (((0 + a0·b0) + a1·b1) + … — the VectorOps order, replicated). */
-  private lazy val vecs: Map[Long, Array[Double]] =
-    Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-  private def dotSeq(a: Array[Double], b: Array[Double]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < a.length && i < b.length) { acc += a(i) * b(i); i += 1 }
-    acc
   }
 
   test("binary quantization equals an imperative pack/Hamming/rerank, exactly") {
@@ -259,14 +234,7 @@ class IndependentRecomputeSpec9 extends SparkSpec {
   }
 
   test("jaccard link prediction equals an imperative wedge recompute, exactly") {
-    val ps = Tables.lineitem(spark, sf0001)
-      .filter(col("l_quantity") > 49)
-      .select(col("l_partkey"), col("l_suppkey")).distinct().collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val edges = ps.groupBy(_._1).values.flatMap { g =>
-      val ss = g.map(_._2).distinct.sorted
-      for (i <- ss.indices; j <- i + 1 until ss.length) yield (ss(i), ss(j))
-    }.toSet
+    val edges = coSupplyEdges.toSet
     val adj = (edges.toSeq.flatMap { case (u, v) => Seq(u -> v, v -> u) })
       .groupBy(_._1).map { case (n, g) => n -> g.map(_._2).toSet }
     val nodes = adj.keys.toSeq.sorted
@@ -296,10 +264,8 @@ class IndependentRecomputeSpec9 extends SparkSpec {
         .map(b => f"$b%02x").mkString.substring(0, 15)
       java.lang.Long.parseLong(hex, 16)
     }
-    val docs = Tables.documents(spark, sf0001)
-      .filter(col("source").isin("src0", "src1"))
-      .select(col("source"), col("text")).collect()
-      .map(r => (r.getString(0), r.getString(1)))
+    val docs = documents.filter(d => d.source == "src0" || d.source == "src1")
+      .map(d => (d.source, d.text))
     val bySrc = docs.groupBy(_._1).map { case (s, g) =>
       s -> g.flatMap { case (_, t) =>
         val w = t.split(" ", -1)
@@ -328,10 +294,7 @@ class IndependentRecomputeSpec9 extends SparkSpec {
   }
 
   test("holm step-down equals an imperative recompute and actually steps down") {
-    val hours = Tables.events(spark, sf0001)
-      .select(expr("unix_micros(date_trunc('hour', ts)) DIV 3600000000"))
-      .collect().map(_.getLong(0))
-    val counts = hours.groupBy(identity).map { case (h, g) => (h, g.length.toLong) }.toSeq
+    val counts = hourCounts.toSeq
     val n = counts.length.toDouble
     val sc = counts.map(_._2).sum.toDouble
     val sc2 = counts.map(c => c._2 * c._2).sum.toDouble
@@ -363,7 +326,7 @@ class IndependentRecomputeSpec9 extends SparkSpec {
   test("blocklist audit is non-vacuous and conserves the document spine") {
     val rows = TextAnalysis.queries("text_blocklist")(spark, sf0001).collect()
     val nDocs = rows.map(_.getAs[Long]("n_docs")).sum
-    val spine = Tables.documents(spark, sf0001).count()
+    val spine = documents.length.toLong
     assert(nDocs == spine, s"rollup covers $nDocs of $spine docs")
     assert(rows.map(_.getAs[Long]("total_hits")).sum > 0L, "lexicon never hit")
     val blocked = rows.map(_.getAs[Long]("n_blocked")).sum
@@ -372,10 +335,8 @@ class IndependentRecomputeSpec9 extends SparkSpec {
   }
 
   test("binpack equals an imperative packing and respects the load bounds") {
-    val sizes = Tables.lineitem(spark, sf0001)
-      .select(expr("l_orderkey DIV 2048").as("f")).groupBy(col("f"))
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
+    val sizes = lineitem.groupBy(_.orderkey / 2048)
+      .map { case (f, g) => f -> g.length.toLong }.toSeq
     val T = 4096L
     val sorted = sizes.sortBy { case (id, sz) => (-sz, id) }
     var cum = 0L

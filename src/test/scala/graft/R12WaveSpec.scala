@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators._
 
-/** Round-12 pinned-on-arrival wave: the hot-key-cap twins (the r11
-  * verdict weak item #2 — the documented-but-unimplemented pair-generation
-  * guards, now code carried by oracled `*_capped` twins).
+/** Round-12 pinned-on-arrival wave: the hot-key-cap twins (the
+  * pair-generation guards that were documented but not implemented, now
+  * code carried by oracled `*_capped` twins).
   *
   *  - each `*_capped` entry gets a FULL imperative driver recompute at
   *    sf0.001 (collect the incidence, apply the cap in plain Scala maps,
@@ -20,35 +18,23 @@ import graft.operators._
   *
   * r13: the three rec twins' SF-tuned literal caps became in-plan MEAN
   * SIZING RULES (`Recommend.{OrderBasket,CustBasket,PartAudience}Rule`,
-  * the dedup occupancy pattern — r12 verdict item #2); each recompute
+  * the dedup occupancy pattern, so no cap is tuned to one SF); each recompute
   * below now derives its cap from the collected incidence via
   * `Recommend.ruleCap`, so the pin covers the rule arithmetic too. */
 class R12WaveSpec extends SparkSpec {
 
+  import BaseRows._
   import HalfUp._
-
-  /** Distinct (orderkey, partkey) incidence of `dir`, driver-side. */
-  private def opInc(dir: String): Seq[(Long, Long)] =
-    Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-
-  /** Distinct (custkey, partkey) incidence at sf0.001, driver-side. */
-  private lazy val cpInc: Seq[(Long, Long)] =
-    Tables.lineitem(spark, sf0001)
-      .join(Tables.orders(spark, sf0001), col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey"), col("l_partkey")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+  import RecommendRecomputeSpec._
 
   test("rec_assoc_rules_capped equals an imperative capped recompute, exactly") {
     // sf0.001, and the synthetic baskets whose capped top-20 cut falls
     // inside a run of rules tied on lift and confidence
     TieBaskets.withDirs(spark, TieBaskets.Tied) { case Seq(ties) =>
       Seq(sf0001 -> 8L, ties -> 4L).foreach { case (dir, cap) =>
-        val inc = opInc(dir)
+        val inc = basketIncidence(dir)
         val byBasket = inc.groupBy(_._1)
         val nBaskets = byBasket.size.toLong
-        val marg = inc.groupBy(_._2).map { case (p, xs) => p -> xs.size.toLong }
         // the rule-derived cap, recomputed imperatively (2× mean basket size)
         val orderCap =
           Recommend.ruleCap(Recommend.OrderBasketRule, inc.size.toLong, nBaskets)
@@ -56,23 +42,7 @@ class R12WaveSpec extends SparkSpec {
         // the cap must bite, else the twin is a no-op test
         assert(byBasket.values.exists(_.size > orderCap),
           s"no basket exceeds $orderCap on $dir — cap untested")
-        val capped = byBasket.filter(_._2.size <= orderCap)
-        val nAb = collection.mutable.Map[(Long, Long), Long]().withDefaultValue(0L)
-        for ((_, items) <- capped) {
-          val ps = items.map(_._2).sorted
-          for (i <- ps.indices; j <- (i + 1) until ps.size)
-            nAb((ps(i), ps(j))) += 1
-        }
-        val rules = nAb.toSeq.flatMap { case ((pa, pb), n) =>
-          Seq((pa, pb, n), (pb, pa, n))
-        }.map { case (ante, cons, n) =>
-          val na = marg(ante); val nc = marg(cons)
-          (ante, cons, n, na, nc, nBaskets,
-            n * 1000000L / na, n * nBaskets * 1000000L / (na * nc))
-        }
-        val ranked = rules.sortBy { case (a, c, _, _, _, _, conf, lift) =>
-          (-lift, -conf, a, c)
-        }
+        val ranked = rankedRules(inc, byBasket.filter(_._2.size <= orderCap).values)
         if (dir == ties)
           assert(ranked(19)._7 == ranked(20)._7 && ranked(19)._8 == ranked(20)._8,
             s"the synthetic top-20 cut is not inside a tie: ${ranked.slice(18, 22)}")
@@ -85,6 +55,7 @@ class R12WaveSpec extends SparkSpec {
   }
 
   test("rec_item_cosine_capped equals an imperative capped recompute, exactly") {
+    val cpInc = purchasePairs
     val byCust = cpInc.groupBy(_._1)
     // the rule-derived cap (1.5× mean customer-basket size)
     val custCap = Recommend.ruleCap(Recommend.CustBasketRule,
@@ -92,22 +63,7 @@ class R12WaveSpec extends SparkSpec {
     assert(custCap == 53L, s"sizing rule drifted: expected cap 53 at sf0.001, got $custCap")
     assert(byCust.values.exists(_.size > custCap),
       s"no customer basket exceeds $custCap at sf0.001 — cap untested")
-    val marg = cpInc.groupBy(_._2).map { case (p, xs) => p -> xs.size.toLong }
-    val capped = byCust.filter(_._2.size <= custCap)
-    val co = collection.mutable.Map[(Long, Long), Long]().withDefaultValue(0L)
-    for ((_, items) <- capped) {
-      val ps = items.map(_._2).sorted
-      for (i <- ps.indices; j <- (i + 1) until ps.size)
-        co((ps(i), ps(j))) += 1
-    }
-    val rows = co.toSeq.map { case ((pa, pb), c) =>
-      val na = marg(pa); val nb = marg(pb)
-      (pa, pb, c, na, nb,
-        round6(c.toDouble / math.sqrt((na * nb).toDouble)).toDouble)
-    }
-    val expected = rows.sortBy { case (pa, pb, c, _, _, cos) =>
-      (-cos, -c, pa, pb)
-    }.take(25)
+    val expected = topCosine(cpInc, byCust.filter(_._2.size <= custCap).values)
     val got = Recommend.queries("rec_item_cosine_capped")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getDouble(5)))
@@ -115,6 +71,7 @@ class R12WaveSpec extends SparkSpec {
   }
 
   test("rec_user_cf_capped equals an imperative capped recompute, exactly") {
+    val cpInc = purchasePairs
     val audience = cpInc.groupBy(_._2).map { case (p, xs) => p -> xs.size.toLong }
     // the rule-derived cap (1.4× mean part audience)
     val audCap = Recommend.ruleCap(Recommend.PartAudienceRule,
@@ -158,12 +115,7 @@ class R12WaveSpec extends SparkSpec {
   }
 
   test("rec_mf_rankk equals an imperative rank-2 ridge-ALS recompute, exactly") {
-    // ratings: distinct (c, p) purchase counts at sf0.001
-    val obs = Tables.lineitem(spark, sf0001)
-      .join(Tables.orders(spark, sf0001), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .agg(count(lit(1)).as("r"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val obs = ratings
     type Fac = Map[Long, (BigDecimal, BigDecimal)]
     val v0: Fac = obs.map(_._2).distinct.map(p =>
       p -> (BigDecimal(1).setScale(6), round6((p % 7 + 1).toDouble / 10.0))).toMap
@@ -212,6 +164,7 @@ class R12WaveSpec extends SparkSpec {
   }
 
   test("occupancy-capped LSH pairs are a subset of uncapped and the cap bites") {
+    import org.apache.spark.sql.functions._
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_a", "vec_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -220,9 +173,9 @@ class R12WaveSpec extends SparkSpec {
     assert(capped.subsetOf(uncapped)) // dropping buckets can only remove candidates
     assert(pairs(Dedup.queries("dedup_embedding_lsh")(spark, sf0001)) == uncapped)
     // the occupancy rule (13n DIV 320), evaluated imperatively
-    val occCap = Dedup.embOccupancyCap(Tables.embeddings(spark, sf0001).count())
-    // the rule BITES at this sf: over-cap buckets exist (recomputed
-    // driver-side from the same sign-band definition)
+    val occCap = Dedup.embOccupancyCap(BaseRows.embeddings.length.toLong)
+    // the rule BITES at this sf: over-cap buckets exist (recomputed from
+    // the entry's own sign-band definition, so the bands stay in Spark)
     import graft.functions.VectorOps
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))

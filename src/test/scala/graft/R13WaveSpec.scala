@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators._
 
-/** Round-13 pins: the rank-parameterized matrix factorization (r12
-  * verdict item #4 — `mfRankK` generalized from the hand-written 2×2
+/** Round-13 pins: the rank-parameterized matrix factorization
+  * (`mfRankK` generalized from the hand-written 2×2
   * Cramer solve to any k ∈ [2,4] with a generic fixed-order
   * cofactor-expansion chain; since widened to k = 1, `rec_mf_rank1`,
   * at ridge λ = 0).
@@ -24,7 +22,9 @@ import graft.operators._
   *    argument) plus the unchanged DuckDB oracle at sf0.001/0.01. */
 class R13WaveSpec extends SparkSpec {
 
+  import BaseRows._
   import HalfUp._
+  import SimilaritySpec.{dist, lloydFit}
 
   /** Hand-written 3×3 determinant in detC's exact term order:
     * ((t0 + t1) + t2), minors expanded as m11*m22 − m12*m21. */
@@ -34,11 +34,7 @@ class R13WaveSpec extends SparkSpec {
       m(0)(2) * (m(1)(0) * m(2)(1) - m(1)(1) * m(2)(0))
 
   test("rec_mf_rankk at k=3 equals an imperative rank-3 ridge-ALS recompute, exactly") {
-    val obs = Tables.lineitem(spark, sf0001)
-      .join(Tables.orders(spark, sf0001), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .agg(count(lit(1)).as("r"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val obs = ratings
     type Fac = Map[Long, IndexedSeq[BigDecimal]]
     val v0: Fac = obs.map(_._2).distinct.map(p => p -> IndexedSeq(
       BigDecimal(1).setScale(6),
@@ -110,6 +106,7 @@ class R13WaveSpec extends SparkSpec {
   }
 
   test("embedding-LSH band-width level rule: boundaries + AND-construction refinement") {
+    import org.apache.spark.sql.functions.col
     // the level thresholds, imperatively (what the in-plan CASE mirrors)
     assert(Dedup.embBandLevel(6400L) == 1 && Dedup.embBandLevel(6401L) == 2)
     assert(Dedup.embBandLevel(65536L) == 2 && Dedup.embBandLevel(65537L) == 3)
@@ -138,12 +135,7 @@ class R13WaveSpec extends SparkSpec {
   }
 
   test("events_attribution_position equals an imperative U-shaped recompute and conserves credit") {
-    val e = Tables.events(spark, sf0001)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"),
-        floor(col("value") * 100).cast("long").as("cents"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getString(3), r.getLong(4)))
+    val e = events.map(x => (x.userId, x.tsUs, x.eventId, x.eventType, x.cents))
     val touchesByUser = e.filter(t => t._4 == "click" || t._4 == "view")
       .groupBy(_._1).view.mapValues(_.toSeq).toMap
     val purchases = e.filter(_._4 == "purchase")
@@ -186,38 +178,7 @@ class R13WaveSpec extends SparkSpec {
   }
 
   test("sim_davies_bouldin equals a fully imperative Lloyd fit + DB recompute") {
-    val raw = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    val comps: Map[Long, Array[BigDecimal]] =
-      raw.map { case (id, v) => id -> v.map(round6) }.toMap
-    val d = raw.head._2.length
-    def assign(cent: Map[Long, Array[BigDecimal]]): Map[Long, Long] =
-      comps.map { case (vid, x) =>
-        val vsq = x.map(b => b * b).sum.toDouble
-        val best = cent.toSeq.map { case (cl, c) =>
-          val dotv = x.zip(c).map { case (a, b) => a * b }.sum.toDouble
-          val csq = c.map(b => b * b).sum.toDouble
-          (cl, dotv / math.sqrt(vsq * csq))
-        }.minBy { case (cl, cos) => (-cos, cl) }._1
-        vid -> best
-      }
-    var cent: Map[Long, Array[BigDecimal]] =
-      comps.filter(_._1 < 8L).map { case (id, x) => id -> x.clone }
-    for (_ <- 1 to 2) {
-      val asg = assign(cent)
-      cent = asg.groupBy(_._2).map { case (cl, members) =>
-        val ids = members.keys.toSeq
-        cl -> Array.tabulate(d) { j =>
-          round6(ids.map(id => comps(id)(j)).sum.toDouble / ids.length)
-        }
-      }
-    }
-    val asg = assign(cent)
-    def dist(x: Array[BigDecimal], c: Array[BigDecimal]): BigDecimal =
-      round9(math.sqrt(x.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum.toDouble))
+    val (comps, cent, asg) = lloydFit
     val byCl = asg.groupBy(_._2).view.mapValues(_.keys.toSeq).toMap
     val sig = byCl.map { case (cl, ids) =>
       val s = ids.map(id => dist(comps(id), cent(cl))).sum // exact decimal sum

@@ -12,69 +12,12 @@ import graft.operators.Recommend
   * ([[BaseRows]]) in plain Scala, with a different formulation where one
   * exists, and compares exactly on the entry's integer or round-6 lattice.
   * A plan bug that is deterministic but wrong passes the mirrored oracle
-  * and fails here.
-  *
-  * The `*_capped` twins get the same full recompute with the cap applied
-  * in plain Scala maps; each cap is re-derived from the incidence through
-  * `Recommend.ruleCap` and shown to bite, so the twin exercises its lever.
-  * The plain entries are pinned to the uncapped path byte for byte. The
-  * rank-k factorization is checked at k = 2 and k = 3 against hand-written
-  * Cramer chains in the plan's operand order. */
+  * and fails here. */
 class RecommendRecomputeSpec extends SparkSpec {
 
   import BaseRows._
   import HalfUp._
-
-  /** Distinct (orderkey, partkey) incidence of `dir`, driver-side. The
-    * basket pins loop over sf0.001 and the synthetic tied baskets, so they
-    * read each dir instead of the sf0.001 rows. */
-  private def basketIncidence(dir: String): Seq[(Long, Long)] =
-    Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-
-  /** Both directions of every part pair that co-occurs in `baskets`, as
-    * rules (ante, cons, n_ab, n_ante, n_cons, n_baskets, conf_ppm,
-    * lift_ppm) over the marginals and basket count of the whole incidence
-    * `inc`, ranked by lift, then confidence, descending, then by parts. */
-  private def rankedRules(inc: Seq[(Long, Long)], baskets: Iterable[Seq[(Long, Long)]]) = {
-    val nBaskets = inc.map(_._1).distinct.length.toLong
-    val marg = inc.groupBy(_._2).map { case (p, g) => p -> g.length.toLong }
-    val pairCounts = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
-    baskets.foreach { items =>
-      val ps = items.map(_._2).distinct.sorted
-      for (i <- ps.indices; j <- (i + 1) until ps.length) {
-        val k = (ps(i), ps(j))
-        pairCounts(k) = pairCounts.getOrElse(k, 0L) + 1L
-      }
-    }
-    pairCounts.toSeq
-      .flatMap { case ((a, b), nab) => Seq((a, b, nab), (b, a, nab)) }
-      .map { case (ante, cons, nab) =>
-        val na = marg(ante); val nc = marg(cons)
-        (ante, cons, nab, na, nc, nBaskets,
-          nab * 1000000L / na, nab * nBaskets * 1000000L / (na * nc))
-      }
-      .sortBy { case (a, c, _, _, _, _, conf, lift) => (-lift, -conf, a, c) }
-  }
-
-  /** The top-25 item pairs by cosine of the distinct (customer, part)
-    * incidence `cp`, co-counted over `baskets`: (part_a, part_b, co_users,
-    * n_a, n_b, cosine on the round-6 lattice). */
-  private def topCosine(cp: Seq[(Long, Long)], baskets: Iterable[Seq[(Long, Long)]]) = {
-    val marg = cp.groupBy(_._2).map { case (p, g) => p -> g.length.toLong }
-    val co = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
-    baskets.foreach { items =>
-      val ps = items.map(_._2).distinct.sorted
-      for (i <- ps.indices; j <- (i + 1) until ps.length) {
-        val k = (ps(i), ps(j)); co(k) = co.getOrElse(k, 0L) + 1L
-      }
-    }
-    co.toSeq.map { case ((a, b), c) =>
-      val cos = round6(c.toDouble / math.sqrt((marg(a) * marg(b)).toDouble)).toDouble
-      (a, b, c, marg(a), marg(b), cos)
-    }.sortBy { case (a, b, c, _, _, cos) => (-cos, -c, a, b) }.take(25)
-  }
+  import RecommendRecomputeSpec._
 
   // ------------------------------------------------------------ rec_assoc_rules
 
@@ -99,33 +42,6 @@ class RecommendRecomputeSpec extends SparkSpec {
     }
   }
 
-  test("rec_assoc_rules_capped equals an imperative capped recompute, exactly") {
-    // sf0.001, and the synthetic baskets whose capped top-20 cut falls
-    // inside a run of rules tied on lift and confidence
-    TieBaskets.withDirs(spark, TieBaskets.Tied) { case Seq(ties) =>
-      Seq(sf0001 -> 8L, ties -> 4L).foreach { case (dir, cap) =>
-        val inc = basketIncidence(dir)
-        val byBasket = inc.groupBy(_._1)
-        val nBaskets = byBasket.size.toLong
-        // the rule-derived cap, recomputed imperatively (2× mean basket size)
-        val orderCap =
-          Recommend.ruleCap(Recommend.OrderBasketRule, inc.size.toLong, nBaskets)
-        assert(orderCap == cap, s"sizing rule drifted: expected cap $cap on $dir, got $orderCap")
-        // the cap must bite, else the twin is a no-op test
-        assert(byBasket.values.exists(_.size > orderCap),
-          s"no basket exceeds $orderCap on $dir — cap untested")
-        val ranked = rankedRules(inc, byBasket.filter(_._2.size <= orderCap).values)
-        if (dir == ties)
-          assert(ranked(19)._7 == ranked(20)._7 && ranked(19)._8 == ranked(20)._8,
-            s"the synthetic top-20 cut is not inside a tie: ${ranked.slice(18, 22)}")
-        val got = Recommend.queries("rec_assoc_rules_capped")(spark, dir)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
-        assert(got.toSeq == ranked.take(20), s"on $dir")
-      }
-    }
-  }
-
   // ------------------------------------------------------------ rec_item_cosine
 
   test("item-item cosine top-25 equals a brute-force driver recount") {
@@ -137,108 +53,7 @@ class RecommendRecomputeSpec extends SparkSpec {
     assert(got == expected, s"\nentry: ${got.take(3)}…\nindependent: ${expected.take(3)}…")
   }
 
-  test("rec_item_cosine_capped equals an imperative capped recompute, exactly") {
-    val cpInc = purchasePairs
-    val byCust = cpInc.groupBy(_._1)
-    // the rule-derived cap (1.5× mean customer-basket size)
-    val custCap = Recommend.ruleCap(Recommend.CustBasketRule,
-      cpInc.size.toLong, byCust.size.toLong)
-    assert(custCap == 53L, s"sizing rule drifted: expected cap 53 at sf0.001, got $custCap")
-    assert(byCust.values.exists(_.size > custCap),
-      s"no customer basket exceeds $custCap at sf0.001 — cap untested")
-    val expected = topCosine(cpInc, byCust.filter(_._2.size <= custCap).values)
-    val got = Recommend.queries("rec_item_cosine_capped")(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getDouble(5)))
-    assert(got.toSeq == expected)
-  }
-
-  test("rec_item_cosine runs the uncapped path and its capped twin differs") {
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val cappedExpected = rows(Recommend.itemCosineCapped(spark, sf0001))
-    val uncappedExpected = rows(Recommend.itemCosineWith(spark, sf0001, Recommend.NoCap))
-    assert(rows(Recommend.queries("rec_item_cosine")(spark, sf0001)) == uncappedExpected)
-    // the cap changes the sf0.001 answer, so the twin is not vacuous
-    assert(cappedExpected != uncappedExpected)
-  }
-
   // ----------------------------------------------------- rec_user_cf and friends
-
-  test("user-based CF equals an imperative neighbor-vote recompute, exactly") {
-    val items = purchases.keys.toSeq.groupBy(_._1)
-      .map { case (c, g) => c -> g.map(_._2).toSet }
-    val users = items.keys.toSeq.sorted
-    val expected = users.filter(_ < 20L).flatMap { u =>
-      val cos = users.filter(v => v != u)
-        .map { v =>
-          val co = (items(u) & items(v)).size.toLong
-          (v, co,
-            if (co == 0L) 0L
-            else micro6(co.toDouble /
-              math.sqrt((items(u).size.toLong * items(v).size).toDouble)))
-        }
-        .filter(_._2 > 0L)
-      val nbrs = cos.sortBy { case (v, co, cm) => (-cm, -co, v) }.take(10)
-      val votes = scala.collection.mutable.Map.empty[Long, (Long, Long)]
-      for ((v, _, cm) <- nbrs; p <- items(v); if !items(u).contains(p)) {
-        val (s, n) = votes.getOrElse(p, (0L, 0L))
-        votes(p) = (s + cm, n + 1L)
-      }
-      votes.toSeq.map { case (p, (s, n)) => (p, s, n) }
-        .sortBy { case (p, s, n) => (-s, -n, p) }.take(5).zipWithIndex
-        .map { case ((p, s, n), k) => (u, p, s, n, (k + 1).toLong) }
-    }
-    val got = Recommend.queries("rec_user_cf")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("custkey"), r.getAs[Long]("partkey"),
-        r.getAs[Long]("score_micro"), r.getAs[Long]("n_voters"),
-        r.getAs[Long]("rn"))).toSeq
-    assert(got == expected,
-      s"\nentry: ${got.take(5)}\nindependent: ${expected.take(5)}")
-  }
-
-  test("rec_user_cf_capped equals an imperative capped recompute, exactly") {
-    val cpInc = purchasePairs
-    val audience = cpInc.groupBy(_._2).map { case (p, xs) => p -> xs.size.toLong }
-    // the rule-derived cap (1.4× mean part audience)
-    val audCap = Recommend.ruleCap(Recommend.PartAudienceRule,
-      cpInc.size.toLong, audience.size.toLong)
-    assert(audCap == 37L, s"sizing rule drifted: expected cap 37 at sf0.001, got $audCap")
-    assert(audience.values.exists(_ > audCap),
-      s"no part audience exceeds $audCap at sf0.001 — cap untested")
-    val deg = cpInc.groupBy(_._1).map { case (c, xs) => c -> xs.size.toLong }
-    val items = cpInc.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toSet }
-    val okParts = audience.filter(_._2 <= audCap).keySet
-    // directed budget pairs (u < 20, v ≠ u) through eligible parts only
-    val byPart = cpInc.filter(x => okParts(x._2)).groupBy(_._2)
-    val coUV = collection.mutable.Map[(Long, Long), Long]().withDefaultValue(0L)
-    for ((_, cs) <- byPart) {
-      val users = cs.map(_._1)
-      for (u <- users if u < 20; v <- users if v != u) coUV((u, v)) += 1
-    }
-    val cosMicro = coUV.toSeq.map { case ((u, v), c) =>
-      val micro = (round6(c.toDouble / math.sqrt((deg(u) * deg(v)).toDouble))
-        * 1000000).toLongExact
-      (u, v, c, micro)
-    }
-    val nbr = cosMicro.groupBy(_._1).flatMap { case (u, xs) =>
-      xs.sortBy { case (_, v, c, m) => (-m, -c, v) }.take(10)
-    }
-    val votes = collection.mutable.Map[(Long, Long), (Long, Long)]()
-    for ((u, v, _, micro) <- nbr; p <- items(v) if !items(u)(p)) {
-      val (s, n) = votes.getOrElse((u, p), (0L, 0L))
-      votes((u, p)) = (s + micro, n + 1)
-    }
-    val expected = votes.toSeq
-      .map { case ((u, p), (s, n)) => (u, p, s, n) }
-      .groupBy(_._1).toSeq.flatMap { case (_, xs) =>
-        xs.sortBy { case (_, p, s, n) => (-s, -n, p) }.take(5).zipWithIndex
-          .map { case ((u, p, s, n), i) => (u, p, s, n, (i + 1).toLong) }
-      }.sortBy(x => (x._1, x._5))
-    val got = Recommend.queries("rec_user_cf_capped")(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
-    assert(got.toSeq == expected)
-  }
 
   test("rec_coverage_diversity metrics equal a driver recompute over the rec_user_cf lists") {
     val lists = Recommend.queries("rec_user_cf")(spark, sf0001).collect()
@@ -275,78 +90,6 @@ class RecommendRecomputeSpec extends SparkSpec {
       1000000L - jacs.sum / jacs.size)
   }
 
-  test("slope one equals an imperative deviation recompute, exactly") {
-    val byUser = ratings
-      .groupBy(_._1).map { case (c, g) => c -> g.map(t => t._2 -> t._3).toMap }
-    // undirected deviation accumulators keyed (pi < pj)
-    val acc = scala.collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    for ((_, items) <- byUser; pi <- items.keys; pj <- items.keys; if pi < pj) {
-      val (n, sd) = acc.getOrElse((pi, pj), (0L, 0L))
-      acc((pi, pj)) = (n + 1L, sd + items(pi) - items(pj))
-    }
-    val dev = scala.collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    for (((pi, pj), (n, sd)) <- acc) {
-      dev((pi, pj)) = (micro6(sd.toDouble / n.toDouble), n)
-      dev((pj, pi)) = (micro6(-sd.toDouble / n.toDouble), n)
-    }
-    val expected = byUser.keys.filter(_ < 20L).toSeq.sorted.flatMap { u =>
-      val rated = byUser(u)
-      val targets = dev.keys.collect {
-        case (j, i) if rated.contains(i) && !rated.contains(j) => j
-      }.toSet
-      targets.toSeq.map { j =>
-        var num = 0L; var den = 0L
-        for ((i, r) <- rated; if dev.contains((j, i))) {
-          val (dm, n) = dev((j, i))
-          num += (dm + r * 1000000L) * n; den += n
-        }
-        (j, round6(num.toDouble / (den.toDouble * 1000000.0)).toDouble, den)
-      }.sortBy { case (j, s, _) => (-s, j) }.take(5).zipWithIndex
-        .map { case ((j, s, den), k) => (u, j, s, den, (k + 1).toLong) }
-    }
-    val got = Recommend.queries("rec_slope_one")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("custkey"), r.getAs[Long]("partkey"),
-        r.getAs[Double]("score"), r.getAs[Long]("n_support"),
-        r.getAs[Long]("rn"))).toSeq
-    assert(got == expected,
-      s"\nentry: ${got.take(5)}\nindependent: ${expected.take(5)}")
-  }
-
-  test("ranking evaluation equals an imperative metric recompute, exactly") {
-    val cut = java.time.LocalDateTime.of(1999, 7, 1, 0, 0)
-    val orderOf = orders.map(o => o.orderkey -> o).toMap
-    val inter = lineitem.flatMap { l =>
-      orderOf.get(l.orderkey).map(o => (o.custkey, l.partkey, o.orderdate))
-    }
-    val train = inter.collect { case (c, p, ts) if ts.isBefore(cut) => (c, p) }.toSet
-    val testNew = inter.collect { case (c, p, ts) if !ts.isBefore(cut) => (c, p) }
-      .toSet -- train
-    val disc = Array(1000000L, 630930L, 500000L, 430677L, 386853L,
-      356207L, 333333L, 315465L, 301030L, 289065L)
-    val pop = train.toSeq.groupBy(_._2).map { case (p, g) => p -> g.size.toLong }
-      .toSeq.sortBy { case (p, n) => (-n, p) }.take(10)
-      .zipWithIndex.map { case ((p, _), i) => p -> disc(i) }.toMap
-    val expected = testNew.groupBy(_._1).toSeq.sortBy(_._1).map { case (c, g) =>
-      val ps = g.map(_._2)
-      val nTest = ps.size.toLong
-      val hitDiscs = ps.toSeq.flatMap(pop.get)
-      val hits = hitDiscs.size.toLong
-      val dcg = hitDiscs.sum
-      val idcg = disc.take(math.min(10L, nTest).toInt).sum
-      (c, nTest, hits, dcg, idcg, hits * 1000000L / 10L,
-        hits * 1000000L / nTest, round6(dcg.toDouble / idcg.toDouble).toDouble)
-    }
-    val got = Recommend.queries("rec_eval_ranking")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("custkey"), r.getAs[Long]("n_test"),
-        r.getAs[Long]("hits"), r.getAs[Long]("dcg_micro"),
-        r.getAs[Long]("idcg_micro"), r.getAs[Long]("prec_ppm"),
-        r.getAs[Long]("recall_ppm"), r.getAs[Double]("ndcg"))).toSeq
-    assert(got == expected,
-      s"\nentry: ${got.take(3)}\nindependent: ${expected.take(3)}")
-    // the metric is actually exercised: some user hit the popularity list
-    assert(got.exists(_._3 > 0L), "no user hit the top-10 — vacuous metrics")
-  }
-
   // ------------------------------------------------------ matrix factorization
 
   test("rank-1 ALS equals an imperative alternating solve, exactly") {
@@ -378,122 +121,61 @@ class RecommendRecomputeSpec extends SparkSpec {
     assert(got == expected, s"\nentry: ${got.take(5)}\nindependent: ${expected.take(5)}")
   }
 
-  test("rec_mf_rankk equals an imperative rank-2 ridge-ALS recompute, exactly") {
-    val obs = ratings
-    type Fac = Map[Long, (BigDecimal, BigDecimal)]
-    val v0: Fac = obs.map(_._2).distinct.map(p =>
-      p -> (BigDecimal(1).setScale(6), round6((p % 7 + 1).toDouble / 10.0))).toMap
-    // one ridge half-step: exact BigDecimal moments, ONE double Cramer
-    // chain in the plan's operand order, round6 back onto the lattice
-    def step(rows: Seq[(Long, Long, Long)], fixed: Fac): Fac =
-      rows.groupBy(_._1).map { case (k, xs) =>
-        var s11, s12, s22, b1, b2 = BigDecimal(0)
-        for ((_, o, r) <- xs) {
-          val (f1, f2) = fixed(o)
-          s11 += f1 * f1; s12 += f1 * f2; s22 += f2 * f2
-          b1 += BigDecimal(r) * f1; b2 += BigDecimal(r) * f2
-        }
-        val a = s11.toDouble + 0.1; val c2 = s22.toDouble + 0.1
-        val b = s12.toDouble; val g1 = b1.toDouble; val g2 = b2.toDouble
-        val det = a * c2 - b * b
-        k -> (round6((g1 * c2 - g2 * b) / det), round6((a * g2 - b * g1) / det))
+}
+
+/** The basket recounts that the recommender pins share. */
+object RecommendRecomputeSpec {
+
+  import HalfUp._
+
+  /** Distinct (orderkey, partkey) incidence of `dir`, driver-side. The
+    * basket pins loop over sf0.001 and the synthetic tied baskets, so they
+    * read each dir instead of the sf0.001 rows. */
+  def basketIncidence(dir: String): Seq[(Long, Long)] =
+    Tables.lineitem(SparkSpec.session, dir)
+      .select(col("l_orderkey"), col("l_partkey")).distinct()
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  /** Both directions of every part pair that co-occurs in `baskets`, as
+    * rules (ante, cons, n_ab, n_ante, n_cons, n_baskets, conf_ppm,
+    * lift_ppm) over the marginals and basket count of the whole incidence
+    * `inc`, ranked by lift, then confidence, descending, then by parts. */
+  def rankedRules(inc: Seq[(Long, Long)], baskets: Iterable[Seq[(Long, Long)]]) = {
+    val nBaskets = inc.map(_._1).distinct.length.toLong
+    val marg = inc.groupBy(_._2).map { case (p, g) => p -> g.length.toLong }
+    val pairCounts = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+    baskets.foreach { items =>
+      val ps = items.map(_._2).distinct.sorted
+      for (i <- ps.indices; j <- (i + 1) until ps.length) {
+        val k = (ps(i), ps(j))
+        pairCounts(k) = pairCounts.getOrElse(k, 0L) + 1L
       }
-    val byC = obs; val byP = obs.map { case (c, p, r) => (p, c, r) }
-    val u1 = step(byC, v0)
-    val v1 = step(byP, u1)
-    val u2 = step(byC, v1)
-    val v2 = step(byP, u2)
-    val observed = obs.map(x => (x._1, x._2)).toSet
-    val expected = u2.keys.filter(_ < 20).toSeq.sorted.flatMap { c =>
-      val (cu1, cu2) = u2(c)
-      v2.toSeq.filter { case (p, _) => !observed((c, p)) }
-        .map { case (p, (pv1, pv2)) =>
-          (p, round6(cu1.toDouble * pv1.toDouble + cu2.toDouble * pv2.toDouble).toDouble)
-        }
-        .sortBy { case (p, s) => (-s, p) }.take(5).zipWithIndex
-        .map { case ((p, s), i) => (c, p, s, (i + 1).toLong) }
     }
-    val got = Recommend.queries("rec_mf_rankk")(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-    assert(got.toSeq == expected)
-  }
-
-  /** Hand-written 3×3 determinant in detC's exact term order:
-    * ((t0 + t1) + t2), minors expanded as m11*m22 − m12*m21. */
-  private def det3(m: Array[Array[Double]]): Double =
-    m(0)(0) * (m(1)(1) * m(2)(2) - m(1)(2) * m(2)(1)) -
-      m(0)(1) * (m(1)(0) * m(2)(2) - m(1)(2) * m(2)(0)) +
-      m(0)(2) * (m(1)(0) * m(2)(1) - m(1)(1) * m(2)(0))
-
-  test("rec_mf_rankk at k=3 equals an imperative rank-3 ridge-ALS recompute, exactly") {
-    val obs = ratings
-    type Fac = Map[Long, IndexedSeq[BigDecimal]]
-    val v0: Fac = obs.map(_._2).distinct.map(p => p -> IndexedSeq(
-      BigDecimal(1).setScale(6),
-      round6((p % 7 + 1).toDouble / 10.0),
-      round6((p % 11 + 1).toDouble / 100.0))).toMap
-    // one ridge half-step: exact BigDecimal moments, ONE double 3×3
-    // Cramer chain in the plan's cofactor order, round6 lattice re-entry
-    def step(rows: Seq[(Long, Long, Long)], fixed: Fac): Fac =
-      rows.groupBy(_._1).map { case (key, xs) =>
-        val s = Array.ofDim[BigDecimal](3, 3)
-        val b = Array.fill(3)(BigDecimal(0))
-        for (i <- 0 until 3; j <- i until 3) s(i)(j) = BigDecimal(0)
-        for ((_, o, r) <- xs) {
-          val f = fixed(o)
-          for (i <- 0 until 3; j <- i until 3) s(i)(j) += f(i) * f(j)
-          for (i <- 0 until 3) b(i) += BigDecimal(r) * f(i)
-        }
-        def a(i: Int, j: Int): Double = {
-          val base = (if (i <= j) s(i)(j) else s(j)(i)).toDouble
-          if (i == j) base + 0.1 else base
-        }
-        val full = Array.tabulate(3, 3)(a)
-        val det = det3(full)
-        val g = b.map(_.toDouble)
-        key -> IndexedSeq.tabulate(3) { x =>
-          round6(det3(Array.tabulate(3, 3)((i, j) =>
-            if (j == x) g(i) else a(i, j))) / det)
-        }
+    pairCounts.toSeq
+      .flatMap { case ((a, b), nab) => Seq((a, b, nab), (b, a, nab)) }
+      .map { case (ante, cons, nab) =>
+        val na = marg(ante); val nc = marg(cons)
+        (ante, cons, nab, na, nc, nBaskets,
+          nab * 1000000L / na, nab * nBaskets * 1000000L / (na * nc))
       }
-    val byC = obs; val byP = obs.map { case (c, p, r) => (p, c, r) }
-    val u1 = step(byC, v0)
-    val v1 = step(byP, u1)
-    val u2 = step(byC, v1)
-    val v2 = step(byP, u2)
-    val observed = obs.map(x => (x._1, x._2)).toSet
-    val expected = u2.keys.filter(_ < 20).toSeq.sorted.flatMap { c =>
-      val cu = u2(c)
-      v2.toSeq.filter { case (p, _) => !observed((c, p)) }
-        .map { case (p, pv) =>
-          val score = ((cu(0).toDouble * pv(0).toDouble) +
-            cu(1).toDouble * pv(1).toDouble) +
-            cu(2).toDouble * pv(2).toDouble
-          (p, round6(score).toDouble)
-        }
-        .sortBy { case (p, s) => (-s, p) }.take(5).zipWithIndex
-        .map { case ((p, s), i) => (c, p, s, (i + 1).toLong) }
+      .sortBy { case (a, c, _, _, _, _, conf, lift) => (-lift, -conf, a, c) }
+  }
+
+  /** The top-25 item pairs by cosine of the distinct (customer, part)
+    * incidence `cp`, co-counted over `baskets`: (part_a, part_b, co_users,
+    * n_a, n_b, cosine on the round-6 lattice). */
+  def topCosine(cp: Seq[(Long, Long)], baskets: Iterable[Seq[(Long, Long)]]) = {
+    val marg = cp.groupBy(_._2).map { case (p, g) => p -> g.length.toLong }
+    val co = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+    baskets.foreach { items =>
+      val ps = items.map(_._2).distinct.sorted
+      for (i <- ps.indices; j <- (i + 1) until ps.length) {
+        val k = (ps(i), ps(j)); co(k) = co.getOrElse(k, 0L) + 1L
+      }
     }
-    // through the catalog entry (rec_mf_rank3 IS mfRankKWith(_, _, 3, 0.1))
-    val got = Recommend.queries("rec_mf_rank3")(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-    assert(got.toSeq == expected)
-  }
-
-  test("rec_mf_rankk runs rank 2, rank changes the readout, k outside 1..4 fails") {
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val k2 = rows(Recommend.mfRankKWith(spark, sf0001, 2, 0.1))
-    val k3 = rows(Recommend.mfRankKWith(spark, sf0001, 3, 0.1))
-    assert(k2 != k3, "rank must change the readout, else the parameter is vacuous")
-    assert(rows(Recommend.queries("rec_mf_rankk")(spark, sf0001)) == k2)
-    intercept[IllegalArgumentException](Recommend.mfRankKWith(spark, sf0001, 8, 0.1))
-    intercept[IllegalArgumentException](Recommend.mfRankKWith(spark, sf0001, 0, 0.0))
-  }
-
-  test("rank-4 path solves and serves (shape + determinism smoke)") {
-    val k4a = Recommend.mfRankKWith(spark, sf0001, 4, 0.1).collect().toSeq
-    val k4b = Recommend.mfRankKWith(spark, sf0001, 4, 0.1).collect().toSeq
-    assert(k4a == k4b && k4a.nonEmpty)
-    assert(k4a.forall(r => r.getLong(3) >= 1 && r.getLong(3) <= 5))
+    co.toSeq.map { case ((a, b), c) =>
+      val cos = round6(c.toDouble / math.sqrt((marg(a) * marg(b)).toDouble)).toDouble
+      (a, b, c, marg(a), marg(b), cos)
+    }.sortBy { case (a, b, c, _, _, cos) => (-cos, -c, a, b) }.take(25)
   }
 }

@@ -7,14 +7,8 @@ import graft.operators.{Dedup, Similarity}
 /** ANN quality gates: the bucketed variants can't be hash-oracled (LSH is
   * oracle'd separately; IVF centroids are float-order-dependent), so the
   * gate is recall against the exact brute-force top-k — the standard ANN
-  * evaluation. The exact similarity entries are recomputed on the driver
-  * from the collected sf0.001 vectors ([[BaseRows]]): an imperative Lloyd
-  * fit under the validity indices, and the two-arm and quantized retrieval
-  * readouts with the entries' sequential-fold dot product. */
+  * evaluation. */
 class SimilaritySpec extends SparkSpec {
-
-  import BaseRows._
-  import HalfUp._
 
   private def neighbors(df: DataFrame, k: Int): Map[Long, Set[Long]] =
     df.collect()
@@ -330,82 +324,19 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  // ------------------------------------------------------------- recomputes
+}
 
-  /** The vector corpus with the entries' sequential-fold dot
-    * (((0 + a0·b0) + a1·b1) + … — the VectorOps order, replicated). */
-  private lazy val vecs: Map[Long, Array[Double]] =
-    embeddings.map(e => e.vecId -> e.vec).toMap
-  private def dotSeq(a: Array[Double], b: Array[Double]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < a.length && i < b.length) { acc += a(i) * b(i); i += 1 }
-    acc
-  }
+/** The imperative Lloyd fit that the cluster-quality pins share. */
+object SimilaritySpec {
 
-  test("binary quantization equals an imperative pack/Hamming/rerank, exactly") {
-    def pack(v: Array[Double], off: Int): Long =
-      (0 until 32).map(j => if (v(off + j) >= 0.0) 1L << j else 0L).sum
-    val bits = vecs.map { case (id, v) => id -> (pack(v, 0), pack(v, 32)) }
-    val nrm = vecs.map { case (id, v) => id -> math.sqrt(dotSeq(v, v)) }
-    val ids = vecs.keys.toSeq.sorted
-    val expected = ids.filter(_ < 20L).flatMap { q =>
-      val (qlo, qhi) = bits(q)
-      val ham = ids.filter(_ != q).map { a =>
-        val (alo, ahi) = bits(a)
-        (a, (java.lang.Long.bitCount(qlo ^ alo) +
-             java.lang.Long.bitCount(qhi ^ ahi)).toLong)
-      }
-      val cand = ham.sortBy { case (a, h) => (h, a) }.take(50)
-      cand.map { case (a, h) =>
-        (a, h, dotSeq(vecs(q), vecs(a)) / (nrm(q) * nrm(a)))
-      }.sortBy { case (a, _, c) => (-c, a) }.take(5).zipWithIndex
-        .map { case ((a, h, c), k) => (q, a, h, c, (k + 1).toLong) }
-    }
-    val got = Similarity.queries("sim_binary_quant")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
-        r.getAs[Long]("hamming"), r.getAs[Double]("cos"),
-        r.getAs[Long]("rn"))).toSeq
-    assert(got == expected,
-      s"\nentry: ${got.take(5)}\nindependent: ${expected.take(5)}")
-    // the prefilter must actually filter: some true neighbor's hamming is
-    // small (sign agreement correlates with cosine) and all ≤ 64
-    assert(got.forall(_._3 <= 64L))
-  }
-
-  test("matryoshka prefix retrieval equals an imperative two-arm recompute") {
-    val nrm = vecs.map { case (id, v) => id -> math.sqrt(dotSeq(v, v)) }
-    val nrmP = vecs.map { case (id, v) =>
-      id -> math.sqrt(dotSeq(v.take(16), v.take(16))) }
-    val ids = vecs.keys.toSeq.sorted
-    def top5(q: Long, score: Long => Double): Seq[(Long, Double)] =
-      ids.filter(_ != q).map(a => (a, score(a)))
-        .sortBy { case (a, c) => (-c, a) }.take(5)
-    val expected = ids.filter(_ < 20L).flatMap { q =>
-      val pre = top5(q,
-        a => dotSeq(vecs(q).take(16), vecs(a).take(16)) / (nrmP(q) * nrmP(a)))
-      val ful = top5(q, a => dotSeq(vecs(q), vecs(a)) / (nrm(q) * nrm(a)))
-        .map(_._1).zipWithIndex.map { case (a, i) => a -> (i + 1).toLong }.toMap
-      pre.zipWithIndex.map { case ((a, c), i) =>
-        (q, (i + 1).toLong, a, c, ful.getOrElse(a, 0L))
-      }
-    }
-    val got = Similarity.queries("sim_matryoshka_prefix")(spark, sf0001)
-      .collect()
-      .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rn"),
-        r.getAs[Long]("vec_id"), r.getAs[Double]("cos_prefix"),
-        r.getAs[Long]("full_rn"))).toSeq
-    assert(got == expected,
-      s"\nentry: ${got.take(5)}\nindependent: ${expected.take(5)}")
-    // fidelity is measured, not vacuous: at least one query's prefix pick
-    // lands inside the full top-5
-    assert(got.exists(_._5 > 0L), "prefix arm never intersects the full arm")
-  }
+  import BaseRows._
+  import HalfUp._
 
   /** The shared Lloyd fit, fully imperative on the round-6 lattice: the
     * rounded components of every vector, the centroids after two cosine
     * assign/average rounds seeded with vectors 0..7, and the final
     * assignment. */
-  private lazy val lloydFit
+  lazy val lloydFit
       : (Map[Long, Array[BigDecimal]], Map[Long, Array[BigDecimal]], Map[Long, Long]) = {
     val comps: Map[Long, Array[BigDecimal]] =
       embeddings.map(e => e.vecId -> e.vec.map(round6)).toMap
@@ -435,67 +366,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   /** Euclidean distance on the round-9 lattice. */
-  private def dist(x: Array[BigDecimal], c: Array[BigDecimal]): BigDecimal =
+  def dist(x: Array[BigDecimal], c: Array[BigDecimal]): BigDecimal =
     round9(math.sqrt(x.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum.toDouble))
-
-  test("silhouette equals a fully imperative Lloyd fit + score pipeline") {
-    val (comps, cent, asg) = lloydFit
-    // distances to every centroid on the round-9 lattice
-    val sVals = comps.toSeq.map { case (vid, x) =>
-      val own = asg(vid)
-      val da = dist(x, cent(own)).toDouble
-      val db = cent.keys.filter(_ != own).map(cl => dist(x, cent(cl))).min.toDouble
-      val s = if (math.max(da, db) > 0.0) round6((db - da) / math.max(da, db))
-              else BigDecimal(0)
-      (own, s)
-    }
-    val per = sVals.groupBy(_._1).map { case (cl, g) =>
-      cl -> (g.length.toLong, round6(g.map(_._2).sum.toDouble / g.length).toDouble)
-    }
-    val overall = (sVals.length.toLong,
-      round6(sVals.map(_._2).sum.toDouble / sVals.length).toDouble)
-    val got = Similarity.queries("sim_silhouette")(spark, sf0001).collect()
-    got.foreach { r =>
-      val cid = r.getAs[Long]("cluster_id")
-      val (n, m) = if (cid == -1L) overall else per(cid)
-      assert(r.getAs[Long]("n_points") == n, s"cluster $cid n_points")
-      assert(math.abs(r.getAs[Double]("mean_silhouette") - m) < 1e-9,
-        s"cluster $cid mean ${r.getAs[Double]("mean_silhouette")} vs $m")
-    }
-    assert(got.length == per.size + 1)
-  }
-
-  test("sim_davies_bouldin equals a fully imperative Lloyd fit + DB recompute") {
-    val (comps, cent, asg) = lloydFit
-    val byCl = asg.groupBy(_._2).view.mapValues(_.keys.toSeq).toMap
-    val sig = byCl.map { case (cl, ids) =>
-      val s = ids.map(id => dist(comps(id), cent(cl))).sum // exact decimal sum
-      cl -> (ids.length.toLong, round6(s.toDouble / ids.length))
-    }
-    val per = sig.keys.toSeq.sorted.map { cl =>
-      val worst = sig.keys.filter(_ != cl).map { cj =>
-        val cd = dist(cent(cl), cent(cj))
-        (cj, round6((sig(cl)._2 + sig(cj)._2).toDouble / cd.toDouble).toDouble)
-      }.minBy { case (cj, r) => (-r, cj) }
-      (cl, sig(cl)._1, worst._1, worst._2)
-    }
-    val overall = (per.map(_._2).sum,
-      round6(per.map(t => round6(t._4)).sum.toDouble / per.length).toDouble)
-    val got = Similarity.queries("sim_davies_bouldin")(spark, sf0001).collect()
-    assert(got.length == per.length + 1)
-    got.foreach { r =>
-      val cid = r.getAs[Long]("cluster_id")
-      if (cid == -1L) {
-        assert(r.getAs[Long]("n_points") == overall._1)
-        assert(r.isNullAt(r.fieldIndex("worst_other")))
-        assert(math.abs(r.getAs[Double]("db_ratio") - overall._2) < 1e-9)
-      } else {
-        val row = per.find(_._1 == cid).get
-        assert(r.getAs[Long]("n_points") == row._2, s"cluster $cid n_points")
-        assert(r.getAs[Long]("worst_other") == row._3, s"cluster $cid worst_other")
-        assert(math.abs(r.getAs[Double]("db_ratio") - row._4) < 1e-9,
-          s"cluster $cid ratio ${r.getAs[Double]("db_ratio")} vs ${row._4}")
-      }
-    }
-  }
 }

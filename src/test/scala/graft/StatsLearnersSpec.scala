@@ -13,8 +13,7 @@ import graft.operators.{Aggregates, Behavior, Events, Similarity, TextAnalysis}
   * The `ml_*` learners are also refit on the driver from the collected
   * sf0.001 rows ([[BaseRows]]) by a second implementation (Gaussian
   * elimination against the entries' Cramer solves, an imperative
-  * trainer/scorer, brute-force votes and split searches) and compared
-  * exactly or on the documented lattice.
+  * trainer/scorer) and compared exactly or on the documented lattice.
   */
 class StatsLearnersSpec extends SparkSpec {
 
@@ -188,12 +187,6 @@ class StatsLearnersSpec extends SparkSpec {
 
   // ---------------------------------------------------- learner recomputes
 
-  /** The regression design of the OLS family per line item: (quantity,
-    * discount basis points, price cents), each floored to a long. */
-  private lazy val olsRows: Seq[(Long, Long, Long)] = lineitem.map(l =>
-    (math.floor(l.quantity).toLong, math.floor(l.discount * 100).toLong,
-      math.floor(l.extendedprice * 100).toLong))
-
   test("OLS by Cramer equals a Gaussian-elimination solve of the normal equations") {
     val rows = olsRows
     val n = rows.length.toDouble
@@ -235,52 +228,6 @@ class StatsLearnersSpec extends SparkSpec {
     assert(rel(row.getAs[Double]("b1_per_qty"), beta(1)) < 1e-5, s"b1 ${row.getAs[Double]("b1_per_qty")} vs ${beta(1)}")
     assert(rel(row.getAs[Double]("b2_per_bp"), beta(2)) < 1e-5, s"b2 ${row.getAs[Double]("b2_per_bp")} vs ${beta(2)}")
     assert(math.abs(row.getAs[Double]("r2") - (1.0 - sse / sst)) < 1e-5, "r2")
-  }
-
-  test("ridge at lambda=0 equals the OLS Cramer solve, exactly") {
-    val ols = Aggregates.queries("ml_ols_cramer")(spark, sf0001).collect()(0)
-    val ridge = Aggregates.queries("ml_ridge_cramer")(spark, sf0001).collect()
-    assert(ridge.length == 2)
-    val r0 = ridge.find(_.getAs[Long]("lam_per_obs") == 0L).get
-    assert(r0.getAs[Double]("b0_cents") == ols.getAs[Double]("b0_cents"))
-    assert(r0.getAs[Double]("b1_per_qty") == ols.getAs[Double]("b1_per_qty"))
-    assert(r0.getAs[Double]("b2_per_bp") == ols.getAs[Double]("b2_per_bp"))
-    assert(r0.getAs[Double]("r2") == ols.getAs[Double]("r2"))
-  }
-
-  test("ridge equals an independent Gaussian-elimination solve") {
-    val rows = olsRows
-    val n = rows.length.toDouble
-    def s(f: ((Long, Long, Long)) => Double): Double = rows.iterator.map(f).sum
-    for (lamPerObs <- Seq(0L, 100L)) {
-      val lam = lamPerObs * n
-      // normal equations (intercept unpenalized) solved by partial-pivot
-      // elimination — an algorithm the entry does NOT use
-      val a = Array(
-        Array(n, s(t => t._1.toDouble), s(t => t._2.toDouble), s(t => t._3.toDouble)),
-        Array(s(t => t._1.toDouble), s(t => t._1.toDouble * t._1) + lam,
-          s(t => t._1.toDouble * t._2), s(t => t._1.toDouble * t._3)),
-        Array(s(t => t._2.toDouble), s(t => t._1.toDouble * t._2),
-          s(t => t._2.toDouble * t._2) + lam, s(t => t._2.toDouble * t._3)))
-      for (col0 <- 0 until 3) {
-        val piv = (col0 until 3).maxBy(r => math.abs(a(r)(col0)))
-        val tmp = a(col0); a(col0) = a(piv); a(piv) = tmp
-        for (r <- 0 until 3; if r != col0) {
-          val f = a(r)(col0) / a(col0)(col0)
-          for (k <- col0 to 3) a(r)(k) -= f * a(col0)(k)
-        }
-      }
-      val beta = (0 until 3).map(r => a(r)(3) / a(r)(r))
-      val got = Aggregates.queries("ml_ridge_cramer")(spark, sf0001).collect()
-        .find(_.getAs[Long]("lam_per_obs") == lamPerObs).get
-      val ent = Seq(got.getAs[Double]("b0_cents"), got.getAs[Double]("b1_per_qty"),
-        got.getAs[Double]("b2_per_bp"))
-      for (k <- 0 until 3) {
-        val scale = math.max(1.0, math.abs(beta(k)))
-        assert(math.abs(ent(k) - beta(k)) / scale < 1e-6,
-          s"lam=$lamPerObs beta$k: entry ${ent(k)} vs elimination ${beta(k)}")
-      }
-    }
   }
 
   test("ml_kfold_cv equals an imperative fold/moment/Cramer recompute, exactly") {
@@ -343,60 +290,6 @@ class StatsLearnersSpec extends SparkSpec {
     assert(got.map(_._3).sum == rows.length.toLong)
   }
 
-  test("decision stump candidates and ranking equal a driver split search") {
-    val rows = lineitem.map(l =>
-      (if (l.returnflag == "R") 1L else 0L, l.quantity, l.discount, l.extendedprice))
-    def h(pos: Long, n: Long): Double =
-      if (pos == 0 || pos == n) 0.0
-      else {
-        val p = pos.toDouble / n
-        -p * math.log(p) - (1 - p) * math.log(1 - p)
-      }
-    val feats = Seq[(String, ((Long, Double, Double, Double)) => Double)](
-      ("discount", _._3), ("extendedprice", _._4), ("quantity", _._2))
-    val cands = feats.flatMap { case (fname, fval) =>
-      val vals = rows.map(r => (fval(r), r._1))
-      val nTot = vals.length.toLong
-      val posTot = vals.map(_._2).sum
-      val dv = vals.groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (v, g) => (v, g.length.toLong, g.map(_._2).sum) }
-      var cumN = 0L; var cumPos = 0L
-      val cuts = (1 to 19).map(i => i * nTot / 20).filter(_ >= 1).toSet
-      dv.flatMap { case (v, nn, pp) =>
-        val lo = cumN
-        cumN += nn; cumPos += pp
-        if (cumN < nTot && cuts.exists(p => p > lo && p <= cumN)) {
-          val gain = round9(h(posTot, nTot) -
-            (cumN.toDouble / nTot) * h(cumPos, cumN) -
-            ((nTot - cumN).toDouble / nTot) * h(posTot - cumPos, nTot - cumN))
-          Some((fname, v, cumN, cumPos, nTot - cumN, posTot - cumPos, gain))
-        } else None
-      }
-    }
-    val expected = cands
-      .sortWith { (a, b) =>
-        if (a._7 != b._7) a._7 > b._7
-        else if (a._1 != b._1) a._1 < b._1
-        else a._2 < b._2
-      }
-      .zipWithIndex.map { case ((f, t, nl, pl, nr, pr, g), i) =>
-        (f, t, nl, pl, nr, pr, g.toDouble, (i + 1).toLong)
-      }
-    val got = Aggregates.queries("ml_decision_stump")(spark, sf0001).collect()
-      .map(r => (r.getAs[String]("feature"), r.getAs[Double]("threshold"),
-        r.getAs[Long]("n_left"), r.getAs[Long]("pos_left"),
-        r.getAs[Long]("n_right"), r.getAs[Long]("pos_right"),
-        r.getAs[Double]("gain"), r.getAs[Long]("rk"))).toSeq
-    assert(got.length == expected.length,
-      s"candidate count ${got.length} vs ${expected.length}")
-    got.zip(expected).foreach { case (g, e) =>
-      assert(g._1 == e._1 && g._2 == e._2, s"rk ${g._8}: split ${g._1}<=${g._2} vs ${e._1}<=${e._2}")
-      assert((g._3, g._4, g._5, g._6) == (e._3, e._4, e._5, e._6), s"rk ${g._8} counts")
-      assert(math.abs(g._7 - e._7) < 1e-9, s"rk ${g._8} gain")
-      assert(g._8 == e._8)
-    }
-  }
-
   test("naive bayes confusion matrix equals an imperative trainer/scorer") {
     val docs = documents.map(d => (d.docId, d.lang, d.text))
     val train = docs.filter(_._1 % 5 != 0)
@@ -442,33 +335,4 @@ class StatsLearnersSpec extends SparkSpec {
     assert(got == expected, s"\nentry: $got\nindependent: $expected")
   }
 
-  test("k-NN classifier equals a brute-force driver vote, exactly") {
-    val all = embeddings.map(e => (e.vecId, e.label, e.vec))
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    val norm = all.map(v => v._1 -> math.sqrt(dot(v._3, v._3))).toMap
-    val qs = all.filter(_._1 < 20L)
-    val train = all.filter(_._1 >= 20L)
-    val verdicts = qs.sortBy(_._1).map { case (qid, trueLab, qv) =>
-      val top5 = train
-        .map(t => (t._1, t._2, dot(qv, t._3) / (norm(qid) * norm(t._1))))
-        .sortBy { case (id, _, c) => (-c, id) }.take(5)
-      val (pred, nv) = top5.groupBy(_._2).toSeq
-        .map { case (l, g) => (l, g.length.toLong) }
-        .minBy { case (l, c) => (-c, l) }
-      (qid, trueLab, pred, nv)
-    }
-    val nTest = verdicts.length.toLong
-    val nCorrect = verdicts.count(v => v._2 == v._3).toLong
-    val acc = nCorrect * 1000000L / nTest
-    val got = Similarity.queries("ml_knn_classifier")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("q_id"), r.getAs[Int]("true_label"),
-        r.getAs[Int]("pred_label"), r.getAs[Long]("n_votes"),
-        r.getAs[Long]("accuracy_ppm"))).toSeq
-    assert(got == verdicts.map(v => (v._1, v._2, v._3, v._4, acc)).toSeq,
-      s"\nentry: ${got.take(3)}\nindependent: ${verdicts.take(3)} acc=$acc")
-  }
 }

@@ -2,18 +2,12 @@ package graft
 
 import graft.operators.TextAnalysis
 
-/** Independent recomputes and semantic pins of the `TextAnalysis`
-  * entries: corpus statistics, retrieval scores, curation samplers and
-  * the quality model.
+/** Independent recomputes of the `TextAnalysis` corpus statistics.
   *
   * Each recompute tokenizes the collected sf0.001 documents
   * ([[BaseRows]]) on the driver as the entries do (split on single
   * spaces) and rebuilds the entry in plain Scala, comparing exactly on
-  * the integer kernels or to the documented rounding lattice. The quality
-  * model's gradient-descent fit is replayed imperatively, and its AUC is
-  * checked by direct pair counting against the entry's Mann-Whitney
-  * identity. The semantic pins check bounds each algorithm guarantees by
-  * construction. */
+  * the integer kernels or to the documented rounding lattice. */
 class TextRecomputeSpec extends SparkSpec {
 
   import BaseRows._
@@ -29,9 +23,6 @@ class TextRecomputeSpec extends SparkSpec {
     }
     freq.toMap
   }
-
-  /** (doc_id, text) of every document. */
-  private def docTexts: Seq[(Long, String)] = documents.map(d => (d.docId, d.text))
 
   // -------------------------------------------------------- corpus statistics
 
@@ -67,29 +58,6 @@ class TextRecomputeSpec extends SparkSpec {
       .map(r => r.getAs[String]("token") -> r.getAs[Long]("cnt")).toMap
     assert(got == truth,
       s"extra=${got.keySet -- truth.keySet} missing=${truth.keySet -- got.keySet}")
-  }
-
-  test("token entropy equals a driver per-doc recompute on the round-6 lattice") {
-    val docs = docTexts
-    val got = TextAnalysis.queries("text_entropy")(spark, sf0001).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r).toMap
-    assert(got.size == docs.length)
-    docs.foreach { case (id, text) =>
-      val toks = text.split(" ", -1).filter(_.nonEmpty)
-      val freq = toks.groupBy(identity).map { case (_, g) => g.length.toLong }
-      val n = toks.length.toLong
-      val h = freq.map { c =>
-        val p = c.toDouble / n
-        round6(-p * math.log(p))
-      }.sum
-      val r = got(id)
-      assert(r.getAs[Long]("n_tokens") == n && r.getAs[Long]("n_types") == freq.size.toLong)
-      assert(math.abs(r.getAs[Double]("ttr") - freq.size.toDouble / n) < 1e-12)
-      assert(math.abs(r.getAs[Double]("entropy") - h.toDouble) < 1e-9, s"doc $id entropy")
-      assert(math.abs(r.getAs[Double]("perplexity") -
-        round6(math.exp(h.toDouble)).toDouble) < 1e-5, s"doc $id perplexity")
-      assert(r.getAs[Boolean]("low_diversity") == (h.toDouble < 2.0))
-    }
   }
 
   test("JS divergence equals a driver two-corpus recompute on the round-9 lattice") {
@@ -140,320 +108,4 @@ class TextRecomputeSpec extends SparkSpec {
     }
   }
 
-  test("repetition signals equal a driver bigram recount, exactly") {
-    val docs = docTexts
-    val expected = docs.flatMap { case (id, text) =>
-      val ws = text.split(" ", -1).filter(_.nonEmpty)
-      val pairs = ws.zip(ws.drop(1)).map { case (a, b) => s"$a $b" }
-      if (pairs.isEmpty) None
-      else {
-        val counts = pairs.groupBy(identity).map { case (p, g) => (p, g.length.toLong) }
-        val (pair, c) = counts.maxBy { case (p, cc) => (cc, p) }
-        val nw = ws.length.toLong; val nd = ws.distinct.length.toLong
-        Some((id, nw, nd, (nw - nd).toDouble / nw, pair, c,
-          2.0 * c / nw, 2.0 * c / nw > 0.2))
-      }
-    }.sortBy(_._1).toSeq
-    val got = TextAnalysis.queries("text_repetition")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_words"),
-        r.getAs[Long]("n_distinct"), r.getAs[Double]("dup_word_frac"),
-        r.getAs[String]("top_bigram"), r.getAs[Long]("top_bigram_n"),
-        r.getAs[Double]("top_bigram_frac"), r.getAs[Boolean]("flag_repetitive"))).toSeq
-    assert(got == expected, s"first diff: ${got.zip(expected).find(p => p._1 != p._2)}")
-  }
-
-  test("winnowing density respects the w=5 window guarantees") {
-    val rows = entry("text_winnowing").collect()
-      .map(r => (r.getLong(1), r.getLong(2))) // (n_kgrams, n_fp)
-      .filter(_._1 > 4)
-    assert(rows.nonEmpty)
-    rows.foreach { case (kg, fp) =>
-      val windows = kg - 4
-      // ≥ 1 fingerprint per w consecutive windows; ≤ one per window
-      assert(fp >= (windows + 4) / 5 && fp <= windows,
-        s"density out of range: $fp fps over $windows windows")
-    }
-    val density = rows.map(_._2).sum.toDouble / rows.map(_._1 - 4).sum
-    assert(density > 0.2 && density < 0.67, // 2/(w+1)=1/3 ± wide margin
-      s"corpus density $density far from the 2/(w+1) expectation")
-  }
-
-  test("vocabulary coverage is monotone and bounded") {
-    val rows = entry("text_vocab_coverage").collect()
-    val cov = rows.map(_.getLong(4))
-    assert(cov.sameElements(cov.sorted) && cov.forall(c => c > 0 && c <= 1000000))
-  }
-
-  test("pmi survivors meet min-support and order deterministically") {
-    val rows = entry("text_pmi_bigrams").collect()
-    assert(rows.nonEmpty && rows.forall(_.getLong(1) >= 5))
-    val pmis = rows.map(_.getDouble(4))
-    assert(pmis.sameElements(pmis.sortBy(-_)))
-  }
-
-  test("blocklist audit is non-vacuous and conserves the document spine") {
-    val rows = TextAnalysis.queries("text_blocklist")(spark, sf0001).collect()
-    val nDocs = rows.map(_.getAs[Long]("n_docs")).sum
-    val spine = documents.length.toLong
-    assert(nDocs == spine, s"rollup covers $nDocs of $spine docs")
-    assert(rows.map(_.getAs[Long]("total_hits")).sum > 0L, "lexicon never hit")
-    val blocked = rows.map(_.getAs[Long]("n_blocked")).sum
-    assert(blocked > 0L && blocked < nDocs,
-      s"verdict is vacuous: $blocked of $nDocs blocked")
-  }
-
-  // ----------------------------------------------------------------- retrieval
-
-  test("tf-idf top-20 equals a driver recount and rescore") {
-    val docs = docTexts
-    val nDocs = docs.length.toDouble
-    val tf = scala.collection.mutable.HashMap.empty[String, Long]
-    val df = scala.collection.mutable.HashMap.empty[String, Long]
-    docs.foreach { case (_, text) =>
-      // the entry's tokens() is split(" ") with NO empty filter — mirror it
-      val toks = text.split(" ", -1)
-      toks.groupBy(identity).foreach { case (w, g) =>
-        tf(w) = tf.getOrElse(w, 0L) + g.length
-        df(w) = df.getOrElse(w, 0L) + 1L
-      }
-    }
-    val expected = tf.keys.toSeq.map { w =>
-      (w, tf(w), df(w), round6(tf(w) * math.log(nDocs / df(w))).toDouble)
-    }.sortBy { case (w, _, _, s) => (-s, w) }.take(20)
-    val got = TextAnalysis.queries("text_tfidf")(spark, sf0001).collect()
-      .map(r => (r.getAs[String]("word"), r.getAs[Long]("tf"),
-        r.getAs[Long]("df"), r.getAs[Double]("tfidf"))).toSeq
-    assert(got == expected, s"\nentry: ${got.take(3)}\nindependent: ${expected.take(3)}")
-  }
-
-  test("BM25 top-25 equals a driver Okapi recompute, exactly") {
-    val docs = docTexts
-    val n = docs.length.toDouble
-    val dl = docs.map { case (id, t) => id -> t.split(" ", -1).length.toLong }.toMap
-    val totalDl = dl.values.sum.toDouble
-    val terms = Set("spark", "table", "join")
-    val tf = docs.flatMap { case (id, t) =>
-      t.split(" ", -1).filter(terms.contains)
-        .groupBy(identity).map { case (w, g) => (id, w, g.length.toLong) }
-    }
-    val df = tf.groupBy(_._2).map { case (w, g) => w -> g.length.toLong }
-    val scores = tf.groupBy(_._1).map { case (id, g) =>
-      id -> g.map { case (_, w, t) =>
-        round0(math.log(1.0 + (n - df(w) + 0.5) / (df(w) + 0.5)) *
-          (t * 2.2) / (t + 1.2 * (0.25 + 0.75 * dl(id) / (totalDl / n))) * 1000000)
-      }.sum
-    }
-    val expected = scores.toSeq.sortBy { case (id, s) => (-s, id) }.take(25)
-    val got = TextAnalysis.queries("text_bm25")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("bm25_micro"))).toSeq
-    assert(got == expected, s"\nentry: ${got.take(3)}\nindependent: ${expected.take(3)}")
-  }
-
-  // ---------------------------------------------------------------- curation
-
-  test("mixture HHI equals a driver concentration recompute") {
-    val docs = documents.map(d => (d.lang, d.source))
-    val expected = docs.groupBy(_._1).map { case (lang, g) =>
-      val bySrc = g.groupBy(_._2).map { case (_, s) => s.length.toLong }.toSeq
-      val sum = bySrc.sum
-      lang -> (bySrc.length.toLong, sum,
-        bySrc.map(n => n.toDouble * n).sum / (sum.toDouble * sum.toDouble))
-    }
-    TextAnalysis.queries("pipe_mixture_hhi")(spark, sf0001).collect().foreach { r =>
-      val (ns, nd, hhi) = expected(r.getAs[String]("lang"))
-      assert(r.getAs[Long]("n_sources") == ns && r.getAs[Long]("n_docs") == nd)
-      assert(math.abs(r.getAs[Double]("hhi") - hhi) < 1e-12,
-        s"lang ${r.getAs[String]("lang")} hhi")
-    }
-  }
-
-  test("mixture sampling equals a driver Knuth-hash recount, exactly") {
-    val docs = documents.map(d => (d.docId, d.source))
-    val sizes = docs.groupBy(_._2).map { case (s, g) => s -> g.length.toLong }
-    val nTotal = docs.length.toLong; val nSources = sizes.size.toLong
-    val expected = sizes.keys.toSeq.sorted.map { src =>
-      val n = sizes(src)
-      val rate = math.min(1.0, (nTotal.toDouble / nSources) / n)
-      val thresh = math.floor(rate * 4294967296.0).toLong
-      val kept = docs.filter(_._2 == src)
-        .count(d => (d._1 * 2654435761L) % 4294967296L < thresh).toLong
-      (src, n, rate, kept, kept.toDouble / n)
-    }
-    val got = TextAnalysis.queries("pipe_mixture_sample")(spark, sf0001).collect()
-      .map(r => (r.getAs[String]("source"), r.getAs[Long]("n_docs"),
-        r.getAs[Double]("target_rate"), r.getAs[Long]("n_kept"),
-        r.getAs[Double]("achieved_rate"))).toSeq
-    assert(got == expected)
-  }
-
-  test("weighted sample equals a driver exponential-race recompute and is weight-biased") {
-    val docs = documents.map(d => (d.docId, d.source, d.nChars, d.text))
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def key(text: String, w: Long): Double = {
-      val hex = md.digest(text.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(8)
-      val u = (java.lang.Long.parseLong(hex, 16) + 1L).toDouble / 4294967296.0
-      -math.log(u) / w
-    }
-    val expected = docs.map(d => (d._1, d._2, d._3, key(d._4, d._3)))
-      .sortBy(t => (t._4, t._1)).take(50)
-      .map(t => (t._1, t._2, t._3)).sortBy(_._1).toSeq
-    val got = TextAnalysis.queries("pipe_weighted_sample")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("source"),
-        r.getAs[Long]("n_chars"))).toSeq
-    assert(got == expected)
-    // design property: char-weighted selection over-represents long docs
-    val corpusMean = docs.map(_._3).sum.toDouble / docs.length
-    val selMean = got.map(_._3).sum.toDouble / got.length
-    assert(selMean > corpusMean,
-      s"selection mean $selMean not above corpus mean $corpusMean — weights inverted?")
-  }
-
-  test("token packing conserves tokens and matches a driver first-fit recompute") {
-    val docs = documents
-      .map(d => (d.docId, d.source, d.text.split(" ", -1).count(_.nonEmpty).toLong))
-      .filter(_._3 > 0)
-    val expected = docs.groupBy(_._2).toSeq.flatMap { case (src, g) =>
-      var running = 0L
-      g.sortBy(_._1).map { d =>
-        running += d._3
-        (src, (running - 1) / 500L, d._3)
-      }.groupBy(_._2).toSeq.map { case (b, m) =>
-        (src, b, m.length.toLong, m.map(_._3).sum)
-      }
-    }.sortBy(t => (t._1, t._2))
-    val got = TextAnalysis.queries("pipe_token_packing")(spark, sf0001).collect()
-      .map(r => (r.getAs[String]("source"), r.getAs[Long]("batch_id"),
-        r.getAs[Long]("n_docs"), r.getAs[Long]("n_tokens")))
-      .sortBy(t => (t._1, t._2)).toSeq
-    assert(got == expected)
-    // conservation: every token lands in exactly one batch
-    assert(got.map(_._4).sum == docs.map(_._3).sum)
-  }
-
-  test("ngram novelty equals a driver first-occurrence recount, exactly") {
-    val docs = documents.map(d => (d.docId, d.source, d.text))
-    val tris = docs.flatMap { case (id, src, text) =>
-      val t = text.split(" ", -1).filter(_.nonEmpty)
-      t.sliding(3).filter(_.length == 3).map(w => (id, src, w.mkString(" "))).toSeq.distinct
-    }
-    val first = tris.groupBy(_._3).map { case (tri, g) => tri -> g.map(_._1).min }
-    val expected = tris.groupBy(_._2).map { case (src, g) =>
-      val nDocs = g.map(_._1).distinct.length.toLong
-      val nTri = g.length.toLong
-      val novel = g.count(t => first(t._3) == t._1).toLong
-      src -> (nDocs, nTri, novel, novel * 1000000L / nTri)
-    }
-    TextAnalysis.queries("pipe_ngram_novelty")(spark, sf0001).collect().foreach { r =>
-      val (nd, nt, nn, ppm) = expected(r.getAs[String]("source"))
-      assert(r.getAs[Long]("n_docs") == nd && r.getAs[Long]("n_trigrams") == nt)
-      assert(r.getAs[Long]("n_novel") == nn && r.getAs[Long]("novelty_ppm") == ppm)
-    }
-  }
-
-  test("hamilton apportionment: quotas sum to the budget, off base by ≤1") {
-    val rows = entry("pipe_quota_apportion").collect()
-    assert(rows.map(_.getLong(4)).sum == 10000L)
-    rows.foreach { r =>
-      val (base, quota) = (r.getLong(2), r.getLong(4))
-      assert(quota == base || quota == base + 1)
-    }
-  }
-
-  test("dedup funnel stages chain and shrink monotonically") {
-    val rows = entry("pipe_dedup_funnel").collect().sortBy(_.getLong(0))
-    rows.foreach { r =>
-      assert(r.getLong(3) <= r.getLong(2), "a stage grew the corpus")
-      assert(r.getLong(4) == r.getLong(2) - r.getLong(3))
-    }
-    rows.sliding(2).foreach {
-      case Array(a, b) => assert(b.getLong(2) == a.getLong(3),
-        "stage k+1 input != stage k output")
-      case _ =>
-    }
-  }
-
-  // ------------------------------------------------------------ quality model
-
-  /** The lrDocs → 3×GD → score pipeline, replayed imperatively on the
-    * entry's documented decimal lattice: per-doc (f1, f2, y) standardized
-    * features, zero-init weights, three full-batch steps at lr = 2.0. */
-  private lazy val lrScored: Seq[(BigDecimal, Long)] = {
-    val docs = documents.map(_.text)
-    val raw = docs.flatMap { text =>
-      val ws = text.split(" ", -1).filter(_.nonEmpty)
-      if (ws.isEmpty) None
-      else {
-        val n = ws.length.toLong
-        val nd = ws.distinct.length.toLong
-        val nStop = ws.count(w => w == "the" || w == "a").toLong
-        Some((round6(nd.toDouble / n), round6(nStop.toDouble / n),
-          if (n >= 55) 1L else 0L))
-      }
-    }
-    val m = raw.length
-    def z(fs: Seq[BigDecimal]): Seq[BigDecimal] = {
-      val s1 = fs.sum; val s11 = fs.map(f => f * f).sum
-      val mean = s1.toDouble / m
-      val variance = s11.toDouble / m - mean * mean
-      if (variance > 0.0) fs.map(f => round6((f.toDouble - mean) / math.sqrt(variance)))
-      else fs.map(_ => BigDecimal(0))
-    }
-    val f1 = z(raw.map(_._1)); val f2 = z(raw.map(_._2))
-    val ys = raw.map(_._3)
-    var w = (BigDecimal(0), BigDecimal(0), BigDecimal(0))
-    def score(i: Int): BigDecimal = {
-      val zv = (w._1 + w._2 * f1(i) + w._3 * f2(i)).toDouble
-      round6(1.0 / (1.0 + math.exp(-zv)))
-    }
-    for (_ <- 1 to 3) {
-      var g0 = BigDecimal(0); var g1 = BigDecimal(0); var g2 = BigDecimal(0)
-      for (i <- 0 until m) {
-        val r = score(i) - BigDecimal(ys(i))
-        g0 += r; g1 += r * f1(i); g2 += r * f2(i)
-      }
-      w = (round6(w._1.toDouble - 2.0 * g0.toDouble / m),
-        round6(w._2.toDouble - 2.0 * g1.toDouble / m),
-        round6(w._3.toDouble - 2.0 * g2.toDouble / m))
-    }
-    (0 until m).map(i => (score(i), ys(i)))
-  }
-
-  test("quality AUC: direct pair counting equals the entry's Mann-Whitney identity") {
-    val pos = lrScored.filter(_._2 == 1L).map(_._1)
-    val neg = lrScored.filter(_._2 == 0L).map(_._1)
-    // DIRECT definition: P(score_pos > score_neg) + ties/2, doubled to 2U
-    var u2 = 0L
-    pos.foreach { sp =>
-      neg.foreach { sn =>
-        if (sp > sn) u2 += 2 else if (sp == sn) u2 += 1
-      }
-    }
-    val nPos = pos.length.toLong; val nNeg = neg.length.toLong
-    val d = nPos * nNeg
-    val auc = (u2 / d) * 500000L + (u2 % d) * 500000L / d
-    val row = TextAnalysis.queries("pipe_quality_auc")(spark, sf0001).collect().head
-    assert(row.getAs[Long]("n_pos") == nPos && row.getAs[Long]("n_neg") == nNeg)
-    assert(row.getAs[Long]("u2") == u2,
-      s"u2 ${row.getAs[Long]("u2")} (MW identity) vs $u2 (direct pairs)")
-    assert(row.getAs[Long]("auc_micro") == auc)
-  }
-
-  test("quality calibration equals the driver fit's reliability table, exactly") {
-    val byBucket = lrScored.groupBy { case (p, _) =>
-      math.min((p * 10).setScale(0, BigDecimal.RoundingMode.FLOOR).toLong, 9L)
-    }
-    val expected = byBucket.toSeq.map { case (b, g) =>
-      val n = g.length.toLong
-      val nPos = g.map(_._2).sum
-      val sumP = g.map(_._1).sum
-      val meanMicro = ((sumP * 1000000).toBigInt / n).toLong
-      (b, n, nPos, meanMicro, nPos * 10000L / n)
-    }.sortBy(_._1)
-    val got = TextAnalysis.queries("pipe_quality_calibration")(spark, sf0001).collect()
-      .map(r => (r.getAs[Long]("bucket"), r.getAs[Long]("n_docs"),
-        r.getAs[Long]("n_pos"), r.getAs[Long]("mean_p_micro"),
-        r.getAs[Long]("pos_rate_bp"))).toSeq
-    assert(got == expected, s"\nentry: $got\nindependent: $expected")
-  }
 }
